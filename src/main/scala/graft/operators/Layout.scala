@@ -253,8 +253,6 @@ object Layout {
     s"(($x | ($x << $sh)) & $mask)"
   }
 
-  def mortonSteps: Int = MortonSpreadSteps.size
-
   /** Z-ORDER CLUSTERING PROFILE — quantize two numeric dimensions to
     * `qbits` each (exact integer rescale against the broadcast
     * global min/max), interleave the bits into a Morton key, deal

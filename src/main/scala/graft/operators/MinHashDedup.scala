@@ -42,15 +42,6 @@ object MinHashDedup {
   private def shingleHashes(docs: DataFrame): DataFrame =
     NearDup.shingleHashSets(docs)
 
-  /** Per-doc LSH band keys: `numBands` bands of `rowsPerBand` minhash
-    * rows each, folded to one 64-bit key per band (FNV mix). One
-    * primitive-loop pass over the shingle hashes computes all
-    * numBands·rowsPerBand permutation minima.
-    */
-  def bandKeys(docs: DataFrame, numBands: Int, rowsPerBand: Int,
-      seed: Long): DataFrame =
-    bandKeysOf(shingleHashes(docs), numBands, rowsPerBand, seed)
-
   /** Seeded permutation parameters (a odd ⇒ bijective over 2^64). */
   private def permParams(numHashes: Int, seed: Long): (Array[Long], Array[Long]) = {
     val rnd = new Random(seed)

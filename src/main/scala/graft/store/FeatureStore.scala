@@ -364,25 +364,6 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     case None      => latestView()
   }
 
-  /** Read-optimized serving layout: materialize the online table
-    * hash-bucketed by the entity key as a catalog table
-    * ([[graft.operators.Layout.writeBucketed]]). Point lookups prune
-    * to ONE bucket (`SelectedBucketsCount: 1 out of n` in the scan)
-    * and joins against any table bucketed the same way plan with zero
-    * Exchange — the 100 TB serving shape: bucket once at compaction,
-    * serve forever without shuffling. The versioned parquet dirs
-    * ([[writeOnline]]) remain the streaming-merge path; this is the
-    * batch compaction for read-heavy serving. Both are spec-asserted
-    * in StoreLayoutSpec.
-    */
-  def compactOnlineBucketed(table: String, nBuckets: Int = 32): Unit =
-    graft.operators.Layout.writeBucketed(
-      dedupLatest(offline()).drop("event_date"), table, conf.keyCol, nBuckets)
-
-  /** The bucketed serving table written by [[compactOnlineBucketed]]. */
-  def onlineBucketed(table: String): DataFrame =
-    spark.table(table).drop(seqCol)
-
   private val servingDir = s"${conf.path}/serving"
   private val servingBuckets = 64
 
@@ -457,14 +438,11 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
   /** The cache tier in front of the serving layout (the reference's
     * ElastiCache role): bounded bucket-level LRU with read-through
     * signature invalidation — repeated lookups cost zero Spark jobs.
-    * `sigFreshMs > 0` additionally skips the per-get signature LIST
-    * within the window (bounded staleness — the object-storage
-    * latency dial). See [[ServingCache]].
+    * See [[ServingCache]].
     */
-  def servingCache(maxCachedBuckets: Int = 16,
-      sigFreshMs: Long = 0L): ServingCache =
+  def servingCache(maxCachedBuckets: Int = 16): ServingCache =
     new ServingCache(spark, servingDir, conf.keyCol, servingBuckets,
-      maxCachedBuckets, dropCols = Seq(seqCol), sigFreshMs = sigFreshMs)
+      maxCachedBuckets, dropCols = Seq(seqCol))
 
   /** Partition-pruned point lookup against the serving table — the
     * scan lists exactly one `kb=` directory (asserted in

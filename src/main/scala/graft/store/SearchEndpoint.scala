@@ -1,9 +1,6 @@
 package graft.store
 
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets.UTF_8
-
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -84,31 +81,27 @@ object SearchEndpoint {
 }
 
 /** Driver-side BM25 scorer over the term-bucketed postings store —
-  * see [[SearchEndpoint]]. Thread-safe; per-bucket memoization with
-  * an LRU bound (the [[ServingCache]] shape).
+  * see [[SearchEndpoint]]. Thread-safe; per-bucket memoization in a
+  * [[BucketCache]].
   */
 final class Bm25SearchTier(spark: SparkSession, indexDir: String,
-    nBuckets: Int = 64, maxCachedBuckets: Int = 16,
-    k1: Double = 1.2, b: Double = 0.75) {
+    nBuckets: Int = 64, maxCachedBuckets: Int = 16) {
   require(nBuckets > 0 && maxCachedBuckets > 0,
     "nBuckets and maxCachedBuckets must be positive")
 
-  /** th → postings (doc_id, tf, dl), grouped per term at load. */
-  private type Bucket = Map[Long, Array[(Long, Long, Long)]]
+  // the batch operator's scoring constants (`Retrieval.bm25TopKFromIndex`
+  // defaults) — bit parity with it needs exactly these values
+  private val k1 = 1.2
+  private val b = 0.75
 
-  private val lru = new java.util.LinkedHashMap[Int, Bucket](
-      16, 0.75f, /*accessOrder=*/ true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[Int, Bucket]): Boolean =
-      size() > maxCachedBuckets
-  }
-  private var hitsN = 0L
-  private var missesN = 0L
+  /** th → postings (doc_id, tf, dl), grouped per term at load. */
+  private val cache = new BucketCache[Map[Long, Array[(Long, Long, Long)]]](
+    maxCachedBuckets)
   @volatile private var scalars: (Long, Long) = null // (n, totDl)
 
-  def stats: (Long, Long) = synchronized((hitsN, missesN))
+  def stats: (Long, Long) = cache.stats
 
-  def invalidate(): Unit = synchronized { lru.clear(); scalars = null }
+  def invalidate(): Unit = { cache.invalidate(); scalars = null }
 
   /** Corpus scalars (N docs, Σdl) — ONE Spark reduction over the
     * store, then driver-cached for the tier's lifetime (every doc
@@ -131,29 +124,20 @@ final class Bm25SearchTier(spark: SparkSession, indexDir: String,
     computed
   }
 
-  private def bucketOf(th: Long): Int =
-    java.lang.Math.floorMod(th, nBuckets.toLong).toInt
-
-  /** Partition-pruned bucket load: reads ONLY `tb=<b>`. */
-  private def loadBucket(bkt: Int): Bucket =
-    spark.read.parquet(s"$indexDir/tb=$bkt")
-      .select(col("th"), col("doc_id"), col("tf"), col("dl"))
-      .collect()
-      .groupBy(_.getLong(0))
-      .map { case (th, rows) =>
-        th -> rows.map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-      }
-
-  private def bucket(bkt: Int): Bucket = {
-    val hit = synchronized {
-      val c = Option(lru.get(bkt))
-      c.foreach(_ => hitsN += 1)
-      c
-    }
-    hit.getOrElse {
-      val loaded = loadBucket(bkt)
-      synchronized { missesN += 1; lru.put(bkt, loaded); loaded }
-    }
+  /** One term's postings from its memoized bucket (partition-pruned
+    * load: reads ONLY `tb=<b>`).
+    */
+  private def postings(th: Long): Option[Array[(Long, Long, Long)]] = {
+    val bkt = java.lang.Math.floorMod(th, nBuckets.toLong).toInt
+    cache.get(bkt) {
+      spark.read.parquet(s"$indexDir/tb=$bkt")
+        .select(col("th"), col("doc_id"), col("tf"), col("dl"))
+        .collect()
+        .groupBy(_.getLong(0))
+        .map { case (t, rows) =>
+          t -> rows.map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+        }
+    }.get(th)
   }
 
   /** Top-k BM25 over the standing index for a distinct term-hash set:
@@ -168,10 +152,10 @@ final class Bm25SearchTier(spark: SparkSession, indexDir: String,
     if (n == 0L) return Seq.empty
     val ticksByDoc = new java.util.HashMap[java.lang.Long, java.lang.Long]
     terms.distinct.foreach { th =>
-      bucket(bucketOf(th)).get(th).foreach { postings =>
-        val df = postings.length.toLong
+      postings(th).foreach { ps =>
+        val df = ps.length.toLong
         val idf = math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-        postings.foreach { case (doc, tf, dl) =>
+        ps.foreach { case (doc, tf, dl) =>
           if (doc != exclude) {
             // the EXACT left-associated dag of Retrieval.score
             val t = idf * tf * (k1 + 1.0) /
@@ -205,38 +189,20 @@ final class Bm25SearchTier(spark: SparkSession, indexDir: String,
   */
 final class IvfSearchTier(spark: SparkSession, indexDir: String,
     model: IvfIndex.Model, maxCachedCells: Int = 8) {
-  require(maxCachedCells > 0, "maxCachedCells must be positive")
 
-  private val lru = new java.util.LinkedHashMap[Int, Array[(Long, Array[Double])]](
-      16, 0.75f, /*accessOrder=*/ true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[Int, Array[(Long, Array[Double])]]): Boolean =
-      size() > maxCachedCells
-  }
-  private var hitsN = 0L
-  private var missesN = 0L
+  private val cache = new BucketCache[Array[(Long, Array[Double])]](
+    maxCachedCells)
 
-  def stats: (Long, Long) = synchronized((hitsN, missesN))
+  def stats: (Long, Long) = cache.stats
 
-  def invalidate(): Unit = synchronized(lru.clear())
+  def invalidate(): Unit = cache.invalidate()
 
-  /** Partition-pruned cell load: reads ONLY `cell=<c>`. */
-  private def loadCell(c: Int): Array[(Long, Array[Double])] =
+  /** Partition-pruned, memoized cell load: reads ONLY `cell=<c>`. */
+  private def cell(c: Int): Array[(Long, Array[Double])] = cache.get(c) {
     spark.read.parquet(s"$indexDir/cell=$c")
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-
-  private def cell(c: Int): Array[(Long, Array[Double])] = {
-    val hit = synchronized {
-      val got = Option(lru.get(c))
-      got.foreach(_ => hitsN += 1)
-      got
-    }
-    hit.getOrElse {
-      val loaded = loadCell(c)
-      synchronized { missesN += 1; lru.put(c, loaded); loaded }
-    }
   }
 
   /** The identical sequential cosine fold the codegen'd
@@ -284,50 +250,33 @@ final class SigSearchTier(spark: SparkSession, indexDir: String,
   private val bandMask = (1L << bandBits) - 1
 
   /** (chunk, chunk_val) → signatures in that band. */
-  private type Bucket = Map[(Int, Long), Array[(Long, Long, Long)]]
+  private val cache = new BucketCache[Map[(Int, Long), Array[(Long, Long, Long)]]](
+    maxCachedBuckets)
 
-  private val lru = new java.util.LinkedHashMap[Int, Bucket](
-      16, 0.75f, /*accessOrder=*/ true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[Int, Bucket]): Boolean =
-      size() > maxCachedBuckets
-  }
-  private var hitsN = 0L
-  private var missesN = 0L
+  def stats: (Long, Long) = cache.stats
 
-  def stats: (Long, Long) = synchronized((hitsN, missesN))
-
-  def invalidate(): Unit = synchronized(lru.clear())
+  def invalidate(): Unit = cache.invalidate()
 
   private def bandsOf(dhash: Long): Seq[(Int, Long)] =
     (0 until graft.operators.ImageHash.chunks)
       .map(c => (c, (dhash >>> (c * bandBits)) & bandMask))
 
-  private def bucketOf(band: (Int, Long)): Int =
-    java.lang.Math.floorMod(
+  /** One band's signatures from its memoized bucket (partition-pruned
+    * load: reads ONLY `bb=<b>`).
+    */
+  private def signatures(band: (Int, Long)): Option[Array[(Long, Long, Long)]] = {
+    val bkt = java.lang.Math.floorMod(
       band._1.toLong * (1L << bandBits) + band._2, nBuckets.toLong).toInt
-
-  /** Partition-pruned bucket load: reads ONLY `bb=<b>`. */
-  private def loadBucket(bkt: Int): Bucket =
-    spark.read.parquet(s"$indexDir/bb=$bkt")
-      .select(col("chunk"), col("chunk_val"), col("media_id"),
-        col("dhash"), col("ahash"))
-      .collect()
-      .groupBy(r => (r.getInt(0), r.getLong(1)))
-      .map { case (k, rows) =>
-        k -> rows.map(r => (r.getLong(2), r.getLong(3), r.getLong(4)))
-      }
-
-  private def bucket(bkt: Int): Bucket = {
-    val hit = synchronized {
-      val c = Option(lru.get(bkt))
-      c.foreach(_ => hitsN += 1)
-      c
-    }
-    hit.getOrElse {
-      val loaded = loadBucket(bkt)
-      synchronized { missesN += 1; lru.put(bkt, loaded); loaded }
-    }
+    cache.get(bkt) {
+      spark.read.parquet(s"$indexDir/bb=$bkt")
+        .select(col("chunk"), col("chunk_val"), col("media_id"),
+          col("dhash"), col("ahash"))
+        .collect()
+        .groupBy(r => (r.getInt(0), r.getLong(1)))
+        .map { case (k, rows) =>
+          k -> rows.map(r => (r.getLong(2), r.getLong(3), r.getLong(4)))
+        }
+    }.get(band)
   }
 
   /** Near-dup matches of one probe signature against the standing
@@ -342,7 +291,7 @@ final class SigSearchTier(spark: SparkSession, indexDir: String,
       s"banding supports Hamming < ${graft.operators.ImageHash.chunks}")
     val seen = new java.util.HashMap[java.lang.Long, (Int, Int)]
     bandsOf(dhash).foreach { band =>
-      bucket(bucketOf(band)).get(band).foreach(_.foreach {
+      signatures(band).foreach(_.foreach {
         case (media, dh, ah) =>
           val hd = java.lang.Long.bitCount(dh ^ dhash)
           if (hd <= maxHamming)
@@ -357,15 +306,18 @@ final class SigSearchTier(spark: SparkSession, indexDir: String,
   }
 }
 
-/** Loopback HTTP surface over the two search tiers — the retrieval
-  * sibling of [[ServingEndpoint]] (same JDK-HttpServer threading
-  * shape, same compute-then-respond discipline):
+/** Loopback HTTP surface over the search tiers — the retrieval
+  * sibling of [[ServingEndpoint]], on the same [[HttpScaffold]]:
   *
   *   GET /search?q=quick+brown&k=5[&exclude=7]
   *     → {"Results":[{"rank":1,"doc_id":9,"score":1.234567},…]}
   *   GET /ann?vec=0.1,0.2,…&k=10[&nprobe=4]
   *     → {"Results":[{"vec_id":3,"sim":0.987654},…]}
-  *   GET /stats → bucket/cell cache hits+misses for both tiers
+  *   GET /stats → bucket/cell cache hits+misses for every wired tier
+  *
+  * The ANN and signature tiers are optional (`null`): without one its
+  * route answers 503 (ANN) or is absent (signature), and `/stats`
+  * leaves it out.
   *
   * Query text tokenizes with the corpus contract
   * ([[graft.operators.NearDup.tokenHash64]] over single-space
@@ -374,7 +326,8 @@ final class SigSearchTier(spark: SparkSession, indexDir: String,
 final class SearchHttpEndpoint(bm25: Bm25SearchTier, ivf: IvfSearchTier,
     sig: SigSearchTier = null, port: Int = 0, nThreads: Int = 4,
     scrub: Seq[String] = Nil) {
-  require(nThreads > 0, "nThreads must be positive")
+  import HttpScaffold.{BadRequest, num}
+  import graft.core.Json.esc
 
   // the scrub catalog compiles to its automaton at construction and
   // every /scrub request is pure driver compute — zero Spark jobs by
@@ -397,88 +350,49 @@ final class SearchHttpEndpoint(bm25: Bm25SearchTier, ivf: IvfSearchTier,
     scrubAc = graft.operators.Blocklist.buildAutomaton(patterns, caseFold)
   }
 
-  private val server =
-    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  private val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
+  private val http = new HttpScaffold(port, nThreads)
 
-  private def jsonEsc(s: String): String = graft.core.Json.esc(s)
-
-  private final class BadRequest(msg: String) extends RuntimeException(msg)
-
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length.toLong)
-    try ex.getResponseBody.write(bytes) finally ex.close()
-  }
-
+  // form decoding: `+` in free text is a space
   private def queryParam(ex: HttpExchange, name: String): Option[String] =
-    Option(ex.getRequestURI.getRawQuery).flatMap {
-      _.split("&").iterator.map(_.split("=", 2)).collectFirst {
-        case Array(k, v) if k == name =>
-          try java.net.URLDecoder.decode(v, "UTF-8")
-          catch {
-            case _: IllegalArgumentException =>
-              throw new BadRequest(s"malformed percent-encoding in '$name'")
-          }
-      }
-    }
-
-  private def num(fmt: Double): String = String.format(
-    java.util.Locale.ROOT, "%.6f", Double.box(fmt))
+    HttpScaffold.rawParam(ex, name)
+      .map(HttpScaffold.decode(_, plusIsSpace = true, s"'$name'"))
 
   // numeric query params parse inside the BadRequest wrapper — a
   // malformed k/exclude/nprobe/maxh is a client error (400), not a
-  // 500 with an exception string (r12 advice; vec and dhash/ahash
-  // already followed this pattern)
+  // 500 with an exception string
+  private def numParam[T](ex: HttpExchange, name: String, dflt: T,
+      kind: String)(parse: String => T): T =
+    queryParam(ex, name).map { v =>
+      try parse(v)
+      catch { case _: NumberFormatException =>
+        throw new BadRequest(s"'$name' must be a $kind")
+      }
+    }.getOrElse(dflt)
+
   private def intParam(ex: HttpExchange, name: String, dflt: Int): Int =
-    queryParam(ex, name).map { v =>
-      try v.toInt
-      catch { case _: NumberFormatException =>
-        throw new BadRequest(s"'$name' must be a 32-bit integer")
-      }
-    }.getOrElse(dflt)
+    numParam(ex, name, dflt, "32-bit integer")(_.toInt)
 
-  private def longParam(ex: HttpExchange, name: String, dflt: Long): Long =
-    queryParam(ex, name).map { v =>
-      try v.toLong
-      catch { case _: NumberFormatException =>
-        throw new BadRequest(s"'$name' must be a 64-bit integer")
-      }
-    }.getOrElse(dflt)
+  private def results(rows: Seq[String]): String =
+    rows.mkString("""{"Results":[""", ",", "]}")
 
-  private def handler(route: HttpExchange => (Int, String)): HttpHandler =
-    (ex: HttpExchange) => {
-      val (code, body) =
-        try route(ex)
-        catch {
-          case bad: BadRequest =>
-            (400, s"""{"error":"${jsonEsc(bad.getMessage)}"}""")
-          case t: Throwable =>
-            (500, s"""{"error":"${jsonEsc(t.toString.take(160))}"}""")
-        }
-      try respond(ex, code, body)
-      catch { case _: java.io.IOException => ex.close() }
-    }
-
-  server.createContext("/search", handler { ex =>
+  http.route("/search") { ex =>
     queryParam(ex, "q").map(_.trim).filter(_.nonEmpty) match {
       case None => (400, """{"error":"missing required query parameter 'q'"}""")
       case Some(q) =>
         val k = intParam(ex, "k", 5)
-        val exclude = longParam(ex, "exclude", -1L)
+        val exclude = numParam(ex, "exclude", -1L, "64-bit integer")(_.toLong)
         val terms = q.split(" ", -1).toSeq
           .map(graft.operators.NearDup.tokenHash64)
-        val results = bm25.search(terms, k, exclude).map {
+        (200, results(bm25.search(terms, k, exclude).map {
           case (rank, doc, score) =>
             s"""{"rank":$rank,"doc_id":$doc,"score":${num(score)}}"""
-        }
-        (200, results.mkString("""{"Results":[""", ",", "]}"))
+        }))
     }
-  })
+  }
 
-  server.createContext("/ann", handler { ex =>
-    queryParam(ex, "vec").map(_.trim).filter(_.nonEmpty) match {
+  http.route("/ann") { ex =>
+    if (ivf == null) (503, """{"error":"no ANN tier wired"}""")
+    else queryParam(ex, "vec").map(_.trim).filter(_.nonEmpty) match {
       case None => (400, """{"error":"missing required query parameter 'vec'"}""")
       case Some(v) =>
         val vec =
@@ -488,18 +402,17 @@ final class SearchHttpEndpoint(bm25: Bm25SearchTier, ivf: IvfSearchTier,
           }
         val k = intParam(ex, "k", 10)
         val nProbe = intParam(ex, "nprobe", 4)
-        val results = ivf.search(vec, k, nProbe).map { case (id, sim) =>
+        (200, results(ivf.search(vec, k, nProbe).map { case (id, sim) =>
           s"""{"vec_id":$id,"sim":${num(sim)}}"""
-        }
-        (200, results.mkString("""{"Results":[""", ",", "]}"))
+        }))
     }
-  })
+  }
 
   // GET /neardup?dhash=…&ahash=…[&maxh=3] — the admission check:
   // {"Results":[{"media_id":…,"hamming":…,"a_hamming":…},…]}; an
   // empty Results list means novel, admit. Only when a signature
   // tier is wired.
-  if (sig != null) server.createContext("/neardup", handler { ex =>
+  if (sig != null) http.route("/neardup") { ex =>
     (queryParam(ex, "dhash"), queryParam(ex, "ahash")) match {
       case (Some(d), Some(a)) =>
         val (dh, ah) =
@@ -508,14 +421,13 @@ final class SearchHttpEndpoint(bm25: Bm25SearchTier, ivf: IvfSearchTier,
             throw new BadRequest("dhash/ahash must be signed 64-bit longs")
           }
         val maxH = intParam(ex, "maxh", 3)
-        val results = sig.probe(dh, ah, maxH).map { case (m, hd, ha) =>
+        (200, results(sig.probe(dh, ah, maxH).map { case (m, hd, ha) =>
           s"""{"media_id":$m,"hamming":$hd,"a_hamming":$ha}"""
-        }
-        (200, results.mkString("""{"Results":[""", ",", "]}"))
+        }))
       case _ =>
         (400, """{"error":"missing required query parameters 'dhash','ahash'"}""")
     }
-  })
+  }
 
   // GET /scrub?text=… — the online leg of the blocklist family
   // (q171's cover masking at request time): {"masked":…,
@@ -523,7 +435,7 @@ final class SearchHttpEndpoint(bm25: Bm25SearchTier, ivf: IvfSearchTier,
   // (at construction or via reloadScrubCatalog) — answering
   // UNMASKED text from a scrub route would be the silent
   // compliance failure.
-  server.createContext("/scrub", handler { ex =>
+  http.route("/scrub") { ex =>
     val ac = scrubAc // one volatile read per request
     if (ac == null)
       (503, """{"error":"no scrub catalog wired"}""")
@@ -532,33 +444,19 @@ final class SearchHttpEndpoint(bm25: Bm25SearchTier, ivf: IvfSearchTier,
         (400, """{"error":"missing required query parameter 'text'"}""")
       case Some(t) =>
         val (m, nm, ns) = ac.maskCovered(t, '*')
-        (200,
-          s"""{"masked":"${jsonEsc(m)}","n_masked":$nm,"n_spans":$ns}""")
+        (200, s"""{"masked":"${esc(m)}","n_masked":$nm,"n_spans":$ns}""")
     }
-  })
-
-  server.createContext("/stats", handler { _ =>
-    val (bh, bm) = bm25.stats
-    val (ih, im) = ivf.stats
-    val sigPart =
-      if (sig == null) ""
-      else {
-        val (sh, sm) = sig.stats
-        s""","sig":{"hits":$sh,"misses":$sm}"""
-      }
-    (200, s"""{"bm25":{"hits":$bh,"misses":$bm},""" +
-      s""""ann":{"hits":$ih,"misses":$im}$sigPart}""")
-  })
-
-  server.setExecutor(pool)
-
-  def start(): Int = {
-    server.start()
-    server.getAddress.getPort
   }
 
-  def stop(): Unit = {
-    server.stop(0)
-    pool.shutdownNow(): Unit
+  http.route("/stats") { _ =>
+    val tiers = Seq("bm25" -> bm25.stats) ++
+      Option(ivf).map("ann" -> _.stats) ++ Option(sig).map("sig" -> _.stats)
+    (200, tiers.map { case (name, (h, m)) =>
+      s""""$name":{"hits":$h,"misses":$m}"""
+    }.mkString("{", ",", "}"))
   }
+
+  def start(): Int = http.start()
+
+  def stop(): Unit = http.stop()
 }

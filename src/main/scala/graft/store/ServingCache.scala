@@ -21,72 +21,36 @@ import org.apache.spark.sql.types.{ByteType, DataType, Decimal, DecimalType,
   * read) and reloads the bucket iff a serving merge rewrote it since
   * caching. That gives read-your-merges semantics without TTL
   * guesswork; `invalidate()` drops everything for the blunt version.
-  * `sigFreshMs > 0` relaxes it to BOUNDED STALENESS: within the
-  * window, repeat lookups skip even the LIST (zero filesystem calls)
-  * — the dial to turn on object storage, where the LIST is the
-  * latency floor, not the memory lookup.
   *
   * Capacity: memory = maxCachedBuckets × bucket size. At 100 TB the
   * knob pairs with `nBuckets` — more buckets ⇒ smaller cache units ⇒
   * a hot-set cache that holds the hot KEYS' buckets, exactly how a
-  * production keyed cache shards. The LRU keeps the hot buckets
-  * resident and evicts cold ones on access order.
+  * production keyed cache shards.
   *
-  * Concurrency: the LRU map and counters are guarded by a short
-  * global lock; the BUCKET LOAD (filesystem LIST + parquet collect —
-  * the ~100 ms–s part) runs under a PER-BUCKET latch only. A cold
-  * miss therefore never blocks hits (or other buckets' misses); two
-  * concurrent misses on the SAME bucket coalesce into one load via
-  * the latch's double-check. That is the serving-tier contract: the
-  * whole point of this cache is sub-ms repeat lookups, and a tier
-  * that serializes every hit behind one cold load has the wrong
-  * concurrency shape (round-8 verdict #1).
+  * Concurrency is [[BucketCache]]'s: a cold miss loads under its
+  * bucket's own latch, so it never blocks hits (or other buckets'
+  * misses), and concurrent misses on the same bucket coalesce into
+  * one load.
   */
 class ServingCache(spark: SparkSession, servingDir: String,
     keyCol: String, nBuckets: Int = 64, maxCachedBuckets: Int = 16,
-    dropCols: Seq[String] = Nil, sigFreshMs: Long = 0L) {
+    dropCols: Seq[String] = Nil) {
   require(nBuckets > 0 && maxCachedBuckets > 0,
     "nBuckets and maxCachedBuckets must be positive")
-  require(sigFreshMs >= 0, "sigFreshMs must be non-negative")
 
-  /** `checkedAt` = when this bucket's dir signature was last compared
-    * against the filesystem (epoch ms); within `sigFreshMs` of it, a
-    * lookup serves pure-memory with NO filesystem touch at all. That
-    * matters at 100 TB on object storage, where the per-get LIST
-    * (~10–100 ms) — not the memory lookup — is the latency floor:
-    * `sigFreshMs` trades read-your-merges for a bounded staleness
-    * window, the same freshness/latency dial every TTL'd serving
-    * cache exposes. 0 (the default) keeps the strict per-get
-    * signature check.
-    */
-  private final class CachedBucket(val sig: String,
-      val rows: Map[String, Row], @volatile var checkedAt: Long)
+  private final class CachedBucket(val sig: String, val rows: Map[String, Row])
 
-  // guarded by `this` — every critical section on it is O(1), no IO
-  private val lru = new java.util.LinkedHashMap[Int, CachedBucket](
-      16, 0.75f, /*accessOrder=*/ true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[Int, CachedBucket]): Boolean =
-      size() > maxCachedBuckets
-  }
-  private var hitsN = 0L
-  private var missesN = 0L
-
-  // per-bucket load latches: misses on the same bucket serialize (and
-  // coalesce via double-check), misses on different buckets proceed
-  // in parallel, hits never touch these
-  private val bucketLatch: Array[Object] =
-    Array.fill(nBuckets)(new Object)
+  private val cache = new BucketCache[CachedBucket](maxCachedBuckets)
 
   /** (hits, misses) — a miss is any get that (re)loaded its bucket. */
-  def stats: (Long, Long) = synchronized((hitsN, missesN))
+  def stats: (Long, Long) = cache.stats
 
   /** Currently resident buckets — the health/metrics surface's view
     * of cache warmth (≤ maxCachedBuckets by the LRU bound).
     */
-  def loadedBuckets: Int = synchronized(lru.size)
+  def loadedBuckets: Int = cache.size
 
-  def invalidate(): Unit = synchronized(lru.clear())
+  def invalidate(): Unit = cache.invalidate()
 
   private def fs =
     new Path(servingDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -180,40 +144,8 @@ class ServingCache(spark: SparkSession, servingDir: String,
       case None    => return None // unkeyable id can match no stored row
     }
     val b = bucketOf(id)
-    // freshness fast path: a bucket whose signature was checked within
-    // sigFreshMs serves pure-memory — zero filesystem calls (see
-    // CachedBucket docs; bounded staleness is the contract here)
-    if (sigFreshMs > 0) {
-      val now = System.currentTimeMillis()
-      val fresh = synchronized {
-        val c = Option(lru.get(b)).filter(now - _.checkedAt < sigFreshMs)
-        if (c.isDefined) hitsN += 1
-        c
-      }
-      fresh.foreach(cb => return cb.rows.get(key))
-    }
     val sig = signature(b)
-    val now = System.currentTimeMillis()
-    val hit = synchronized {
-      val c = Option(lru.get(b)).filter(_.sig == sig)
-      c.foreach { cb => hitsN += 1; cb.checkedAt = now }
-      c
-    }
-    val bucket = hit.getOrElse {
-      bucketLatch(b).synchronized {
-        // double-check under the bucket latch: a concurrent miss on
-        // the SAME bucket may have loaded it while we waited — reuse
-        // its load instead of repeating it
-        synchronized(Option(lru.get(b)).filter(_.sig == sig)) match {
-          case Some(cb) => synchronized { hitsN += 1 }; cb
-          case None =>
-            val rows = loadBucket(b, sig) // IO: bucket latch only
-            val cb = new CachedBucket(sig, rows, System.currentTimeMillis())
-            synchronized { missesN += 1; lru.put(b, cb) }
-            cb
-        }
-      }
-    }
-    bucket.rows.get(key)
+    cache.get(b, _.sig == sig)(new CachedBucket(sig, loadBucket(b, sig)))
+      .rows.get(key)
   }
 }

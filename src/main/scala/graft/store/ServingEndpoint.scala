@@ -1,10 +1,5 @@
 package graft.store
 
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets.UTF_8
-
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-
 /** Over-the-wire point-lookup surface for the serving tier — the role
   * the reference delegates to the SageMaker featurestore-runtime
   * `get_record` API (`feature_store_manager.py:165-168`; response
@@ -18,93 +13,41 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   * stringly-typed contract the reference round-trips
   * (`ValueAsString`, `feature_store_manager.py:235`).
   *
-  * The endpoint is a thin loopback tier over [[ServingCache]]: a hit
-  * costs zero Spark jobs, and the cache's per-bucket load latches are
-  * exactly what lets this serve CONCURRENT requests — one cold
-  * bucket's load never blocks other requests' hits (round-9
-  * concurrency shape). JDK `HttpServer` only, no added dependencies;
-  * a production deployment would front the same cache with its real
-  * RPC stack, this pins the contract and the threading shape.
-  *
-  * Bind is loopback-only by design (a serving sidecar, not a public
-  * listener); `port = 0` picks an ephemeral port, returned by
-  * [[start]].
+  * The endpoint is a thin loopback tier over [[ServingCache]] on the
+  * shared [[HttpScaffold]]: a hit costs zero Spark jobs, and the
+  * cache's per-bucket load latches are exactly what lets this serve
+  * CONCURRENT requests — one cold bucket's load never blocks other
+  * requests' hits. A production deployment would front the same cache
+  * with its real RPC stack; this pins the contract and the threading
+  * shape.
   */
 final class ServingEndpoint(cache: ServingCache, port: Int = 0,
     nThreads: Int = 8) {
-  require(nThreads > 0, "nThreads must be positive")
+  import HttpScaffold.rawParam
+  import graft.core.Json.{esc => jsonEsc}
 
-  private val server =
-    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  private val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
-
-  private def jsonEsc(s: String): String = graft.core.Json.esc(s)
-
-  /** A client-input defect (bad escape, malformed list) — mapped to
-    * HTTP 400, never the 5xx class a serving tier alerts on.
-    */
-  private final class BadRequest(msg: String) extends RuntimeException(msg)
-
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length.toLong)
-    try ex.getResponseBody.write(bytes) finally ex.close()
-  }
+  private val http = new HttpScaffold(port, nThreads)
 
   /** Decode ONLY percent-escapes: these are URI-query semantics, not
-    * form encoding — URLDecoder alone would turn a literal `+` in a
-    * string key into a space and miss an existing record. A malformed
-    * escape is the CLIENT's defect → BadRequest (400), not a 500.
+    * form encoding — form decoding would turn a literal `+` in a
+    * string key into a space and miss an existing record.
     */
   private def pctDecode(v: String): String =
-    try java.net.URLDecoder.decode(v.replace("+", "%2B"), "UTF-8")
-    catch {
-      case _: IllegalArgumentException =>
-        throw new BadRequest("malformed percent-encoding in query parameter")
-    }
+    HttpScaffold.decode(v, plusIsSpace = false, "query parameter")
 
-  /** Raw (still percent-encoded) value of `name` — callers that split
-    * on structural characters (the batch route's commas) must split
-    * BEFORE decoding, or an encoded comma inside one identifier would
-    * be torn into several.
-    */
-  private def rawQueryParam(ex: HttpExchange, name: String): Option[String] =
-    Option(ex.getRequestURI.getRawQuery).flatMap {
-      _.split("&").iterator.map(_.split("=", 2)).collectFirst {
-        case Array(k, v) if k == name => v
-      }
-    }
-
-  private def queryParam(ex: HttpExchange, name: String): Option[String] =
-    rawQueryParam(ex, name).map(pctDecode)
-
-  private val recordHandler: HttpHandler = (ex: HttpExchange) => {
-    // compute the response BEFORE sending anything: once headers go
-    // out, a failed write (client disconnect — routine on a serving
-    // tier) must not trigger a second respond() on the same exchange
-    val (code, body) =
-      try {
-        queryParam(ex, "id") match {
-          case None =>
-            (400, """{"error":"missing required query parameter 'id'"}""")
-          case Some(id) =>
-            // the reference's Record shape: every present field as a
-            // FeatureName/ValueAsString pair; NULL fields omitted
-            // (the upstream API omits absent features the same way)
-            recordJson(id) match {
-              case None    => (404, """{"Record":[]}""")
-              case Some(r) => (200, s"""{"Record":$r}""")
-            }
+  http.route("/record") { ex =>
+    rawParam(ex, "id").map(pctDecode) match {
+      case None =>
+        (400, """{"error":"missing required query parameter 'id'"}""")
+      case Some(id) =>
+        // the reference's Record shape: every present field as a
+        // FeatureName/ValueAsString pair; NULL fields omitted
+        // (the upstream API omits absent features the same way)
+        recordJson(id) match {
+          case None    => (404, """{"Record":[]}""")
+          case Some(r) => (200, s"""{"Record":$r}""")
         }
-      } catch {
-        case b: BadRequest =>
-          (400, s"""{"error":"${jsonEsc(b.getMessage)}"}""")
-        case t: Throwable =>
-          (500, s"""{"error":"${jsonEsc(t.toString.take(160))}"}""")
-      }
-    try respond(ex, code, body)
-    catch { case _: java.io.IOException => ex.close() } // client went away
+    }
   }
 
   /** One feature's wire pair. Scalars → `ValueAsString`; array
@@ -188,46 +131,32 @@ final class ServingEndpoint(cache: ServingCache, port: Int = 0,
     * load; distinct buckets ride the per-bucket latches exactly like
     * concurrent point gets.
     */
-  private val batchHandler: HttpHandler = (ex: HttpExchange) => {
-    val (code, body) =
-      try {
-        // split the RAW value first: an encoded comma (%2C) inside one
-        // identifier is key content, not a list separator
-        rawQueryParam(ex, "ids").map(_.split(",", -1).iterator
-            .map(_.trim).filter(_.nonEmpty).map(pctDecode)
-            .distinct.toSeq) match {
-          case None | Some(Seq()) =>
-            (400, """{"error":"missing required query parameter 'ids' (comma-separated)"}""")
-          case Some(ids) if ids.sizeIs > 100 =>
-            (400, s"""{"error":"too many identifiers (${ids.size} > 100 per request)"}""")
-          case Some(ids) =>
-            val (found, missing) = ids.map(id => id -> recordJson(id))
-              .partition(_._2.isDefined)
-            val recs = found.map { case (id, r) =>
-              s"""{"RecordIdentifierValueAsString":"${jsonEsc(id)}",""" +
-                s""""Record":${r.get}}"""
-            }.mkString("[", ",", "]")
-            val unproc = missing.map(m => s""""${jsonEsc(m._1)}"""")
-              .mkString("[", ",", "]")
-            (200, s"""{"Records":$recs,"UnprocessedIdentifiers":$unproc}""")
-        }
-      } catch {
-        case b: BadRequest =>
-          (400, s"""{"error":"${jsonEsc(b.getMessage)}"}""")
-        case t: Throwable =>
-          (500, s"""{"error":"${jsonEsc(t.toString.take(160))}"}""")
-      }
-    try respond(ex, code, body)
-    catch { case _: java.io.IOException => ex.close() }
+  http.route("/records") { ex =>
+    // split the RAW value first: an encoded comma (%2C) inside one
+    // identifier is key content, not a list separator
+    rawParam(ex, "ids").map(_.split(",", -1).iterator
+        .map(_.trim).filter(_.nonEmpty).map(pctDecode)
+        .distinct.toSeq) match {
+      case None | Some(Seq()) =>
+        (400, """{"error":"missing required query parameter 'ids' (comma-separated)"}""")
+      case Some(ids) if ids.sizeIs > 100 =>
+        (400, s"""{"error":"too many identifiers (${ids.size} > 100 per request)"}""")
+      case Some(ids) =>
+        val (found, missing) = ids.map(id => id -> recordJson(id))
+          .partition(_._2.isDefined)
+        val recs = found.map { case (id, r) =>
+          s"""{"RecordIdentifierValueAsString":"${jsonEsc(id)}",""" +
+            s""""Record":${r.get}}"""
+        }.mkString("[", ",", "]")
+        val unproc = missing.map(m => s""""${jsonEsc(m._1)}"""")
+          .mkString("[", ",", "]")
+        (200, s"""{"Records":$recs,"UnprocessedIdentifiers":$unproc}""")
+    }
   }
 
-  private val statsHandler: HttpHandler = (ex: HttpExchange) => {
-    val (code, body) = // same compute-then-respond shape as the others
-      try { val (h, m) = cache.stats; (200, s"""{"hits":$h,"misses":$m}""") }
-      catch { case t: Throwable =>
-        (500, s"""{"error":"${jsonEsc(t.toString.take(160))}"}""") }
-    try respond(ex, code, body)
-    catch { case _: java.io.IOException => ex.close() } // client went away
+  http.route("/stats") { _ =>
+    val (h, m) = cache.stats
+    (200, s"""{"hits":$h,"misses":$m}""")
   }
 
   /** Liveness + readiness in one probe: 200 whenever the cache tier
@@ -235,17 +164,10 @@ final class ServingEndpoint(cache: ServingCache, port: Int = 0,
     * trigger); carries warmth + uptime so a human reading the probe
     * sees WHY a cold tier is slow.
     */
-  private val healthHandler: HttpHandler = (ex: HttpExchange) => {
-    val (code, body) =
-      try {
-        val loaded = cache.loadedBuckets
-        (200, s"""{"status":"ok","buckets_loaded":$loaded,""" +
-          s""""uptime_ms":${System.currentTimeMillis() - startedAtMs}}""")
-      } catch { case t: Throwable =>
-        (500, s"""{"status":"error","error":"${jsonEsc(t.toString.take(160))}"}""")
-      }
-    try respond(ex, code, body)
-    catch { case _: java.io.IOException => ex.close() }
+  http.route("/healthz", errFields = """"status":"error",""") { _ =>
+    val loaded = cache.loadedBuckets
+    (200, s"""{"status":"ok","buckets_loaded":$loaded,""" +
+      s""""uptime_ms":${System.currentTimeMillis() - startedAtMs}}""")
   }
 
   /** Operations metrics: cache hit ratio + lookup-latency quantiles
@@ -254,42 +176,17 @@ final class ServingEndpoint(cache: ServingCache, port: Int = 0,
     * or working set > LRU bound; p99 jumping with a stable hit_ratio
     * = slow loads (storage tier) rather than cache churn.
     */
-  private val metricsHandler: HttpHandler = (ex: HttpExchange) => {
-    val (code, body) =
-      try {
-        val (h, m) = cache.stats
-        val ratio = if (h + m == 0L) 1.0 else h.toDouble / (h + m)
-        // Locale.ROOT: the f-interpolator uses the JVM default locale,
-        // which on comma-decimal locales (de_DE …) would emit
-        // "0,333333" — invalid JSON (same pitfall Bench guards)
-        (200, s"""{"hits":$h,"misses":$m,""" +
-          s""""hit_ratio":${String.format(java.util.Locale.ROOT,
-            "%.6f", Double.box(ratio))},""" +
-          s""""lookups":${h + m},""" +
-          s""""p50_ms":${quantileMs(0.50)},"p99_ms":${quantileMs(0.99)},""" +
-          s""""buckets_loaded":${cache.loadedBuckets}}""")
-      } catch { case t: Throwable =>
-        (500, s"""{"error":"${jsonEsc(t.toString.take(160))}"}""")
-      }
-    try respond(ex, code, body)
-    catch { case _: java.io.IOException => ex.close() }
+  http.route("/metrics") { _ =>
+    val (h, m) = cache.stats
+    val ratio = if (h + m == 0L) 1.0 else h.toDouble / (h + m)
+    (200, s"""{"hits":$h,"misses":$m,"hit_ratio":${HttpScaffold.num(ratio)},""" +
+      s""""lookups":${h + m},""" +
+      s""""p50_ms":${quantileMs(0.50)},"p99_ms":${quantileMs(0.99)},""" +
+      s""""buckets_loaded":${cache.loadedBuckets}}""")
   }
-
-  server.createContext("/record", recordHandler)
-  server.createContext("/records", batchHandler)
-  server.createContext("/stats", statsHandler)
-  server.createContext("/healthz", healthHandler)
-  server.createContext("/metrics", metricsHandler)
-  server.setExecutor(pool)
 
   /** Start serving; returns the bound port (useful with `port = 0`). */
-  def start(): Int = {
-    server.start()
-    server.getAddress.getPort
-  }
+  def start(): Int = http.start()
 
-  def stop(): Unit = {
-    server.stop(0)
-    pool.shutdownNow(): Unit
-  }
+  def stop(): Unit = http.stop()
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.core.Pin
 import graft.pipeline.{EventEnricher, LoyaltyModel}
 import graft.store.FeatureStore
 
@@ -56,11 +57,12 @@ object InferencePipeline {
     // steady-state streaming shape at 100 TB
     val enriched = EventEnricher.enrich(valid,
       if (useServing) store.serving() else store.online())
-    // materialize before the upsert: putRecords re-compacts the online
-    // view, replacing the parquet files this plan reads — a later
-    // re-execution of the lazy plan would hit deleted files
-    val scored = LoyaltyModel.score(model, enriched).persist()
-    scored.count(): Unit
+    // snapshot before the upsert: the upsert rewrites the online view
+    // or the serving buckets this plan reads. A lineage-preserving
+    // persist is not enough — the overwrite re-caches plans over the
+    // rewritten path, so the sink would carry scores recomputed from
+    // the post-merge features (and a recompute could hit deleted files)
+    val scored = Pin.snapshot(LoyaltyModel.score(model, enriched))
     // the A3 state transition on write-back
     // (`update_customer_features`, feature_store_manager.py:260-264):
     // existing → new_avg = (old_avg + new)/2 for purchase value and
@@ -115,7 +117,7 @@ object InferencePipeline {
           txnId = Some(s"$txnPrefix-$batchId"))
         scored.write.mode("append").parquet(scoredSink)
         if (!dead.isEmpty) dead.write.mode("append").parquet(dlqSink)
-        scored.unpersist(): Unit
+        Pin.release(scored)
       }
       .start()
 }

@@ -100,20 +100,6 @@ object StreamingSuppress {
   final case class Gated(quasi: String, payload: String,
       released: Boolean)
 
-  /** [[observations]] with the event timestamp the TTL clock runs on. */
-  def observationsTimed(df: DataFrame, quasiCols: Seq[String],
-      payload: Column, ts: Column): Dataset[ObsT] = {
-    require(quasiCols.nonEmpty, "suppression needs quasi-identifiers")
-    import df.sparkSession.implicits._
-    df.select(
-      concat_ws("\u0001", quasiCols.map(c =>
-        coalesce(col(c).cast("string"), lit("\u0002"))): _*)
-        .as("quasi"),
-      payload.cast("string").as("payload"),
-      ts.cast("timestamp").as("ts"))
-      .as[ObsT]
-  }
-
   private def updateGroupTtl(k: Long, ttlMs: Long)(
       quasi: String, obs: Iterator[ObsT],
       state: GroupState[GroupBuf]): Iterator[Gated] = {

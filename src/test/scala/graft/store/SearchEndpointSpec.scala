@@ -277,4 +277,22 @@ class SearchEndpointSpec extends SparkSpec {
         """{"masked":"a *** day","n_masked":3,"n_spans":1}""")
     } finally ep.stop()
   }
+
+  test("an endpoint built without an ANN tier answers /ann 503 and " +
+      "leaves the tier out of /stats") {
+    val bm25Dir = Files.createTempDirectory("bm25-noann").toString
+    SearchEndpoint.writeBm25Index(
+      Retrieval.docTermStats(
+        Tables.load(spark, sf, "documents").limit(10)), bm25Dir)
+    val ep = new SearchHttpEndpoint(new Bm25SearchTier(spark, bm25Dir), null)
+    val port = ep.start()
+    try {
+      val conn = new java.net.URI(s"http://127.0.0.1:$port/ann?vec=1.0,0.0")
+        .toURL.openConnection().asInstanceOf[java.net.HttpURLConnection]
+      assert(conn.getResponseCode === 503)
+      assert(get(port, "/ann?vec=1.0,0.0") === """{"error":"no ANN tier wired"}""")
+      assert(get(port, "/stats") === """{"bm25":{"hits":0,"misses":0}}""")
+      assert(get(port, "/search?q=x").startsWith("""{"Results":["""))
+    } finally ep.stop()
+  }
 }

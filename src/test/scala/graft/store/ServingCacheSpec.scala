@@ -161,39 +161,6 @@ class ServingCacheSpec extends SparkSpec {
     } finally pool.shutdownNow(): Unit
   }
 
-  test("sigFreshMs serves bounded-stale lookups with zero filesystem checks") {
-    val s = freshStore()
-    s.mergeServing(Seq((5L, ts("2024-01-01 00:00:00"), 50.0))
-      .toDF("customer_id", "purchase_timestamp", "v"))
-    // a generous window: within it, a merge must NOT be observed —
-    // the stale read IS the proof that no signature LIST ran
-    val cache = s.servingCache(sigFreshMs = 60000L)
-    assert(cache.get(5L).get.getAs[Double]("v") == 50.0)
-    s.mergeServing(Seq((5L, ts("2024-06-01 00:00:00"), 55.0))
-      .toDF("customer_id", "purchase_timestamp", "v"))
-    assert(cache.get(5L).get.getAs[Double]("v") == 50.0,
-      "within the freshness window the cache serves without re-checking")
-    val (_, m0) = cache.stats
-    assert(cache.get(5L).nonEmpty && cache.stats._2 == m0,
-      "freshness-window lookups must not reload")
-    // invalidate() still cuts through the window immediately
-    cache.invalidate()
-    assert(cache.get(5L).get.getAs[Double]("v") == 55.0)
-  }
-
-  test("an expired freshness window re-checks the signature and reloads") {
-    val s = freshStore()
-    s.mergeServing(Seq((5L, ts("2024-01-01 00:00:00"), 50.0))
-      .toDF("customer_id", "purchase_timestamp", "v"))
-    val cache = s.servingCache(sigFreshMs = 150L)
-    assert(cache.get(5L).get.getAs[Double]("v") == 50.0)
-    s.mergeServing(Seq((5L, ts("2024-06-01 00:00:00"), 55.0))
-      .toDF("customer_id", "purchase_timestamp", "v"))
-    Thread.sleep(300) // past the window: signature check resumes
-    assert(cache.get(5L).get.getAs[Double]("v") == 55.0,
-      "staleness is BOUNDED: the merge is visible once the window expires")
-  }
-
   test("an unparseable id against a numeric key is None, not NumberFormatException") {
     val s = freshStore()
     s.mergeServing(Seq((1L, ts("2024-01-01 00:00:00"), 1.0))

@@ -115,7 +115,7 @@ class StoreServingSpec extends SparkSpec {
                       // until the first serving merge
       batches.foreach { b =>
         val (scored, _) = InferencePipeline.processBatch(b, s, model, useServing)
-        scored.unpersist(): Unit
+        graft.core.Pin.release(scored)
       }
       val view = if (useServing) s.serving() else s.online()
       view.orderBy($"customer_id").collect()

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkSpec
+import graft.core.Pin
 import graft.pipeline.{FeatureEngineering, LoyaltyModel}
 import graft.store.FeatureStore
 
@@ -111,6 +112,42 @@ class StreamingSpec extends SparkSpec {
     assert(store.offline().count() == 4)
   }
 
+  test("serving-mode inference: the scored sink carries the scores upserted, " +
+      "not ones recomputed after the serving merge") {
+    val dir = Files.createTempDirectory("infer-serving").toString
+    val store = FeatureStore(spark, s"$dir/store", "customer_id", "purchase_timestamp")
+    val hist = Seq(
+      (1L, ts("2024-01-01 10:00:00"), 100.0, 5.0),
+      (1L, ts("2024-01-03 09:30:00"), 50.0, 6.0),
+      (2L, ts("2024-01-02 12:00:00"), 200.0, 9.0),
+    ).toDF("customer_id", "purchase_timestamp", "purchase_value", "loyalty_score")
+    val feats = FeatureEngineering.engineerFeatures(hist)
+    // seed the serving layout, so the batch enriches against the
+    // bucket files its own merge then rewrites
+    store.ingestServing(feats)
+    val model = LoyaltyModel.train(feats.unionByName(feats.withColumn(
+      "latest_loyalty_score", $"latest_loyalty_score" + 0.1)))
+
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(java.lang.Long, Timestamp, java.lang.Double)]
+    input.addData(
+      (1L, ts("2024-02-01 00:00:00"), 80.0),
+      (9L, ts("2024-02-01 00:00:00"), 40.0))
+    InferencePipeline.run(
+      input.toDF().toDF("customer_id", "purchase_timestamp", "purchase_value"),
+      store, model, s"$dir/scored", s"$dir/dlq", s"$dir/ckpt",
+      useServing = true).awaitTermination()
+
+    // the served A3 transition averages in the score the batch
+    // predicted from PRE-merge features; the sink must hold that same
+    // score, not one re-derived from the merged row
+    val sink1 = spark.read.parquet(s"$dir/scored")
+      .filter($"customer_id" === 1L).head().getAs[Double]("predicted_loyalty_score")
+    val c1 = store.getServingRecord(1L).head()
+    assert(c1.getAs[Double]("latest_loyalty_score") == sink1)
+    assert(math.abs(c1.getAs[Double]("avg_loyalty_score") - (5.5 + sink1) / 2) < 1e-12)
+  }
+
   test("micro-batch replay with the same txn id is exactly-once at the store") {
     val dir = Files.createTempDirectory("replay-test").toString
     val store = FeatureStore(spark, s"$dir/store", "customer_id",
@@ -128,14 +165,14 @@ class StreamingSpec extends SparkSpec {
     val batch = Seq((1L, ts("2024-02-01 00:00:00"), 80.0))
       .toDF("customer_id", "purchase_timestamp", "purchase_value")
     // first delivery
-    InferencePipeline.processBatch(batch, store, model,
-      txnId = Some("stream-0"))._1.unpersist()
+    Pin.release(InferencePipeline.processBatch(batch, store, model,
+      txnId = Some("stream-0"))._1)
     val versions = store.offlineVersions
     val online = store.online().collect().toSet
     // foreachBatch re-delivery after a crash-before-checkpoint: same
     // batch, same id — must change NOTHING
-    InferencePipeline.processBatch(batch, store, model,
-      txnId = Some("stream-0"))._1.unpersist()
+    Pin.release(InferencePipeline.processBatch(batch, store, model,
+      txnId = Some("stream-0"))._1)
     assert(store.offlineVersions == versions)
     assert(store.offline().count() == 3)
     assert(store.online().collect().toSet == online)
