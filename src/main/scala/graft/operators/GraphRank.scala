@@ -29,18 +29,123 @@ import graft.core.{Pin, Tables}
   * the 0.15 teleport term is 150000 ticks of the 1e6 start mass.
   *
   * Scale shape (the part that must survive 100×): per iteration, ONE
-  * shuffle — the partial-agg sum of contributions keyed by dst; the
-  * rank⋈degree join is keyed on v and reuses the same hash
-  * partitioning, and the edge join is src-keyed postings × a
-  * vertex-count-sized rank table (AQE broadcasts it while it fits —
-  * vertex tables are |V|, edge tables |E| ≫ |V|). The symmetrized
-  * edge set is pinned once (`Pin.reuse`) because it feeds every
+  * src-keyed join of the pinned edge frame against the |V|-sized
+  * contribution-sum frame (AQE broadcasts it while it fits — vertex
+  * tables are |V|, edge tables |E| ≫ |V|) and ONE dst-keyed partial
+  * agg. Out-weights and teleport flags fold into the edge frame once
+  * before the loop; the vertex frame is joined once, for the output.
+  * The edge set is pinned once (`Pin.reuse`) because it feeds every
   * iteration — without the cut, each of the 5 rounds would re-run the
-  * full Jaccard postings join upstream. Rank state never touches the
-  * driver; iterations are a fixed count, not a convergence probe, so
-  * the whole computation is one job at the final action.
+  * full Jaccard postings join upstream. Iterations are a fixed count,
+  * not a convergence probe. The plain forms keep rank state off the
+  * driver and run the loop as one job at the final action; the
+  * redistributing form pins each round's frame and reads one Long
+  * (the sink share) per round.
   */
 object GraphRank {
+
+  /** Directed edge normalization shared by the link-graph operators:
+    * (src, dst, wt) with self-loops dropped and parallel rows combined
+    * (`combine`, a sum by default), pinned — every consumer reads it
+    * once per round.
+    */
+  private def directedEdges(edges: DataFrame,
+      combine: Column => Column = sum(_)): DataFrame = {
+    import edges.sparkSession.implicits._
+    edges.select($"src", $"dst", $"wt")
+      .filter($"src" =!= $"dst")
+      .groupBy($"src", $"dst").agg(combine($"wt").as("wt"))
+      .transform(Pin.reuse)
+  }
+
+  /** The vertex set of an edge frame, (v, w): every src and dst, w its
+    * out-weight in one agg (a dst-only row adds 0, so a sink has 0).
+    */
+  private def vertexSet(e: DataFrame): DataFrame =
+    e.select(col("src").as("v"), col("wt").as("w"))
+      .union(e.select(col("dst").as("v"), lit(0L).as("w")))
+      .groupBy("v").agg(sum("w").as("w"))
+
+  /** The one PageRank loop behind the four public forms. `e` is a
+    * normalized directed edge set (see [[directedEdges]]); the
+    * source's out-weight w and teleport flag t ∈ {0, 1} (1, or seed
+    * membership when `seeds` is given) fold into it once, giving the
+    * pinned edge frame (src, dst, wt, w, t). Loop state is the
+    * contribution sum s(dst) plus a scalar `share`, and the rank
+    * recurrence folds inline into the next round's contribution:
+    *
+    *   c = ((t·150000 + ((coalesce(s(src), 0) + share)·17) div 20)·wt) div w
+    *
+    * (round 1: (t·1e6·wt) div w). A round is ONE src-keyed join and
+    * ONE dst-keyed partial agg. The vertex frame (v, w, t), w = 0 on a
+    * sink, is joined once, for the output:
+    * r = t·150000 + ((coalesce(s, 0) + share)·17) div 20.
+    *
+    * `share` is 0 unless `redistribute` (unseeded only: every sink
+    * teleports). Then share_i = (Σ r_{i-1} over the sinks) div |V|,
+    * read on the driver as one Long per round. Every sink is a dst,
+    * so it has a row in s, flagged `k` from the edge frame; the round
+    * frame is pinned because it feeds both the share read and the
+    * next round.
+    */
+  private def rankTicks(e: DataFrame, iters: Int, wName: String,
+      seeds: Option[DataFrame] = None, redistribute: Boolean = false,
+      symmetric: Boolean = false): DataFrame = {
+    val ss = e.sparkSession
+    import ss.implicits._
+    require(iters >= 1, "iters must be >= 1")
+    // teleport flag t on key column `v` of `df`: 1, or seed membership
+    def teleport(df: DataFrame, v: String): DataFrame = seeds.fold(
+      df.withColumn("t", lit(1L))) { sd =>
+      val f = sd.toDF("sv").distinct()
+      df.join(f, df(v) === f("sv"), "left")
+        .withColumn("t", when(f("sv").isNull, 0L).otherwise(1L)).drop("sv")
+    }
+    // the output's vertex frame: co-partitioned with s when unpinned;
+    // redistribute pins it, as it also feeds k and the |V| read
+    val vf = teleport(vertexSet(e), "v")
+      .transform(df => if (redistribute) Pin.reuse(df) else df)
+    // a window keeps `e` single-referenced: w folds in with one pass
+    val ew = teleport(e.withColumn("w",
+      sum($"wt").over(Window.partitionBy($"src"))), "src")
+    val ne = (if (!redistribute) ew
+      else ew.join(vf.select($"v".as("dst"), ($"w" === 0L).as("k")), "dst"))
+      .transform(Pin.reuse)
+    val keepK = if (redistribute) Seq(max($"k").as("k")) else Nil
+    def sums(in: DataFrame, c: String): DataFrame =
+      in.groupBy($"dst").agg(sum(expr(c)).as("s"), keepK: _*)
+    def rank(t: String, s: String, share: Long): String =
+      s"$t * 150000 + ((coalesce($s, 0) + $share) * 17) div 20"
+    // |V| and round 1's share in one read; an empty graph has no
+    // sinks, so its 0 sink mass divides by 1
+    val (nv, share1) = if (!redistribute) (1L, 0L) else {
+      val h = vf.agg(count(lit(1)), count(when($"w" === 0L, 1))).head()
+      val n = math.max(h.getLong(0), 1L)
+      (n, h.getLong(1) * 1000000L / n)
+    }
+    var share = share1
+    var s = sums(ne, "(t * 1000000 * wt) div w")
+    var held: DataFrame = null
+    for (_ <- 2 to iters) {
+      val prev = if (redistribute) Pin.iterative(s) else s
+      if (held != null) Pin.release(held)
+      // in a symmetric closure every src has a row in s, so the inner
+      // join loses no edge and leaves AQE free to build either side
+      s = sums(ne.join(prev.select($"dst".as("cv"), $"s".as("ps")),
+          $"src" === $"cv", if (symmetric) "inner" else "left"),
+        s"((${rank("t", "ps", share)}) * wt) div w")
+      if (redistribute) {
+        held = prev
+        share = prev.filter($"k")
+          .agg(coalesce(sum(expr(rank("1", "s", share))), lit(0L)))
+          .head().getLong(0) / nv
+      }
+    }
+    vf.join(s, vf("v") === s("dst"), "left")
+      .select($"v".as("doc_id"), $"w".as(wName),
+        expr(rank("t", "s", share)).as("rank_ticks"))
+      .orderBy($"rank_ticks".desc, $"doc_id")
+  }
 
   /** Exact-integer PageRank. `edges` is an undirected pair set with
     * columns (doc_a, doc_b); vertices are the pair endpoints
@@ -49,53 +154,28 @@ object GraphRank {
     * public, so the input contract is enforced rather than assumed:
     * duplicate pair rows, either-orientation re-listings, and
     * self-loops are all collapsed/dropped in the symmetric-closure
-    * step (a `distinct` on the one-time pinned edge set — without it
-    * a duplicated row would silently double-count both the degree and
-    * the contribution, diverging from PageRank semantics and from the
-    * oracle). Returns (doc_id, degree, rank_ticks), rank_ticks the
-    * exact Long trajectory value after `iters` rounds from a uniform
-    * 1e6 start.
+    * step (without it a duplicated row would silently double-count
+    * both the degree and the contribution, diverging from PageRank
+    * semantics and from the oracle). It is the weighted form with
+    * every weight 1. Returns (doc_id, degree, rank_ticks), rank_ticks
+    * the exact Long trajectory value after `iters` rounds from a
+    * uniform 1e6 start.
     */
-  def pageRankTicks(edges: DataFrame, iters: Int): DataFrame = {
-    val ss = edges.sparkSession
-    import ss.implicits._
-    require(iters >= 1, "iters must be >= 1")
-    // symmetric closure, defensively dedup'd (see Scaladoc), pinned:
-    // its upstream (the Jaccard pair join) is the expensive part.
-    val e = edges.select($"doc_a".as("src"), $"doc_b".as("dst"))
-      .union(edges.select($"doc_b".as("src"), $"doc_a".as("dst")))
-      .filter($"src" =!= $"dst").distinct()
-      .transform(Pin.reuse)
-    // degree folded into the pinned edge set ONCE (r17, §2.4): the old
-    // loop re-aggregated the degree table and joined it to the rank
-    // frame EVERY round — two extra exchanges per iteration. A window
-    // keeps `e` single-referenced, so the fold is one setup pass.
-    val ed = Pin.reuse(e.withColumn("d",
-      count(lit(1)).over(Window.partitionBy($"src"))))
-    // the rank recurrence folds INLINE into the next round's
-    // contribution: r = 150000 + (s·17) div 20, c = r div d — so loop
-    // state is the contribution-sum frame s and each round is ONE
-    // src-keyed join + ONE dst-keyed partial agg. Round 1 joins
-    // nothing (r0 = 1e6 uniform). The symmetric closure gives every
-    // vertex in- AND out-edges, so s covers the whole vertex set each
-    // round and the inner joins lose nobody.
-    var s = ed.select($"dst", expr("1000000 div d").as("c"))
-      .groupBy($"dst").agg(sum($"c").as("s"))
-    for (_ <- 2 to iters) {
-      s = ed.join(s.select($"dst".as("cv"), $"s".as("ps")),
-          $"src" === $"cv")
-        .select($"dst", expr("(150000 + (ps * 17) div 20) div d").as("c"))
-        .groupBy($"dst").agg(sum($"c").as("s"))
-    }
-    // per-vertex degree for the output, one agg at the end instead of
-    // one per round (every vertex is a src under the symmetric closure)
-    val deg = ed.groupBy($"src".as("v")).agg(max($"d").as("d"))
-    s.select($"dst".as("v"),
-        (lit(150000L) + expr("(s * 17) div 20")).as("r"))
-      .join(deg, "v")
-      .select($"v".as("doc_id"), $"d".cast("long").as("degree"),
-        $"r".as("rank_ticks"))
-      .orderBy($"rank_ticks".desc, $"doc_id")
+  def pageRankTicks(edges: DataFrame, iters: Int): DataFrame =
+    undirected(edges.select(col("doc_a"), col("doc_b"), lit(1L).as("wt")),
+      iters, "degree")
+
+  /** The undirected forms: the core over the symmetric closure,
+    * max-weight winning among re-listings of one pair. The closure is
+    * pinned; its upstream (the Jaccard pair join) is the expensive
+    * part.
+    */
+  private def undirected(edges: DataFrame, iters: Int,
+      wName: String): DataFrame = {
+    val (a, b) = (col("doc_a"), col("doc_b"))
+    val sym = edges.select(a.as("src"), b.as("dst"), col("wt"))
+      .union(edges.select(b.as("src"), a.as("dst"), col("wt")))
+    rankTicks(directedEdges(sym, max(_)), iters, wName, symmetric = true)
   }
 
   /** Q110 — similarity-graph PageRank over `documents`: edges are the
@@ -128,197 +208,41 @@ object GraphRank {
     * 1e6 weight scale trades that to |V| ≲ 8e6. The documented
     * escalation past 2⁶³ is the split identity
     * r·wt div W = wt·(r div W) + (wt·(r mod W)) div W.
-    *
-    * `tolTicks` ≥ 0 enables the convergence probe: after each round,
-    * ONE extra agg (Σ|r′−r|) and a driver read; iteration stops early
-    * when the total movement is ≤ tolTicks. At tolTicks = 0 the probe
-    * only stops at an EXACT fixpoint, so results are identical to the
-    * fixed-count run — the probe trades one small agg per round for
-    * skipped full iterations. Negative (default) = off, fixed count,
-    * one job, oracle-reproducible by CTE unrolling.
     */
-  def pageRankTicksWeighted(edges: DataFrame, iters: Int,
-      tolTicks: Long = -1L): DataFrame = {
-    val ss = edges.sparkSession
-    import ss.implicits._
-    require(iters >= 1, "iters must be >= 1")
-    val e = edges.select($"doc_a".as("src"), $"doc_b".as("dst"), $"wt")
-      .union(edges.select($"doc_b".as("src"), $"doc_a".as("dst"), $"wt"))
-      .filter($"src" =!= $"dst")
-      .groupBy($"src", $"dst").agg(max($"wt").as("wt"))
-      .transform(Pin.reuse)
-    // out-weight folded into the pinned edge set ONCE (r17, §2.4 —
-    // the pageRankTicks treatment): the old loop joined the rank
-    // frame to the weight table every round. The rank recurrence
-    // folds inline into the contribution (see pageRankTicks); loop
-    // state is the contribution-sum frame s.
-    val ew = Pin.reuse(e.withColumn("w",
-      sum($"wt").over(Window.partitionBy($"src"))))
-    def rankOf(sCol: String): Column =
-      lit(150000L) + expr(s"($sCol * 17) div 20")
-    var s: DataFrame = null
-    var round = 0
-    var moved = Long.MaxValue
-    while (round < iters && (tolTicks < 0L || moved > tolTicks)) {
-      val next =
-        if (round == 0)
-          ew.select($"dst", expr("(1000000 * wt) div w").as("c"))
-            .groupBy($"dst").agg(sum($"c").as("s"))
-        else
-          ew.join(s.select($"dst".as("cv"), $"s".as("ps")),
-              $"src" === $"cv")
-            .select($"dst",
-              expr("((150000 + (ps * 17) div 20) * wt) div w").as("c"))
-            .groupBy($"dst").agg(sum($"c").as("s"))
-      if (tolTicks >= 0L) {
-        // probe mode: pin the round (it feeds the probe AND the next
-        // round) and read back ONE Long — never the rank table
-        val pinned = Pin.iterative(next)
-        moved =
-          if (round == 0)
-            pinned.agg(sum(abs(rankOf("s") - lit(1000000L))).as("d"))
-              .head().getLong(0)
-          else pinned.join(s.select($"dst", $"s".as("ps")), "dst")
-            .agg(sum(abs(rankOf("s") - rankOf("ps"))).as("d"))
-            .head().getLong(0)
-        // the previous round's pin has no consumer left after the
-        // probe read — release it or blocks accumulate O(rounds)
-        if (round > 0) Pin.release(s)
-        s = pinned
-      } else s = next
-      round += 1
-    }
-    val ws = ew.groupBy($"src".as("v")).agg(max($"w").as("w"))
-    s.select($"dst".as("v"), rankOf("s").as("r"))
-      .join(ws, "v")
-      .select($"v".as("doc_id"), $"w".as("w_ticks"), $"r".as("rank_ticks"))
-      .orderBy($"rank_ticks".desc, $"doc_id")
-  }
+  def pageRankTicksWeighted(edges: DataFrame, iters: Int): DataFrame =
+    undirected(edges, iters, "w_ticks")
 
   /** DIRECTED weighted PageRank — the web-link-graph form (a page
     * endorses the pages it links to; endorsement is not symmetric).
     * `edges` is (src, dst, wt), positive Long weights (typically link
     * multiplicities); parallel rows sum their weights, self-links
     * drop. Vertices are ALL edge endpoints; a vertex with no in-links
-    * sits at the teleport floor (the LEFT join against the vertex
-    * set), and a sink vertex's mass leaks — the plain no-dangling-
-    * redistribution variant, exact and engine-portable like the
-    * undirected forms:
+    * sits at the teleport floor (it has no contribution sum; the
+    * output LEFT join against the vertex frame supplies 0), and a
+    * sink vertex's mass leaks — the plain no-dangling-redistribution
+    * variant, exact and engine-portable like the undirected forms:
     *
     *   r'(v) = 150000 + (17 · Σ_{u→v} ((r(u) · wt(u,v)) div W(u))) div 20
     *
+    * With `redistribute`, DANGLING-MASS REDISTRIBUTION (the canonical
+    * PageRank form): the sinks' mass splits |V| ways by floor
+    * division and every vertex receives the share BEFORE damping,
+    *
+    *   r'(v) = 150000 + (17 · (Σ contrib + (Σ_sinks r) div |V|)) div 20
+    *
+    * so total mass is CONSERVED up to floor loss (< |E| + 2|V| ticks
+    * per round, all downward — spec'd in GraphRankSpec); the plain
+    * variant deflates every rank on sink-heavy web graphs.
+    *
     * Scale shape: out-weights fold into the edge set ONCE before the
-    * loop (e ⋈ ws is iteration-invariant — the per-round work is one
-    * src-keyed rank join, one dst-keyed partial agg, one v-keyed left
-    * join that reuses the agg's partitioning).
+    * loop; per round one src-keyed rank join and one dst-keyed
+    * partial agg, no vertex join (see [[rankTicks]]).
     */
   def pageRankTicksDirected(edges: DataFrame, iters: Int,
-      redistribute: Boolean = false): DataFrame = {
-    val ss = edges.sparkSession
-    import ss.implicits._
-    require(iters >= 1, "iters must be >= 1")
-    val e0 = edges.select($"src", $"dst", $"wt")
-      .filter($"src" =!= $"dst")
-      .groupBy($"src", $"dst").agg(sum($"wt").as("wt"))
-      .transform(Pin.reuse)
-    val ws = e0.groupBy($"src".as("v")).agg(sum($"wt").as("w"))
-    // out-weight folded into the edge set once — never re-joined
-    // inside the loop
-    val e = e0.join(ws.withColumnRenamed("v", "src"), "src")
-      .transform(Pin.reuse)
-    val verts = e0.select($"src".as("v"))
-      .union(e0.select($"dst".as("v"))).distinct()
-      .transform(Pin.reuse)
-    // |V| as a 1-row frame: the redistribution share is sink mass
-    // split |V| ways — computed plan-side (cross join), never a
-    // driver read
-    val nv = verts.agg(count(lit(1)).as("nv"))
-    if (!redistribute) {
-      // plain form (r17, §2.4 — the pageRankTicks treatment): the
-      // rank recurrence folds inline into the next round's
-      // contribution, so the per-round vertex densify join is gone
-      // (a src with no in-links is simply absent from s — the LEFT
-      // join's coalesce(s, 0) supplies the same 150000 floor the
-      // dense frame carried) and round 1 joins nothing at all.
-      // The one densify join runs at the END, for the output.
-      var s: DataFrame = null
-      for (round <- 1 to iters) {
-        s = if (round == 1)
-          e.select($"dst", expr("(1000000 * wt) div w").as("c"))
-            .groupBy($"dst").agg(sum($"c").as("s"))
-        else
-          e.join(s.select($"dst".as("cv"), $"s".as("ps")),
-              $"src" === $"cv", "left")
-            .select($"dst",
-              expr("((150000 + (coalesce(ps, 0) * 17) div 20) * wt) div w")
-                .as("c"))
-            .groupBy($"dst").agg(sum($"c").as("s"))
-      }
-      return verts.join(s, verts("v") === s("dst"), "left")
-        .select($"v",
-          (lit(150000L) + expr("(coalesce(s, 0) * 17) div 20")).as("r"))
-        .join(ws, Seq("v"), "left")
-        .select($"v".as("doc_id"), coalesce($"w", lit(0L)).as("out_w"),
-          $"r".as("rank_ticks"))
-        .orderBy($"rank_ticks".desc, $"doc_id")
-    }
-    var ranks = verts.select($"v", lit(1000000L).as("r"))
-    var round = 0
-    for (_ <- 1 to iters) {
-      val contrib = e.join(ranks.withColumnRenamed("v", "cv"), $"src" === $"cv")
-        .select($"dst", expr("(r * wt) div w").as("c"))
-        .groupBy($"dst")
-        .agg(sum($"c").as("s"))
-      val next =
-        if (redistribute) {
-          // DANGLING-MASS REDISTRIBUTION (the canonical PageRank
-          // form): sink vertices (no out-edge = not in ws) hold mass
-          // that the plain variant leaks; here one scalar agg per
-          // round collects it and every vertex receives an equal
-          // floor share BEFORE damping:
-          //
-          //   r'(v) = 150000 + (17 · (Σ contrib + sink div |V|)) div 20
-          //
-          // Exact-tick consequence: total mass is CONSERVED up to
-          // floor loss (< |E| + 2|V| ticks per round, all downward) —
-          // spec'd in GraphRankSpec; the plain variant deflates every
-          // rank on sink-heavy web graphs.
-          val sink = ranks.join(ws, Seq("v"), "left_anti")
-            .agg(coalesce(sum($"r"), lit(0L)).as("sink"))
-          val share = sink.crossJoin(nv)
-            .select(expr("sink div nv").as("share"))
-          verts.join(contrib, verts("v") === contrib("dst"), "left")
-            .crossJoin(share)
-            .select($"v",
-              expr("150000 + ((coalesce(s, 0) + share) * 17) div 20").as("r"))
-        } else {
-          verts.join(contrib, verts("v") === contrib("dst"), "left")
-            .select($"v",
-              expr("150000 + (coalesce(s, 0) * 17) div 20").as("r"))
-        }
-      if (redistribute) {
-        // the round's rank frame has TWO consumers (next round's
-        // contrib join and its sink agg) — pin it or the logical plan
-        // doubles per round; release the previous pin once replaced
-        // (the probe-mode pattern). Cost: one job per round instead
-        // of one job total — the price of the extra scalar agg.
-        val pinned = Pin.iterative(next)
-        if (round > 0) Pin.release(ranks)
-        ranks = pinned
-      } else ranks = next
-      round += 1
-    }
-    ranks.join(ws, Seq("v"), "left")
-      .select($"v".as("doc_id"), coalesce($"w", lit(0L)).as("out_w"),
-        $"r".as("rank_ticks"))
-      .orderBy($"rank_ticks".desc, $"doc_id")
-  }
+      redistribute: Boolean = false): DataFrame =
+    rankTicks(directedEdges(edges), iters, "out_w",
+      redistribute = redistribute)
 
-  /** Q114 — directed PageRank over the EXTRACTED link graph: the q113
-    * outlink extraction parsed to internal doc targets (the ingest →
-    * graph → rank composition a web-curation pipeline runs), link
-    * multiplicity as edge weight, 5 exact-tick iterations.
-    */
   /** The q113 extraction parsed to internal doc targets with link
     * multiplicity as weight — the doc-level edge set feeding q114
     * (direct rank) and q116 (domain contraction then rank):
@@ -342,6 +266,11 @@ object GraphRank {
       .groupBy($"src", $"dst").agg(count(lit(1)).as("wt"))
   }
 
+  /** Q114 — directed PageRank over the EXTRACTED link graph: the q113
+    * outlink extraction parsed to internal doc targets (the ingest →
+    * graph → rank composition a web-curation pipeline runs), link
+    * multiplicity as edge weight, 5 exact-tick iterations.
+    */
   def q114HostRank(spark: SparkSession, dir: String): DataFrame =
     pageRankTicksDirected(linkEdges(spark, dir), iters = 5)
 
@@ -478,60 +407,13 @@ object GraphRank {
     *
     * with r0 = [v ∈ S]·1e6. When S = all vertices this is exactly
     * [[pageRankTicksDirected]] (spec'd). Scale shape identical to
-    * the plain form plus ONE pinned seed-flag join before the loop —
-    * the flag frame replaces the bare vertex set, so per-round cost
-    * is unchanged and the whole computation stays one job.
+    * the plain form plus ONE seed-flag join into the pinned vertex
+    * frame before the loop (the flag is the core's teleport flag t),
+    * so per-round cost is unchanged and the loop stays one job.
     */
   def pageRankTicksSeeded(edges: DataFrame, iters: Int,
-      seeds: DataFrame): DataFrame = {
-    val ss = edges.sparkSession
-    import ss.implicits._
-    require(iters >= 1, "iters must be >= 1")
-    val e0 = edges.select($"src", $"dst", $"wt")
-      .filter($"src" =!= $"dst")
-      .groupBy($"src", $"dst").agg(sum($"wt").as("wt"))
-      .transform(Pin.reuse)
-    val ws = e0.groupBy($"src".as("v")).agg(sum($"wt").as("w"))
-    val verts = e0.select($"src".as("v"))
-      .union(e0.select($"dst".as("v"))).distinct()
-    // seed flag folded into the vertex set once (seeds outside the
-    // graph are irrelevant by construction — the left join drops them)
-    val vf = verts
-      .join(seeds.toDF("sv").distinct(), verts("v") === $"sv", "left")
-      .select($"v", $"sv".isNotNull.as("is_seed"))
-      .transform(Pin.reuse)
-    // out-weight AND the source's seed flag folded into the edge set
-    // once (r17, §2.4 — the pageRankTicks treatment): the recurrence
-    // folds inline into the contribution, the per-round vertex
-    // densify join moves to the END, round 1 joins nothing.
-    val e = e0.join(ws.withColumnRenamed("v", "src"), "src")
-      .join(vf.select($"v".as("src"), $"is_seed"), "src")
-      .transform(Pin.reuse)
-    var s: DataFrame = null
-    for (round <- 1 to iters) {
-      s = if (round == 1)
-        e.select($"dst", expr(
-            "((CASE WHEN is_seed THEN 1000000 ELSE 0 END) * wt) div w")
-          .as("c"))
-          .groupBy($"dst").agg(sum($"c").as("s"))
-      else
-        e.join(s.select($"dst".as("cv"), $"s".as("ps")),
-            $"src" === $"cv", "left")
-          .select($"dst", expr(
-              "(((CASE WHEN is_seed THEN 150000 ELSE 0 END) + " +
-                "(coalesce(ps, 0) * 17) div 20) * wt) div w")
-            .as("c"))
-          .groupBy($"dst").agg(sum($"c").as("s"))
-    }
-    vf.join(s, vf("v") === s("dst"), "left")
-      .select(vf("v"),
-        (when($"is_seed", lit(150000L)).otherwise(lit(0L)) +
-          expr("(coalesce(s, 0) * 17) div 20")).as("r"))
-      .join(ws, Seq("v"), "left")
-      .select($"v".as("doc_id"), coalesce($"w", lit(0L)).as("out_w"),
-        $"r".as("rank_ticks"))
-      .orderBy($"rank_ticks".desc, $"doc_id")
-  }
+      seeds: DataFrame): DataFrame =
+    rankTicks(directedEdges(edges), iters, "out_w", seeds = Some(seeds))
 
   /** Q120 — TrustRank over the q114 link graph with every 10th doc as
     * a trusted seed: rank flows out of the seed set along links.
@@ -690,13 +572,8 @@ object GraphRank {
     val ss = edges.sparkSession
     import ss.implicits._
     require(iters >= 1, "iters must be >= 1")
-    val e = edges.select($"src", $"dst", $"wt")
-      .filter($"src" =!= $"dst")
-      .groupBy($"src", $"dst").agg(sum($"wt").as("wt"))
-      .transform(Pin.reuse)
-    val verts = e.select($"src".as("v"))
-      .union(e.select($"dst".as("v"))).distinct()
-      .transform(Pin.reuse)
+    val e = directedEdges(edges)
+    val verts = vertexSet(e).select("v").transform(Pin.reuse)
     // SPARSE score frames through the loop (r16 optimization): a
     // vertex missing from h/a carries value 0, and a 0 score
     // contributes 0 to every raw sum — so the per-half-step
@@ -799,13 +676,8 @@ object GraphRank {
     val ss = edges.sparkSession
     import ss.implicits._
     require(iters >= 1, "iters must be >= 1")
-    val e = edges.select($"src", $"dst", $"wt")
-      .filter($"src" =!= $"dst")
-      .groupBy($"src", $"dst").agg(sum($"wt").as("wt"))
-      .transform(Pin.reuse)
-    val verts = e.select($"src".as("v"))
-      .union(e.select($"dst".as("v"))).distinct()
-      .transform(Pin.reuse)
+    val e = directedEdges(edges)
+    val verts = vertexSet(e).select("v").transform(Pin.reuse)
     val sd = seeds.toDF("sv", "slabel").distinct().transform(Pin.reuse)
     var labels = Pin.iterative(
       verts.join(sd, verts("v") === $"sv", "left")

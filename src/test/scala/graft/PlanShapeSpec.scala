@@ -161,6 +161,24 @@ class PlanShapeSpec extends SparkSpec {
       s"unpartitioned data window crept back: $dataUnpart\n$p")
   }
 
+  test("PageRank rounds add no per-round vertex join: from iters 3 " +
+      "to 4 the plan gains at most 2 Exchanges (directed plain form) " +
+      "and 1 (undirected form)") {
+    val edges = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 1L, 1L), (3L, 4L, 1L),
+      (5L, 3L, 1L)).toDF("src", "dst", "wt")
+    val pairs = edges.select($"src".as("doc_a"), $"dst".as("doc_b"))
+    def perRound(rank: Int => org.apache.spark.sql.DataFrame): Int = {
+      def exchanges(iters: Int): Int = {
+        val df = rank(iters)
+        df.collect() // finalize AQE
+        PlanDump.exchangeCount(df)
+      }
+      exchanges(4) - exchanges(3)
+    }
+    assert(perRound(GraphRank.pageRankTicksDirected(edges, _)) <= 2)
+    assert(perRound(GraphRank.pageRankTicks(pairs, _)) <= 1)
+  }
+
   test("q43: chunking is shuffle-free — pure per-row fan-out on the scan") {
     val p = plan(TextStats.chunk(Tables.load(spark, sf, "documents")))
     assert(!p.contains("Exchange"), s"chunking must not shuffle:\n$p")

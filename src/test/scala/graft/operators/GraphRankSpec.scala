@@ -64,10 +64,24 @@ class GraphRankSpec extends SparkSpec {
   }
 
   test("empty edge set yields an empty ranking (schema intact)") {
-    val df = GraphRank.pageRankTicks(
-      Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"), 5)
-    assert(df.columns.toSeq === Seq("doc_id", "degree", "rank_ticks"))
-    assert(df.count() === 0L)
+    val pairs = Seq.empty[(Long, Long, Long)].toDF("doc_a", "doc_b", "wt")
+    val links = Seq.empty[(Long, Long, Long)].toDF("src", "dst", "wt")
+    val outW = Seq("doc_id", "out_w", "rank_ticks")
+    Seq(
+      "unweighted" -> (GraphRank.pageRankTicks(pairs.drop("wt"), 5),
+        Seq("doc_id", "degree", "rank_ticks")),
+      "weighted" -> (GraphRank.pageRankTicksWeighted(pairs, 5),
+        Seq("doc_id", "w_ticks", "rank_ticks")),
+      "directed" -> (GraphRank.pageRankTicksDirected(links, 5), outW),
+      // redistribute divides the sink mass by |V| = 0 here
+      "directed+redistribute" ->
+        (GraphRank.pageRankTicksDirected(links, 5, redistribute = true),
+          outW),
+      "seeded" -> (GraphRank.pageRankTicksSeeded(links, 5,
+        Seq(1L).toDF("v")), outW)).foreach { case (form, (df, cols)) =>
+      assert(df.columns.toSeq === cols, form)
+      assert(df.count() === 0L, form)
+    }
   }
 
   test("q110 on sf0.001 runs and ranks hub docs above leaves") {
@@ -99,10 +113,9 @@ class GraphRankSpec extends SparkSpec {
     r.map { case (v, rv) => v -> (ws(v), rv) }
   }
 
-  private def runWeighted(edges: Seq[(Long, Long, Long)], iters: Int,
-      tolTicks: Long = -1L) =
+  private def runWeighted(edges: Seq[(Long, Long, Long)], iters: Int) =
     GraphRank.pageRankTicksWeighted(
-        edges.toDF("doc_a", "doc_b", "wt"), iters, tolTicks)
+        edges.toDF("doc_a", "doc_b", "wt"), iters)
       .as[(Long, Long, Long)].collect()
       .map { case (v, w, r) => v -> (w, r) }.toMap
 
@@ -813,17 +826,5 @@ class GraphRankSpec extends SparkSpec {
       // 2 domains over 3 linkers → 666666 ticks (floor division)
       (10L, 4L, 3L, 2L, 2L, 666666L),
       (20L, 4L, 1L, 1L, 4L, 1000000L)))
-  }
-
-  test("weighted: convergence probe stops only at the exact fixpoint") {
-    // a triangle reaches its symmetric fixpoint quickly; tolTicks=0
-    // must stop early with EXACTLY the fixed-count result
-    val tri = Seq((1L, 2L, 600L), (2L, 3L, 600L), (1L, 3L, 600L))
-    assert(runWeighted(tri, 50, tolTicks = 0L) === runWeighted(tri, 50))
-    // and a probed run over a non-trivial graph matches the reference
-    val edges = Seq((1L, 2L, 900L), (2L, 3L, 300L), (3L, 4L, 500L),
-      (4L, 1L, 250L), (2L, 4L, 750L))
-    assert(runWeighted(edges, 5, tolTicks = 0L) ===
-      referenceWeighted(edges, 5))
   }
 }
