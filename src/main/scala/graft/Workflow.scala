@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{FeatureEngineering, LoyaltyModel}
@@ -20,6 +21,15 @@ object Workflow {
     val workDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-workflow").toString)
     val spark = graft.core.Sessions.local(appName = "graft-workflow")
+    try run(spark, sfDir, workDir) finally spark.stop()
+  }
+
+  /** The workflow on `spark`, reading `sfDir`'s `events` and writing
+    * under `workDir`: the store at `store/`, the model at `model/`,
+    * the scored sink at `scored/`. Throws if the CDC reconstruction
+    * disagrees with the full history.
+    */
+  def run(spark: SparkSession, sfDir: String, workDir: String): Unit = {
     import spark.implicits._
 
     // events → the reference's purchase schema (FIXTURES.md §B:
@@ -100,26 +110,6 @@ object Workflow {
     println(f"[workflow] stateful path: $n2 events in $secs2%.1f s " +
       f"(${n2 / secs2}%.0f events/s)")
 
-    // serving-layout path: same replay, but the online side is the
-    // kb-partitioned incremental merge (O(batch) rewrites) instead of
-    // the full-table MERGE — the steady-state shape at scale
-    val store2 = FeatureStore(spark, s"$workDir/store_serving",
-      "customer_id", "purchase_timestamp")
-    store2.ingest(feats)
-    val servingStream = spark.readStream
-      .schema(spark.read.parquet(eventDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(eventDir)
-    val t2 = System.nanoTime()
-    val q3 = InferencePipeline.run(servingStream, store2, loaded,
-      s"$workDir/scored_serving", s"$workDir/dlq_serving",
-      s"$workDir/ckpt_serving", useServing = true)
-    q3.awaitTermination()
-    val secs3 = (System.nanoTime() - t2) / 1e9
-    val n3 = spark.read.parquet(s"$workDir/scored_serving").count()
-    println(f"[workflow] serving path: $n3 events in $secs3%.1f s " +
-      f"(${n3 / secs3}%.0f events/s); serving keys=${store2.serving().count()}")
-
     // CDC leg: the streaming replay committed one offline version per
     // micro-batch; an incremental consumer reads ONLY the delta since
     // the version it last saw (manifest fast path — O(delta) files)
@@ -133,6 +123,5 @@ object Workflow {
       s"CDC reconstruction $reconstructed != full history $full")
     println(s"[workflow] CDC: ${vs.length} versions; replaying from " +
       s"v$vMid yields $nDelta delta rows; snapshot+delta == $full rows ✓")
-    spark.stop()
   }
 }

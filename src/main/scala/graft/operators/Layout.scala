@@ -35,25 +35,6 @@ object Layout {
   def keyBucket(keyCol: String, nBuckets: Int): Column =
     pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)).cast("int")
 
-  /** Incremental newest-wins merge into a key-bucket-PARTITIONED
-    * parquet table (`dir/kb=N/…`): the O(batch) upsert path at scale.
-    * A full-table rewrite per micro-batch costs O(#keys) no matter how
-    * small the batch; here the batch's keys hash to ≤ nBuckets
-    * partition dirs, only those partitions are read (partition-pruned
-    * scan), merged (newest `orderCols` per key wins), and rewritten
-    * via DYNAMIC partition overwrite — untouched buckets' files are
-    * never opened or replaced.
-    *
-    * The touched current buckets are pinned with `Pin.snapshot`
-    * before the write: it materializes exactly the data the merge
-    * must hold before overwriting, and cuts the file-source lineage
-    * so the plan never reads the dir it is replacing.
-    *
-    * Consistency: dynamic partition overwrite commits per-partition
-    * (not atomic across buckets). Single writer, and a crashed merge
-    * is repaired by replaying the batch — the merge is idempotent
-    * (newest-wins dedup), the usual at-least-once contract.
-    */
   /** True iff `dir` holds ≥ 1 committed `kb=` partition — a bare
     * existence probe would treat a crashed first merge's leftover
     * `_temporary` dir as a table and wedge the replay-repair path on
@@ -66,20 +47,50 @@ object Layout {
       fs.listStatus(root).exists(_.getPath.getName.startsWith("kb="))
   }
 
+  /** Incremental newest-wins merge into a key-bucket-PARTITIONED
+    * parquet table (`dir/kb=N/…`): the O(batch) upsert path at scale.
+    * A full-table rewrite per micro-batch costs O(#keys) no matter how
+    * small the batch; here the batch's keys hash to ≤ nBuckets
+    * partition dirs, only those partitions are read (partition-pruned
+    * scan), merged, and rewritten via DYNAMIC partition overwrite —
+    * untouched buckets' files are never opened or replaced.
+    *
+    * `dedup` is the caller's newest-wins rule: it keeps one row per key
+    * of (touched buckets ∪ batch) in one pass and must carry the `kb`
+    * column through. Passing the rule in, rather than ordering columns,
+    * keeps a store's merge and its full-history view on the same
+    * tiebreak.
+    *
+    * The touched current buckets are pinned with `Pin.snapshot`
+    * before the write: it materializes exactly the data the merge
+    * must hold before overwriting, and cuts the file-source lineage
+    * so the plan never reads the dir it is replacing.
+    *
+    * Consistency: dynamic partition overwrite commits per-partition
+    * (not atomic across buckets). Single writer, and a crashed merge
+    * is repaired by replaying the batch — the merge is idempotent
+    * (newest-wins dedup), the usual at-least-once contract.
+    */
   def mergeBucketPartitioned(dir: String, batch: DataFrame,
-      keyCol: String, orderCols: Seq[String], nBuckets: Int): Unit = {
+      keyCol: String, dedup: DataFrame => DataFrame, nBuckets: Int): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    // pin the stamped batch once: the emptiness probe, the
-    // touched-bucket collect, and the final write otherwise each
-    // re-execute the batch plan — three full offline scans when the
-    // bootstrap batch is itself a windowed history dedup
-    val b = batch.withColumn("kb", keyBucket(keyCol, nBuckets))
-      .transform(Pin.snapshot)
+    val keyed = batch.withColumn("kb", keyBucket(keyCol, nBuckets))
+    // the FIRST merge has no buckets to merge with: the batch is
+    // deduped before the pin (so the pin holds one row per key, not a
+    // whole bootstrapped history) and written as it is
+    val initialized = hasCommittedBuckets(spark, dir)
+    // pin once: the emptiness probe, the touched-bucket collect, and
+    // the final write otherwise each re-execute the batch plan — three
+    // full offline scans when the batch is a bootstrap over the whole
+    // history
+    val b = (if (initialized) keyed else dedup(keyed)).transform(Pin.snapshot)
     if (b.isEmpty) return // no touched buckets — a write would leave
                           // an empty (schema-less) partition root
-    val all =
-      if (!hasCommittedBuckets(spark, dir)) b
+    val merged =
+      // one write task per bucket: one file per bucket dir, not one per
+      // shuffle partition the dedup left each bucket spread over
+      if (!initialized) b.repartition($"kb")
       else {
         val touched = b.select($"kb").distinct().as[Int].collect().toSeq
         // mergeSchema: earlier add-column batches may have rewritten
@@ -94,12 +105,9 @@ object Layout {
         // and a batch missing a column must not throw — its rows get
         // null for the column, exactly like the history table's
         // schema evolution
-        cur.unionByName(b, allowMissingColumns = true)
+        dedup(cur.unionByName(b, allowMissingColumns = true))
       }
-    val w = Window.partitionBy(col(keyCol))
-      .orderBy(orderCols.map(col(_).desc): _*)
-    all.withColumn("_rn", row_number().over(w))
-      .filter($"_rn" === 1).drop("_rn")
+    merged
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("kb")

@@ -4,7 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+
+import graft.operators.Layout
 
 /** Spark-native feature store: the reference's dual online/offline
   * storage model (`core/feature_store_manager.py`) re-expressed without
@@ -16,10 +17,13 @@ import org.apache.spark.sql.types.StructType
   *    replication). Partitioned by a derived `event_date` column so a
   *    100 TB history prunes to the queried date range (dynamic partition
   *    pruning reaches the scan).
-  *  - **Online store** = latest-record-per-key VIEW over the history
-  *    (window dedup, reference `feature_store_manager.py:101,165-168`),
-  *    materialized on demand by [[FeatureStore#compactOnline]] so point
-  *    lookups don't re-window the full history.
+  *  - **Online store** = latest-record-per-key table (reference
+  *    `feature_store_manager.py:101,165-168`), a key-bucket-partitioned
+  *    parquet layout that every ingest MERGEs into bucket by bucket —
+  *    O(batch) per upsert, one bucket read per point lookup. One table
+  *    rewritten partition by partition is Delta Lake's MERGE design
+  *    (VLDB 2020); [[FeatureStore#latestView]] recomputes the same
+  *    rows from the history.
   *
   * Keys and event time are declared once per store (the reference's
   * record-identifier / event-time feature-group config,
@@ -36,7 +40,8 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
   import spark.implicits._
 
   private val offlineDir = s"${conf.path}/offline"
-  private val onlineDir  = s"${conf.path}/online"
+  private val servingDir = s"${conf.path}/serving"
+  private val servingBuckets = 64
   private val seqCol     = "_seq"
 
   /** The offline history is a [[VersionedTable]] — manifest-listed
@@ -64,7 +69,7 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     *
     * The counter is persisted to a tiny `_seq` sidecar BEFORE the
     * allocated number is used in any data write, so recovery never
-    * depends on surviving rows: a serving-only store whose batch was
+    * depends on surviving rows: a layout-only store whose batch was
     * entirely superseded by newer event times leaves no `_seq` trace
     * in the table, and scanning survivors there would reuse a number
     * and make a later exact event-time tie resolve nondeterministically.
@@ -114,7 +119,7 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     fs.rename(tmp, seqSidecarPath): Unit
   }
 
-  /** All storage probes and the online-table commit go through the
+  /** All storage probes and the sidecar commit go through the
     * Hadoop `FileSystem` API — the store works identically on local
     * FS, HDFS, or an object store, and never assumes POSIX rename.
     */
@@ -123,39 +128,50 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
 
   def exists: Boolean = offlineTable.currentVersion.nonEmpty
 
-  /** S5 — batch ingest: append the frame to the offline history (one
-    * snapshot commit) and merge it into the online compaction. One
-    * parquet write, no per-row calls (vs the reference's row-at-a-time
-    * `PutRecord` loop). The online merge is incremental — window-dedup
-    * of (current online ∪ new batch), O(#keys + batch) — NOT a
-    * recompact of the full history, which would make upsert cost grow
-    * with history size (the thing that kills streaming at 100 TB).
+  /** S5 — batch ingest: merge the frame into the online store, then
+    * append it to the offline history (one snapshot commit). One
+    * parquet write per tier, no per-row calls (vs the reference's
+    * row-at-a-time `PutRecord` loop).
+    *
+    * The online store is a key-bucket-PARTITIONED layout
+    * ([[graft.operators.Layout.mergeBucketPartitioned]]): a batch only
+    * reads and rewrites the ≤ |batch| bucket dirs its keys hash into,
+    * so upsert cost is O(batch), constant in history size and in key
+    * count. The FIRST merge bootstraps the layout from the full
+    * history plus this batch (one window over both), so keys ingested
+    * before the layout existed never look like cold starts.
     *
     * `txnId`: optional idempotency token. Replaying a batch whose id
     * is already committed is a complete no-op (no history commit, no
-    * seq burn, no online merge) — the at-least-once contract for
-    * retrying ingest pipelines. The online merge runs BEFORE the
-    * history commit so the commit is the transaction fence: the merge
-    * is value-idempotent (newest-wins dedup), so a crash between
-    * merge and commit is repaired by the replay redoing both, and a
-    * crash after the commit means the replay can skip both — there is
-    * no window where the skip loses the merge.
+    * seq burn, no merge) — the at-least-once contract for retrying
+    * ingest pipelines. The merge runs BEFORE the history commit so the
+    * commit is the transaction fence: the merge is value-idempotent
+    * (newest-wins dedup), so a crash between merge and commit — or
+    * inside a multi-bucket merge — is repaired by the replay redoing
+    * both, and a crash after the commit means the replay can skip
+    * both.
     */
   def ingest(df: DataFrame, txnId: Option[String] = None): Unit = {
     if (txnId.exists(offlineTable.txnCommitted)) return
-    val seq = nextSeq()
-    val stamped = df.withColumn(seqCol, lit(seq))
-    mergeOnline(stamped)
+    val stamped = df.withColumn(seqCol, lit(nextSeq()))
+    mergeLayout(
+      if (servingInitialized || !exists) stamped
+      else offline().drop("event_date")
+        .unionByName(stamped, allowMissingColumns = true))
     offlineTable.commit(stamped.withColumn("event_date", to_date(ts)), txnId)
   }
 
   /** S6 — upsert semantics are identical to ingest at the storage
-    * layer (append + re-compact); the matched/not-matched branching of
-    * MERGE happens inside [[compactOnline]]'s window dedup: the newest
-    * `(event_time, _seq)` record per key wins, whether it updated an
-    * existing key or introduced a new one.
+    * layer; the matched/not-matched branching of MERGE happens inside
+    * the bucket merge's [[dedupLatest]]: the newest `(event_time,
+    * _seq)` record per key wins, whether it updated an existing key or
+    * introduced a new one.
     */
   def putRecords(df: DataFrame, txnId: Option[String] = None): Unit =
+    ingest(df, txnId)
+
+  /** Alias of [[ingest]], kept while `perfbench/` still calls it. */
+  def ingestServing(df: DataFrame, txnId: Option[String] = None): Unit =
     ingest(df, txnId)
 
   /** S3 — full append-only history (offline store scan): a snapshot
@@ -212,47 +228,42 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
   def offlineRange(lo: String, hi: String): DataFrame =
     offlineTable.readRange(lo, hi)
 
-  /** RIGHT-TO-BE-FORGOTTEN — delete every record of `keys` from ALL
+  /** RIGHT-TO-BE-FORGOTTEN — delete every record of `keys` from BOTH
     * tiers in one call, the deletion story the reference's domain
     * (a CUSTOMER feature store) actually demands: deleting only the
-    * history while the online/serving tiers keep serving the
-    * customer's features is a compliance failure, not staleness.
+    * history while the online store keeps serving the customer's
+    * features is a compliance failure, not staleness.
     *
     *  - offline HISTORY: [[VersionedTable.deleteKeys]] — copy-on-write
     *    with file-stats pruning on the key band (the key column is in
     *    `statsCols`; key-clustered ingest keeps bands tight), time
     *    travel still spans the delete, [[vacuumOffline]] reclaims;
-    *  - versioned ONLINE view: one filtered rewrite, O(#keys) — the
-    *    cost of any online commit;
-    *  - bucket-partitioned SERVING layout: only the ≤ |keys| bucket
-    *    dirs the keys hash into are rewritten
+    *  - ONLINE store: only the ≤ |keys| bucket dirs the keys hash into
+    *    are rewritten
     *    ([[graft.operators.Layout.deleteFromBucketPartitioned]]).
     *
-    * NULL-keyed rows are retained in every tier (the deleteKeys
+    * NULL-keyed rows are retained in both tiers (the deleteKeys
     * contract: a delete removes exactly the rows its predicate
     * matches TRUE). A key never ingested is a no-op everywhere.
-    * Idempotent under `txnId`: the derived tiers rewrite BEFORE the
-    * fenced history commit (the [[ingest]] ordering) — their deletes
-    * are value-idempotent, so a replay after a crash between tiers
-    * repairs them, and once the history commit lands the replay
-    * skips everything.
+    * Idempotent under `txnId`: the bucket delete runs BEFORE the
+    * fenced history commit (the [[ingest]] ordering) — it is
+    * value-idempotent, so a replay after a crash between tiers
+    * repairs it, and once the history commit lands the replay skips
+    * everything.
     */
   def forgetKeys(keys: Seq[Any], txnId: Option[String] = None): Unit = {
     if (txnId.exists(offlineTable.txnCommitted)) return
     require(keys.nonEmpty, "forgetKeys with an empty key list")
     require(keys.forall(_ != null), "forgetKeys with a NULL key")
-    currentOnlineDir.foreach { dir =>
-      writeOnline(spark.read.parquet(dir)
-        .filter(!key.isin(keys: _*) || key.isNull))
-    }
     if (servingInitialized)
-      graft.operators.Layout.deleteFromBucketPartitioned(
+      Layout.deleteFromBucketPartitioned(
         spark, servingDir, conf.keyCol, keys, servingBuckets)
     if (exists) offlineTable.deleteKeys(conf.keyCol, keys, txnId): Unit
   }
 
-  /** Window-dedup to the newest `(event_time, _seq)` record per key.
-    * Input must carry the `_seq` column.
+  /** Window-dedup to the newest `(event_time, _seq)` record per key —
+    * the one newest-wins rule behind [[latestView]] and every bucket
+    * merge. Input must carry the `_seq` column.
     */
   private def dedupLatest(df: DataFrame): DataFrame = {
     // final tiebreak: a content hash of the BUSINESS columns. `_seq`
@@ -261,9 +272,9 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     // otherwise dedup to whichever row the shuffle delivered first.
     // Metadata columns (seq, derived date, bucket) are excluded so
     // the hash covers the IDENTICAL column list at every call site
-    // (online merge vs full-history compaction see different
-    // metadata) — every path picks the same survivor; a full tie
-    // means the rows are identical and either is correct.
+    // (bucket merge vs full-history view see different metadata) —
+    // every path picks the same survivor; a full tie means the rows
+    // are identical and either is correct.
     val hashCols = df.columns
       .filterNot(Set(seqCol, "event_date", "kb")).sorted
     val rowHash = xxhash64(hashCols.map(col).toIndexedSeq: _*)
@@ -275,156 +286,40 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
   }
 
   /** W2 — latest record per key, computed from the full history. The
-    * window shuffles once on the key; at scale this is the (rare) full
-    * compaction pass — steady-state upserts use [[mergeOnline]].
+    * window shuffles once on the key; it is the reference the bucket
+    * layout is checked against, and — a snapshot read of one history
+    * version — the strictly isolated form of [[online]].
     */
   def latestView(): DataFrame =
     dedupLatest(offline()).drop(seqCol, "event_date")
 
-  /** Incremental MERGE: newest-wins dedup of (current online ∪ batch).
-    * The matched/not-matched branches of a MERGE statement are exactly
-    * the two sides of this dedup. Cost is O(#keys + batch), constant
-    * in history size.
-    */
-  private def mergeOnline(stamped: DataFrame): Unit = {
-    val base = stamped.drop("event_date")
-    val merged = currentOnlineDir match {
-      // allowMissingColumns: a batch carrying a NEW feature column
-      // must widen the online view like VersionedTable.commit widens
-      // the history (and a narrower batch appends nulls) — without it
-      // the documented add-column evolution crashes the whole ingest
-      case Some(dir) => dedupLatest(
-        spark.read.parquet(dir).unionByName(base, allowMissingColumns = true))
-      case None      => dedupLatest(base)
-    }
-    writeOnline(merged)
-  }
+  private def mergeLayout(batch: DataFrame): Unit =
+    Layout.mergeBucketPartitioned(
+      servingDir, batch, conf.keyCol, dedupLatest, servingBuckets)
 
-  /** Online-table commit protocol: versioned dirs `online/v_{n}`, the
-    * live table = the max `n` whose dir contains `_SUCCESS` (written
-    * LAST by Spark's output committer). Crash-safe with no rename
-    * window: a failed write leaves a version dir without `_SUCCESS`
-    * that every reader ignores; the previous version stays live and
-    * intact throughout. Old versions are pruned only after the new
-    * commit, keeping one behind for in-flight readers (single writer,
-    * like the reference's `max_workers=1` ingest).
-    */
-  private val versionRe = "v_(\\d+)".r
-
-  private def onlineVersions: Seq[(Long, Path)] = {
-    val root = new Path(onlineDir)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        st.getPath.getName match {
-          case versionRe(n) if fs.exists(new Path(st.getPath, "_SUCCESS")) =>
-            Some((n.toLong, st.getPath))
-          case _ => None
-        }
-      }
-      .sortBy(_._1)
-  }
-
-  private def currentOnlineDir: Option[String] =
-    onlineVersions.lastOption.map(_._2.toString)
-
-  private def writeOnline(df: DataFrame): Unit = {
-    val versions = onlineVersions
-    val prev = versions.lastOption.map(_._1)
-    val next = prev.map(_ + 1).getOrElse(0L)
-    df.write.mode("overwrite").parquet(s"$onlineDir/v_$next")
-    // prune everything except the new version and the previous
-    // committed one (readers mid-scan). Crucially this also removes
-    // UNCOMMITTED dirs (crashed writes, no _SUCCESS) older than the
-    // new version — readers already ignore them, but left in place
-    // they would accumulate forever since their numbers are only
-    // reused by accident (single-writer protocol).
-    fs.listStatus(new Path(onlineDir)).toSeq.filter(_.isDirectory)
-      .foreach { st =>
-        st.getPath.getName match {
-          case versionRe(n) =>
-            val num = n.toLong
-            val keep = num == next || prev.contains(num)
-            if (!keep && num < next) { fs.delete(st.getPath, true): Unit }
-          case _ => ()
-        }
-      }
-  }
-
-  /** Full recompaction of the online table from history. Idempotent:
-    * compact ∘ compact = compact.
-    */
-  def compactOnline(): Unit =
-    writeOnline(dedupLatest(offline()).drop("event_date"))
-
-  /** Compacted online table (falls back to computing the view). */
-  def online(): DataFrame = currentOnlineDir match {
-    case Some(dir) => spark.read.parquet(dir).drop(seqCol)
-    case None      => latestView()
-  }
-
-  private val servingDir = s"${conf.path}/serving"
-  private val servingBuckets = 64
-
-  /** Incremental O(batch) serving merge — the steady-state streaming
-    * upsert path at 100 TB. [[mergeOnline]] rewrites the whole online
-    * table every micro-batch (O(#keys) regardless of batch size);
-    * this merges into a key-bucket-PARTITIONED layout
-    * ([[graft.operators.Layout.mergeBucketPartitioned]]) where a
-    * batch only reads and rewrites the ≤ |batch| bucket dirs its keys
-    * hash into. Newest-`(event_time, _seq)`-wins, same MERGE
-    * semantics as the versioned table; idempotent, so at-least-once
-    * batch replay repairs a crashed multi-bucket commit.
+  /** Merge a batch into the online store WITHOUT a history commit —
+    * for callers that keep their own history (a fenced landing table)
+    * and only need the latest-per-key layout. Same newest-wins MERGE
+    * as [[ingest]]; idempotent, so at-least-once replay repairs a
+    * crashed multi-bucket commit. No bootstrap: a store with history
+    * but no layout gets only this batch's keys.
     *
-    * ISOLATION CAVEAT (vs the versioned online table, which keeps the
-    * previous committed version for in-flight readers): a bucket
-    * merge replaces that bucket's files IN PLACE, so a reader that
-    * planned its scan just before a merge of the same bucket commits
-    * can hit deleted files. Single writer is assumed; concurrent
-    * reads during a merge of the same bucket need
-    * `spark.sql.files.ignoreMissingFiles` + retry, or the versioned
-    * [[online]] table where strict read isolation matters.
+    * ISOLATION CAVEAT: a bucket merge replaces that bucket's files IN
+    * PLACE, so a reader that planned its scan just before a merge of
+    * the same bucket commits can hit deleted files. Single writer is
+    * assumed; concurrent reads during a merge of the same bucket need
+    * `spark.sql.files.ignoreMissingFiles` + retry, or [[latestView]]
+    * — a snapshot read of one history version — where strict read
+    * isolation matters.
     */
-  def mergeServing(df: DataFrame): Unit = {
-    val stamped = df.withColumn(seqCol, lit(nextSeq()))
-    graft.operators.Layout.mergeBucketPartitioned(
-      servingDir, stamped, conf.keyCol,
-      Seq(conf.eventTimeCol, seqCol), servingBuckets)
-  }
+  def mergeServing(df: DataFrame): Unit =
+    mergeLayout(df.withColumn(seqCol, lit(nextSeq())))
 
-  /** S5/S6 in serving-layout mode: the same dual-store contract as
-    * [[ingest]] (offline append-only history + online merge), but the
-    * online side is the O(batch) partitioned merge instead of the
-    * full-table rewrite.
+  /** S4's table — the online store: one row per key, a full scan of
+    * the bucket layout; falls back to the history view before the
+    * first merge (or after a forget emptied every bucket).
     */
-  def ingestServing(df: DataFrame, txnId: Option[String] = None): Unit = {
-    if (txnId.exists(offlineTable.txnCommitted)) return
-    val seq = nextSeq()
-    val stamped = df.withColumn(seqCol, lit(seq))
-    // first merge BOOTSTRAPS the layout from the full history plus
-    // this batch (one full compaction, like compactOnline) —
-    // otherwise keys ingested before serving mode began would look
-    // like cold starts. The merge precedes the history commit for the
-    // same fence reasoning as [[ingest]]: the bucket merge is
-    // value-idempotent (a replay repairs a partially-merged crash),
-    // and once the commit lands the replay skips everything.
-    val batch =
-      if (servingInitialized) stamped
-      else if (exists)
-        dedupLatest(offline().drop("event_date")
-          .unionByName(stamped, allowMissingColumns = true))
-      else dedupLatest(stamped)
-    graft.operators.Layout.mergeBucketPartitioned(
-      servingDir, batch, conf.keyCol,
-      Seq(conf.eventTimeCol, seqCol), servingBuckets)
-    offlineTable.commit(stamped.withColumn("event_date", to_date(ts)), txnId)
-  }
-
-  /** Full scan of the serving table (all buckets); falls back to the
-    * history view before the first serving merge.
-    */
-  def serving(): DataFrame =
+  def online(): DataFrame =
     if (!servingInitialized) latestView()
     // mergeSchema: dynamic overwrite rewrites only TOUCHED buckets,
     // so after an add-column batch the bucket dirs disagree on schema
@@ -432,10 +327,13 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     else spark.read.option("mergeSchema", "true")
       .parquet(servingDir).drop(seqCol, "kb")
 
-  private def servingInitialized: Boolean =
-    graft.operators.Layout.hasCommittedBuckets(spark, servingDir)
+  /** Alias of [[online]], kept while `perfbench/` still calls it. */
+  def serving(): DataFrame = online()
 
-  /** The cache tier in front of the serving layout (the reference's
+  private def servingInitialized: Boolean =
+    Layout.hasCommittedBuckets(spark, servingDir)
+
+  /** The cache tier in front of the online store (the reference's
     * ElastiCache role): bounded bucket-level LRU with read-through
     * signature invalidation — repeated lookups cost zero Spark jobs.
     * See [[ServingCache]].
@@ -444,28 +342,27 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     new ServingCache(spark, servingDir, conf.keyCol, servingBuckets,
       maxCachedBuckets, dropCols = Seq(seqCol))
 
-  /** Partition-pruned point lookup against the serving table — the
-    * scan lists exactly one `kb=` directory (asserted in
-    * StoreServingSpec).
+  /** Partition-pruned point lookup — the scan lists exactly one `kb=`
+    * directory (asserted in StoreServingSpec). Before the first merge
+    * it filters the history view instead, so a store whose history
+    * holds no committed bucket yet never hits a missing path.
     */
-  def getServingRecord(id: Any): DataFrame =
-    graft.operators.Layout.bucketLookup(
+  private[store] def getServingRecord(id: Any): DataFrame =
+    if (!servingInitialized) latestView().filter(key === lit(id))
+    else Layout.bucketLookup(
       spark, servingDir, conf.keyCol, lit(id), servingBuckets)
       .drop(seqCol, "kb")
 
   /** S4 — online point lookup (`get_record`,
-    * `feature_store_manager.py:165-168`). Equality predicate pushes
-    * into the compacted parquet scan. Serving at scale keys the
-    * compacted table by hash-partition; here one pruned scan suffices.
+    * `feature_store_manager.py:165-168`): one bucket read.
     */
   def getRecord(id: Any): Option[org.apache.spark.sql.Row] =
-    online().filter(key === lit(id)).collect().headOption
+    getServingRecord(id).collect().headOption
 
   /** P2 — existence probe (`customer_features_exist`,
     * `feature_store_manager.py:155-172`).
     */
-  def recordExists(id: Any): Boolean =
-    !online().filter(key === lit(id)).isEmpty
+  def recordExists(id: Any): Boolean = !getServingRecord(id).isEmpty
 }
 
 object FeatureStore {

@@ -116,7 +116,7 @@ class ServingCache(spark: SparkSession, servingDir: String,
   }
 
   /** The bucket load itself — one single-bucket parquet read (the
-    * same pruned scan `FeatureStore.getServingRecord` plans). A test
+    * same pruned scan `FeatureStore.getRecord` plans). A test
     * seam: the concurrency spec overrides it with a gated slow load
     * to prove a cold miss never blocks other buckets' hits.
     */

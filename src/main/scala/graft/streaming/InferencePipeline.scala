@@ -42,7 +42,6 @@ object InferencePipeline {
       batch: DataFrame,
       store: FeatureStore,
       model: LinearRegressionModel,
-      useServing: Boolean = false,
       txnId: Option[String] = None): (DataFrame, DataFrame) = {
     import batch.sparkSession.implicits._
     val valid = batch.filter(
@@ -52,13 +51,9 @@ object InferencePipeline {
     // no per-batch sort needed: enrichment and scoring are
     // row-independent, and the store's MERGE applies newest-wins by
     // event time regardless of row order
-    // serving mode reads/writes the bucket-partitioned layout: the
-    // upsert then costs O(batch) bucket rewrites, not O(#keys) — the
-    // steady-state streaming shape at 100 TB
-    val enriched = EventEnricher.enrich(valid,
-      if (useServing) store.serving() else store.online())
-    // snapshot before the upsert: the upsert rewrites the online view
-    // or the serving buckets this plan reads. A lineage-preserving
+    val enriched = EventEnricher.enrich(valid, store.online())
+    // snapshot before the upsert: the upsert rewrites the online
+    // store's buckets this plan reads. A lineage-preserving
     // persist is not enough — the overwrite re-caches plans over the
     // rewritten path, so the sink would carry scores recomputed from
     // the post-merge features (and a recompute could hit deleted files)
@@ -80,8 +75,7 @@ object InferencePipeline {
       when($"known_customer", ($"avg_loyalty_score" + $"predicted_loyalty_score") / 2)
         .otherwise($"predicted_loyalty_score").as("avg_loyalty_score"),
       $"predicted_loyalty_score".as("latest_loyalty_score"))
-    if (useServing) store.ingestServing(upserts, txnId)
-    else store.putRecords(upserts, txnId)
+    store.putRecords(upserts, txnId)
     (scored, dead)
   }
 
@@ -98,6 +92,9 @@ object InferencePipeline {
     * into the store (the store is single-writer anyway); batch ids
     * alone restart from the checkpoint, so the pair is stable across
     * recovery.
+    *
+    * `useServing` is kept while `perfbench/` still passes it; the
+    * store has one online table, so `false` is rejected.
     */
   def run(
       events: DataFrame,
@@ -106,18 +103,21 @@ object InferencePipeline {
       scoredSink: String,
       dlqSink: String,
       checkpoint: String,
-      useServing: Boolean = false,
-      txnPrefix: String = "inference"): StreamingQuery =
+      useServing: Boolean = true,
+      txnPrefix: String = "inference"): StreamingQuery = {
+    require(useServing,
+      "useServing = false selected the removed versioned online table")
     events.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (scored, dead) = processBatch(batch, store, model, useServing,
+        val (scored, dead) = processBatch(batch, store, model,
           txnId = Some(s"$txnPrefix-$batchId"))
         scored.write.mode("append").parquet(scoredSink)
         if (!dead.isEmpty) dead.write.mode("append").parquet(dlqSink)
         Pin.release(scored)
       }
       .start()
+  }
 }

@@ -12,7 +12,7 @@ import graft.store.FeatureStore
   * offset-fenced sink semantics via txn ids; forgets fenced by the
   * same offline txn ledger, keyed on the tombstone batch id), so
   * replaying either kind of batch is a no-op and the final
-  * three-tier state equals applying the unique operations once, in
+  * two-tier state equals applying the unique operations once, in
   * order.
   */
 class TombstoneIngestSpec extends SparkSpec {
@@ -32,19 +32,19 @@ class TombstoneIngestSpec extends SparkSpec {
         .toDF("customer_id", "purchase_timestamp", "avg_purchase_value")
 
     // b1: customers 1-3 land
-    fs.ingestServing(batchDf(Seq(
+    fs.ingest(batchDf(Seq(
       (1L, "2024-01-01 10:00:00", 100.0),
       (2L, "2024-01-01 11:00:00", 200.0),
       (3L, "2024-01-01 12:00:00", 300.0))), txnId = Some("ing-1"))
     // t1: customer 2 asks to be forgotten
     fs.forgetKeys(Seq(2L), txnId = Some("tomb-1"))
     // b1 REPLAYED (at-least-once bus): must not resurrect customer 2
-    fs.ingestServing(batchDf(Seq(
+    fs.ingest(batchDf(Seq(
       (1L, "2024-01-01 10:00:00", 100.0),
       (2L, "2024-01-01 11:00:00", 200.0),
       (3L, "2024-01-01 12:00:00", 300.0))), txnId = Some("ing-1"))
     // b2: customer 2 GENUINELY returns (new txn) + customer 4 lands
-    fs.ingestServing(batchDf(Seq(
+    fs.ingest(batchDf(Seq(
       (2L, "2024-02-01 09:00:00", 250.0),
       (4L, "2024-02-01 10:00:00", 400.0))), txnId = Some("ing-2"))
     // t1 REPLAYED: must not delete the returned customer 2
@@ -56,7 +56,7 @@ class TombstoneIngestSpec extends SparkSpec {
     // reference: ops applied once in order → 2 (returned, 250.0),
     // 3 (300.0), 4 (400.0); customer 1 gone everywhere
     val want = Map(2L -> 250.0, 3L -> 300.0, 4L -> 400.0)
-    val serving = fs.serving().collect()
+    val serving = fs.online().collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(serving === want)
     val latest = fs.latestView().collect()

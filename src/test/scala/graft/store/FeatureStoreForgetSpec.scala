@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** [[FeatureStore.forgetKeys]] — the right-to-be-forgotten request
-  * across all three tiers: offline history (every version of the
-  * key), the versioned online view, and the bucket-partitioned
-  * serving layout (including a bucket emptied outright). Other keys'
-  * records and latest values survive untouched; txn replay is a
-  * no-op; a never-ingested key changes nothing.
+  * across both tiers: offline history (every version of the key) and
+  * the bucket-partitioned online store (including a bucket emptied
+  * outright). Other keys' records and latest values survive
+  * untouched; txn replay is a no-op; a never-ingested key changes
+  * nothing.
   */
 class FeatureStoreForgetSpec extends SparkSpec {
   import spark.implicits._
@@ -35,33 +35,32 @@ class FeatureStoreForgetSpec extends SparkSpec {
       "view, and keeps other keys' latest values intact") {
     val fs = freshStore()
     fs.ingest(batch)
-    fs.compactOnline()
     fs.forgetKeys(Seq(1L))
     // history: BOTH of key 1's versions are gone, others complete
     assert(fs.offline().filter($"customer_id" === 1L).isEmpty)
     assert(fs.offline().count() === 2L)
-    // online view: rewritten without the key
+    // online store: its bucket rewritten without the key
     assert(fs.online().filter($"customer_id" === 1L).isEmpty)
     val latest = fs.latestView().collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(latest === Map(2L -> 200.0, 3L -> 300.0))
     // point lookup: cold start, not a stale record
-    assert(fs.online().filter($"customer_id" === 1L).isEmpty)
+    assert(fs.getRecord(1L).isEmpty)
   }
 
   test("forgetKeys rewrites only the touched serving buckets and " +
       "clears a bucket emptied outright") {
     val fs = freshStore()
-    fs.ingestServing(batch)
-    assert(fs.serving().filter($"customer_id" === 1L).count() === 1L)
+    fs.ingest(batch)
+    assert(fs.online().filter($"customer_id" === 1L).count() === 1L)
     fs.forgetKeys(Seq(1L))
-    assert(fs.serving().filter($"customer_id" === 1L).isEmpty)
-    val latest = fs.serving().collect()
+    assert(fs.online().filter($"customer_id" === 1L).isEmpty)
+    val latest = fs.online().collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(latest === Map(2L -> 200.0, 3L -> 300.0))
     // forget the remaining keys too: their buckets empty and clear
     fs.forgetKeys(Seq(2L, 3L))
-    assert(fs.serving().isEmpty)
+    assert(fs.online().isEmpty)
     assert(fs.offline().isEmpty)
   }
 
@@ -85,7 +84,7 @@ class FeatureStoreForgetSpec extends SparkSpec {
       "read-through signature catches the bucket rewrite with no " +
       "explicit invalidate") {
     val fs = freshStore()
-    fs.ingestServing(batch)
+    fs.ingest(batch)
     val cache = new ServingCache(spark, s"${fs.conf.path}/serving",
       "customer_id", 64, 16, dropCols = Seq("_seq"))
     assert(cache.get(1L).nonEmpty)
@@ -101,7 +100,7 @@ class FeatureStoreForgetSpec extends SparkSpec {
   test("the HTTP get_record wire 404s for a forgotten customer — the " +
       "reference's own serving API at the end of the forget chain") {
     val fs = freshStore()
-    fs.ingestServing(batch)
+    fs.ingest(batch)
     val ep = new ServingEndpoint(fs.servingCache())
     val port = ep.start()
     try {
@@ -164,7 +163,7 @@ class FeatureStoreForgetSpec extends SparkSpec {
       "missing its bucket — the cast-to-NULL guard on the serving " +
       "delete") {
     val fs = freshStore()
-    fs.ingestServing(batch)
+    fs.ingest(batch)
     // "nope" cannot cast to the stored Long key type: without the
     // guard xxhash64 degenerates to the seed hash, targets a wrong
     // bucket, and the forget silently removes nothing
@@ -175,12 +174,12 @@ class FeatureStoreForgetSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("cast"))
     // nothing was deleted by the failed call
-    assert(fs.serving().count() === 3L)
+    assert(fs.online().count() === 3L)
     // a castable STRING form of a real key still works (cast, not
     // type-equality, is the contract)
     graft.operators.Layout.deleteFromBucketPartitioned(
       spark, s"${fs.conf.path}/serving", "customer_id", Seq("2"), 64)
-    assert(fs.serving().filter($"customer_id" === 2L).isEmpty)
-    assert(fs.serving().count() === 2L)
+    assert(fs.online().filter($"customer_id" === 2L).isEmpty)
+    assert(fs.online().count() === 2L)
   }
 }

@@ -56,9 +56,9 @@ class FeatureStoreSpec extends SparkSpec {
 
   test("a batch with a NEW feature column widens online AND serving views") {
     val fs = freshStore()
-    fs.ingestServing(batch1)
+    fs.ingest(batch1)
     // second batch carries a new column the first never had
-    fs.ingestServing(Seq((1L, ts("2024-01-06 10:00:00"), 60.0, 7L))
+    fs.ingest(Seq((1L, ts("2024-01-06 10:00:00"), 60.0, 7L))
       .toDF("customer_id", "purchase_timestamp", "avg_purchase_value",
         "visit_count"))
     // online view: widened, old rows null, new row carries the value
@@ -69,35 +69,45 @@ class FeatureStoreSpec extends SparkSpec {
         (if (r.isNullAt(r.fieldIndex("visit_count"))) None
          else Some(r.getLong(r.fieldIndex("visit_count"))))).toMap
     assert(byKey == Map(1L -> Some(7L), 2L -> None))
-    // serving layout: the new column reached the bucket files too
-    val serving = fs.serving()
-    assert(serving.columns.contains("visit_count"),
-      "serving files silently dropped the new column")
+    // the new column reached the rewritten bucket's files too
     assert(fs.getServingRecord(1L).select("visit_count")
       .head().getLong(0) == 7L)
     // and a NARROWER later batch appends with nulls instead of throwing
-    fs.ingestServing(Seq((4L, ts("2024-01-07 10:00:00")))
+    fs.ingest(Seq((4L, ts("2024-01-07 10:00:00")))
       .toDF("customer_id", "purchase_timestamp"))
-    assert(fs.serving().filter($"customer_id" === 4L).count() == 1)
+    assert(fs.online().filter($"customer_id" === 4L).count() == 1)
   }
 
   test("same-key same-event-time duplicates within ONE batch dedup deterministically") {
     // both rows share (key, ts, _seq); the content-hash tiebreak must
-    // pick the same survivor on every run and both store paths
-    val dup = Seq(
-      (9L, ts("2024-02-01 00:00:00"), 111.0),
-      (9L, ts("2024-02-01 00:00:00"), 222.0))
-    val picks = (1 to 3).map { _ =>
+    // pick the same survivor on every run and in either row order —
+    // on the bootstrap, on a merge into an initialized layout (through
+    // ingest and through the layout-only mergeServing), in the point
+    // lookup, and in the full-history view
+    val a = (9L, ts("2024-02-01 00:00:00"), 111.0)
+    val b = (9L, ts("2024-02-01 00:00:00"), 222.0)
+    val seed = Seq((1L, ts("2024-01-01 00:00:00"), 1.0))
+    def df(rows: Seq[(Long, Timestamp, Double)]) =
+      rows.toDF("customer_id", "purchase_timestamp", "avg_purchase_value")
+    def viaIngest(seeded: Boolean, dup: Seq[(Long, Timestamp, Double)]) = {
       val fs = freshStore()
-      fs.ingest(dup.toDF(
-        "customer_id", "purchase_timestamp", "avg_purchase_value"))
-      (fs.online().filter($"customer_id" === 9L)
-        .head().getDouble(2),
-        fs.latestView().head().getDouble(2))
+      if (seeded) fs.ingest(df(seed))
+      fs.ingest(df(dup))
+      Seq(fs.online().filter($"customer_id" === 9L).head().getDouble(2),
+        fs.getRecord(9L).get.getDouble(2),
+        fs.latestView().filter($"customer_id" === 9L).head().getDouble(2))
     }
-    assert(picks.distinct.size == 1, s"nondeterministic dedup: $picks")
-    assert(picks.head._1 == picks.head._2,
-      "online merge and full-history compaction disagree on the survivor")
+    def viaMerge(dup: Seq[(Long, Timestamp, Double)]) = {
+      val fs = freshStore()
+      fs.mergeServing(df(seed))
+      fs.mergeServing(df(dup))
+      Seq(fs.getServingRecord(9L).head().getDouble(2))
+    }
+    val picks = Seq(Seq(a, b), Seq(b, a)).map(dup =>
+      viaIngest(seeded = false, dup) ++ viaIngest(seeded = true, dup) ++
+        viaMerge(dup))
+    assert(picks.flatten.distinct.size == 1,
+      s"survivor depends on path or row order (a,b) / (b,a): $picks")
   }
 
   test("seq recovery survives a zero-row history with no sidecar") {
@@ -105,6 +115,9 @@ class FeatureStoreSpec extends SparkSpec {
     val fs1 = FeatureStore(spark, dir,
       keyCol = "customer_id", eventTimeCol = "purchase_timestamp")
     fs1.ingest(batch1.limit(0)) // zero-row version; history now exists
+    // history but no committed bucket: lookups miss, never a missing path
+    assert(fs1.getRecord(1L).isEmpty)
+    assert(!fs1.recordExists(1L))
     // simulate the lost-sidecar crash window the scaladoc documents
     val fsys = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -125,44 +138,32 @@ class FeatureStoreSpec extends SparkSpec {
     assert(fs.getRecord(99L).isEmpty)
   }
 
-  test("compaction is idempotent and online() matches latestView()") {
-    val fs = freshStore()
-    fs.ingest(batch1)
-    fs.compactOnline()
-    fs.compactOnline()
-    val a = fs.online().orderBy($"customer_id").collect().toSeq
-    val b = fs.latestView().orderBy($"customer_id").collect().toSeq
-    assert(a == b)
-  }
-
-  test("online commit is crash-safe: an uncommitted version dir is ignored") {
+  test("a crashed first merge leaves only serving/_temporary: the " +
+      "next ingest bootstraps the layout from the history") {
     val dir = Files.createTempDirectory("fs-crash").toString
     val fs = FeatureStore(spark, dir,
       keyCol = "customer_id", eventTimeCol = "purchase_timestamp")
     fs.ingest(batch1)
-    fs.compactOnline()
-    val before = fs.online().orderBy($"customer_id").collect().toSeq
-    // simulate a writer crash: a newer version dir with data files but
-    // no _SUCCESS marker (the committer writes the marker last)
-    val partial = java.nio.file.Paths.get(dir, "online", "v_99")
+    // simulate the crash: no committed kb= bucket, only the
+    // committer's leftover _temporary dir with a partial file
+    new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(s"$dir/serving"), true)
+    val partial = java.nio.file.Paths.get(dir, "serving", "_temporary", "0", "kb=3")
     Files.createDirectories(partial)
     Files.writeString(partial.resolve("part-00000.parquet"), "garbage")
-    val after = fs.online().orderBy($"customer_id").collect().toSeq
-    assert(after == before) // still serving the last committed version
-  }
-
-  test("online versions are pruned to current + previous after commits") {
-    val dir = Files.createTempDirectory("fs-prune").toString
-    val fs = FeatureStore(spark, dir,
-      keyCol = "customer_id", eventTimeCol = "purchase_timestamp")
-    fs.ingest(batch1)
-    fs.compactOnline()
-    fs.compactOnline()
-    fs.compactOnline()
-    val versions = java.nio.file.Files.list(
-      java.nio.file.Paths.get(dir, "online")).toArray.map(_.toString)
-      .filter(_.matches(".*/v_\\d+"))
-    assert(versions.length == 2, s"expected 2 retained versions: ${versions.toSeq}")
+    // before the repair: reads fall back to the history view
+    assert(fs.getRecord(2L).map(_.getDouble(2)) == Some(200.0))
+    assert(fs.recordExists(1L))
+    fs.ingest(Seq((3L, ts("2024-01-04 11:00:00"), 10.0))
+      .toDF("customer_id", "purchase_timestamp", "avg_purchase_value"))
+    val byKey = (df: org.apache.spark.sql.DataFrame) =>
+      df.orderBy($"customer_id").collect().toSeq
+    assert(byKey(fs.online()) == byKey(fs.latestView()))
+    assert(fs.online().count() == 3L)
+    // a key known only from the history is served from a bucket now
+    assert(fs.getRecord(1L).map(_.getDouble(2)) == Some(50.0))
+    assert(fs.getServingRecord(1L).inputFiles.forall(_.contains("kb=")))
   }
 
   test("offline date scan: predicate reaches the parquet footers") {

@@ -74,7 +74,7 @@ class ServingCacheSpec extends SparkSpec {
         (i, ts("2024-01-01 00:00:00"), i.toDouble))
       .toDF("customer_id", "purchase_timestamp", "v"))
     val cache = s.servingCache()
-    val want = s.serving().sparkSession.read
+    val want = spark.read
       .parquet(s"${s.conf.path}/serving")
       .select($"customer_id",
         graft.operators.Layout.keyBucket("customer_id", 64).as("kb"))
@@ -196,7 +196,7 @@ class ServingCacheSpec extends SparkSpec {
       s"$dir/serving",
       Seq((1.5, ts("2024-01-01 00:00:00"), 10.0), (2.5, ts("2024-01-01 00:00:00"), 20.0))
         .toDF("k", "purchase_timestamp", "v"),
-      "k", Seq("purchase_timestamp"), nBuckets = 8)
+      "k", dedup = identity, nBuckets = 8) // keys are unique
     val cache = new ServingCache(spark, s"$dir/serving", "k", nBuckets = 8)
     assert(cache.get("1.5").get.getAs[Double]("v") == 10.0)
     assert(cache.get(2.5).get.getAs[Double]("v") == 20.0)

@@ -97,7 +97,8 @@ class StorePropertySpec extends SparkSpec {
         .select($"customer_id", $"avg_purchase_value")
         .as[(Long, Double)].collect().toSeq.sorted
       assert(gotHist === expectedHist, s"round $round")
-      // the online view agrees with the model too
+      // the online store — the bucket layout every putRecords merges
+      // into and every forget rewrites — agrees with the model too
       val gotOnline = fs.online().collect()
         .map(r => r.getLong(0) -> r.getDouble(2)).toMap
       assert(gotOnline === expectedLatest, s"round $round")

@@ -7,9 +7,9 @@ import org.apache.hadoop.fs.Path
 
 import graft.SparkSpec
 
-/** The incremental serving layout: merges rewrite only touched
-  * key-buckets, lookups prune to one bucket dir, semantics equal the
-  * full-table online merge.
+/** The online store's key-bucket layout: merges rewrite only touched
+  * key-buckets, lookups prune to one bucket dir, and the merged table
+  * equals the latest-per-key view recomputed from the history.
   */
 class StoreServingSpec extends SparkSpec {
   import spark.implicits._
@@ -42,7 +42,7 @@ class StoreServingSpec extends SparkSpec {
       (2L, ts("2024-01-05 10:00:00"), 222.0), // update
       (3L, ts("2024-01-03 10:00:00"), 300.0), // insert
     ).toDF("customer_id", "purchase_timestamp", "v"))
-    val got = s.serving().collect()
+    val got = s.online().collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(got == Map(1L -> 100.0, 2L -> 222.0, 3L -> 300.0))
   }
@@ -53,7 +53,7 @@ class StoreServingSpec extends SparkSpec {
       .toDF("customer_id", "purchase_timestamp", "v"))
     s.mergeServing(Seq((1L, ts("2024-01-01 00:00:00"), 9.0)) // older
       .toDF("customer_id", "purchase_timestamp", "v"))
-    assert(s.serving().head().getDouble(2) == 5.0)
+    assert(s.online().head().getDouble(2) == 5.0)
   }
 
   test("a merge rewrites ONLY the bucket dirs its keys hash into") {
@@ -92,7 +92,8 @@ class StoreServingSpec extends SparkSpec {
       s"expected 1 selected partition, got ${scan.selectedPartitions.partitionCount}")
   }
 
-  test("inference in serving mode == versioned-online mode (final state)") {
+  test("inference: the merged online() == latestView() recomputed " +
+      "from the full history, after the bootstrap and every batch") {
     import graft.pipeline.{FeatureEngineering, LoyaltyModel}
     import graft.streaming.InferencePipeline
     val hist = Seq(
@@ -109,22 +110,25 @@ class StoreServingSpec extends SparkSpec {
       Seq((2L, ts("2024-02-02 00:00:00"), 10.0),
         (9L, ts("2024-02-03 00:00:00"), 60.0)))
       .map(_.toDF("customer_id", "purchase_timestamp", "purchase_value"))
-    def runMode(useServing: Boolean) = {
-      val s = freshStore()
-      s.ingest(feats) // serving() falls back to the history view
-                      // until the first serving merge
-      batches.foreach { b =>
-        val (scored, _) = InferencePipeline.processBatch(b, s, model, useServing)
-        graft.core.Pin.release(scored)
-      }
-      val view = if (useServing) s.serving() else s.online()
-      view.orderBy($"customer_id").collect()
-        .map(r => (r.getLong(0),
-          r.getAs[Double]("avg_purchase_value"),
-          r.getAs[Double]("avg_loyalty_score"),
-          r.getAs[Double]("latest_loyalty_score"))).toSeq
+    val s = freshStore()
+    // the incremental bucket merge against the full-history window,
+    // the reference for what the online store must hold
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.sorted.map(df.col).toIndexedSeq: _*)
+        .orderBy($"customer_id").collect().toSeq
+    def assertAgrees(step: String) =
+      assert(rows(s.online()) == rows(s.latestView()), step)
+    s.ingest(feats)
+    assertAgrees("bootstrap")
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val (scored, _) = InferencePipeline.processBatch(b, s, model)
+      graft.core.Pin.release(scored)
+      assertAgrees(s"batch $i")
     }
-    assert(runMode(useServing = true) == runMode(useServing = false))
+    assert(s.online().count() == 3L)
+    // both batches landed: 9 is a new key, 1 and 2 were updated
+    assert(rows(s.online()).map(_.getAs[Double]("latest_purchase_value")) ==
+      Seq(80.0, 10.0, 60.0))
   }
 
   test("seq counter recovers from the serving table after a restart") {
@@ -143,7 +147,7 @@ class StoreServingSpec extends SparkSpec {
       keyCol = "customer_id", eventTimeCol = "purchase_timestamp")
     s2.mergeServing(Seq((1L, t0, 3.0))
       .toDF("customer_id", "purchase_timestamp", "v"))
-    assert(s2.serving().head().getDouble(2) == 3.0)
+    assert(s2.online().head().getDouble(2) == 3.0)
   }
 
   test("seq never reuses a number after restart, even when the " +
@@ -183,9 +187,9 @@ class StoreServingSpec extends SparkSpec {
       (2L, ts("2024-01-02 00:00:00"), 2.0))
       .toDF("customer_id", "purchase_timestamp", "v")
     s.mergeServing(batch)
-    val once = s.serving().orderBy($"customer_id").collect().toSeq
+    val once = s.online().orderBy($"customer_id").collect().toSeq
     s.mergeServing(batch) // replay
-    val twice = s.serving().orderBy($"customer_id").collect().toSeq
+    val twice = s.online().orderBy($"customer_id").collect().toSeq
     assert(once.map(_.getLong(0)) == twice.map(_.getLong(0)))
     assert(once.map(_.getDouble(2)) == twice.map(_.getDouble(2)))
   }

@@ -124,7 +124,7 @@ class StreamingSpec extends SparkSpec {
     val feats = FeatureEngineering.engineerFeatures(hist)
     // seed the serving layout, so the batch enriches against the
     // bucket files its own merge then rewrites
-    store.ingestServing(feats)
+    store.ingest(feats)
     val model = LoyaltyModel.train(feats.unionByName(feats.withColumn(
       "latest_loyalty_score", $"latest_loyalty_score" + 0.1)))
 
@@ -135,15 +135,15 @@ class StreamingSpec extends SparkSpec {
       (9L, ts("2024-02-01 00:00:00"), 40.0))
     InferencePipeline.run(
       input.toDF().toDF("customer_id", "purchase_timestamp", "purchase_value"),
-      store, model, s"$dir/scored", s"$dir/dlq", s"$dir/ckpt",
-      useServing = true).awaitTermination()
+      store, model, s"$dir/scored", s"$dir/dlq", s"$dir/ckpt")
+      .awaitTermination()
 
     // the served A3 transition averages in the score the batch
     // predicted from PRE-merge features; the sink must hold that same
     // score, not one re-derived from the merged row
     val sink1 = spark.read.parquet(s"$dir/scored")
       .filter($"customer_id" === 1L).head().getAs[Double]("predicted_loyalty_score")
-    val c1 = store.getServingRecord(1L).head()
+    val c1 = store.getRecord(1L).get
     assert(c1.getAs[Double]("latest_loyalty_score") == sink1)
     assert(math.abs(c1.getAs[Double]("avg_loyalty_score") - (5.5 + sink1) / 2) < 1e-12)
   }
