@@ -138,6 +138,28 @@ class FeatureStoreSpec extends SparkSpec {
     assert(fs.getRecord(99L).isEmpty)
   }
 
+  test("compaction is idempotent and online() matches latestView()") {
+    val fs = freshStore()
+    fs.ingest(batch1)
+    fs.putRecords(Seq((1L, ts("2024-01-05 08:00:00"), 75.0))
+      .toDF("customer_id", "purchase_timestamp", "avg_purchase_value"))
+    def history() = fs.offline()
+      .orderBy($"customer_id", $"purchase_timestamp").collect().toSeq
+    def byKey(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy($"customer_id").collect().toSeq
+    val before = history()
+    fs.compactOffline()
+    val once = history()
+    fs.compactOffline()
+    val twice = history()
+    assert(once == before, "compaction changed the history rows")
+    assert(twice == once, "a second compaction changed the history rows")
+    assert(fs.offlineVersions.size == 4) // two ingests + two compactions
+    assert(byKey(fs.online()) == byKey(fs.latestView()))
+    assert(byKey(fs.online()).map(r => r.getLong(0) -> r.getDouble(2)) ==
+      Seq(1L -> 75.0, 2L -> 200.0))
+  }
+
   test("a crashed first merge leaves only serving/_temporary: the " +
       "next ingest bootstraps the layout from the history") {
     val dir = Files.createTempDirectory("fs-crash").toString

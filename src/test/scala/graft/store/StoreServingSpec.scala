@@ -131,6 +131,41 @@ class StoreServingSpec extends SparkSpec {
       Seq(80.0, 10.0, 60.0))
   }
 
+  test("inference in serving mode == versioned-online mode (final state)") {
+    import graft.pipeline.{FeatureEngineering, LoyaltyModel}
+    import graft.streaming.InferencePipeline
+    val hist = Seq(
+      (1L, ts("2024-01-01 10:00:00"), 100.0, 5.0),
+      (1L, ts("2024-01-03 09:30:00"), 50.0, 6.0),
+      (2L, ts("2024-01-02 12:00:00"), 200.0, 9.0),
+    ).toDF("customer_id", "purchase_timestamp", "purchase_value", "loyalty_score")
+    val feats = FeatureEngineering.engineerFeatures(hist)
+    val model = LoyaltyModel.train(feats.unionByName(feats.withColumn(
+      "latest_loyalty_score", $"latest_loyalty_score" + 0.1)))
+    val batches = Seq(
+      Seq((1L, ts("2024-02-01 00:00:00"), 80.0),
+        (9L, ts("2024-02-01 00:00:00"), 40.0)),
+      Seq((2L, ts("2024-02-02 00:00:00"), 10.0),
+        (9L, ts("2024-02-03 00:00:00"), 60.0)))
+      .map(_.toDF("customer_id", "purchase_timestamp", "purchase_value"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.sorted.map(df.col).toIndexedSeq: _*)
+        .orderBy($"customer_id").collect().toSeq
+    // serving mode: every batch merges only its touched buckets
+    val s = freshStore()
+    s.ingestServing(feats)
+    batches.foreach { b =>
+      val (scored, _) = InferencePipeline.processBatch(b, s, model)
+      graft.core.Pin.release(scored)
+    }
+    // versioned-online mode: the whole online table written in one
+    // pass from the final history, as a full-rewrite version would be
+    val full = freshStore()
+    full.ingest(s.offline().drop("_seq", "event_date"))
+    assert(rows(s.serving()) == rows(full.online()))
+    assert(s.serving().count() == 3L)
+  }
+
   test("seq counter recovers from the serving table after a restart") {
     val dir = Files.createTempDirectory("fs-serving").toString
     val s1 = FeatureStore(spark, dir,
