@@ -1,25 +1,25 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.core.Pin
+import org.apache.spark.sql.types.{ByteType, DataType, Decimal, DecimalType,
+  DoubleType, FloatType, IntegerType, LongType, ShortType, StringType}
 
 /** Physical-layout controls for 100 TB: bucketed tables (co-located,
-  * shuffle-free joins) and key salting (skew spreading). These are the
-  * knobs SCALE.md's claims rest on; each has a plan-level spec
-  * (LayoutSpec) proving the exchange disappears / the skew spreads.
+  * shuffle-free joins), the key-bucket hash that partitions the
+  * feature store's online table, key salting (skew spreading), Z-order
+  * profiling and encoding advice. These are the knobs SCALE.md's
+  * claims rest on; each has a plan-level spec (LayoutSpec) proving the
+  * exchange disappears / the skew spreads.
   */
 object Layout {
 
   /** Write `df` as a bucketed managed table. Joins between tables
     * bucketed the same way on the join key plan with zero Exchange on
-    * either side (asserted in LayoutSpec). This is how the offline
-    * store and the online view co-locate with event streams at scale:
-    * bucket both by the entity key once at write time, join forever
-    * without shuffling.
+    * either side (asserted in LayoutSpec): bucket by the entity key
+    * once at write time, join forever without shuffling.
     */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
       nBuckets: Int): Unit =
@@ -29,168 +29,42 @@ object Layout {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Key-bucket column for the partitioned-merge layout:
+  /** Key-bucket column of the online table's bucket partitions:
     * `pmod(xxhash64(key), nBuckets)`.
     */
   def keyBucket(keyCol: String, nBuckets: Int): Column =
     pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)).cast("int")
 
-  /** True iff `dir` holds ≥ 1 committed `kb=` partition — a bare
-    * existence probe would treat a crashed first merge's leftover
-    * `_temporary` dir as a table and wedge the replay-repair path on
-    * an unreadable (schema-less) directory.
+  /** [[keyBucket]] of one key of the stored `keyType`, evaluated on
+    * the driver — the same Catalyst `xxhash64`, no Spark job.
     */
-  def hasCommittedBuckets(spark: SparkSession, dir: String): Boolean = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(root) &&
-      fs.listStatus(root).exists(_.getPath.getName.startsWith("kb="))
+  def keyBucketOf(key: Any, keyType: DataType, nBuckets: Int): Int = {
+    val h = new XxHash64(Seq(Literal.create(key, keyType)))
+      .eval(null).asInstanceOf[Long]
+    (((h % nBuckets) + nBuckets) % nBuckets).toInt
   }
 
-  /** Incremental newest-wins merge into a key-bucket-PARTITIONED
-    * parquet table (`dir/kb=N/…`): the O(batch) upsert path at scale.
-    * A full-table rewrite per micro-batch costs O(#keys) no matter how
-    * small the batch; here the batch's keys hash to ≤ nBuckets
-    * partition dirs, only those partitions are read (partition-pruned
-    * scan), merged, and rewritten via DYNAMIC partition overwrite —
-    * untouched buckets' files are never opened or replaced.
-    *
-    * `dedup` is the caller's newest-wins rule: it keeps one row per key
-    * of (touched buckets ∪ batch) in one pass and must carry the `kb`
-    * column through. Passing the rule in, rather than ordering columns,
-    * keeps a store's merge and its full-history view on the same
-    * tiebreak.
-    *
-    * The touched current buckets are pinned with `Pin.snapshot`
-    * before the write: it materializes exactly the data the merge
-    * must hold before overwriting, and cuts the file-source lineage
-    * so the plan never reads the dir it is replacing.
-    *
-    * Consistency: dynamic partition overwrite commits per-partition
-    * (not atomic across buckets). Single writer, and a crashed merge
-    * is repaired by replaying the batch — the merge is idempotent
-    * (newest-wins dedup), the usual at-least-once contract.
+  /** A caller's id as a value of the stored key type, so it hashes
+    * like the stored key (xxhash64 hashes an Int and a Long
+    * differently). None for an id that cannot be a stored key at all
+    * (e.g. a non-numeric string against a long key).
     */
-  def mergeBucketPartitioned(dir: String, batch: DataFrame,
-      keyCol: String, dedup: DataFrame => DataFrame, nBuckets: Int): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val keyed = batch.withColumn("kb", keyBucket(keyCol, nBuckets))
-    // the FIRST merge has no buckets to merge with: the batch is
-    // deduped before the pin (so the pin holds one row per key, not a
-    // whole bootstrapped history) and written as it is
-    val initialized = hasCommittedBuckets(spark, dir)
-    // pin once: the emptiness probe, the touched-bucket collect, and
-    // the final write otherwise each re-execute the batch plan — three
-    // full offline scans when the batch is a bootstrap over the whole
-    // history
-    val b = (if (initialized) keyed else dedup(keyed)).transform(Pin.snapshot)
-    if (b.isEmpty) return // no touched buckets — a write would leave
-                          // an empty (schema-less) partition root
-    val merged =
-      // one write task per bucket: one file per bucket dir, not one per
-      // shuffle partition the dedup left each bucket spread over
-      if (!initialized) b.repartition($"kb")
-      else {
-        val touched = b.select($"kb").distinct().as[Int].collect().toSeq
-        // mergeSchema: earlier add-column batches may have rewritten
-        // only SOME buckets — footer-sampled inference without it
-        // could resurface the old schema and drop the widened column
-        val cur = spark.read.option("mergeSchema", "true").parquet(dir)
-          .filter($"kb".isin(touched: _*))
-          .transform(Pin.snapshot)
-        // widen in BOTH directions: a batch with a new feature column
-        // must reach the serving files (projecting it away would
-        // silently diverge serving from the offline history forever),
-        // and a batch missing a column must not throw — its rows get
-        // null for the column, exactly like the history table's
-        // schema evolution
-        dedup(cur.unionByName(b, allowMissingColumns = true))
-      }
-    merged
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("kb")
-      .parquet(dir)
-  }
-
-  /** Key deletion against a [[mergeBucketPartitioned]] table — the
-    * serving half of a right-to-be-forgotten request. The forgotten
-    * keys hash to ≤ |keys| bucket dirs; only those partitions are
-    * read, anti-filtered (NULL-keyed rows retained, the delete
-    * contract), and dynamically overwritten — O(touched buckets),
-    * never a layout scan. A bucket whose rows are ALL deleted gets
-    * its partition dir removed explicitly: dynamic overwrite only
-    * replaces partitions present in the OUTPUT, so an empty bucket
-    * would otherwise silently keep serving the deleted rows.
-    * Value-idempotent (replay-safe) like the merge itself; same
-    * in-place isolation caveat.
-    */
-  def deleteFromBucketPartitioned(spark: SparkSession, dir: String,
-      keyCol: String, keys: Seq[Any], nBuckets: Int): Unit = {
-    import spark.implicits._
-    require(keys.nonEmpty, "deleteFromBucketPartitioned with no keys")
-    require(keys.forall(_ != null),
-      "deleteFromBucketPartitioned with a NULL key")
-    if (!hasCommittedBuckets(spark, dir)) return
-    val table = spark.read.option("mergeSchema", "true").parquet(dir)
-    val dt = table.schema(keyCol).dataType
-    // buckets the keys hash into — one job over a literal array, the
-    // exact xxhash64-of-stored-type the layout bucketed with. The
-    // casted keys ride along so a key whose literal cannot cast to
-    // the stored key type FAILS LOUDLY: xxhash64 skips a NULL input
-    // (degenerating to the seed hash), so an unguarded type-mismatch
-    // would silently target a wrong bucket and delete nothing — a
-    // silent miss on a right-to-be-forgotten request.
-    val distinctKeys = keys.distinct
-    val kbLits = distinctKeys.map(k =>
-      pmod(xxhash64(lit(k).cast(dt)), lit(nBuckets.toLong)).cast("int"))
-    val castLits = distinctKeys.map(k => lit(k).cast(dt).isNull)
-    val probe = spark.range(1)
-      .select(array(kbLits: _*).as("a"), array(castLits: _*).as("n"))
-      .head()
-    val nullCasts = probe.getSeq[Boolean](1).zip(distinctKeys)
-      .collect { case (true, k) => k }
-    require(nullCasts.isEmpty,
-      s"deleteFromBucketPartitioned: keys $nullCasts do not cast to " +
-        s"the stored key type $dt — the delete would silently miss")
-    val touched = probe.getSeq[Int](0).toSet
-    val cur = table.filter($"kb".isin(touched.toSeq: _*))
-      .transform(graft.core.Pin.snapshot)
-    val kept = cur.filter(!col(keyCol).isin(keys: _*) ||
-      col(keyCol).isNull)
-    val keptBuckets = kept.select($"kb").distinct().as[Int]
-      .collect().toSet
-    if (keptBuckets.nonEmpty)
-      kept.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("kb")
-        .parquet(dir)
-    // emptied buckets: remove their partition dirs outright
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (touched -- keptBuckets).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/kb=$b"), true): Unit
-    }
-  }
-
-  /** Partition-pruned point lookup against a
-    * [[mergeBucketPartitioned]] table: the filter pins `kb`, so the
-    * scan lists exactly one bucket directory. The key literal is cast
-    * to the STORED key column's type before hashing — xxhash64 hashes
-    * an Int and a Long to different values, so an uncast
-    * `getServingRecord(42)` against a Long-keyed table would pin the
-    * wrong bucket and silently return nothing.
-    */
-  def bucketLookup(spark: SparkSession, dir: String, keyCol: String,
-      keyValue: Column, nBuckets: Int): DataFrame = {
-    // mergeSchema: bucket dirs can disagree after an add-column merge
-    // rewrote only some of them (see mergeBucketPartitioned)
-    val table = spark.read.option("mergeSchema", "true").parquet(dir)
-    val k = keyValue.cast(table.schema(keyCol).dataType)
-    table.filter(col("kb") === pmod(xxhash64(k), lit(nBuckets.toLong))
-      .cast("int") && col(keyCol) === k)
-  }
+  def storedKey(id: Any, keyType: DataType): Option[Any] =
+    try Some(keyType match {
+      case LongType    => id.toString.toLong
+      case IntegerType => id.toString.toInt
+      case ShortType   => id.toString.toShort
+      case ByteType    => id.toString.toByte
+      case DoubleType  => id.toString.toDouble
+      case FloatType   => id.toString.toFloat
+      case StringType  => id.toString
+      case d: DecimalType =>
+        Decimal(new java.math.BigDecimal(id.toString), d.precision, d.scale)
+      case _           => id
+    })
+    // NonFatal, not just NumberFormatException: every conversion
+    // failure is 'this id can match no stored key'
+    catch { case scala.util.control.NonFatal(_) => None }
 
   /** Salted aggregation for skewed keys: two-phase group-by. Phase 1
     * groups on (key, salt) — the hot key's rows spread over

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Pin
 import graft.operators.Layout
 
 /** Spark-native feature store: the reference's dual online/offline
@@ -18,12 +19,16 @@ import graft.operators.Layout
   *    100 TB history prunes to the queried date range (dynamic partition
   *    pruning reaches the scan).
   *  - **Online store** = latest-record-per-key table (reference
-  *    `feature_store_manager.py:101,165-168`), a key-bucket-partitioned
-  *    parquet layout that every ingest MERGEs into bucket by bucket —
-  *    O(batch) per upsert, one bucket read per point lookup. One table
-  *    rewritten partition by partition is Delta Lake's MERGE design
-  *    (VLDB 2020); [[FeatureStore#latestView]] recomputes the same
-  *    rows from the history.
+  *    `feature_store_manager.py:101,165-168`), a second
+  *    [[VersionedTable]] partitioned into key buckets: each data file
+  *    holds one bucket and its manifest entry records which. Every
+  *    ingest MERGEs into it bucket by bucket — one manifest removes
+  *    the touched buckets' files and adds their rewrites (Delta
+  *    Lake's MERGE, VLDB 2020) — so an upsert is O(batch) and a point
+  *    lookup reads one bucket's files. Readers plan from one
+  *    manifest, so they are snapshot-isolated from concurrent merges
+  *    like history readers are. [[FeatureStore#latestView]]
+  *    recomputes the same rows from the history.
   *
   * Keys and event time are declared once per store (the reference's
   * record-identifier / event-time feature-group config,
@@ -38,6 +43,8 @@ final case class FeatureStoreConf(
 
 class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
   import spark.implicits._
+
+  import FeatureStore.BucketCol
 
   private val offlineDir = s"${conf.path}/offline"
   private val servingDir = s"${conf.path}/serving"
@@ -58,7 +65,13 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     new VersionedTable(spark, offlineDir,
       statsCols = Seq("event_date", conf.keyCol))
 
+  /** The online store: latest record per key, one key bucket per
+    * data file ([[mergeLayout]]).
+    */
+  private val onlineTable = new VersionedTable(spark, servingDir)
+
   private def key = col(conf.keyCol)
+  private def bucket = Layout.keyBucket(conf.keyCol, servingBuckets)
   private def ts  = col(conf.eventTimeCol)
 
   /** Next ingest sequence number (single writer — the reference
@@ -86,7 +99,7 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
           Option(df.agg(max(col(seqCol))).head().get(0))
             .map(_.asInstanceOf[Long] + 1L).getOrElse(0L)
         if (exists) maxSeq(offline())
-        else if (servingInitialized) maxSeq(spark.read.parquet(servingDir))
+        else if (servingInitialized) maxSeq(onlineTable.read())
         else 0L
       }
     val s = seqCounter
@@ -129,27 +142,27 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
   def exists: Boolean = offlineTable.currentVersion.nonEmpty
 
   /** S5 — batch ingest: merge the frame into the online store, then
-    * append it to the offline history (one snapshot commit). One
-    * parquet write per tier, no per-row calls (vs the reference's
-    * row-at-a-time `PutRecord` loop).
+    * append it to the offline history. One commit per tier, no
+    * per-row calls (vs the reference's row-at-a-time `PutRecord`
+    * loop).
     *
-    * The online store is a key-bucket-PARTITIONED layout
-    * ([[graft.operators.Layout.mergeBucketPartitioned]]): a batch only
-    * reads and rewrites the ≤ |batch| bucket dirs its keys hash into,
-    * so upsert cost is O(batch), constant in history size and in key
-    * count. The FIRST merge bootstraps the layout from the full
-    * history plus this batch (one window over both), so keys ingested
-    * before the layout existed never look like cold starts.
+    * The merge ([[mergeLayout]]) reads and rewrites only the
+    * ≤ |batch| key buckets the batch's keys hash into, so upsert cost
+    * is O(batch), constant in history size and in key count. The
+    * FIRST merge bootstraps the online table from the full history
+    * plus this batch (one window over both), so keys ingested before
+    * it existed never look like cold starts.
     *
     * `txnId`: optional idempotency token. Replaying a batch whose id
     * is already committed is a complete no-op (no history commit, no
     * seq burn, no merge) — the at-least-once contract for retrying
-    * ingest pipelines. The merge runs BEFORE the history commit so the
-    * commit is the transaction fence: the merge is value-idempotent
-    * (newest-wins dedup), so a crash between merge and commit — or
-    * inside a multi-bucket merge — is repaired by the replay redoing
-    * both, and a crash after the commit means the replay can skip
-    * both.
+    * ingest pipelines. The merge commits BEFORE the history commit so
+    * the history commit is the transaction fence: the merge is
+    * value-idempotent (newest-wins dedup), so a crash between the two
+    * commits is repaired by the replay redoing both, and a crash after
+    * the history commit means the replay can skip both. A crash inside
+    * the merge leaves a claim and an orphan data dir but no manifest:
+    * readers stay on the previous online version.
     */
   def ingest(df: DataFrame, txnId: Option[String] = None): Unit = {
     if (txnId.exists(offlineTable.txnCommitted)) return
@@ -211,15 +224,19 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     */
   def compactOffline(): Unit = { offlineTable.replace(offline()): Unit }
 
-  /** Reclaim history storage, keeping the `retain` newest versions
-    * (see [[VersionedTable.vacuum]] for the retention/replay-fence
-    * contract). Returns deleted data-directory count. Pure appends
-    * free no directories (every manifest references its ancestors'
-    * data); run [[compactOffline]] first to strand them.
+  /** Reclaim storage of both tiers, keeping the `retain` newest
+    * versions of each (see [[VersionedTable.vacuum]] for the
+    * retention/replay-fence contract). Returns the deleted
+    * data-directory count. Pure history appends free no directories
+    * (every manifest references its ancestors' data); run
+    * [[compactOffline]] first to strand them. An online merge
+    * supersedes the touched buckets' files, and their commit directory
+    * is reclaimed once no retained online version references any file
+    * in it.
     */
   def vacuumOffline(retain: Int = 8,
       graceMs: Long = VersionedTable.DefaultVacuumGraceMs): Int =
-    offlineTable.vacuum(retain, graceMs)
+    offlineTable.vacuum(retain, graceMs) + onlineTable.vacuum(retain, graceMs)
 
   /** Date-bounded history scan with manifest-level commit pruning
     * (plus parquet footer pruning within surviving files) — the
@@ -238,16 +255,19 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     *    with file-stats pruning on the key band (the key column is in
     *    `statsCols`; key-clustered ingest keeps bands tight), time
     *    travel still spans the delete, [[vacuumOffline]] reclaims;
-    *  - ONLINE store: only the ≤ |keys| bucket dirs the keys hash into
-    *    are rewritten
-    *    ([[graft.operators.Layout.deleteFromBucketPartitioned]]).
+    *  - ONLINE store: one commit rewriting only the ≤ |keys| buckets
+    *    the keys hash into; a bucket emptied outright simply has no
+    *    file in the new manifest.
     *
-    * NULL-keyed rows are retained in both tiers (the deleteKeys
-    * contract: a delete removes exactly the rows its predicate
-    * matches TRUE). A key never ingested is a no-op everywhere.
-    * Idempotent under `txnId`: the bucket delete runs BEFORE the
-    * fenced history commit (the [[ingest]] ordering) — it is
-    * value-idempotent, so a replay after a crash between tiers
+    * A key that cannot be a stored key (a string that does not parse
+    * as the stored numeric key type) fails loudly before either tier
+    * changes: hashed as-is it would target the wrong bucket and the
+    * forget would silently miss. NULL-keyed rows are retained in both
+    * tiers (the deleteKeys contract: a delete removes exactly the rows
+    * its predicate matches TRUE). A key never ingested is a no-op
+    * everywhere. Idempotent under `txnId`: the bucket delete runs
+    * BEFORE the fenced history commit (the [[ingest]] ordering) — it
+    * is value-idempotent, so a replay after a crash between tiers
     * repairs it, and once the history commit lands the replay skips
     * everything.
     */
@@ -255,9 +275,19 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     if (txnId.exists(offlineTable.txnCommitted)) return
     require(keys.nonEmpty, "forgetKeys with an empty key list")
     require(keys.forall(_ != null), "forgetKeys with a NULL key")
-    if (servingInitialized)
-      Layout.deleteFromBucketPartitioned(
-        spark, servingDir, conf.keyCol, keys, servingBuckets)
+    onlineTable.currentVersion.map(onlineTable.readManifest).foreach { m =>
+      val kt = keyType(m)
+      val stored = keys.distinct.map(k => k -> Layout.storedKey(k, kt))
+      val bad = stored.collect { case (k, None) => k }
+      require(bad.isEmpty, s"forgetKeys: keys $bad do not cast to the " +
+        s"stored key type ${kt.simpleString} — the delete would silently miss")
+      val ks = stored.flatMap(_._2)
+      onlineTable.rewritePartitions("delete", BucketCol,
+        ks.map(Layout.keyBucketOf(_, kt, servingBuckets)).toSet,
+        inserts = false) {
+        _.filter(!key.isin(ks: _*) || key.isNull).withColumn(BucketCol, bucket)
+      }
+    }
     if (exists) offlineTable.deleteKeys(conf.keyCol, keys, txnId): Unit
   }
 
@@ -276,7 +306,7 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     // every path picks the same survivor; a full tie means the rows
     // are identical and either is correct.
     val hashCols = df.columns
-      .filterNot(Set(seqCol, "event_date", "kb")).sorted
+      .filterNot(Set(seqCol, "event_date", BucketCol)).sorted
     val rowHash = xxhash64(hashCols.map(col).toIndexedSeq: _*)
     val w = Window.partitionBy(key)
       .orderBy(ts.desc, col(seqCol).desc, rowHash.desc)
@@ -286,52 +316,66 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
   }
 
   /** W2 — latest record per key, computed from the full history. The
-    * window shuffles once on the key; it is the reference the bucket
-    * layout is checked against, and — a snapshot read of one history
-    * version — the strictly isolated form of [[online]].
+    * window shuffles once on the key; it is the reference the online
+    * table is checked against.
     */
   def latestView(): DataFrame =
     dedupLatest(offline()).drop(seqCol, "event_date")
 
-  private def mergeLayout(batch: DataFrame): Unit =
-    Layout.mergeBucketPartitioned(
-      servingDir, batch, conf.keyCol, dedupLatest, servingBuckets)
+  /** MERGE a batch into the online table: one commit that removes the
+    * files of the buckets the batch's keys hash into and adds their
+    * rewrites, the newest `(event_time, _seq)` record per key winning
+    * over stored and batch rows alike ([[dedupLatest]]). Untouched
+    * buckets' files are never opened, and nothing is overwritten, so
+    * readers planned on the previous version keep reading it.
+    */
+  private def mergeLayout(batch: DataFrame): Unit = {
+    val bootstrap = !servingInitialized
+    // pinned: the touched-bucket collect and the rewrite both read it
+    val b = batch.transform(Pin.snapshot)
+    val touched = b.select(bucket).distinct().as[Int].collect().toSet
+    if (touched.nonEmpty)
+      onlineTable.rewritePartitions("merge", BucketCol, touched,
+        inserts = true) { cur =>
+        // widen in BOTH directions: a batch with a new feature column
+        // must reach the online files (projecting it away would
+        // silently diverge them from the history forever), and a
+        // batch missing a column gets null for it, exactly like the
+        // history table's schema evolution
+        val merged = dedupLatest(cur.unionByName(b, allowMissingColumns = true))
+          .withColumn(BucketCol, bucket)
+        // the bootstrap spreads each bucket over every shuffle
+        // partition of its window: one write task per bucket instead
+        if (bootstrap) merged.repartition(col(BucketCol)) else merged
+      }
+  }
 
   /** Merge a batch into the online store WITHOUT a history commit —
     * for callers that keep their own history (a fenced landing table)
-    * and only need the latest-per-key layout. Same newest-wins MERGE
+    * and only need the latest-per-key table. Same newest-wins MERGE
     * as [[ingest]]; idempotent, so at-least-once replay repairs a
-    * crashed multi-bucket commit. No bootstrap: a store with history
-    * but no layout gets only this batch's keys.
-    *
-    * ISOLATION CAVEAT: a bucket merge replaces that bucket's files IN
-    * PLACE, so a reader that planned its scan just before a merge of
-    * the same bucket commits can hit deleted files. Single writer is
-    * assumed; concurrent reads during a merge of the same bucket need
-    * `spark.sql.files.ignoreMissingFiles` + retry, or [[latestView]]
-    * — a snapshot read of one history version — where strict read
-    * isolation matters.
+    * crashed merge. No bootstrap: a store with history but no online
+    * table gets only this batch's keys.
     */
   def mergeServing(df: DataFrame): Unit =
     mergeLayout(df.withColumn(seqCol, lit(nextSeq())))
 
-  /** S4's table — the online store: one row per key, a full scan of
-    * the bucket layout; falls back to the history view before the
-    * first merge (or after a forget emptied every bucket).
+  /** S4's table — the online store: one row per key, a snapshot read
+    * of the current online version; falls back to the history view
+    * before the first merge.
     */
   def online(): DataFrame =
     if (!servingInitialized) latestView()
-    // mergeSchema: dynamic overwrite rewrites only TOUCHED buckets,
-    // so after an add-column batch the bucket dirs disagree on schema
-    // and footer-sampled inference could silently drop the new column
-    else spark.read.option("mergeSchema", "true")
-      .parquet(servingDir).drop(seqCol, "kb")
+    else onlineTable.read().drop(seqCol)
 
   /** Alias of [[online]], kept while `perfbench/` still calls it. */
   def serving(): DataFrame = online()
 
   private def servingInitialized: Boolean =
-    Layout.hasCommittedBuckets(spark, servingDir)
+    onlineTable.currentVersion.nonEmpty
+
+  private def keyType(m: onlineTable.Manifest) =
+    m.schema.get(conf.keyCol).dataType
 
   /** The cache tier in front of the online store (the reference's
     * ElastiCache role): bounded bucket-level LRU with read-through
@@ -342,16 +386,25 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     new ServingCache(spark, servingDir, conf.keyCol, servingBuckets,
       maxCachedBuckets, dropCols = Seq(seqCol))
 
-  /** Partition-pruned point lookup — the scan lists exactly one `kb=`
-    * directory (asserted in StoreServingSpec). Before the first merge
-    * it filters the history view instead, so a store whose history
-    * holds no committed bucket yet never hits a missing path.
+  /** Point lookup planned from the current online manifest: the
+    * scan reads exactly the files of the key's bucket (asserted in
+    * StoreServingSpec). Before the first merge it filters the history
+    * view instead.
     */
   private[store] def getServingRecord(id: Any): DataFrame =
-    if (!servingInitialized) latestView().filter(key === lit(id))
-    else Layout.bucketLookup(
-      spark, servingDir, conf.keyCol, lit(id), servingBuckets)
-      .drop(seqCol, "kb")
+    onlineTable.currentVersion.map(onlineTable.readManifest) match {
+      case None => latestView().filter(key === lit(id))
+      case Some(m) =>
+        val kt = keyType(m)
+        val k = Layout.storedKey(id, kt)
+        val files = k.fold(Seq.empty[onlineTable.FileEntry]) { v =>
+          val b = Layout.keyBucketOf(v, kt, servingBuckets)
+          m.files.filter(onlineTable.partitionOf(_, BucketCol).contains(b))
+        }
+        onlineTable.readFiles(m.schema, files)
+          .filter(k.fold(lit(false))(v => key === lit(v)))
+          .drop(seqCol)
+    }
 
   /** S4 — online point lookup (`get_record`,
     * `feature_store_manager.py:165-168`): one bucket read.
@@ -366,6 +419,10 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
 }
 
 object FeatureStore {
+
+  /** The online table's partition column: the key's bucket. */
+  private[store] val BucketCol = "kb"
+
   def apply(spark: SparkSession, path: String, keyCol: String,
       eventTimeCol: String): FeatureStore =
     new FeatureStore(spark, FeatureStoreConf(path, keyCol, eventTimeCol))

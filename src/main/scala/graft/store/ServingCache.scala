@@ -1,26 +1,30 @@
 package graft.store
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-import org.apache.spark.sql.types.{ByteType, DataType, Decimal, DecimalType,
-  DoubleType, FloatType, IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.sql.types.{DataType, StructType}
+
+import graft.operators.Layout
 
 /** ElastiCache-shaped keyed serving tier, Spark-native (the
   * reference's scaling plan puts ElastiCache in front of the online
   * store for sub-ms lookups, `Scaling and monitoring strategies.md:
   * 19-21`). The Spark-native answer keeps the BUCKET as the cache
-  * unit: the serving layout is already hash-partitioned into `kb=`
-  * dirs (`Layout.mergeBucketPartitioned`), so a point lookup needs
-  * exactly one bucket — this tier memoizes whole buckets in a
-  * bounded driver-side LRU and serves repeated lookups from memory
-  * with NO Spark job at all.
+  * unit: the online table is a [[VersionedTable]] partitioned into key
+  * buckets (`pmod(xxhash64(key), nBuckets)`, one bucket per data file,
+  * recorded in its manifest entry), so a point lookup needs exactly
+  * one bucket — this tier memoizes whole buckets in a bounded
+  * driver-side LRU and serves repeated lookups from memory with NO
+  * Spark job at all.
   *
-  * Read-through consistency: each get checks the bucket dir's file
-  * signature (names + lengths + mtimes — one filesystem LIST, no data
-  * read) and reloads the bucket iff a serving merge rewrote it since
-  * caching. That gives read-your-merges semantics without TTL
-  * guesswork; `invalidate()` drops everything for the blunt version.
+  * Read-through consistency: each get lists `_manifests` (one
+  * filesystem LIST, no data read) and, once per new version, parses
+  * that manifest. A bucket's signature is its [[ServingCache.BucketPlan]]
+  * — its file list in the current manifest plus the manifest schema.
+  * A merge that rewrites the bucket replaces its files and an
+  * add-column commit widens the schema, so the bucket reloads exactly
+  * when its rows can have changed. That gives read-your-merges
+  * semantics without TTL guesswork; `invalidate()` drops everything
+  * for the blunt version.
   *
   * Capacity: memory = maxCachedBuckets × bucket size. At 100 TB the
   * knob pairs with `nBuckets` — more buckets ⇒ smaller cache units ⇒
@@ -35,12 +39,24 @@ import org.apache.spark.sql.types.{ByteType, DataType, Decimal, DecimalType,
 class ServingCache(spark: SparkSession, servingDir: String,
     keyCol: String, nBuckets: Int = 64, maxCachedBuckets: Int = 16,
     dropCols: Seq[String] = Nil) {
+  import ServingCache.BucketPlan
+
   require(nBuckets > 0 && maxCachedBuckets > 0,
     "nBuckets and maxCachedBuckets must be positive")
 
-  private final class CachedBucket(val sig: String, val rows: Map[String, Row])
+  private final class CachedBucket(val plan: BucketPlan, val rows: Map[String, Row])
 
   private val cache = new BucketCache[CachedBucket](maxCachedBuckets)
+
+  private val table = new VersionedTable(spark, servingDir)
+
+  /** One parsed online manifest: its schema and per-bucket files. */
+  private final class Snapshot(val version: Long, val schema: StructType,
+      val buckets: Map[Int, Seq[String]]) {
+    val keyType: DataType = schema(keyCol).dataType
+  }
+
+  @volatile private var snap: Snapshot = null
 
   /** (hits, misses) — a miss is any get that (re)loaded its bucket. */
   def stats: (Long, Long) = cache.stats
@@ -52,100 +68,77 @@ class ServingCache(spark: SparkSession, servingDir: String,
 
   def invalidate(): Unit = cache.invalidate()
 
-  private def fs =
-    new Path(servingDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  // resolved once from the layout's own schema; `null` until the
-  // layout exists (get() guards the never-merged case on it, so no
-  // other lookup ever pays an exists() call)
-  @volatile private var keyTypeCache: DataType = null
-  private def keyType: DataType = {
-    var kt = keyTypeCache
-    if (kt == null) {
-      kt = spark.read.parquet(servingDir).schema(keyCol).dataType
-      keyTypeCache = kt
+  /** The current online snapshot: one LIST of `_manifests`, and one
+    * manifest parse per new version. None before the first commit.
+    */
+  private def current(): Option[Snapshot] = table.currentVersion.map { v =>
+    val s = snap
+    if (s != null && s.version == v) s
+    else synchronized {
+      if (snap != null && snap.version == v) snap
+      else {
+        val m = table.readManifest(v)
+        val parsed = new Snapshot(v, m.schema.getOrElse(
+          throw new IllegalStateException(s"$servingDir v_$v: no schema")),
+          m.files.flatMap(f => table.partitionOf(f, FeatureStore.BucketCol)
+            .map(_ -> f.path)).groupMap(_._1)(_._2))
+        if (snap == null || snap.version < v) snap = parsed
+        parsed
+      }
     }
-    kt
   }
 
-  /** Normalize the caller's id to the STORED key type so the hash
-    * matches `Layout.keyBucket`'s `xxhash64(cast(key))` exactly.
-    * None for an id that cannot be a stored key at all (e.g. a
-    * non-numeric string against a long-keyed layout) — a lookup miss,
-    * not a NumberFormatException into the caller's serving path.
+  /** The stored key type. It never changes once the table exists (a
+    * commit cannot change a column's type), so after the first
+    * snapshot it costs no filesystem call.
     */
-  private def norm(id: Any): Option[Any] =
-    try Some(keyType match {
-      case LongType    => id.toString.toLong
-      case IntegerType => id.toString.toInt
-      case ShortType   => id.toString.toShort
-      case ByteType    => id.toString.toByte
-      case DoubleType  => id.toString.toDouble
-      case FloatType   => id.toString.toFloat
-      case StringType  => id.toString
-      case d: DecimalType =>
-        Decimal(new java.math.BigDecimal(id.toString), d.precision, d.scale)
-      case _           => id
-    })
-    // NonFatal, not just NumberFormatException: every conversion
-    // failure is 'this id can match no stored key' — a miss, never an
-    // exception into the serving path
-    catch { case scala.util.control.NonFatal(_) => None }
+  private def keyType: DataType = Option(snap).orElse(current()).map(_.keyType)
+    .getOrElse(throw new IllegalStateException(
+      s"$servingDir: the online table has no committed version"))
 
   /** The bucket `Layout.keyBucket` assigns this key — computed by
-    * evaluating the SAME Catalyst expression (`pmod(xxhash64(key),
-    * n)`) driver-side, so no 1-row Spark job per lookup.
+    * evaluating the SAME Catalyst expression driver-side, so no 1-row
+    * Spark job per lookup.
     */
   def bucketOf(id: Any): Int = {
-    val key = norm(id).getOrElse(throw new IllegalArgumentException(
-      s"id '$id' cannot be normalized to key type ${keyType.simpleString}"))
-    val h = new XxHash64(Seq(Literal.create(key, keyType)))
-      .eval(null).asInstanceOf[Long]
-    (((h % nBuckets) + nBuckets) % nBuckets).toInt
+    val kt = keyType
+    val key = Layout.storedKey(id, kt).getOrElse(throw new IllegalArgumentException(
+      s"id '$id' cannot be normalized to key type ${kt.simpleString}"))
+    Layout.keyBucketOf(key, kt, nBuckets)
   }
 
-  /** Change signature of one bucket dir: one filesystem LIST, no data
-    * read. "absent" for a bucket no merge has written yet.
+  /** The bucket load itself — one read of the bucket's manifest files
+    * under the manifest schema (the same files `FeatureStore.getRecord`
+    * plans). A test seam: the concurrency spec overrides it with a
+    * gated slow load to prove a cold miss never blocks other buckets'
+    * hits.
     */
-  private def signature(b: Int): String = {
-    val dir = new Path(s"$servingDir/kb=$b")
-    if (!fs.exists(dir)) "absent"
-    else fs.listStatus(dir).map(st =>
-        s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-  }
-
-  /** The bucket load itself — one single-bucket parquet read (the
-    * same pruned scan `FeatureStore.getRecord` plans). A test
-    * seam: the concurrency spec overrides it with a gated slow load
-    * to prove a cold miss never blocks other buckets' hits.
-    */
-  protected def loadBucket(b: Int, sig: String): Map[String, Row] =
-    if (sig == "absent") Map.empty
-    else spark.read.parquet(s"$servingDir/kb=$b").drop(dropCols: _*)
+  protected def loadBucket(b: Int, plan: BucketPlan): Map[String, Row] =
+    if (plan.files.isEmpty) Map.empty
+    else spark.read.schema(plan.schema)
+      .parquet(plan.files.map(f => s"$servingDir/$f"): _*).drop(dropCols: _*)
       .collect().map(r => r.getAs[Any](keyCol).toString -> r).toMap
 
   /** Point lookup. Cache hit: zero Spark jobs, one LIST, no waiting on
     * any in-flight load. Miss: one bucket load under that bucket's own
-    * latch, memoized for next time.
+    * latch, memoized for next time. A table with no committed version
+    * (never merged, or only a crashed merge's orphan files) has no
+    * keys: None.
     */
-  def get(id: Any): Option[Row] = {
-    // a layout no merge has COMMITTED yet has no keys (and no schema
-    // to normalize against) — None, not a PATH_NOT_FOUND (or, after a
-    // crashed first merge left only `_temporary`, an unreadable
-    // schema-less dir → 'unable to infer schema') from the driver.
-    // Once the key type resolves the layout exists (merges only add),
-    // so steady-state lookups skip the probe entirely.
-    if (keyTypeCache == null &&
-        !graft.operators.Layout.hasCommittedBuckets(spark, servingDir))
-      return None
-    val key = norm(id) match {
-      case Some(k) => k.toString
-      case None    => return None // unkeyable id can match no stored row
-    }
-    val b = bucketOf(id)
-    val sig = signature(b)
-    cache.get(b, _.sig == sig)(new CachedBucket(sig, loadBucket(b, sig)))
-      .rows.get(key)
-  }
+  def get(id: Any): Option[Row] = for {
+    s <- current()
+    key <- Layout.storedKey(id, s.keyType) // unkeyable: no stored row
+    b = Layout.keyBucketOf(key, s.keyType, nBuckets)
+    plan = BucketPlan(s.buckets.getOrElse(b, Nil), s.schema)
+    row <- cache.get(b, _.plan == plan)(
+      new CachedBucket(plan, loadBucket(b, plan))).rows.get(key.toString)
+  } yield row
+}
+
+object ServingCache {
+
+  /** What one bucket reads in an online snapshot: its data files
+    * (paths relative to the table root) and the snapshot schema.
+    */
+  final case class BucketPlan(files: Seq[String], schema: StructType)
 }

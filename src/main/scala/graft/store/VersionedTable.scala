@@ -40,6 +40,11 @@ import org.apache.spark.sql.types.{DataType, NumericType, StructType}
   * the Delta/Iceberg add-column semantics — and `readAt` of a
   * pre-evolution version sees that version's own (narrower) schema.
   *
+  * Partitioned commits: a commit written partitioned by a column
+  * ([[rewritePartitions]] — the online store's key buckets) records
+  * each file's partition value in its manifest entry, so a reader
+  * plans one partition's scan from the manifest alone.
+  *
   * Scan planning: the manifest carries per-FILE min/max stats for the
   * configured `statsCols`, so a range read prunes individual files
   * BEFORE touching the filesystem (the Iceberg manifest-pruning idea
@@ -199,7 +204,7 @@ class VersionedTable(spark: SparkSession, root: String,
     ("""\{"file":"((?:[^"\\]|\\.)*)","commit":"((?:[^"\\]|\\.)*)"""" +
       """(?:,"stats":"((?:[^"\\]|\\.)*)")?\}""").r
   private val headerRe =
-    ("""\{"version":(\d+),"txn":"((?:[^"\\]|\\.)*)","op":"(append|replace|delete|update|compact|expire)"""" +
+    ("""\{"version":(\d+),"txn":"((?:[^"\\]|\\.)*)","op":"(append|replace|delete|update|merge|compact|expire)"""" +
       """(?:,"schema":"((?:[^"\\]|\\.)*)")?(?:,"audit":"((?:[^"\\]|\\.)*)")?\}""").r
   // pre-v2 (op-less header) manifests are NOT readable: their entry
   // lines ({"dir":...,"min":...,"max":...}) don't parse either, and
@@ -289,16 +294,17 @@ class VersionedTable(spark: SparkSession, root: String,
   def auditOf(version: Long): Map[String, String] =
     readManifest(version).audit
 
-  private def listNumbers(re: scala.util.matching.Regex): Seq[Long] = {
-    val dir = new Path(manifestsDir)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.flatMap { st =>
+  /** One LIST of `_manifests` — the only filesystem call a reader
+    * pays to find the current version.
+    */
+  private def listNumbers(re: scala.util.matching.Regex): Seq[Long] =
+    try fs.listStatus(new Path(manifestsDir)).toSeq.flatMap { st =>
       st.getPath.getName match {
         case re(n) => Some(n.toLong)
         case _     => None
       }
     }
-  }
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
 
   /** Committed (readable) versions, ascending. */
   def versions: Seq[Long] = listNumbers(manifestRe).sorted
@@ -346,7 +352,7 @@ class VersionedTable(spark: SparkSession, root: String,
 
   // ---- reads --------------------------------------------------------
 
-  private def readFiles(schema: Option[StructType],
+  private[store] def readFiles(schema: Option[StructType],
       files: Seq[FileEntry]): DataFrame = {
     if (files.isEmpty) {
       val s = schema.getOrElse(throw new IllegalStateException(
@@ -373,9 +379,18 @@ class VersionedTable(spark: SparkSession, root: String,
     readFiles(m.schema, m.files)
   }
 
+  private def noVersion: Nothing =
+    throw new IllegalStateException(s"$root: no committed version")
+
   /** Snapshot read of the current version. */
-  def read(): DataFrame = readAt(currentVersion.getOrElse(
-    throw new IllegalStateException(s"$root: no committed version")))
+  def read(): DataFrame = readAt(currentVersion.getOrElse(noVersion))
+
+  /** `c`'s type in the snapshot schema; string when unknown, the
+    * conservative comparison for stats bands.
+    */
+  private def colType(m: Manifest, c: String): DataType =
+    m.schema.flatMap(_.fields.find(_.name == c).map(_.dataType))
+      .getOrElse(org.apache.spark.sql.types.StringType)
 
   /** Type-aware stats overlap: numeric columns compare as numbers
     * (their cast-to-string forms don't order lexicographically),
@@ -400,11 +415,8 @@ class VersionedTable(spark: SparkSession, root: String,
   def readRange(statsCol: String, lo: String, hi: String): DataFrame = {
     require(statsCols.contains(statsCol),
       s"$root: readRange($statsCol) needs the column in statsCols=$statsCols")
-    val m = readManifest(currentVersion.getOrElse(
-      throw new IllegalStateException(s"$root: no committed version")))
-    val dt = m.schema.flatMap(s =>
-      s.fields.find(_.name == statsCol).map(_.dataType))
-      .getOrElse(org.apache.spark.sql.types.StringType)
+    val m = readManifest(currentVersion.getOrElse(noVersion))
+    val dt = colType(m, statsCol)
     val kept = m.files.filter { f =>
       f.stats.get(statsCol) match {
         case Some((mn, mx)) => overlaps(dt, mn, mx, lo, hi)
@@ -444,8 +456,7 @@ class VersionedTable(spark: SparkSession, root: String,
     */
   def changesSince(fromVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
-    val to = toVersion.orElse(currentVersion).getOrElse(
-      throw new IllegalStateException(s"$root: no committed version"))
+    val to = toVersion.orElse(currentVersion).getOrElse(noVersion)
     require(fromVersion <= to, s"changesSince($fromVersion > $to)")
     // FILE-path-level subset, not commit-dir-level: [[deleteKeys]]
     // carries the UNTOUCHED files of a commit dir forward while
@@ -654,11 +665,22 @@ class VersionedTable(spark: SparkSession, root: String,
     val absRoot = absRootPath
     def rel(p: Path): String =
       p.toUri.getPath.stripPrefix(absRoot).stripPrefix("/")
-    val partPaths = fs.listStatus(new Path(s"$root/$dir")).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .map(_.getPath)
+    // recursive: a partitioned commit nests its files in `col=value`
+    // dirs, and each file's values become its stats band (min = max)
+    val partPaths = {
+      val it = fs.listFiles(new Path(s"$root/$dir"), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+        .filter(_.getName.startsWith("part-")).toSeq
+    }
     val parts = partPaths.map(rel)
     if (parts.isEmpty) return Seq.empty
+    def partValues(p: String): Map[String, (String, String)] =
+      p.split('/').dropRight(1).flatMap { seg =>
+        seg.split("=", 2) match {
+          case Array(c, v) => Some(c -> (v, v))
+          case _           => None
+        }
+      }.toMap
     // fast path (r16): ONE footer read per file yields the row count
     // AND exact integer-column stats — no read-back aggregation job.
     // Any non-footer-exact stats column drops the whole commit to the
@@ -668,8 +690,8 @@ class VersionedTable(spark: SparkSession, root: String,
       if (per.forall(_._2.isDefined))
         Some(per.map { case (p, info) =>
           val (rows, st) = info.get
-          FileEntry(p, dir,
-            st + ("#rows" -> (rows.toString, rows.toString)))
+          FileEntry(p, dir, st ++ partValues(p) +
+            ("#rows" -> (rows.toString, rows.toString)))
         })
       else None
     }
@@ -704,7 +726,8 @@ class VersionedTable(spark: SparkSession, root: String,
     parts.map { p =>
       val rows = rowCounts.get(p)
         .map(n => "#rows" -> (n.toString, n.toString)).toMap
-      FileEntry(p, dir, statsByFile.getOrElse(p, Map.empty) ++ rows)
+      FileEntry(p, dir,
+        statsByFile.getOrElse(p, Map.empty) ++ partValues(p) ++ rows)
     }
   }
 
@@ -860,9 +883,14 @@ class VersionedTable(spark: SparkSession, root: String,
         s"(concurrent writers exceeded the accidental-interleave contract)")
   }
 
-  private def writeData(df: DataFrame): Seq[FileEntry] = {
+  /** Write `df` as one new commit directory; with `partitionBy` each
+    * file lands under a `col=value` subdirectory and holds one value.
+    */
+  private def writeData(df: DataFrame,
+      partitionBy: Option[String] = None): Seq[FileEntry] = {
     val dir = s"data/c_${UUID.randomUUID().toString.take(8)}"
-    df.write.mode("error").parquet(s"$root/$dir")
+    val w = df.write.mode("error")
+    partitionBy.fold(w)(w.partitionBy(_)).parquet(s"$root/$dir")
     filesOf(dir)
   }
 
@@ -874,15 +902,8 @@ class VersionedTable(spark: SparkSession, root: String,
     * with NEW columns widens the table schema (add-column evolution);
     * a changed column type fails loudly.
     */
-  def commit(df: DataFrame, txnId: Option[String] = None): Long = {
-    txnId.filter(txnCommitted) match {
-      case Some(_) => currentVersion.get
-      case None =>
-        val files = writeData(df)
-        val v = publishManifest("append", files, df.schema, txnId)
-        auditAppend(v, files, df.schema)
-    }
-  }
+  def commit(df: DataFrame, txnId: Option[String] = None): Long =
+    commitAudited(df, Map.empty, txnId)
 
   /** [[commit]] with compliance audit evidence attached to the
     * manifest — the RELEASE-side counterpart of the deletion audit:
@@ -899,13 +920,10 @@ class VersionedTable(spark: SparkSession, root: String,
     */
   def commitAudited(df: DataFrame, audit: Map[String, String],
       txnId: Option[String] = None): Long = {
-    txnId.filter(txnCommitted) match {
-      case Some(_) => currentVersion.get
-      case None =>
-        val files = writeData(df)
-        val v = publishManifest("append", files, df.schema, txnId, audit)
-        auditAppend(v, files, df.schema)
-    }
+    if (txnId.exists(txnCommitted)) return currentVersion.get
+    val files = writeData(df)
+    val v = publishManifest("append", files, df.schema, txnId, audit)
+    auditAppend(v, files, df.schema)
   }
 
   /** DELETE rows whose `keyCol` is in `keys` — the takedown /
@@ -946,40 +964,12 @@ class VersionedTable(spark: SparkSession, root: String,
       txnId: Option[String] = None): Long = {
     require(keys.nonEmpty, s"$root: deleteKeys with an empty key list")
     require(keys.forall(_ != null), s"$root: deleteKeys with a NULL key")
-    txnId.filter(txnCommitted) match {
-      case Some(_) => currentVersion.get
-      case None =>
-        val v = currentVersion.getOrElse(
-          throw new IllegalStateException(s"$root: no committed version"))
-        val m = readManifest(v)
-        val dt = m.schema.flatMap(s =>
-          s.fields.find(_.name == keyCol).map(_.dataType))
-          .getOrElse(org.apache.spark.sql.types.StringType)
-        val keyStrs = keys.map(_.toString)
-        // a file with no stats for the column is conservatively
-        // touched (same contract as readRange)
-        val (touched, untouched) = m.files.partition { f =>
-          f.stats.get(keyCol) match {
-            case Some((mn, mx)) =>
-              keyStrs.exists(k => overlaps(dt, mn, mx, k, k))
-            case None => true
-          }
-        }
-        if (touched.isEmpty) return v
-        val kept = readFiles(m.schema, touched)
-          .filter(!col(keyCol).isin(keys: _*) || col(keyCol).isNull)
-        val rewritten = writeData(kept)
-        // audit evidence: counts only, never the keys (storing them
-        // in the manifest would re-retain forgotten identifiers)
-        val audit = Map(
-          "key_col" -> keyCol,
-          "key_count" -> keys.distinct.size.toString,
-          "files_touched" -> touched.size.toString,
-          "files_carried" -> untouched.size.toString) ++
+    rewriteFiles("delete", txnId, keyBand(keyCol, keys),
+      audit = (touched, untouched, rewritten) =>
+        keyAudit(keyCol, keys, touched, untouched) ++
           (for { t <- rowsOf(touched); r <- rowsOf(rewritten) }
-            yield "rows_removed" -> (t - r).toString)
-        publishManifest("delete", untouched ++ rewritten,
-          m.schema.getOrElse(kept.schema), txnId, audit)
+            yield "rows_removed" -> (t - r).toString)) {
+      _.filter(!col(keyCol).isin(keys: _*) || col(keyCol).isNull)
     }
   }
 
@@ -1012,45 +1002,104 @@ class VersionedTable(spark: SparkSession, root: String,
       txnId: Option[String] = None): Long = {
     require(keys.nonEmpty, s"$root: updateRows with an empty key list")
     require(keys.forall(_ != null), s"$root: updateRows with a NULL key")
-    txnId.filter(txnCommitted) match {
-      case Some(_) => currentVersion.get
-      case None =>
-        val v = currentVersion.getOrElse(
-          throw new IllegalStateException(s"$root: no committed version"))
-        val m = readManifest(v)
-        val dt = m.schema.flatMap(s =>
-          s.fields.find(_.name == keyCol).map(_.dataType))
-          .getOrElse(org.apache.spark.sql.types.StringType)
-        val keyStrs = keys.map(_.toString)
-        val (touched, untouched) = m.files.partition { f =>
-          f.stats.get(keyCol) match {
-            case Some((mn, mx)) =>
-              keyStrs.exists(k => overlaps(dt, mn, mx, k, k))
-            case None => true
-          }
-        }
-        if (touched.isEmpty) return v
-        val base = readFiles(m.schema, touched)
-        val matchPred = col(keyCol).isin(keys: _*)
-        val transformed = transform(base.filter(matchPred))
-        val want = base.schema.fields
-          .map(f => (f.name, f.dataType)).toSeq
-        val got = transformed.schema.fields
-          .map(f => (f.name, f.dataType)).toSeq
-        require(got == want,
-          s"$root: updateRows transform changed the schema " +
-            s"($want -> $got) — a shape-changing rewrite is replace()")
-        val kept = base.filter(!matchPred || col(keyCol).isNull)
-          .unionByName(transformed)
-        val rewritten = writeData(kept)
-        val audit = Map(
-          "key_col" -> keyCol,
-          "key_count" -> keys.distinct.size.toString,
-          "files_touched" -> touched.size.toString,
-          "files_carried" -> untouched.size.toString)
-        publishManifest("update", untouched ++ rewritten,
-          m.schema.getOrElse(kept.schema), txnId, audit)
+    rewriteFiles("update", txnId, keyBand(keyCol, keys),
+      audit = (touched, untouched, _) =>
+        keyAudit(keyCol, keys, touched, untouched)) { base =>
+      val matchPred = col(keyCol).isin(keys: _*)
+      val transformed = transform(base.filter(matchPred))
+      val want = base.schema.fields.map(f => (f.name, f.dataType)).toSeq
+      val got = transformed.schema.fields.map(f => (f.name, f.dataType)).toSeq
+      require(got == want,
+        s"$root: updateRows transform changed the schema " +
+          s"($want -> $got) — a shape-changing rewrite is replace()")
+      base.filter(!matchPred || col(keyCol).isNull).unionByName(transformed)
     }
+  }
+
+  /** Files a key-list rewrite must touch: those whose `keyCol` stats
+    * band overlaps some key. A file with no stats for the column is
+    * conservatively touched (the [[readRange]] contract).
+    */
+  private def keyBand(keyCol: String, keys: Seq[Any])(
+      m: Manifest): FileEntry => Boolean = {
+    val dt = colType(m, keyCol)
+    val keyStrs = keys.map(_.toString)
+    f => f.stats.get(keyCol) match {
+      case Some((mn, mx)) => keyStrs.exists(k => overlaps(dt, mn, mx, k, k))
+      case None           => true
+    }
+  }
+
+  /** Audit evidence of a key-list rewrite: counts only, never the keys
+    * (storing them in the manifest would re-retain forgotten
+    * identifiers).
+    */
+  private def keyAudit(keyCol: String, keys: Seq[Any],
+      touched: Seq[FileEntry], untouched: Seq[FileEntry]): Map[String, String] =
+    Map(
+      "key_col" -> keyCol,
+      "key_count" -> keys.distinct.size.toString,
+      "files_touched" -> touched.size.toString,
+      "files_carried" -> untouched.size.toString)
+
+  /** Copy-on-write rewrite of whole PARTITIONS, the online store's
+    * bucket MERGE and bucket delete. The table is written partitioned
+    * by `partCol`, so each data file holds one partition and its
+    * manifest entry records the value ([[partitionOf]]). The files of
+    * `parts` are re-read and replaced by `rewrite(their rows)`, which
+    * must carry `partCol` and stay inside `parts`; every other
+    * partition's files carry verbatim. With `inserts` the rewrite may
+    * add rows to partitions that hold no file yet (a MERGE); without
+    * it, parts with no file publish nothing.
+    */
+  private[store] def rewritePartitions(op: String, partCol: String,
+      parts: Set[Int], inserts: Boolean)(
+      rewrite: DataFrame => DataFrame): Long =
+    rewriteFiles(op, None,
+      _ => f => partitionOf(f, partCol).exists(parts), inserts,
+      Some(partCol))(rewrite)
+
+  /** The `partCol` value a partitioned commit recorded for `f`. */
+  private[store] def partitionOf(f: FileEntry, partCol: String): Option[Int] =
+    f.stats.get(partCol).map(_._1.toInt)
+
+  /** The copy-on-write core of every row-rewriting commit
+    * ([[deleteKeys]], [[updateRows]], [[rewritePartitions]]): the
+    * current snapshot's files that `touches` selects are re-read under
+    * the snapshot schema, `rewrite` turns them into their replacement
+    * rows, and ONE `op` manifest removes the touched files and adds
+    * the rewrites (Delta's remove + add actions in one log entry).
+    * Every other file carries VERBATIM, never read. Nothing is
+    * overwritten, so a reader planned on an earlier version keeps
+    * reading its files until [[vacuum]] reclaims them.
+    *
+    * With no touched file the call publishes nothing and returns the
+    * current version — unless `inserts`, when `rewrite` sees an empty
+    * frame (with no columns at all on a table with no version yet).
+    * The snapshot schema widens with the rewrite's new columns, as an
+    * append does. `audit` gets (touched, untouched, rewritten).
+    */
+  private def rewriteFiles(op: String, txnId: Option[String],
+      touches: Manifest => FileEntry => Boolean, inserts: Boolean = false,
+      partitionBy: Option[String] = None,
+      audit: (Seq[FileEntry], Seq[FileEntry], Seq[FileEntry]) =>
+        Map[String, String] = (_, _, _) => Map.empty)(
+      rewrite: DataFrame => DataFrame): Long = {
+    if (txnId.exists(txnCommitted)) return currentVersion.get
+    val base = currentVersion.map(readManifest)
+    if (base.isEmpty && !inserts) noVersion
+    val (touched, untouched) = base.fold(
+      (Seq.empty[FileEntry], Seq.empty[FileEntry]))(m =>
+      m.files.partition(touches(m)))
+    if (touched.isEmpty && !inserts) return currentVersion.get
+    val rows = rewrite(base.fold(spark.emptyDataFrame)(m =>
+      readFiles(m.schema, touched)))
+    val rewritten = writeData(rows, partitionBy)
+    val schema =
+      StructType(rows.schema.filterNot(f => partitionBy.contains(f.name)))
+    publishManifest(op, untouched ++ rewritten,
+      base.flatMap(_.schema).fold(schema)(mergeSchemas(_, schema)), txnId,
+      audit(touched, untouched, rewritten))
   }
 
   /** AGE-BASED RETENTION EXPIRY — one commit dropping every row whose
@@ -1118,83 +1167,77 @@ class VersionedTable(spark: SparkSession, root: String,
         s"statsCols=$statsCols — without file stats every file " +
         "carries verbatim and the retention sweep silently retains " +
         "everything")
-    txnId.filter(txnCommitted) match {
-      case Some(_) => currentVersion.get
-      case None =>
-        val v = currentVersion.getOrElse(
-          throw new IllegalStateException(s"$root: no committed version"))
-        val m = readManifest(v)
-        val dt = m.schema.flatMap(s =>
-          s.fields.find(_.name == tsCol).map(_.dataType))
-          .getOrElse(org.apache.spark.sql.types.StringType)
-        dt match {
-          case _: NumericType =>
-            try { BigDecimal(cutoff): Unit }
-            catch {
-              case _: NumberFormatException =>
-                throw new IllegalArgumentException(
-                  s"$root: expireBefore($tsCol, $cutoff) — cutoff does " +
-                    s"not parse as the column's numeric type $dt; the " +
-                    "row filter's cast would yield NULL and expire " +
-                    "every stamped row")
-            }
-          case _ => ()
+    if (txnId.exists(txnCommitted)) return currentVersion.get
+    val v = currentVersion.getOrElse(noVersion)
+    val m = readManifest(v)
+    val dt = colType(m, tsCol)
+    dt match {
+      case _: NumericType =>
+        try { BigDecimal(cutoff): Unit }
+        catch {
+          case _: NumberFormatException =>
+            throw new IllegalArgumentException(
+              s"$root: expireBefore($tsCol, $cutoff) — cutoff does " +
+                s"not parse as the column's numeric type $dt; the " +
+                "row filter's cast would yield NULL and expire " +
+                "every stamped row")
         }
-        def cmpOpt(a: String, b: String): Option[Int] = dt match {
-          case _: NumericType =>
-            try Some(BigDecimal(a).compare(BigDecimal(b)))
-            catch { case _: NumberFormatException => None }
-          case _ => Some(a.compareTo(b))
-        }
-        // 0 = drop whole file, 1 = carry verbatim, 2 = boundary rewrite
-        def classify(f: FileEntry): Int = f.stats.get(tsCol) match {
-          case None => 1
-          case Some((mn, mx)) =>
-            val provablyNoNulls =
-              f.stats.get(s"$tsCol#nulls").exists(_._1 == "0")
-            if (cmpOpt(mx, cutoff).exists(_ < 0) && provablyNoNulls) 0
-            else if (cmpOpt(mn, cutoff).exists(_ >= 0)) 1
-            else 2
-        }
-        val classed = m.files.map(f => (f, classify(f)))
-        val verbatim = classed.collect { case (f, 1) => f }
-        val boundary = classed.collect { case (f, 2) => f }
-        if (boundary.isEmpty && verbatim.size == m.files.size) return v
-        val rewritten =
-          if (boundary.isEmpty) Seq.empty[FileEntry]
-          else {
-            val base = readFiles(m.schema, boundary)
-            val rowDt = base.schema.fields.find(_.name == tsCol)
-              .map(_.dataType)
-              .getOrElse(org.apache.spark.sql.types.StringType)
-            // same NULL-cast hazard as the numeric guard above, for
-            // the remaining castable types (date/timestamp): a cutoff
-            // the cast cannot parse yields NULL and `ts >= NULL` would
-            // expire every stamped boundary row. One driver-side probe.
-            val castOk = spark.range(1)
-              .select(lit(cutoff).cast(rowDt).isNotNull).head().getBoolean(0)
-            require(castOk,
-              s"$root: expireBefore($tsCol, $cutoff) — cutoff does not " +
-                s"cast to the column type $rowDt; refusing the rewrite " +
-                "(the NULL cast would expire every stamped row)")
-            writeData(base.filter(
-              col(tsCol) >= lit(cutoff).cast(rowDt) || col(tsCol).isNull))
-          }
-        val dropped = classed.collect { case (f, 0) => f }
-        val audit = Map(
-          "ts_col" -> tsCol,
-          "cutoff" -> cutoff,
-          "files_dropped" -> dropped.size.toString,
-          "files_carried" -> verbatim.size.toString,
-          "files_rewritten" -> boundary.size.toString) ++
-          (for {
-            d <- rowsOf(dropped); b <- rowsOf(boundary)
-            r <- rowsOf(rewritten)
-          } yield "rows_removed" -> (d + b - r).toString)
-        publishManifest("expire", verbatim ++ rewritten,
-          m.schema.getOrElse(readFiles(m.schema, m.files).schema), txnId,
-          audit)
+      case _ => ()
     }
+    def cmpOpt(a: String, b: String): Option[Int] = dt match {
+      case _: NumericType =>
+        try Some(BigDecimal(a).compare(BigDecimal(b)))
+        catch { case _: NumberFormatException => None }
+      case _ => Some(a.compareTo(b))
+    }
+    // 0 = drop whole file, 1 = carry verbatim, 2 = boundary rewrite
+    def classify(f: FileEntry): Int = f.stats.get(tsCol) match {
+      case None => 1
+      case Some((mn, mx)) =>
+        val provablyNoNulls =
+          f.stats.get(s"$tsCol#nulls").exists(_._1 == "0")
+        if (cmpOpt(mx, cutoff).exists(_ < 0) && provablyNoNulls) 0
+        else if (cmpOpt(mn, cutoff).exists(_ >= 0)) 1
+        else 2
+    }
+    val classed = m.files.map(f => (f, classify(f)))
+    val verbatim = classed.collect { case (f, 1) => f }
+    val boundary = classed.collect { case (f, 2) => f }
+    if (boundary.isEmpty && verbatim.size == m.files.size) return v
+    val rewritten =
+      if (boundary.isEmpty) Seq.empty[FileEntry]
+      else {
+        val base = readFiles(m.schema, boundary)
+        val rowDt = base.schema.fields.find(_.name == tsCol)
+          .map(_.dataType)
+          .getOrElse(org.apache.spark.sql.types.StringType)
+        // same NULL-cast hazard as the numeric guard above, for
+        // the remaining castable types (date/timestamp): a cutoff
+        // the cast cannot parse yields NULL and `ts >= NULL` would
+        // expire every stamped boundary row. One driver-side probe.
+        val castOk = spark.range(1)
+          .select(lit(cutoff).cast(rowDt).isNotNull).head().getBoolean(0)
+        require(castOk,
+          s"$root: expireBefore($tsCol, $cutoff) — cutoff does not " +
+            s"cast to the column type $rowDt; refusing the rewrite " +
+            "(the NULL cast would expire every stamped row)")
+        writeData(base.filter(
+          col(tsCol) >= lit(cutoff).cast(rowDt) || col(tsCol).isNull))
+      }
+    val dropped = classed.collect { case (f, 0) => f }
+    val audit = Map(
+      "ts_col" -> tsCol,
+      "cutoff" -> cutoff,
+      "files_dropped" -> dropped.size.toString,
+      "files_carried" -> verbatim.size.toString,
+      "files_rewritten" -> boundary.size.toString) ++
+      (for {
+        d <- rowsOf(dropped); b <- rowsOf(boundary)
+        r <- rowsOf(rewritten)
+      } yield "rows_removed" -> (d + b - r).toString)
+    publishManifest("expire", verbatim ++ rewritten,
+      m.schema.getOrElse(readFiles(m.schema, m.files).schema), txnId,
+      audit)
   }
 
   /** Result of [[clusteringDepth]]: how many data files a point
@@ -1227,11 +1270,8 @@ class VersionedTable(spark: SparkSession, root: String,
     require(statsCols.contains(statsCol),
       s"$root: clusteringDepth($statsCol) needs the column in " +
         s"statsCols=$statsCols")
-    val m = readManifest(currentVersion.getOrElse(
-      throw new IllegalStateException(s"$root: no committed version")))
-    val dt = m.schema.flatMap(s =>
-      s.fields.find(_.name == statsCol).map(_.dataType))
-      .getOrElse(org.apache.spark.sql.types.StringType)
+    val m = readManifest(currentVersion.getOrElse(noVersion))
+    val dt = colType(m, statsCol)
     val bands = m.files.flatMap(_.stats.get(statsCol))
     val nUnbanded = m.files.size - bands.size
     if (bands.isEmpty)
@@ -1332,21 +1372,17 @@ class VersionedTable(spark: SparkSession, root: String,
     * version.
     */
   def compact(targetBytes: Long, txnId: Option[String] = None): Long = {
-    txnId.filter(txnCommitted) match {
-      case Some(_) => currentVersion.get
-      case None =>
-        val v = currentVersion.getOrElse(
-          throw new IllegalStateException(s"$root: no committed version"))
-        val m = readManifest(v)
-        val groups = compactionPlan(targetBytes)
-        if (groups.isEmpty) return v
-        val grouped = groups.flatten.map(_.path).toSet
-        val untouched = m.files.filterNot(f => grouped.contains(f.path))
-        val rewritten = groups.flatMap(g =>
-          writeData(readFiles(m.schema, g).coalesce(1)))
-        publishManifest("compact", untouched ++ rewritten,
-          m.schema.getOrElse(readFiles(m.schema, m.files).schema), txnId)
-    }
+    if (txnId.exists(txnCommitted)) return currentVersion.get
+    val v = currentVersion.getOrElse(noVersion)
+    val m = readManifest(v)
+    val groups = compactionPlan(targetBytes)
+    if (groups.isEmpty) return v
+    val grouped = groups.flatten.map(_.path).toSet
+    val untouched = m.files.filterNot(f => grouped.contains(f.path))
+    val rewritten = groups.flatMap(g =>
+      writeData(readFiles(m.schema, g).coalesce(1)))
+    publishManifest("compact", untouched ++ rewritten,
+      m.schema.getOrElse(readFiles(m.schema, m.files).schema), txnId)
   }
 
   /** One row of [[maintenancePlan]]: `action` ∈ {compact, resort,
@@ -1491,12 +1527,9 @@ class VersionedTable(spark: SparkSession, root: String,
     * are never deleted here; [[vacuum]] reclaims dirs unreferenced by
     * any retained manifest. The snapshot schema resets to `df`'s.
     */
-  def replace(df: DataFrame, txnId: Option[String] = None): Long = {
-    txnId.filter(txnCommitted) match {
-      case Some(_) => currentVersion.get
-      case None => publishManifest("replace", writeData(df), df.schema, txnId)
-    }
-  }
+  def replace(df: DataFrame, txnId: Option[String] = None): Long =
+    if (txnId.exists(txnCommitted)) currentVersion.get
+    else publishManifest("replace", writeData(df), df.schema, txnId)
 
   /** Reclaim storage: keep the `retain` most recent versions, delete
     * every older manifest (and its claim marker) and every data

@@ -52,11 +52,10 @@ object InferencePipeline {
     // row-independent, and the store's MERGE applies newest-wins by
     // event time regardless of row order
     val enriched = EventEnricher.enrich(valid, store.online())
-    // snapshot before the upsert: the upsert rewrites the online
-    // store's buckets this plan reads. A lineage-preserving
-    // persist is not enough — the overwrite re-caches plans over the
-    // rewritten path, so the sink would carry scores recomputed from
-    // the post-merge features (and a recompute could hit deleted files)
+    // snapshot before the upsert, so the sink writes exactly the
+    // scores upserted: the enrich join reads the pre-merge online
+    // version, and the pin keeps the sink from recomputing it after
+    // a vacuum could have reclaimed that version's files
     val scored = Pin.snapshot(LoyaltyModel.score(model, enriched))
     // the A3 state transition on write-back
     // (`update_customer_features`, feature_store_manager.py:260-264):

@@ -13,7 +13,7 @@ import graft.store.{FeatureStore, VersionedTable}
   *   bus drop-dir → `EventSource` (wire shape) → `OffsetTrackedSink`
   *   (row-wise offset fence, parsed rows via the post-fence transform)
   *   → versioned landing history → incremental serving merge
-  *   (`Layout.mergeBucketPartitioned` via `FeatureStore.mergeServing`)
+  *   (the online table's bucket MERGE via `FeatureStore.mergeServing`)
   *   → `ServingCache.get` returning the freshly-merged values
   *
   * — including a DRIVER KILL/RESTART in the middle (fresh checkpoint +

@@ -9,7 +9,7 @@ import graft.SparkSpec
 
 /** [[FeatureStore.forgetKeys]] — the right-to-be-forgotten request
   * across both tiers: offline history (every version of the key) and
-  * the bucket-partitioned online store (including a bucket emptied
+  * the bucket-partitioned online table (including a bucket emptied
   * outright). Other keys' records and latest values survive
   * untouched; txn replay is a no-op; a never-ingested key changes
   * nothing.
@@ -90,7 +90,7 @@ class FeatureStoreForgetSpec extends SparkSpec {
     assert(cache.get(1L).nonEmpty)
     assert(cache.get(2L).nonEmpty)
     fs.forgetKeys(Seq(1L))
-    // the bucket rewrite (or removal) changed the dir signature: the
+    // the bucket rewrite (or removal) changed its manifest files: the
     // NEXT get reloads and the forgotten customer is gone — serving a
     // stale cached record here would be the compliance failure
     assert(cache.get(1L).isEmpty)
@@ -153,10 +153,10 @@ class FeatureStoreForgetSpec extends SparkSpec {
     assert(fs.offlineVersions.isEmpty)
     intercept[IllegalArgumentException](fs.forgetKeys(Nil))
     intercept[IllegalArgumentException](fs.forgetKeys(Seq(1L, null)))
-    // layout delete on a dir with no committed buckets: no-op
-    graft.operators.Layout.deleteFromBucketPartitioned(
-      spark, java.nio.file.Files.createTempDirectory("no-bkts").toString,
-      "customer_id", Seq(1L), 64)
+    // no online table and no history: nothing was written anywhere
+    fs.forgetKeys(Seq(1L), txnId = Some("forget-empty"))
+    assert(!Files.exists(java.nio.file.Paths.get(fs.conf.path, "serving")))
+    assert(fs.offlineVersions.isEmpty)
   }
 
   test("a type-mismatched key fails loudly instead of silently " +
@@ -168,17 +168,15 @@ class FeatureStoreForgetSpec extends SparkSpec {
     // guard xxhash64 degenerates to the seed hash, targets a wrong
     // bucket, and the forget silently removes nothing
     val e = intercept[IllegalArgumentException] {
-      graft.operators.Layout.deleteFromBucketPartitioned(
-        spark, s"${fs.conf.path}/serving", "customer_id",
-        Seq("nope"), 64)
+      fs.forgetKeys(Seq("nope"))
     }
     assert(e.getMessage.contains("cast"))
-    // nothing was deleted by the failed call
+    // nothing was deleted by the failed call, in either tier
     assert(fs.online().count() === 3L)
+    assert(fs.offline().count() === 4L)
     // a castable STRING form of a real key still works (cast, not
     // type-equality, is the contract)
-    graft.operators.Layout.deleteFromBucketPartitioned(
-      spark, s"${fs.conf.path}/serving", "customer_id", Seq("2"), 64)
+    fs.forgetKeys(Seq("2"))
     assert(fs.online().filter($"customer_id" === 2L).isEmpty)
     assert(fs.online().count() === 2L)
   }

@@ -72,6 +72,16 @@ class FeatureStoreSpec extends SparkSpec {
     // the new column reached the rewritten bucket's files too
     assert(fs.getServingRecord(1L).select("visit_count")
       .head().getLong(0) == 7L)
+    // a bucket the widening ingest did NOT rewrite: the cache tier
+    // serves its row with the new column, null — as getRecord does
+    val cache = fs.servingCache()
+    assert(cache.bucketOf(2L) != cache.bucketOf(1L))
+    val cached = cache.get(2L).get
+    assert(cached.schema.fieldNames.contains("visit_count"),
+      s"cached row lacks the widened column: ${cached.schema}")
+    assert(cached.isNullAt(cached.fieldIndex("visit_count")))
+    assert(fs.getRecord(2L).get.isNullAt(
+      fs.getRecord(2L).get.fieldIndex("visit_count")))
     // and a NARROWER later batch appends with nulls instead of throwing
     fs.ingest(Seq((4L, ts("2024-01-07 10:00:00")))
       .toDF("customer_id", "purchase_timestamp"))
@@ -166,26 +176,35 @@ class FeatureStoreSpec extends SparkSpec {
     val fs = FeatureStore(spark, dir,
       keyCol = "customer_id", eventTimeCol = "purchase_timestamp")
     fs.ingest(batch1)
-    // simulate the crash: no committed kb= bucket, only the
-    // committer's leftover _temporary dir with a partial file
+    // simulate a crash inside the first merge: its data dir was
+    // written (a partial file) and version 0 claimed, but no manifest
+    // was published
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(s"$dir/serving"), true)
-    val partial = java.nio.file.Paths.get(dir, "serving", "_temporary", "0", "kb=3")
+    val partial = java.nio.file.Paths.get(dir, "serving", "data", "c_crashed", "kb=3")
     Files.createDirectories(partial)
     Files.writeString(partial.resolve("part-00000.parquet"), "garbage")
+    val manifests = java.nio.file.Paths.get(dir, "serving", "_manifests")
+    Files.createDirectories(manifests)
+    Files.writeString(manifests.resolve("v_0.claim"), "data/c_crashed")
     // before the repair: reads fall back to the history view
     assert(fs.getRecord(2L).map(_.getDouble(2)) == Some(200.0))
     assert(fs.recordExists(1L))
+    assert(fs.online().count() == 2L)
     fs.ingest(Seq((3L, ts("2024-01-04 11:00:00"), 10.0))
       .toDF("customer_id", "purchase_timestamp", "avg_purchase_value"))
     val byKey = (df: org.apache.spark.sql.DataFrame) =>
       df.orderBy($"customer_id").collect().toSeq
     assert(byKey(fs.online()) == byKey(fs.latestView()))
     assert(fs.online().count() == 3L)
-    // a key known only from the history is served from a bucket now
+    // a key known only from the history is served from a bucket now,
+    // and no read touches the crashed merge's orphan file
     assert(fs.getRecord(1L).map(_.getDouble(2)) == Some(50.0))
-    assert(fs.getServingRecord(1L).inputFiles.forall(_.contains("kb=")))
+    val files = fs.getServingRecord(1L).inputFiles
+    assert(files.nonEmpty && files.forall(_.contains("kb=")))
+    assert(!fs.online().inputFiles.exists(_.contains("c_crashed")))
+    assert(fs.servingCache().get(1L).map(_.getDouble(2)) == Some(50.0))
   }
 
   test("offline date scan: predicate reaches the parquet footers") {

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 
 import graft.SparkSpec
 
-/** The ElastiCache-role cache tier over the bucketed serving layout:
+/** The ElastiCache-role cache tier over the bucketed online table:
   * correct values, zero-job repeat lookups, read-through invalidation
   * on merge, bounded LRU eviction, and hash agreement with the
   * layout's own bucketing.
@@ -74,8 +74,7 @@ class ServingCacheSpec extends SparkSpec {
         (i, ts("2024-01-01 00:00:00"), i.toDouble))
       .toDF("customer_id", "purchase_timestamp", "v"))
     val cache = s.servingCache()
-    val want = spark.read
-      .parquet(s"${s.conf.path}/serving")
+    val want = s.online()
       .select($"customer_id",
         graft.operators.Layout.keyBucket("customer_id", 64).as("kb"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -98,12 +97,12 @@ class ServingCacheSpec extends SparkSpec {
     val cache = new ServingCache(spark, s"${s.conf.path}/serving",
         "customer_id", 64, 16, dropCols = Seq("_seq")) {
       private val bA = bucketOf(kA)
-      override protected def loadBucket(b: Int, sig: String) = {
+      override protected def loadBucket(b: Int, plan: ServingCache.BucketPlan) = {
         if (b != bA) { // every OTHER bucket's load hangs until released
           slowStarted.countDown()
           assert(releaseSlow.await(30, java.util.concurrent.TimeUnit.SECONDS))
         }
-        super.loadBucket(b, sig)
+        super.loadBucket(b, plan)
       }
     }
     assert(cache.get(kA).get.getAs[Double]("v") == 1.0) // bucket A cached
@@ -137,10 +136,10 @@ class ServingCacheSpec extends SparkSpec {
     val loads = new java.util.concurrent.atomic.AtomicInteger(0)
     val cache = new ServingCache(spark, s"${s.conf.path}/serving",
         "customer_id", 64, 16, dropCols = Seq("_seq")) {
-      override protected def loadBucket(b: Int, sig: String) = {
+      override protected def loadBucket(b: Int, plan: ServingCache.BucketPlan) = {
         loads.incrementAndGet()
         Thread.sleep(200) // widen the race window
-        super.loadBucket(b, sig)
+        super.loadBucket(b, plan)
       }
     }
     // two keys in the SAME bucket, requested concurrently
@@ -178,12 +177,17 @@ class ServingCacheSpec extends SparkSpec {
 
   test("a crashed first merge's _temporary-only dir yields None, not a 500") {
     val s = freshStore()
-    // simulate the crash: servingDir exists but holds only the
-    // committer's scratch dir — no kb= partitions, no parquet footers
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"${s.conf.path}/serving", "_temporary"))
+    // simulate a crash inside the first merge: an orphan data dir with
+    // a partial file and a pending claim on version 0, no manifest
+    val orphan = java.nio.file.Paths.get(
+      s"${s.conf.path}/serving", "data", "c_crashed", "kb=3")
+    java.nio.file.Files.createDirectories(orphan)
+    java.nio.file.Files.writeString(orphan.resolve("part-00000.parquet"), "garbage")
+    val manifests = java.nio.file.Paths.get(s"${s.conf.path}/serving", "_manifests")
+    java.nio.file.Files.createDirectories(manifests)
+    java.nio.file.Files.writeString(manifests.resolve("v_0.claim"), "data/c_crashed")
     assert(s.servingCache().get(1L).isEmpty,
-      "bare-existence probe would throw 'unable to infer schema' here")
+      "a claim without a manifest is no committed version")
     // and the layout repairs on the next merge as documented
     s.mergeServing(Seq((1L, ts("2024-01-01 00:00:00"), 1.0))
       .toDF("customer_id", "purchase_timestamp", "v"))
@@ -191,13 +195,13 @@ class ServingCacheSpec extends SparkSpec {
   }
 
   test("a double-keyed layout serves lookups; unkeyable ids are misses") {
-    val dir = Files.createTempDirectory("fs-cache-dbl").toString
-    graft.operators.Layout.mergeBucketPartitioned(
-      s"$dir/serving",
+    val fs = FeatureStore(spark,
+      Files.createTempDirectory("fs-cache-dbl").toString,
+      keyCol = "k", eventTimeCol = "purchase_timestamp")
+    fs.mergeServing(
       Seq((1.5, ts("2024-01-01 00:00:00"), 10.0), (2.5, ts("2024-01-01 00:00:00"), 20.0))
-        .toDF("k", "purchase_timestamp", "v"),
-      "k", dedup = identity, nBuckets = 8) // keys are unique
-    val cache = new ServingCache(spark, s"$dir/serving", "k", nBuckets = 8)
+        .toDF("k", "purchase_timestamp", "v"))
+    val cache = fs.servingCache()
     assert(cache.get("1.5").get.getAs[Double]("v") == 10.0)
     assert(cache.get(2.5).get.getAs[Double]("v") == 20.0)
     assert(cache.get("not-a-number").isEmpty,
@@ -209,10 +213,12 @@ class ServingCacheSpec extends SparkSpec {
     s.mergeServing(Seq((1L, ts("2024-01-01 00:00:00"), 1.0))
       .toDF("customer_id", "purchase_timestamp", "v"))
     val cache = s.servingCache()
-    // probe keys until one hashes to a bucket with no kb= dir
-    val missing = (2L to 300L).find(k =>
-      !java.nio.file.Files.exists(java.nio.file.Paths.get(
-        s"${s.conf.path}/serving", s"kb=${cache.bucketOf(k)}")))
+    // probe keys until one hashes to a bucket with no manifest entry
+    val t = new VersionedTable(spark, s"${s.conf.path}/serving")
+    val written = t.readManifest(t.currentVersion.get).files
+      .flatMap(t.partitionOf(_, "kb")).toSet
+    assert(written.size == 1)
+    val missing = (2L to 300L).find(k => !written(cache.bucketOf(k)))
     assert(missing.nonEmpty, "some key must hash to an unwritten bucket")
     assert(cache.get(missing.get).isEmpty)
   }

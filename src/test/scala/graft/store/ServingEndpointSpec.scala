@@ -240,9 +240,9 @@ class ServingEndpointSpec extends SparkSpec {
     val cache = new ServingCache(spark, s"${s.conf.path}/serving",
         "customer_id", 64, 16, dropCols = Seq("_seq")) {
       private val bA = bucketOf(kA)
-      override protected def loadBucket(b: Int, sig: String) = {
+      override protected def loadBucket(b: Int, plan: ServingCache.BucketPlan) = {
         if (b != bA) Thread.sleep(400)
-        super.loadBucket(b, sig)
+        super.loadBucket(b, plan)
       }
     }
     val kB = (2L to 200L).find(k => cache.bucketOf(k) != cache.bucketOf(kA)).get

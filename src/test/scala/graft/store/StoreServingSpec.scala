@@ -7,9 +7,10 @@ import org.apache.hadoop.fs.Path
 
 import graft.SparkSpec
 
-/** The online store's key-bucket layout: merges rewrite only touched
-  * key-buckets, lookups prune to one bucket dir, and the merged table
-  * equals the latest-per-key view recomputed from the history.
+/** The online store's key-bucket table: merges rewrite only touched
+  * key buckets, lookups read one bucket's files, readers stay on their
+  * snapshot across merges, and the merged table equals the
+  * latest-per-key view recomputed from the history.
   */
 class StoreServingSpec extends SparkSpec {
   import spark.implicits._
@@ -21,16 +22,21 @@ class StoreServingSpec extends SparkSpec {
     Files.createTempDirectory("fs-serving").toString,
     keyCol = "customer_id", eventTimeCol = "purchase_timestamp")
 
-  private def bucketFiles(dir: String): Map[String, Set[(String, Long)]] = {
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(new Path(dir)).filter(_.isDirectory)
-      .map { d =>
-        d.getPath.getName ->
-          fs.listStatus(d.getPath)
-            .map(f => (f.getPath.getName, f.getModificationTime)).toSet
-      }.toMap
+  private def onlineTable(s: FeatureStore) =
+    new VersionedTable(spark, s"${s.conf.path}/serving")
+
+  /** The current online manifest's files (table-root-relative), by
+    * the key bucket each entry records.
+    */
+  private def bucketFiles(s: FeatureStore): Map[Int, Set[String]] = {
+    val t = onlineTable(s)
+    t.readManifest(t.currentVersion.get).files
+      .groupMap(f => t.partitionOf(f, "kb").get)(_.path)
+      .view.mapValues(_.toSet).toMap
   }
+
+  private def absPaths(files: Iterable[String]): Set[String] =
+    files.map(f => new Path(f).toUri.getPath).toSet
 
   test("merge upserts: newest wins, new keys insert, others untouched") {
     val s = freshStore()
@@ -62,15 +68,16 @@ class StoreServingSpec extends SparkSpec {
     s.mergeServing((1L to 200L).map(i =>
         (i, ts("2024-01-01 00:00:00"), i.toDouble))
       .toDF("customer_id", "purchase_timestamp", "v"))
-    val dir = s"${s.conf.path}/serving"
-    val before = bucketFiles(dir)
-    assert(before.size > 10) // many kb= dirs
+    val before = bucketFiles(s)
+    assert(before.size > 10) // many buckets
     // single-key merge
     s.mergeServing(Seq((7L, ts("2024-02-01 00:00:00"), 7.7))
       .toDF("customer_id", "purchase_timestamp", "v"))
-    val after = bucketFiles(dir)
+    val after = bucketFiles(s)
+    assert(after.keySet == before.keySet)
     val changed = after.keySet.filter(k => before.get(k) != after.get(k))
-    assert(changed.size == 1, s"expected 1 rewritten bucket, got $changed")
+    assert(changed == Set(s.servingCache().bucketOf(7L)),
+      s"expected only key 7's bucket to change its manifest entries, got $changed")
     // and the data is correct
     assert(s.getServingRecord(7L).head().getDouble(2) == 7.7)
   }
@@ -82,14 +89,35 @@ class StoreServingSpec extends SparkSpec {
       .toDF("customer_id", "purchase_timestamp", "v"))
     val q = s.getServingRecord(42L)
     assert(q.head().getDouble(2) == 42.0)
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("kb"),
-      s"expected kb partition filter in:\n$plan")
-    val scan = q.queryExecution.executedPlan.collectLeaves()
-      .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-      .head
-    assert(scan.selectedPartitions.partitionCount == 1,
-      s"expected 1 selected partition, got ${scan.selectedPartitions.partitionCount}")
+    val want = bucketFiles(s)(s.servingCache().bucketOf(42L))
+      .map(f => s"${s.conf.path}/serving/$f")
+    assert(want.nonEmpty)
+    assert(absPaths(q.inputFiles) == absPaths(want),
+      s"expected exactly the bucket's manifest files $want, got " +
+        q.inputFiles.toSeq)
+  }
+
+  test("readers planned before a merge read the pre-merge snapshot; " +
+      "fresh reads see the merge") {
+    val s = freshStore()
+    s.mergeServing((1L to 50L).map(i =>
+        (i, ts("2024-01-01 00:00:00"), i.toDouble))
+      .toDF("customer_id", "purchase_timestamp", "v"))
+    def byKey(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    val all = s.online()
+    val one = s.getServingRecord(7L)
+    // plan both scans (file listing included) before the merge
+    all.queryExecution.executedPlan
+    one.queryExecution.executedPlan
+    // a merge into key 7's bucket: replaces that bucket's files
+    s.mergeServing(Seq((7L, ts("2024-02-01 00:00:00"), 77.0))
+      .toDF("customer_id", "purchase_timestamp", "v"))
+    val pre = (1L to 50L).map(i => i -> i.toDouble).toMap
+    assert(byKey(all) == pre)
+    assert(byKey(one) == Map(7L -> 7.0))
+    assert(byKey(s.online()) == pre.updated(7L, 77.0))
+    assert(byKey(s.getServingRecord(7L)) == Map(7L -> 77.0))
   }
 
   test("inference: the merged online() == latestView() recomputed " +
@@ -202,7 +230,7 @@ class StoreServingSpec extends SparkSpec {
       .toDF("customer_id", "purchase_timestamp", "v"))
     // a survivors-only recovery would stamp 1 (reusing the dead
     // batch's number); the sidecar continues at 2
-    val stamped = spark.read.parquet(s"$dir/serving")
+    val stamped = new VersionedTable(spark, s"$dir/serving").read()
       .filter($"customer_id" === 2L)
       .select($"_seq").as[Long].head()
     assert(stamped == 2L)
