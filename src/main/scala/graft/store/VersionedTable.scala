@@ -525,6 +525,13 @@ class VersionedTable(spark: SparkSession, root: String,
     * existed simply lack the key and such decisions degrade to the
     * conservative rewrite).
     */
+  /** A reader of `p`'s footer, with [[VersionedTable.FooterReadOptions]]. */
+  private def openFooter(p: Path) =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromPath(p, spark.sparkContext.hadoopConfiguration),
+      VersionedTable.FooterReadOptions)
+
   /** Footer-only row count of one parquet part file — O(footer), no
     * data scan. Backs the reserved `#rows` per-file stat that lets
     * delete-class commits report ROWS REMOVED (the audit surface)
@@ -534,9 +541,7 @@ class VersionedTable(spark: SparkSession, root: String,
     */
   private def footerRowCount(p: Path): Option[Long] =
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(p, spark.sparkContext.hadoopConfiguration)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = openFooter(p)
       try Some(r.getRecordCount) finally r.close()
     } catch { case scala.util.control.NonFatal(_) => None }
 
@@ -557,9 +562,7 @@ class VersionedTable(spark: SparkSession, root: String,
     try {
       import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
       import org.apache.parquet.schema.LogicalTypeAnnotation
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(p, spark.sparkContext.hadoopConfiguration)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = openFooter(p)
       try {
         val schema = r.getFooter.getFileMetaData.getSchema
         val rows = r.getRecordCount
@@ -666,12 +669,14 @@ class VersionedTable(spark: SparkSession, root: String,
     def rel(p: Path): String =
       p.toUri.getPath.stripPrefix(absRoot).stripPrefix("/")
     // recursive: a partitioned commit nests its files in `col=value`
-    // dirs, and each file's values become its stats band (min = max)
-    val partPaths = {
-      val it = fs.listFiles(new Path(s"$root/$dir"), true)
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
-        .filter(_.getName.startsWith("part-")).toSeq
-    }
+    // dirs, and each file's values become its stats band (min = max).
+    // listStatus, not listFiles: the located statuses of a recursive
+    // listFiles fork a process per file for its permissions on a local
+    // filesystem
+    def walk(d: Path): Seq[Path] = fs.listStatus(d).toSeq.flatMap(st =>
+      if (st.isDirectory) walk(st.getPath) else Seq(st.getPath))
+    val partPaths = walk(new Path(s"$root/$dir"))
+      .filter(_.getName.startsWith("part-"))
     val parts = partPaths.map(rel)
     if (parts.isEmpty) return Seq.empty
     def partValues(p: String): Map[String, (String, String)] =
@@ -1625,6 +1630,14 @@ class VersionedTable(spark: SparkSession, root: String,
 }
 
 object VersionedTable {
+  /** Read options for footer-only reads, built once: building them per
+    * file (from the Hadoop configuration, or from a fresh one) cost
+    * about 10 ms per file on a 4-core host, against 0.5 ms for the
+    * footer read itself, and a footer read uses none of their settings.
+    */
+  private val FooterReadOptions =
+    org.apache.parquet.ParquetReadOptions.builder().build()
+
   /** Default age below which vacuum presumes an unreferenced dir or an
     * unmatched claim may belong to a LIVE writer (see [[VersionedTable.vacuum]]).
     */
