@@ -254,81 +254,84 @@ class OffsetTrackedSink(table: VersionedTable, streamId: String) {
     // snapshot-pin the fenced batch: the frontier collect and the data
     // write both consume it — without the lineage cut each would
     // re-read every wire file of the batch (and re-run the caller's
-    // transform side of the plan), doubling source I/O per micro-batch
+    // transform side of the plan), doubling source I/O per micro-batch.
+    // Released once the commit is done or has failed.
     val live = Pin.snapshot(live0)
-    // O(#partitions) rows to the driver — the batch's own frontier.
-    // Null or negative identifiers cannot round-trip the mark codec
-    // (and a null offset would be silently fenced as a replay); no
-    // real bus emits either — fail the batch loudly instead.
-    val advanced = live.groupBy(col("partition"))
-      .agg(max(col("offset")).as("hi")).collect()
-      .map { r =>
-        require(!r.isNullAt(0) && !r.isNullAt(1),
-          "bus rows carry null partition/offset")
-        r.getInt(0) -> r.getLong(1)
-      }.toMap
-    require(advanced.forall { case (p, o) => p >= 0 && o >= 0 },
-      s"bus rows carry negative partition/offset: ${advanced.take(4)}")
-    if (advanced.isEmpty) None
-    else {
-      val merged = (marks.keySet ++ advanced.keySet).map { p =>
-        p -> math.max(marks.getOrElse(p, -1L), advanced.getOrElse(p, -1L))
-      }.toMap
-      val ourTxn = encodeMarks(merged)
-      val v = table.commit(transform(live), txnId = Some(ourTxn))
-      // Post-publish interleave probe. If a FOREIGN same-stream commit
-      // landed inside our fence→publish window (the residual overlap
-      // window in the class docs), versions in (fenceV, v] now hold
-      // its marks — and naively setting lastSeenVersion = v below
-      // would hide them from every future fence probe (the top is
-      // ours, the cache passes, the foreign marks stay invisible
-      // FOREVER — duplicates well beyond the race itself). So: fold
-      // any foreign marks in the window into the cache, and if the
-      // foreign frontier overlaps the range this batch just wrote,
-      // raise the dual-writer alarm loudly instead of leaving silent
-      // duplicates in the table. The common case (no interleave) scans
-      // an EMPTY version range — zero manifest reads.
-      val windowTxns = table.txnIdsBetween(fenceV, v + 1)
-      val markTxns = windowTxns.collect { case m @ markRe(_) => m }
-      // exactly one of these is our own publish; every other is foreign
-      // (string equality would mis-drop a foreign commit that wrote
-      // the IDENTICAL marks — the clearest duplicate of all — so drop
-      // one instance, not all)
-      val i = markTxns.indexOf(ourTxn)
-      require(i >= 0, s"$streamId: own commit's marks not found in " +
-        s"versions (${fenceV}, $v] — store audit moved it unexpectedly")
-      val foreign = markTxns.patch(i, Nil, 1)
-        .collect { case markRe(pairs) => decodePairs(pairs) }
-      val foreignMarks =
-        if (foreign.isEmpty) Map.empty[Int, Long]
-        else foreign.flatten.groupMapReduce(_._1)(_._2)(math.max(_, _))
-      val repaired = (merged.keySet ++ foreignMarks.keySet).map { p =>
-        p -> math.max(merged.getOrElse(p, -1L), foreignMarks.getOrElse(p, -1L))
-      }.toMap
-      synchronized { // commit landed: advance cache + fence watermark
-        cachedMarks = Some(repaired)
-        // v is the audited version our commit produced; if a heal or a
-        // foreign writer lands above it, the next fence probe simply
-        // triggers one (cheap, correct) re-scan
-        lastSeenVersion = Some(v)
+    try {
+      // O(#partitions) rows to the driver — the batch's own frontier.
+      // Null or negative identifiers cannot round-trip the mark codec
+      // (and a null offset would be silently fenced as a replay); no
+      // real bus emits either — fail the batch loudly instead.
+      val advanced = live.groupBy(col("partition"))
+        .agg(max(col("offset")).as("hi")).collect()
+        .map { r =>
+          require(!r.isNullAt(0) && !r.isNullAt(1),
+            "bus rows carry null partition/offset")
+          r.getInt(0) -> r.getLong(1)
+        }.toMap
+      require(advanced.forall { case (p, o) => p >= 0 && o >= 0 },
+        s"bus rows carry negative partition/offset: ${advanced.take(4)}")
+      if (advanced.isEmpty) None
+      else {
+        val merged = (marks.keySet ++ advanced.keySet).map { p =>
+          p -> math.max(marks.getOrElse(p, -1L), advanced.getOrElse(p, -1L))
+        }.toMap
+        val ourTxn = encodeMarks(merged)
+        val v = table.commit(transform(live), txnId = Some(ourTxn))
+        // Post-publish interleave probe. If a FOREIGN same-stream commit
+        // landed inside our fence→publish window (the residual overlap
+        // window in the class docs), versions in (fenceV, v] now hold
+        // its marks — and naively setting lastSeenVersion = v below
+        // would hide them from every future fence probe (the top is
+        // ours, the cache passes, the foreign marks stay invisible
+        // FOREVER — duplicates well beyond the race itself). So: fold
+        // any foreign marks in the window into the cache, and if the
+        // foreign frontier overlaps the range this batch just wrote,
+        // raise the dual-writer alarm loudly instead of leaving silent
+        // duplicates in the table. The common case (no interleave) scans
+        // an EMPTY version range — zero manifest reads.
+        val windowTxns = table.txnIdsBetween(fenceV, v + 1)
+        val markTxns = windowTxns.collect { case m @ markRe(_) => m }
+        // exactly one of these is our own publish; every other is foreign
+        // (string equality would mis-drop a foreign commit that wrote
+        // the IDENTICAL marks — the clearest duplicate of all — so drop
+        // one instance, not all)
+        val i = markTxns.indexOf(ourTxn)
+        require(i >= 0, s"$streamId: own commit's marks not found in " +
+          s"versions (${fenceV}, $v] — store audit moved it unexpectedly")
+        val foreign = markTxns.patch(i, Nil, 1)
+          .collect { case markRe(pairs) => decodePairs(pairs) }
+        val foreignMarks =
+          if (foreign.isEmpty) Map.empty[Int, Long]
+          else foreign.flatten.groupMapReduce(_._1)(_._2)(math.max(_, _))
+        val repaired = (merged.keySet ++ foreignMarks.keySet).map { p =>
+          p -> math.max(merged.getOrElse(p, -1L), foreignMarks.getOrElse(p, -1L))
+        }.toMap
+        synchronized { // commit landed: advance cache + fence watermark
+          cachedMarks = Some(repaired)
+          // v is the audited version our commit produced; if a heal or a
+          // foreign writer lands above it, the next fence probe simply
+          // triggers one (cheap, correct) re-scan
+          lastSeenVersion = Some(v)
+        }
+        // overlap = a foreign frontier above our fence base on a
+        // partition we also wrote: both writers committed some of the
+        // same offsets. The cache above is already repaired (a catching
+        // caller keeps exactly-once going FORWARD); the alarm makes the
+        // duplicated history loud instead of silent.
+        val overlapped = advanced.keys.filter { p =>
+          foreignMarks.getOrElse(p, -1L) > marks.getOrElse(p, -1L)
+        }
+        if (overlapped.nonEmpty)
+          throw new IllegalStateException(
+            s"$streamId: dual-writer overlap — a concurrent sink committed " +
+              s"offsets above the fence base on partition(s) " +
+              s"${overlapped.mkString(",")} inside this batch's " +
+              s"fence→publish window; duplicated rows are in versions " +
+              s"(${fenceV}, $v]. Deduplicate by (partition, offset) and " +
+              s"ensure a single live sink per streamId.")
+        Some(v)
       }
-      // overlap = a foreign frontier above our fence base on a
-      // partition we also wrote: both writers committed some of the
-      // same offsets. The cache above is already repaired (a catching
-      // caller keeps exactly-once going FORWARD); the alarm makes the
-      // duplicated history loud instead of silent.
-      val overlapped = advanced.keys.filter { p =>
-        foreignMarks.getOrElse(p, -1L) > marks.getOrElse(p, -1L)
-      }
-      if (overlapped.nonEmpty)
-        throw new IllegalStateException(
-          s"$streamId: dual-writer overlap — a concurrent sink committed " +
-            s"offsets above the fence base on partition(s) " +
-            s"${overlapped.mkString(",")} inside this batch's " +
-            s"fence→publish window; duplicated rows are in versions " +
-            s"(${fenceV}, $v]. Deduplicate by (partition, offset) and " +
-            s"ensure a single live sink per streamId.")
-      Some(v)
-    }
+    } finally Pin.release(live)
   }
 }

@@ -331,23 +331,26 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     */
   private def mergeLayout(batch: DataFrame): Unit = {
     val bootstrap = !servingInitialized
-    // pinned: the touched-bucket collect and the rewrite both read it
+    // pinned: the touched-bucket collect and the rewrite both read
+    // it; released once the merge commits or fails
     val b = batch.transform(Pin.snapshot)
-    val touched = b.select(bucket).distinct().as[Int].collect().toSet
-    if (touched.nonEmpty)
-      onlineTable.rewritePartitions("merge", BucketCol, touched,
-        inserts = true) { cur =>
-        // widen in BOTH directions: a batch with a new feature column
-        // must reach the online files (projecting it away would
-        // silently diverge them from the history forever), and a
-        // batch missing a column gets null for it, exactly like the
-        // history table's schema evolution
-        val merged = dedupLatest(cur.unionByName(b, allowMissingColumns = true))
-          .withColumn(BucketCol, bucket)
-        // the bootstrap spreads each bucket over every shuffle
-        // partition of its window: one write task per bucket instead
-        if (bootstrap) merged.repartition(col(BucketCol)) else merged
-      }
+    try {
+      val touched = b.select(bucket).distinct().as[Int].collect().toSet
+      if (touched.nonEmpty)
+        onlineTable.rewritePartitions("merge", BucketCol, touched,
+          inserts = true) { cur =>
+          // widen in BOTH directions: a batch with a new feature column
+          // must reach the online files (projecting it away would
+          // silently diverge them from the history forever), and a
+          // batch missing a column gets null for it, exactly like the
+          // history table's schema evolution
+          val merged = dedupLatest(cur.unionByName(b, allowMissingColumns = true))
+            .withColumn(BucketCol, bucket)
+          // the bootstrap spreads each bucket over every shuffle
+          // partition of its window: one write task per bucket instead
+          if (bootstrap) merged.repartition(col(BucketCol)) else merged
+        }
+    } finally Pin.release(b)
   }
 
   /** Merge a batch into the online store WITHOUT a history commit —
@@ -375,7 +378,7 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     onlineTable.currentVersion.nonEmpty
 
   private def keyType(m: onlineTable.Manifest) =
-    m.schema.get(conf.keyCol).dataType
+    m.schema(conf.keyCol).dataType
 
   /** The cache tier in front of the online store (the reference's
     * ElastiCache role): bounded bucket-level LRU with read-through

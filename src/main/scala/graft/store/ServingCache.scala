@@ -78,8 +78,7 @@ class ServingCache(spark: SparkSession, servingDir: String,
       if (snap != null && snap.version == v) snap
       else {
         val m = table.readManifest(v)
-        val parsed = new Snapshot(v, m.schema.getOrElse(
-          throw new IllegalStateException(s"$servingDir v_$v: no schema")),
+        val parsed = new Snapshot(v, m.schema,
           m.files.flatMap(f => table.partitionOf(f, FeatureStore.BucketCol)
             .map(_ -> f.path)).groupMap(_._1)(_._2))
         if (snap == null || snap.version < v) snap = parsed

@@ -2,22 +2,34 @@ package graft.store
 
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.TextNode
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, NumericType, StructType}
+import org.apache.spark.sql.types.{DataType, NumericType, StringType, StructType}
+
+import VersionedTable.Json
 
 /** Minimal ACID snapshot layer over parquet — the Delta/Iceberg-shaped
-  * table format the offline store's approach commits to, self-contained
-  * (no extra deps). Replaces "a directory of parquet files IS the
-  * table" with "a MANIFEST of files is the table":
+  * table format the offline store's approach commits to, built only on
+  * what Spark ships (parquet-hadoop for footers, Jackson for the
+  * manifest's JSON lines). Replaces "a directory of parquet files IS
+  * the table" with "a MANIFEST of files is the table":
   *
   *  - every commit writes its data files to a fresh, never-reused
   *    directory `data/c_<uuid>` (write once, no in-place mutation);
-  *  - a version's manifest `_manifests/v_<n>.manifest` lists every
+  *  - a version's manifest `_manifests/v_<n>.manifest` is JSON lines:
+  *    a header (version, txn, op, schema, audit) and one line per
   *    live data FILE (with its commit directory and per-file column
   *    stats), carrying forward the previous version's files (append)
-  *    or starting over (replace/compaction);
+  *    or starting over (replace/compaction). Manifests of the older
+  *    text formats fail loudly with a migration error;
   *  - readers resolve the table to the HIGHEST fully-published
   *    manifest and plan their scan from its file list alone — an
   *    in-flight writer is invisible until its manifest publishes, so
@@ -49,9 +61,13 @@ import org.apache.spark.sql.types.{DataType, NumericType, StructType}
   * configured `statsCols`, so a range read prunes individual files
   * BEFORE touching the filesystem (the Iceberg manifest-pruning idea
   * at file granularity — assert via `df.inputFiles`). Numeric stats
-  * compare numerically, others lexicographically. Within surviving
-  * files, the pushed-down predicate still prunes parquet row groups
-  * by footer min/max. At 100 TB the knobs are the same as any table
+  * compare numerically, others lexicographically. A commit takes the
+  * stats of signed integer, string and date columns from the parquet
+  * footers it just wrote, with no Spark job; only the other types
+  * (timestamps, floating point, decimals, ...) or a footer without
+  * usable statistics cost one read-back aggregation job over the new
+  * files. Within surviving files, the pushed-down predicate still
+  * prunes parquet row groups by footer min/max. At 100 TB the knobs are the same as any table
   * format's: periodic `replace` compaction bounds manifest length and
   * file counts; manifests themselves are O(files) tiny text lines
   * read only on the driver.
@@ -102,194 +118,94 @@ class VersionedTable(spark: SparkSession, root: String,
     * the op's compliance-reportable evidence (delete-class commits:
     * key COUNTS, cutoffs, file/row removal totals — never the keys
     * themselves, which would re-retain forgotten identifiers inside
-    * the manifest); empty for ops predating the field or without one.
+    * the manifest); empty for ops without one.
     */
   final case class Manifest(txn: Option[String], op: String,
-      schema: Option[StructType], files: Seq[FileEntry],
+      schema: StructType, files: Seq[FileEntry],
       audit: Map[String, String] = Map.empty)
 
-  // ---- manifest encoding (minimal JSON lines, no library) -----------
+  // ---- manifest encoding: JSON lines -------------------------------
+  //
+  // line 1, the header: {"version":N,"txn":"..","op":"..",
+  //   "schema":{<StructType JSON>},"audit":{"key":"value",..}}
+  // one line per live file: {"file":"..","commit":"..",
+  //   "stats":{"col":["min","max"],..}}
 
-  /** JSON-string escape for the characters the line regexes and the
-    * quote delimiters care about — stats values and schema JSON are
-    * arbitrary strings (the unescaped v1 encoding corrupted the whole
-    * version on a quote/backslash/newline in a stats value).
-    */
-  private def esc(s: String): String = {
-    val b = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"'  => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case c    => b.append(c)
-    }
-    b.toString
-  }
-
-  private def unesc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"'  => b.append('"')
-          case '\\' => b.append('\\')
-          case 'n'  => b.append('\n')
-          case 'r'  => b.append('\r')
-          case o    => b.append('\\').append(o)
-        }
-        i += 2
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
-
-  /** Component escape inside the stats blob: the blob's own
-    * separators (`;` between columns, `=` and `|` inside one) are
-    * %-encoded in values, so any string-typed stat round-trips.
-    */
-  private def encComp(s: String): String = s.flatMap {
-    case '%' => "%25"
-    case ';' => "%3B"
-    case '|' => "%7C"
-    case '=' => "%3D"
-    case c   => c.toString
-  }
-
-  private def decComp(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%') {
-        if (i + 2 >= s.length ||
-            Character.digit(s.charAt(i + 1), 16) < 0 ||
-            Character.digit(s.charAt(i + 2), 16) < 0)
-          throw new IllegalStateException(
-            s"corrupt %-escape in stats component '$s'")
-        b.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
-
-  private def encStats(stats: Map[String, (String, String)]): String =
-    stats.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-      s"${encComp(c)}=${encComp(mn)}|${encComp(mx)}"
-    }.mkString(";")
-
-  private def decStats(blob: String): Map[String, (String, String)] =
-    if (blob.isEmpty) Map.empty
-    else blob.split(";", -1).iterator.map { part =>
-      val eq = part.indexOf('=')
-      val bar = part.indexOf('|', eq + 1)
-      if (eq < 0 || bar < 0)
-        throw new IllegalStateException(
-          s"corrupt stats segment '$part' (missing '=' or '|')")
-      decComp(part.substring(0, eq)) ->
-        (decComp(part.substring(eq + 1, bar)), decComp(part.substring(bar + 1)))
-    }.toMap
-
-  private def encFile(e: FileEntry): String = {
-    val stats =
-      if (e.stats.isEmpty) ""
-      else s""","stats":"${esc(encStats(e.stats))}""""
-    s"""{"file":"${esc(e.path)}","commit":"${esc(e.commit)}"$stats}"""
-  }
-
-  private val fileRe =
-    ("""\{"file":"((?:[^"\\]|\\.)*)","commit":"((?:[^"\\]|\\.)*)"""" +
-      """(?:,"stats":"((?:[^"\\]|\\.)*)")?\}""").r
-  private val headerRe =
-    ("""\{"version":(\d+),"txn":"((?:[^"\\]|\\.)*)","op":"(append|replace|delete|update|merge|compact|expire)"""" +
-      """(?:,"schema":"((?:[^"\\]|\\.)*)")?(?:,"audit":"((?:[^"\\]|\\.)*)")?\}""").r
-  // pre-v2 (op-less header) manifests are NOT readable: their entry
-  // lines ({"dir":...,"min":...,"max":...}) don't parse either, and
-  // guessing the op would poison auditAppend/changesSince (a v1
-  // `replace` misread as `append` re-appends compacted-away files).
-  // A v1 table requires explicit migration: re-commit its data
-  // through this class. The regex is kept only to name the failure.
-  private val headerV1Re =
-    """\{"version":(\d+),"txn":"((?:[^"\\]|\\.)*)"\}""".r
-
-  private def header(version: Long, txnId: Option[String], op: String,
-      schema: StructType, audit: Map[String, String]): String = {
+  /** The manifest of `version`: header line, then one line per file. */
+  private def manifestBody(version: Long, txnId: Option[String], op: String,
+      schema: StructType, audit: Map[String, String],
+      files: Seq[FileEntry]): String = {
     txnId.foreach { t =>
       require(t.matches("[A-Za-z0-9._:-]+"),
-        s"txnId '$t' — use [A-Za-z0-9._:-]+ (kept unescaped in manifests)")
+        s"txnId '$t' — use [A-Za-z0-9._:-]+")
     }
-    val auditField =
-      if (audit.isEmpty) ""
-      else {
-        val blob = audit.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${encComp(k)}=${encComp(v)}" }
-          .mkString(";")
-        s""","audit":"${esc(blob)}""""
+    val header = Json.createObjectNode().put("version", version)
+      .put("txn", txnId.getOrElse("")).put("op", op)
+    header.set[JsonNode]("schema", Json.readTree(schema.json))
+    val auditNode = header.putObject("audit")
+    audit.toSeq.sortBy(_._1).foreach { case (k, v) => auditNode.put(k, v) }
+    val entries = files.map { f =>
+      val e = Json.createObjectNode().put("file", f.path).put("commit", f.commit)
+      val st = e.putObject("stats")
+      f.stats.toSeq.sortBy(_._1).foreach { case (c, (mn, mx)) =>
+        st.putArray(c).add(mn).add(mx)
       }
-    s"""{"version":$version,"txn":"${txnId.getOrElse("")}","op":"$op"""" +
-      s""","schema":"${esc(schema.json)}"$auditField}"""
+      e
+    }
+    (header +: entries).map(Json.writeValueAsString).mkString("", "\n", "\n")
   }
 
   private[store] def readManifest(n: Long): Manifest = {
+    def corrupt(why: String): Nothing =
+      throw new IllegalStateException(s"$root v_$n.manifest: $why")
+    def migration(what: String): Nothing = corrupt(s"$what — tables " +
+      "written in an older manifest format require migration (re-commit " +
+      "their data through this class); their op and stats cannot be " +
+      "read safely")
     val in = fs.open(new Path(manifestsDir, s"v_$n.manifest"))
     val lines =
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
       finally in.close()
-    val (txn, op, schema, audit) = lines.headOption match {
-      case Some(headerRe(_, t, o, s, a)) =>
-        val parsed = Option(s).map { j =>
-          // rewrap like decStats errors below: all manifest corruption
-          // must identify the file it was found in
-          try DataType.fromJson(unesc(j)).asInstanceOf[StructType]
-          catch { case e: Exception => throw new IllegalStateException(
-            s"$root v_$n.manifest: corrupt schema JSON (${e.getMessage})")
-          }
-        }
-        val auditMap = Option(a).map(unesc).filter(_.nonEmpty)
-          .map { blob =>
-            try blob.split(";", -1).iterator.map { part =>
-              val eq = part.indexOf('=')
-              if (eq < 0) throw new IllegalStateException(
-                s"corrupt audit segment '$part' (missing '=')")
-              decComp(part.substring(0, eq)) ->
-                decComp(part.substring(eq + 1))
-            }.toMap
-            catch { case e: IllegalStateException =>
-              throw new IllegalStateException(
-                s"$root v_$n.manifest: ${e.getMessage}")
-            }
-          }.getOrElse(Map.empty[String, String])
-        (Option(t).map(unesc).filter(_.nonEmpty), o, parsed, auditMap)
-      case Some(h @ headerV1Re(_, _)) => throw new IllegalStateException(
-        s"$root v_$n.manifest: pre-v2 manifest (op-less header '$h') — " +
-          "v1 tables require migration (re-commit their data); the v1 op " +
-          "cannot be inferred safely and v1 entry lines do not parse")
-      case other => throw new IllegalStateException(
-        s"$root v_$n.manifest: unparseable header '${other.getOrElse("")}'")
+    def parse(line: String): JsonNode =
+      try Json.readTree(line)
+      catch { case e: com.fasterxml.jackson.core.JsonProcessingException =>
+        corrupt(s"corrupt line '$line' (${e.getOriginalMessage})")
+      }
+    def text(o: JsonNode, field: String): String = o.get(field) match {
+      case t: TextNode => t.textValue
+      case _ => corrupt(s"line without a string '$field': $o")
     }
-    val files = lines.tail.map {
-      case fileRe(p, c, st) =>
-        val stats =
-          try Option(st).map(b => decStats(unesc(b))).getOrElse(Map.empty)
-          catch { case e: IllegalStateException =>
-            throw new IllegalStateException(
-              s"$root v_$n.manifest: ${e.getMessage}")
-          }
-        FileEntry(unesc(p), unesc(c), stats)
-      case bad =>
-        throw new IllegalStateException(
-          s"$root v_$n.manifest: unparseable entry '$bad'")
+    def fields(o: JsonNode): Seq[(String, JsonNode)] =
+      o.properties.asScala.toSeq.map(e => e.getKey -> e.getValue)
+    val h = parse(lines.headOption.getOrElse(""))
+    // a pre-v2 header has no op: guessing one would poison
+    // auditAppend/changesSince (a v1 `replace` misread as `append`
+    // re-appends compacted-away files). The %-escaped text format that
+    // followed stored the schema, stats and audit as strings.
+    if (h.has("version") && !h.has("op"))
+      migration(s"pre-v2 manifest (op-less header '$h')")
+    if (h.has("op") && !h.path("schema").isObject)
+      migration("manifest in the retired %-escaped text format")
+    val op = text(h, "op")
+    if (!VersionedTable.Ops(op)) corrupt(s"unknown op '$op' in header $h")
+    val schema =
+      try DataType.fromJson(h.path("schema").toString).asInstanceOf[StructType]
+      catch { case e: Exception => corrupt(s"corrupt schema (${e.getMessage})") }
+    val files = lines.tail.map { line =>
+      val e = parse(line)
+      FileEntry(text(e, "file"), text(e, "commit"),
+        fields(e.path("stats")).map { case (c, b) =>
+          if (!b.isArray || b.size != 2) corrupt(s"corrupt stats band '$c' in $line")
+          c -> (b.get(0).asText, b.get(1).asText)
+        }.toMap)
     }
-    Manifest(txn, op, schema, files, audit)
+    Manifest(Some(text(h, "txn")).filter(_.nonEmpty), op, schema, files,
+      fields(h.path("audit")).map { case (k, v) => k -> v.asText }.toMap)
   }
 
   /** Compliance-reportable audit evidence recorded by the op that
     * published `version` — removal counts, cutoffs, key counts
-    * (never the keys themselves). Empty for ops without one or for
-    * manifests predating the field.
+    * (never the keys themselves). Empty for ops without one.
     */
   def auditOf(version: Long): Map[String, String] =
     readManifest(version).audit
@@ -352,23 +268,16 @@ class VersionedTable(spark: SparkSession, root: String,
 
   // ---- reads --------------------------------------------------------
 
-  private[store] def readFiles(schema: Option[StructType],
-      files: Seq[FileEntry]): DataFrame = {
-    if (files.isEmpty) {
-      val s = schema.getOrElse(throw new IllegalStateException(
-        s"$root: empty snapshot has no schema"))
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), s)
-    }
-    val paths = files.map(f => s"$root/${f.path}")
-    schema match {
-      // the manifest schema is the reconciliation contract: files
-      // written before a column existed backfill it with NULL, and a
-      // column dropped from one commit's frame reads as NULL there
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None    => spark.read.parquet(paths: _*)
-    }
-  }
+  /** `files` read under `schema`, the manifest's reconciliation
+    * contract: files written before a column existed backfill it with
+    * NULL, and a column dropped from one commit's frame reads as NULL
+    * there.
+    */
+  private[store] def readFiles(schema: StructType,
+      files: Seq[FileEntry]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).parquet(files.map(f => s"$root/${f.path}"): _*)
 
   /** Snapshot read of the given version — the file list AND schema
     * are frozen in the manifest, so the frame is immune to later
@@ -389,8 +298,7 @@ class VersionedTable(spark: SparkSession, root: String,
     * conservative comparison for stats bands.
     */
   private def colType(m: Manifest, c: String): DataType =
-    m.schema.flatMap(_.fields.find(_.name == c).map(_.dataType))
-      .getOrElse(org.apache.spark.sql.types.StringType)
+    m.schema.fields.find(_.name == c).map(_.dataType).getOrElse(StringType)
 
   /** Type-aware stats overlap: numeric columns compare as numbers
     * (their cast-to-string forms don't order lexicographically),
@@ -431,7 +339,7 @@ class VersionedTable(spark: SparkSession, root: String,
     // past 2^53 — while the manifest pruning above (BigDecimal) stays
     // exact. Cast the bounds to the column's own type instead.
     val rowDt = base.schema.fields.find(_.name == statsCol)
-      .map(_.dataType).getOrElse(org.apache.spark.sql.types.StringType)
+      .map(_.dataType).getOrElse(StringType)
     base.filter(col(statsCol) >= lit(lo).cast(rowDt) &&
       col(statsCol) <= lit(hi).cast(rowDt))
   }
@@ -487,23 +395,18 @@ class VersionedTable(spark: SparkSession, root: String,
     * only each side's files NOT in the other manifest. A takedown or
     * retention sweep therefore diffs O(touched files), never
     * O(table): the CDC feed standing-index repair consumes after an
-    * expire costs what the expire touched (the fallback full read
-    * survives only for schema-less legacy manifests).
+    * expire costs what the expire touched.
     */
   def rowDiff(fromVersion: Long, toVersion: Long): DataFrame = {
     val later = readManifest(math.max(fromVersion, toVersion))
     val fromM = readManifest(fromVersion)
     val toM = readManifest(toVersion)
-    val (fromFiles, toFiles) =
-      if (later.schema.isEmpty) (fromM.files, toM.files)
-      else {
-        val fromPaths = fromM.files.map(_.path).toSet
-        val toPaths = toM.files.map(_.path).toSet
-        (fromM.files.filterNot(f => toPaths.contains(f.path)),
-          toM.files.filterNot(f => fromPaths.contains(f.path)))
-      }
-    val from = readFiles(later.schema, fromFiles)
-    val to = readFiles(later.schema, toFiles)
+    val fromPaths = fromM.files.map(_.path).toSet
+    val toPaths = toM.files.map(_.path).toSet
+    val from = readFiles(later.schema,
+      fromM.files.filterNot(f => toPaths.contains(f.path)))
+    val to = readFiles(later.schema,
+      toM.files.filterNot(f => fromPaths.contains(f.path)))
     to.exceptAll(from).withColumn("change_type", lit("insert"))
       .unionByName(from.exceptAll(to).withColumn("change_type", lit("delete")))
   }
@@ -513,148 +416,84 @@ class VersionedTable(spark: SparkSession, root: String,
   private def absRootPath: String =
     fs.makeQualified(new Path(root)).toUri.getPath
 
-  /** Inventory + per-file stats of a freshly written commit dir: the
-    * file list comes from the filesystem (authoritative — zero-row
-    * part files still belong to the commit), the stats from ONE
-    * grouped scan keyed by `input_file_name()` (per-file min/max of
-    * every configured stats column present in the commit's schema,
-    * plus its NULL count under the reserved `<col>#nulls` stats key —
-    * min/max ignore NULLs, so pruning decisions that must account for
-    * NULL rows, like [[expireBefore]]'s whole-file drop, need the
-    * count recorded separately; manifests written before this stat
-    * existed simply lack the key and such decisions degrade to the
-    * conservative rewrite).
+  /** Footer-only facts of one part file: its row count and, for each
+    * stats column whose footer statistics are EXACT, that column's
+    * stats entries — `(min, max)` rendered as `cast(c as string)`
+    * renders them, plus the `<col>#nulls` count — or no entries when
+    * the column is absent from the file or all-NULL. A column missing
+    * from the result is not footer-exact here ([[footerRender]]);
+    * an unreadable footer yields (None, empty).
     */
-  /** A reader of `p`'s footer, with [[VersionedTable.FooterReadOptions]]. */
-  private def openFooter(p: Path) =
-    org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(p, spark.sparkContext.hadoopConfiguration),
-      VersionedTable.FooterReadOptions)
-
-  /** Footer-only row count of one parquet part file — O(footer), no
-    * data scan. Backs the reserved `#rows` per-file stat that lets
-    * delete-class commits report ROWS REMOVED (the audit surface)
-    * without re-reading any file: removed = Σ touched `#rows` −
-    * Σ rewritten `#rows`, all manifest arithmetic. None when the
-    * footer is unreadable — the audit then degrades to file counts.
-    */
-  private def footerRowCount(p: Path): Option[Long] =
+  private def footerStats(p: Path)
+      : (Option[Long], Map[String, Map[String, (String, String)]]) =
     try {
-      val r = openFooter(p)
-      try Some(r.getRecordCount) finally r.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** One-footer-read stats for a freshly written part file (r16
-    * optimization): record count plus, for every wanted column that
-    * is a PLAIN SIGNED INTEGER primitive (INT32/INT64, no logical
-    * annotation beyond signed int — timestamps/dates/decimals render
-    * differently from `cast(c as string)`, and binary stats may be
-    * truncated), the exact (min, max, nulls) across row groups. The
-    * integer restriction is what makes footer stats EQUAL to the
-    * read-back aggregation's `cast to string` values, so the manifest
-    * is byte-identical either way. Returns None when any wanted
-    * column is present but not footer-exact — the caller then falls
-    * back to the read-back aggregation job for the whole commit.
-    */
-  private def footerStats(p: Path, wanted: Seq[String])
-      : Option[(Long, Map[String, (String, String)])] =
-    try {
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      val r = openFooter(p)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(p, spark.sparkContext.hadoopConfiguration),
+        VersionedTable.FooterReadOptions)
       try {
-        val schema = r.getFooter.getFileMetaData.getSchema
-        val rows = r.getRecordCount
-        val blocks = r.getFooter.getBlocks
-        // per-column outcome, explicit (r17, ADVICE — the old form
-        // used non-local `return` through two try blocks, correct only
-        // because ControlThrowable is not NonFatal and broken under
-        // any wrapper catching Throwable):
-        //   None              — footer not exact: fail the fast path
-        //   Some(None)        — column absent from the file schema or
-        //                       all-NULL: no stats entries, which is
-        //                       exactly what the read-back path
-        //                       records (its `present` filter skips
-        //                       absent columns; an all-NULL min is
-        //                       NULL and records nothing)
-        //   Some(Some(tuple)) — exact (min, max, nulls)
-        def colExact(c: String): Option[Option[(Long, Long, Long)]] =
-          if (!schema.containsField(c)) Some(None)
-          else {
-            val tpe = schema.getType(Seq(c): _*)
-            val okType = tpe.isPrimitive && {
-              val pt = tpe.asPrimitiveType()
-              val name = pt.getPrimitiveTypeName
-              val ann = pt.getLogicalTypeAnnotation
-              (name == PrimitiveTypeName.INT64 ||
-                name == PrimitiveTypeName.INT32) &&
-              (ann == null || (ann match {
-                case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
-                  i.isSigned &&
-                    (i.getBitWidth == 32 || i.getBitWidth == 64)
-                case _ => false
-              }))
-            }
-            if (!okType) None
-            else {
-              var nulls = 0L
-              var mn = Option.empty[Long]
-              var mx = Option.empty[Long]
-              var exact = true
-              val it = blocks.iterator()
-              while (exact && it.hasNext) {
-                val b = it.next()
-                scala.jdk.CollectionConverters
-                  .ListHasAsScala(b.getColumns).asScala
-                  .find(_.getPath.toDotString == c) match {
-                  case None => exact = false
-                  case Some(cc) =>
-                    val st = cc.getStatistics
-                    if (st == null || !st.isNumNullsSet) exact = false
-                    else {
-                      nulls += st.getNumNulls
-                      if (st.hasNonNullValue) {
-                        (st.genericGetMin, st.genericGetMax) match {
-                          case (a: java.lang.Long, b2: java.lang.Long) =>
-                            mn = Some(mn.fold(a.longValue)(
-                              math.min(_, a.longValue)))
-                            mx = Some(mx.fold(b2.longValue)(
-                              math.max(_, b2.longValue)))
-                          case (a: java.lang.Integer,
-                              b2: java.lang.Integer) =>
-                            mn = Some(mn.fold(a.longValue.toLong)(
-                              math.min(_, a.longValue)))
-                            mx = Some(mx.fold(b2.longValue.toLong)(
-                              math.max(_, b2.longValue)))
-                          case _ => exact = false
-                        }
-                      }
-                    }
+        val meta = r.getFooter.getFileMetaData
+        val legacyDates =
+          meta.getKeyValueMetaData.containsKey("org.apache.spark.legacyDateTime")
+        val chunks = r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        def exact(c: String): Option[Map[String, (String, String)]] =
+          if (!meta.getSchema.containsField(c)) Some(Map.empty)
+          else meta.getSchema.getType(Seq(c): _*) match {
+            case t if !t.isPrimitive => None
+            case t => footerRender(t.asPrimitiveType, legacyDates).flatMap { render =>
+              val mine = chunks.filter(_.getPath.toDotString == c)
+              val merged = Statistics.createStats(t)
+              // a chunk whose stats omit min/max while holding values
+              // (parquet drops oversized binary bounds) is not exact
+              val complete = mine.forall { cc =>
+                val st = cc.getStatistics
+                st != null && st.isNumNullsSet &&
+                  (st.hasNonNullValue || st.getNumNulls == cc.getValueCount)
+              }
+              if (!complete) None
+              else {
+                mine.foreach(cc => merged.mergeStatistics(cc.getStatistics))
+                if (!merged.hasNonNullValue) Some(Map.empty) // all-NULL
+                else for {
+                  mn <- render(merged.genericGetMin)
+                  mx <- render(merged.genericGetMax)
+                } yield {
+                  val nulls = merged.getNumNulls.toString
+                  Map(c -> (mn, mx), s"$c#nulls" -> (nulls, nulls))
                 }
               }
-              if (!exact) None
-              else Some((mn, mx) match {
-                case (Some(lo), Some(hi)) => Some((lo, hi, nulls))
-                case _                    => None // all-NULL column
-              })
             }
           }
-        val out = scala.collection.mutable.Map
-          .empty[String, (String, String)]
-        var allExact = true
-        wanted.foreach { c =>
-          if (allExact) colExact(c) match {
-            case None => allExact = false
-            case Some(None) => ()
-            case Some(Some((lo, hi, nulls))) =>
-              out += c -> (lo.toString, hi.toString)
-              out += s"$c#nulls" -> (nulls.toString, nulls.toString)
-          }
-        }
-        if (allExact) Some((rows, out.toMap)) else None
+        (Some(r.getRecordCount),
+          statsCols.flatMap(c => exact(c).map(c -> _)).toMap)
       } finally r.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case scala.util.control.NonFatal(_) => (None, Map.empty) }
+
+  /** How a footer min/max of parquet type `pt` renders as Spark's
+    * `cast(c as string)` of the same value, for the types where the two
+    * provably agree: signed integers, strings (parquet orders UTF-8
+    * bytes unsigned, as Spark compares strings), and dates of years
+    * 1–9999 written without the legacy Julian rebase. None for every
+    * other type (timestamps, floating point, decimals, binary...): the
+    * commit's read-back aggregation covers those columns.
+    */
+  private def footerRender(pt: PrimitiveType,
+      legacyDates: Boolean): Option[Any => Option[String]] = {
+    import PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
+    (pt.getPrimitiveTypeName, pt.getLogicalTypeAnnotation) match {
+      case (INT32 | INT64, null) => Some(v => Some(v.toString))
+      case (INT32 | INT64, i: LogicalTypeAnnotation.IntLogicalTypeAnnotation)
+          if i.isSigned => Some(v => Some(v.toString))
+      case (INT32, _: LogicalTypeAnnotation.DateLogicalTypeAnnotation)
+          if !legacyDates => Some { v =>
+        val d = java.time.LocalDate.ofEpochDay(v.asInstanceOf[Integer].longValue)
+        if (d.getYear >= 1 && d.getYear <= 9999) Some(d.toString) else None
+      }
+      case (BINARY, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
+        Some(v => Some(v.asInstanceOf[Binary].toStringUsingUTF8))
+      case _ => None
+    }
+  }
 
   /** Σ `#rows` over entries, as long as EVERY entry carries the stat
     * (a partial sum would misreport removals) — None otherwise.
@@ -664,6 +503,19 @@ class VersionedTable(spark: SparkSession, root: String,
     if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
   }
 
+  /** Inventory + per-file stats of a freshly written commit dir. The
+    * file list comes from the filesystem (authoritative — zero-row
+    * part files still belong to the commit). One footer read per file
+    * gives its `#rows` (which lets delete-class commits report rows
+    * removed by manifest arithmetic alone) and the stats of every
+    * footer-exact stats column. The columns some footer cannot state
+    * exactly get ONE grouped read-back scan keyed by
+    * `input_file_name()`: per-file min/max cast to string, plus the
+    * NULL count under `<col>#nulls` — min/max ignore NULLs, so
+    * decisions that must account for NULL rows, like
+    * [[expireBefore]]'s whole-file drop, need the count. Both paths
+    * record identical entries.
+    */
   private def filesOf(dir: String): Seq[FileEntry] = {
     val absRoot = absRootPath
     def rel(p: Path): String =
@@ -675,64 +527,47 @@ class VersionedTable(spark: SparkSession, root: String,
     // filesystem
     def walk(d: Path): Seq[Path] = fs.listStatus(d).toSeq.flatMap(st =>
       if (st.isDirectory) walk(st.getPath) else Seq(st.getPath))
-    val partPaths = walk(new Path(s"$root/$dir"))
+    val footers = walk(new Path(s"$root/$dir"))
       .filter(_.getName.startsWith("part-"))
-    val parts = partPaths.map(rel)
-    if (parts.isEmpty) return Seq.empty
-    def partValues(p: String): Map[String, (String, String)] =
-      p.split('/').dropRight(1).flatMap { seg =>
+      .map(p => rel(p) -> footerStats(p))
+    val readBack = statsCols.filterNot(c => footers.forall(_._2._2.contains(c)))
+    val readBackStats: Map[String, Map[String, (String, String)]] =
+      if (readBack.isEmpty) Map.empty
+      else {
+        val df = spark.read.parquet(s"$root/$dir")
+        val present = readBack.filter(df.columns.contains)
+        if (present.isEmpty) Map.empty
+        else {
+          val aggs = present.flatMap(c => Seq(
+            min(col(c)).cast("string").as(s"mn_$c"),
+            max(col(c)).cast("string").as(s"mx_$c"),
+            sum(when(col(c).isNull, lit(1L)).otherwise(lit(0L)))
+              .cast("string").as(s"nl_$c")))
+          df.groupBy(input_file_name().as("f"))
+            .agg(aggs.head, aggs.tail: _*)
+            .collect()
+            .map { r =>
+              val file = rel(new Path(new java.net.URI(r.getString(0))))
+              file -> present.zipWithIndex.flatMap { case (c, i) =>
+                val mn = r.getString(1 + 3 * i)
+                val mx = r.getString(2 + 3 * i)
+                val nl = r.getString(3 + 3 * i)
+                if (mn == null || mx == null) None
+                else Seq(c -> (mn, mx), s"$c#nulls" -> (nl, nl))
+              }.toMap
+            }.toMap
+        }
+      }
+    footers.map { case (p, (rows, exact)) =>
+      val partValues = p.split('/').dropRight(1).flatMap { seg =>
         seg.split("=", 2) match {
           case Array(c, v) => Some(c -> (v, v))
           case _           => None
         }
-      }.toMap
-    // fast path (r16): ONE footer read per file yields the row count
-    // AND exact integer-column stats — no read-back aggregation job.
-    // Any non-footer-exact stats column drops the whole commit to the
-    // read-back path below, so manifests are identical either way.
-    val fromFooters: Option[Seq[FileEntry]] = {
-      val per = partPaths.map(p => rel(p) -> footerStats(p, statsCols))
-      if (per.forall(_._2.isDefined))
-        Some(per.map { case (p, info) =>
-          val (rows, st) = info.get
-          FileEntry(p, dir, st ++ partValues(p) +
-            ("#rows" -> (rows.toString, rows.toString)))
-        })
-      else None
-    }
-    fromFooters.foreach(entries => return entries)
-    val rowCounts: Map[String, Long] = partPaths.flatMap(p =>
-      footerRowCount(p).map(rel(p) -> _)).toMap
-    val df = spark.read.parquet(s"$root/$dir")
-    val present = statsCols.filter(df.columns.contains)
-    val statsByFile: Map[String, Map[String, (String, String)]] =
-      if (present.isEmpty) Map.empty
-      else {
-        val aggs = present.flatMap(c => Seq(
-          min(col(c)).cast("string").as(s"mn_$c"),
-          max(col(c)).cast("string").as(s"mx_$c"),
-          sum(when(col(c).isNull, lit(1L)).otherwise(lit(0L)))
-            .cast("string").as(s"nl_$c")))
-        df.groupBy(input_file_name().as("f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-          .map { r =>
-            val file = rel(new Path(new java.net.URI(r.getString(0))))
-            val st = present.zipWithIndex.flatMap { case (c, i) =>
-              val mn = r.getString(1 + 3 * i)
-              val mx = r.getString(2 + 3 * i)
-              val nl = r.getString(3 + 3 * i)
-              if (mn == null || mx == null) None
-              else Seq(c -> (mn, mx), s"$c#nulls" -> (nl, nl))
-            }.toMap
-            file -> st
-          }.toMap
       }
-    parts.map { p =>
-      val rows = rowCounts.get(p)
-        .map(n => "#rows" -> (n.toString, n.toString)).toMap
-      FileEntry(p, dir,
-        statsByFile.getOrElse(p, Map.empty) ++ partValues(p) ++ rows)
+      FileEntry(p, dir, exact.values.flatten.toMap ++
+        readBackStats.getOrElse(p, Map.empty) ++ partValues ++
+        rows.map(n => "#rows" -> (n.toString, n.toString)))
     }
   }
 
@@ -793,7 +628,7 @@ class VersionedTable(spark: SparkSession, root: String,
         val base = currentVersion.map(readManifest)
         val (files, schema) = op match {
           case "append" =>
-            val prevSchema = base.flatMap(_.schema).getOrElse(addSchema)
+            val prevSchema = base.fold(addSchema)(_.schema)
             // de-dup by path: two concurrent lost-append healers each
             // computed their re-append set against a snapshot read
             // BEFORE this claim — whichever publishes second would
@@ -820,9 +655,7 @@ class VersionedTable(spark: SparkSession, root: String,
         // computed the new totals).
         val carried = base.map(_.audit).getOrElse(Map.empty)
           .view.filterKeys(VersionedTable.CarryForwardAuditKeys).toMap
-        val body = (header(next, txnId, op, schema, carried ++ audit) +:
-          files.map(encFile))
-          .mkString("", "\n", "\n")
+        val body = manifestBody(next, txnId, op, schema, carried ++ audit, files)
         val tmp = new Path(manifestsDir, s"v_$next.manifest.tmp")
         val out = fs.create(tmp, true)
         try out.write(body.getBytes("UTF-8")) finally out.close()
@@ -880,7 +713,7 @@ class VersionedTable(spark: SparkSession, root: String,
         // we published without carrying a just-published append
         // forward — restore its files (schema: the dropped manifest's)
         publishManifest("append", missing,
-          below.flatMap(_.schema).getOrElse(mySchema), None)
+          below.fold(mySchema)(_.schema), None)
       }
     }
     throw new IllegalStateException(
@@ -1103,7 +936,7 @@ class VersionedTable(spark: SparkSession, root: String,
     val schema =
       StructType(rows.schema.filterNot(f => partitionBy.contains(f.name)))
     publishManifest(op, untouched ++ rewritten,
-      base.flatMap(_.schema).fold(schema)(mergeSchemas(_, schema)), txnId,
+      base.fold(schema)(m => mergeSchemas(m.schema, schema)), txnId,
       audit(touched, untouched, rewritten))
   }
 
@@ -1214,8 +1047,7 @@ class VersionedTable(spark: SparkSession, root: String,
       else {
         val base = readFiles(m.schema, boundary)
         val rowDt = base.schema.fields.find(_.name == tsCol)
-          .map(_.dataType)
-          .getOrElse(org.apache.spark.sql.types.StringType)
+          .map(_.dataType).getOrElse(StringType)
         // same NULL-cast hazard as the numeric guard above, for
         // the remaining castable types (date/timestamp): a cutoff
         // the cast cannot parse yields NULL and `ts >= NULL` would
@@ -1240,9 +1072,7 @@ class VersionedTable(spark: SparkSession, root: String,
         d <- rowsOf(dropped); b <- rowsOf(boundary)
         r <- rowsOf(rewritten)
       } yield "rows_removed" -> (d + b - r).toString)
-    publishManifest("expire", verbatim ++ rewritten,
-      m.schema.getOrElse(readFiles(m.schema, m.files).schema), txnId,
-      audit)
+    publishManifest("expire", verbatim ++ rewritten, m.schema, txnId, audit)
   }
 
   /** Result of [[clusteringDepth]]: how many data files a point
@@ -1386,8 +1216,7 @@ class VersionedTable(spark: SparkSession, root: String,
     val untouched = m.files.filterNot(f => grouped.contains(f.path))
     val rewritten = groups.flatMap(g =>
       writeData(readFiles(m.schema, g).coalesce(1)))
-    publishManifest("compact", untouched ++ rewritten,
-      m.schema.getOrElse(readFiles(m.schema, m.files).schema), txnId)
+    publishManifest("compact", untouched ++ rewritten, m.schema, txnId)
   }
 
   /** One row of [[maintenancePlan]]: `action` ∈ {compact, resort,
@@ -1630,6 +1459,14 @@ class VersionedTable(spark: SparkSession, root: String,
 }
 
 object VersionedTable {
+  /** The manifest codec: one JSON object per line. */
+  private[store] val Json = new ObjectMapper()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** The ops a manifest header may name. */
+  private val Ops =
+    Set("append", "replace", "delete", "update", "merge", "compact", "expire")
+
   /** Read options for footer-only reads, built once: building them per
     * file (from the Hadoop configuration, or from a fresh one) cost
     * about 10 ms per file on a 4-core host, against 0.5 ms for the

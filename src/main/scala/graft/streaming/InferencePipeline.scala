@@ -18,9 +18,10 @@ import graft.store.FeatureStore
   *   validation go to a dead-letter sink (T4)).
   *
   * The reference processes <2 events/s (sequential `iterrows` +
-  * simulated delays); here each micro-batch is one broadcast join +
-  * one model transform + one parquet append, so throughput is bounded
-  * by batch overhead, not per-event calls. Checkpointing supplies
+  * simulated delays); here each micro-batch is one enrich join, one
+  * model transform, two manifest commits (the online table's bucket
+  * merge, then the offline history append) and one sink append, so
+  * throughput is bounded by batch overhead, not per-event calls. Checkpointing supplies
   * at-least-once redelivery (the reference's retry queue,
   * `inference.py:270-279`); the DLQ reproduces its log-and-drop of
   * twice-failed events.
@@ -34,9 +35,10 @@ object InferencePipeline {
   def isValid(c: org.apache.spark.sql.Column*): org.apache.spark.sql.Column =
     c.map(_.isNotNull).reduce(_ && _)
 
-  /** Process one micro-batch. Returns (scored, deadLetters). Exposed
-    * separately so batch-vs-stream equivalence is testable without a
-    * streaming harness.
+  /** Process one micro-batch. Returns (scored, deadLetters); `scored`
+    * is pinned, and the caller releases it (`Pin.release`) after its
+    * last use. Exposed separately so batch-vs-stream equivalence is
+    * testable without a streaming harness.
     */
   def processBatch(
       batch: DataFrame,
@@ -74,7 +76,10 @@ object InferencePipeline {
       when($"known_customer", ($"avg_loyalty_score" + $"predicted_loyalty_score") / 2)
         .otherwise($"predicted_loyalty_score").as("avg_loyalty_score"),
       $"predicted_loyalty_score".as("latest_loyalty_score"))
-    store.putRecords(upserts, txnId)
+    // on success the caller owns `scored` (and releases it); on a
+    // failed upsert nobody does
+    try store.putRecords(upserts, txnId)
+    catch { case e: Throwable => Pin.release(scored); throw e }
     (scored, dead)
   }
 
@@ -113,9 +118,10 @@ object InferencePipeline {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val (scored, dead) = processBatch(batch, store, model,
           txnId = Some(s"$txnPrefix-$batchId"))
-        scored.write.mode("append").parquet(scoredSink)
-        if (!dead.isEmpty) dead.write.mode("append").parquet(dlqSink)
-        Pin.release(scored)
+        try {
+          scored.write.mode("append").parquet(scoredSink)
+          if (!dead.isEmpty) dead.write.mode("append").parquet(dlqSink)
+        } finally Pin.release(scored)
       }
       .start()
   }

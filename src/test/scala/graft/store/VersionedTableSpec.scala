@@ -2,6 +2,7 @@ package graft.store
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -146,7 +147,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(vt.read().collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
     // B-side audit on the healed chain is a no-op (subset holds)
     assert(vt.auditAppend(healed, Seq.empty,
-      vt.readManifest(healed).schema.get) == healed)
+      vt.readManifest(healed).schema) == healed)
   }
 
   test("two interleaved healers re-appending the same files converge to each file exactly once") {
@@ -156,7 +157,7 @@ class VersionedTableSpec extends SparkSpec {
     val v0Dirs = vt.readManifest(0L).files.map(_.commit).toSet
     val aFiles = vt.readManifest(v1).files
       .filterNot(f => v0Dirs.contains(f.commit))
-    val schema = vt.readManifest(v1).schema.get
+    val schema = vt.readManifest(v1).schema
     // the healer race: both healers computed the SAME re-append set
     // against a snapshot read before either published; each then
     // publishes it. Without path-dedup in the append branch the second
@@ -287,6 +288,33 @@ class VersionedTableSpec extends SparkSpec {
     assert(e.getMessage.contains("pre-v2"))
     assert(e.getMessage.contains("v_1.manifest"))
     assert(e.getMessage.contains("migration"))
+    // the %-escaped text format that preceded the JSON codec: schema,
+    // stats and audit stored as strings — also a named migration error
+    Files.writeString(mdir.resolve("v_1.manifest"),
+      "{\"version\":1,\"txn\":\"\",\"op\":\"append\",\"schema\":" +
+        "\"{\\\"type\\\":\\\"struct\\\",\\\"fields\\\":[]}\"," +
+        "\"audit\":\"k=v%3B\"}\n" +
+        "{\"file\":\"data/c_x/part-0\",\"commit\":\"data/c_x\",\"stats\":\"v=a|b\"}\n")
+    val old = intercept[IllegalStateException](vt.readManifest(1L))
+    assert(old.getMessage.contains("v_1.manifest"))
+    assert(old.getMessage.contains("%-escaped text format"))
+    assert(old.getMessage.contains("migration"))
+    // a truncated entry line names the manifest it was found in
+    val v0Lines = new String(
+      Files.readAllBytes(mdir.resolve("v_0.manifest")), "UTF-8").split("\n")
+    Files.writeString(mdir.resolve("v_1.manifest"),
+      v0Lines(0).replaceFirst("\\{\"version\":0,", "{\"version\":1,") + "\n" +
+        v0Lines(1).take(v0Lines(1).length / 2) + "\n")
+    val cut = intercept[IllegalStateException](vt.readManifest(1L))
+    assert(cut.getMessage.contains("v_1.manifest"), cut.getMessage)
+    assert(cut.getMessage.contains("corrupt line"), cut.getMessage)
+    // audit values holding the old codec's delimiters round-trip
+    Files.delete(mdir.resolve("v_1.manifest"))
+    Files.delete(mdir.resolve("v_1.claim"))
+    val nasty = Map("q" -> "a\"quote", "b" -> "back\\slash",
+      "n" -> "new\nline", "d" -> "semi;eq=pct%bar|")
+    val v = vt.commitAudited(Seq((2L, "b")).toDF("id", "v"), nasty)
+    assert(vt.auditOf(v) == nasty)
   }
 
   test("lost-append audit, B side: predecessor's append is carried forward") {
@@ -304,7 +332,7 @@ class VersionedTableSpec extends SparkSpec {
     // B audits its own publish (v2): the immediately-below manifest
     // (A's v1 append) is not a subset → B restores A's files
     val healed = vt.auditAppend(2L, vt.readManifest(v0).files,
-      vt.readManifest(v0).schema.get)
+      vt.readManifest(v0).schema)
     assert(healed > 2)
     assert(vt.read().collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
   }
@@ -329,5 +357,88 @@ class VersionedTableSpec extends SparkSpec {
     val v = vt.commit(Seq((2L, "b")).toDF("id", "v"))
     assert(v == 1L, "released version number must be reusable")
     assert(vt.read().count() == 2)
+  }
+
+  /** Spark jobs started while `action` runs (the listener bus is
+    * asynchronous: drained by a short wait).
+    */
+  private def countJobs(action: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { action; Thread.sleep(500) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  /** Per data file (path relative to the table root): Spark's own
+    * min/max of `cast(c as string)` and NULL count for each of `cols`,
+    * for files where the column has a non-NULL value.
+    */
+  private def sparkStats(vt: VersionedTable, cols: Seq[String])
+      : Map[String, Map[String, (String, String)]] = {
+    val aggs = cols.flatMap(c => Seq(
+      min(col(c).cast("string")), max(col(c).cast("string")),
+      sum(when(col(c).isNull, 1L).otherwise(0L)).cast("string")))
+    vt.read().groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*)
+      .collect().map { r =>
+        r.getString(0).replaceFirst(".*/(data/c_)", "$1") ->
+          cols.zipWithIndex.flatMap { case (c, i) =>
+            if (r.isNullAt(1 + 3 * i)) Nil
+            else {
+              val nulls = r.getString(3 + 3 * i)
+              Seq(c -> (r.getString(1 + 3 * i), r.getString(2 + 3 * i)),
+                s"$c#nulls" -> (nulls, nulls))
+            }
+          }.toMap
+      }.toMap
+  }
+
+  test("a commit whose stats columns are date, long and string runs only " +
+      "its write job; footer bands equal Spark's own per-file stats") {
+    val cols = Seq("d", "n", "s")
+    val vt = fresh(statsCols = cols)
+    // three files of two rows each; the third is all-NULL
+    val rows = Seq(
+      (Some("2024-01-05"), Some(7L), Some("zebra")),
+      (None, Some(-3L), Some("Ünïcode ☃ straße")),
+      (Some("0001-01-01"), Some(Long.MinValue), Some("Ärger")),
+      (Some("2024-02-29"), Some(Long.MaxValue), None),
+      (None, None, None),
+      (None, None, None))
+    val df = spark.sparkContext.parallelize(rows, 3).toDF("d", "n", "s")
+      .withColumn("d", to_date($"d"))
+    assert(countJobs(vt.commit(df): Unit) == 1,
+      "footer-exact stats columns need no read-back job")
+    val m = vt.readManifest(vt.currentVersion.get)
+    assert(m.files.size == 3)
+    val expected = sparkStats(vt, cols)
+    m.files.foreach { f =>
+      assert(f.stats.removed("#rows") == expected(f.path), f.path)
+      assert(f.stats("#rows")._1 == "2")
+    }
+    // the all-NULL file records no band for any column
+    assert(m.files.exists(_.stats.keySet == Set("#rows")))
+  }
+
+  test("an INT96 timestamp stats column gets its band from the read-back job") {
+    val saved = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try {
+      val vt = fresh(statsCols = Seq("t", "n"))
+      val df = spark.sparkContext.parallelize(Seq(
+        (Some("2024-01-05 10:00:00"), 1L), (None, 2L),
+        (Some("2023-06-30 23:59:59"), 3L)), 2).toDF("t", "n")
+        .withColumn("t", to_timestamp($"t"))
+      vt.commit(df)
+      val m = vt.readManifest(vt.currentVersion.get)
+      val expected = sparkStats(vt, Seq("t", "n"))
+      assert(m.files.exists(_.stats.contains("t")))
+      m.files.foreach(f =>
+        assert(f.stats.removed("#rows") == expected(f.path), f.path))
+    } finally spark.conf.set("spark.sql.parquet.outputTimestampType", saved)
   }
 }

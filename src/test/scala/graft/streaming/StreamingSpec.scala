@@ -148,6 +148,34 @@ class StreamingSpec extends SparkSpec {
     assert(math.abs(c1.getAs[Double]("avg_loyalty_score") - (5.5 + sink1) / 2) < 1e-12)
   }
 
+  test("ingest and a failed processBatch leave no pinned RDD behind") {
+    def leaked(call: => Unit): Set[Int] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      call
+      spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    }
+    val dir = Files.createTempDirectory("pin-release").toString
+    val store = FeatureStore(spark, s"$dir/store", "customer_id",
+      "purchase_timestamp")
+    val hist = Seq(
+      (1L, ts("2024-01-01 10:00:00"), 100.0, 5.0),
+      (2L, ts("2024-01-02 12:00:00"), 200.0, 9.0),
+    ).toDF("customer_id", "purchase_timestamp", "purchase_value",
+      "loyalty_score")
+    val feats = FeatureEngineering.engineerFeatures(hist)
+    val model = LoyaltyModel.train(feats.unionByName(feats.withColumn(
+      "latest_loyalty_score", $"latest_loyalty_score" + 0.1)))
+    // the first ingest pins the whole history plus the batch
+    assert(leaked(store.ingest(feats.withColumn("latest_loyalty_score",
+      $"latest_loyalty_score".cast("string")))).isEmpty)
+    // the store holds latest_loyalty_score as a string; the upsert
+    // writes it as a double, a type change both tables refuse
+    val batch = Seq((1L, ts("2024-02-01 00:00:00"), 80.0))
+      .toDF("customer_id", "purchase_timestamp", "purchase_value")
+    assert(leaked(intercept[Exception](
+      InferencePipeline.processBatch(batch, store, model))).isEmpty)
+  }
+
   test("micro-batch replay with the same txn id is exactly-once at the store") {
     val dir = Files.createTempDirectory("replay-test").toString
     val store = FeatureStore(spark, s"$dir/store", "customer_id",
