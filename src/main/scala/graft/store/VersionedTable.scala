@@ -421,7 +421,7 @@ class VersionedTable(spark: SparkSession, root: String,
     * stats entries — `(min, max)` rendered as `cast(c as string)`
     * renders them, plus the `<col>#nulls` count — or no entries when
     * the column is absent from the file or all-NULL. A column missing
-    * from the result is not footer-exact here ([[footerRender]]);
+    * from the result is not footer-exact here ([[footerString]]);
     * an unreadable footer yields (None, empty).
     */
   private def footerStats(p: Path)
@@ -438,29 +438,28 @@ class VersionedTable(spark: SparkSession, root: String,
         val chunks = r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
         def exact(c: String): Option[Map[String, (String, String)]] =
           if (!meta.getSchema.containsField(c)) Some(Map.empty)
-          else meta.getSchema.getType(Seq(c): _*) match {
-            case t if !t.isPrimitive => None
-            case t => footerRender(t.asPrimitiveType, legacyDates).flatMap { render =>
-              val mine = chunks.filter(_.getPath.toDotString == c)
+          else {
+            val t = meta.getSchema.getType(Seq(c): _*)
+            val mine = chunks.filter(_.getPath.toDotString == c)
+            // a chunk whose stats omit min/max while holding values
+            // (parquet drops oversized binary bounds) is not exact
+            val complete = t.isPrimitive && mine.forall { cc =>
+              val st = cc.getStatistics
+              st != null && st.isNumNullsSet &&
+                (st.hasNonNullValue || st.getNumNulls == cc.getValueCount)
+            }
+            if (!complete) None
+            else {
               val merged = Statistics.createStats(t)
-              // a chunk whose stats omit min/max while holding values
-              // (parquet drops oversized binary bounds) is not exact
-              val complete = mine.forall { cc =>
-                val st = cc.getStatistics
-                st != null && st.isNumNullsSet &&
-                  (st.hasNonNullValue || st.getNumNulls == cc.getValueCount)
-              }
-              if (!complete) None
-              else {
-                mine.foreach(cc => merged.mergeStatistics(cc.getStatistics))
-                if (!merged.hasNonNullValue) Some(Map.empty) // all-NULL
-                else for {
-                  mn <- render(merged.genericGetMin)
-                  mx <- render(merged.genericGetMax)
-                } yield {
-                  val nulls = merged.getNumNulls.toString
-                  Map(c -> (mn, mx), s"$c#nulls" -> (nulls, nulls))
-                }
+              mine.foreach(cc => merged.mergeStatistics(cc.getStatistics))
+              def str(v: Any) = footerString(t.asPrimitiveType, legacyDates, v)
+              if (!merged.hasNonNullValue) Some(Map.empty) // all-NULL
+              else for {
+                mn <- str(merged.genericGetMin)
+                mx <- str(merged.genericGetMax)
+              } yield {
+                val nulls = merged.getNumNulls.toString
+                Map(c -> (mn, mx), s"$c#nulls" -> (nulls, nulls))
               }
             }
           }
@@ -469,28 +468,27 @@ class VersionedTable(spark: SparkSession, root: String,
       } finally r.close()
     } catch { case scala.util.control.NonFatal(_) => (None, Map.empty) }
 
-  /** How a footer min/max of parquet type `pt` renders as Spark's
-    * `cast(c as string)` of the same value, for the types where the two
-    * provably agree: signed integers, strings (parquet orders UTF-8
-    * bytes unsigned, as Spark compares strings), and dates of years
-    * 1–9999 written without the legacy Julian rebase. None for every
-    * other type (timestamps, floating point, decimals, binary...): the
-    * commit's read-back aggregation covers those columns.
+  /** `v`, a footer min/max of parquet type `pt`, as Spark's
+    * `cast(c as string)` renders the same value — for the types where
+    * the two provably agree: signed integers, strings (parquet orders
+    * UTF-8 bytes unsigned, as Spark compares strings), and dates of
+    * years 1–9999 written without the legacy Julian rebase. None for
+    * every other type (timestamps, floating point, decimals, binary...):
+    * the commit's read-back aggregation covers those columns.
     */
-  private def footerRender(pt: PrimitiveType,
-      legacyDates: Boolean): Option[Any => Option[String]] = {
+  private def footerString(pt: PrimitiveType, legacyDates: Boolean,
+      v: Any): Option[String] = {
     import PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
     (pt.getPrimitiveTypeName, pt.getLogicalTypeAnnotation) match {
-      case (INT32 | INT64, null) => Some(v => Some(v.toString))
+      case (INT32 | INT64, null) => Some(v.toString)
       case (INT32 | INT64, i: LogicalTypeAnnotation.IntLogicalTypeAnnotation)
-          if i.isSigned => Some(v => Some(v.toString))
+          if i.isSigned => Some(v.toString)
       case (INT32, _: LogicalTypeAnnotation.DateLogicalTypeAnnotation)
-          if !legacyDates => Some { v =>
+          if !legacyDates =>
         val d = java.time.LocalDate.ofEpochDay(v.asInstanceOf[Integer].longValue)
-        if (d.getYear >= 1 && d.getYear <= 9999) Some(d.toString) else None
-      }
+        Option.when(d.getYear >= 1 && d.getYear <= 9999)(d.toString)
       case (BINARY, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
-        Some(v => Some(v.asInstanceOf[Binary].toStringUsingUTF8))
+        Some(v.asInstanceOf[Binary].toStringUsingUTF8)
       case _ => None
     }
   }
