@@ -67,10 +67,10 @@ import VersionedTable.Json
   * (timestamps, floating point, decimals, ...) or a footer without
   * usable statistics cost one read-back aggregation job over the new
   * files. Within surviving files, the pushed-down predicate still
-  * prunes parquet row groups by footer min/max. At 100 TB the knobs are the same as any table
-  * format's: periodic `replace` compaction bounds manifest length and
-  * file counts; manifests themselves are O(files) tiny text lines
-  * read only on the driver.
+  * prunes parquet row groups by footer min/max. At 100 TB the knobs
+  * are the same as any table format's: periodic `replace` compaction
+  * bounds manifest length and file counts; manifests themselves are
+  * O(files) tiny text lines read only on the driver.
   *
   * Idempotent replay: a commit may carry an application transaction
   * id; re-committing an id that any manifest already records is a
