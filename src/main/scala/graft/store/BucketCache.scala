@@ -11,10 +11,11 @@ package graft.store
   *
   * Concurrency: the LRU map and counters are guarded by a short global
   * lock whose critical sections are O(1) with no IO. The LOAD (a
-  * parquet collect — the ~100 ms–s part) runs under a PER-KEY latch
-  * only. A cold miss therefore never blocks hits or other keys'
-  * misses, and two concurrent misses on the SAME key coalesce into one
-  * load via the latch's double-check. That is the serving-tier
+  * driver-local read of the partition's parquet files, [[BucketFiles]]
+  * — the milliseconds part) runs under a PER-KEY latch only. A cold
+  * miss therefore never blocks hits or other keys' misses, and two
+  * concurrent misses on the SAME key coalesce into one load via the
+  * latch's double-check. That is the serving-tier
   * contract: the point of the cache is sub-ms repeat lookups, and a
   * tier that serializes every hit behind one cold load has the wrong
   * concurrency shape.

@@ -1,15 +1,17 @@
 package graft.store
 
 import com.sun.net.httpserver.HttpExchange
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.operators.IvfIndex
 
 /** RETRIEVAL SERVING (VERDICT r11 #8) — the [[ServingCache]] bucket
   * pattern applied to the standing search indexes: a query-side tier
   * that answers BM25 and ANN probes from DRIVER-CACHED index slices
-  * with ZERO Spark jobs on the warm path, while reproducing the
+  * with ZERO Spark jobs per probe, cold or warm, while reproducing the
   * batch operators' results bit-for-bit (spec-pinned wire parity
   * with [[graft.operators.Retrieval.bm25TopKFromIndex]] and
   * [[IvfIndex.topK]]).
@@ -20,9 +22,9 @@ import graft.operators.IvfIndex
   *    `tb = pmod(th, nBuckets)` ([[Bm25SearchTier.writeIndex]]), so
   *    one query term's postings — INCLUDING its exact global df —
   *    live in exactly one partition directory; a probe reads only
-  *    its terms' buckets (partition-pruned), memoized in a per-bucket
-  *    LRU. Corpus scalars (N, Σdl) are one Spark reduction, cached
-  *    on the driver and refreshed only on [[Bm25SearchTier.invalidate]]
+  *    its terms' bucket directories, memoized in a per-bucket LRU.
+  *    Corpus scalars (N, Σdl) are one Spark reduction, cached on the
+  *    driver and refreshed only on [[Bm25SearchTier.invalidate]]
   *    — the BM25 analogue of [[ServingCache]]'s warm tier. `nBuckets`
   *    sizes the read unit: at corpus scale thousands of buckets keep
   *    a bucket cache-able while a term's df stays exact.
@@ -30,8 +32,14 @@ import graft.operators.IvfIndex
   *    [[IvfIndex.assign]] partition contract); the FROZEN quantizer
   *    lives on the driver, probe→cell choice is a driver-side cosine
   *    over nLists centroids, and only the nProbe chosen cells are
-  *    read (partition-pruned) and reranked with the IDENTICAL cosine
-  *    fold the codegen'd expression runs.
+  *    read and reranked with the IDENTICAL cosine fold the codegen'd
+  *    expression runs.
+  *
+  * A bucket load lists its one directory and opens its files on the
+  * calling thread ([[BucketFiles]]): no Spark job, and one bucket in
+  * driver memory, which the LRU then keeps. A bucket directory the
+  * index never wrote (no term, cell or band hashed there) is an empty
+  * bucket; a missing index root fails.
   *
   * Scoring parity is exact, not approximate: the driver evaluates
   * the same left-associated double dag, the same
@@ -40,6 +48,15 @@ import graft.operators.IvfIndex
   * (ticks DESC, doc_id) / (sim DESC, vec_id) total orders.
   */
 object SearchEndpoint {
+
+  // what each tier reads from one bucket directory of its layout (the
+  // partition column lives in the directory name, not the files)
+  private[store] val Bm25Postings = StructType(Seq("th", "doc_id", "tf", "dl")
+    .map(StructField(_, LongType)))
+  private[store] val IvfVectors = StructType(Seq(StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(DoubleType))))
+  private[store] val SigBands = StructType(StructField("chunk", IntegerType) +:
+    Seq("chunk_val", "media_id", "dhash", "ahash").map(StructField(_, LongType)))
 
   /** Write a BM25 postings frame as the term-bucketed serving layout. */
   def writeBm25Index(post: org.apache.spark.sql.DataFrame, dir: String,
@@ -60,8 +77,8 @@ object SearchEndpoint {
     * [[graft.operators.ImageHash.chunks]] pigeonhole bands, and rows
     * partition by `bb = pmod(chunk·2^bandBits + chunk_val, nBuckets)`
     * — the probe computes the same 4 band keys driver-side, so a
-    * near-dup admission check reads at most 4 bucket directories
-    * (partition-pruned), never the index.
+    * near-dup admission check reads at most 4 bucket directories,
+    * never the index.
     */
   def writeSignatureIndex(sig: org.apache.spark.sql.DataFrame,
       dir: String, nBuckets: Int = 64): Unit = {
@@ -97,6 +114,7 @@ final class Bm25SearchTier(spark: SparkSession, indexDir: String,
   /** th → postings (doc_id, tf, dl), grouped per term at load. */
   private val cache = new BucketCache[Map[Long, Array[(Long, Long, Long)]]](
     maxCachedBuckets)
+  private val files = new BucketFiles(spark)
   @volatile private var scalars: (Long, Long) = null // (n, totDl)
 
   def stats: (Long, Long) = cache.stats
@@ -106,7 +124,7 @@ final class Bm25SearchTier(spark: SparkSession, indexDir: String,
   /** Corpus scalars (N docs, Σdl) — ONE Spark reduction over the
     * store, then driver-cached for the tier's lifetime (every doc
     * contributes `dl` identically on all its rows, so a per-doc
-    * first() is exact). The only Spark work a warm tier ever did.
+    * first() is exact). The only Spark work the tier does.
     */
   private def corpusScalars(): (Long, Long) = {
     val s = scalars
@@ -124,18 +142,16 @@ final class Bm25SearchTier(spark: SparkSession, indexDir: String,
     computed
   }
 
-  /** One term's postings from its memoized bucket (partition-pruned
-    * load: reads ONLY `tb=<b>`).
+  /** One term's postings from its memoized bucket (a driver-local
+    * load of ONLY `tb=<b>`).
     */
   private def postings(th: Long): Option[Array[(Long, Long, Long)]] = {
     val bkt = java.lang.Math.floorMod(th, nBuckets.toLong).toInt
     cache.get(bkt) {
-      spark.read.parquet(s"$indexDir/tb=$bkt")
-        .select(col("th"), col("doc_id"), col("tf"), col("dl"))
-        .collect()
+      files.readDir(new Path(s"$indexDir/tb=$bkt"), SearchEndpoint.Bm25Postings)
         .groupBy(_.getLong(0))
         .map { case (t, rows) =>
-          t -> rows.map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+          t -> rows.map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toArray
         }
     }.get(th)
   }
@@ -192,17 +208,16 @@ final class IvfSearchTier(spark: SparkSession, indexDir: String,
 
   private val cache = new BucketCache[Array[(Long, Array[Double])]](
     maxCachedCells)
+  private val files = new BucketFiles(spark)
 
   def stats: (Long, Long) = cache.stats
 
   def invalidate(): Unit = cache.invalidate()
 
-  /** Partition-pruned, memoized cell load: reads ONLY `cell=<c>`. */
+  /** Memoized driver-local cell load: reads ONLY `cell=<c>`. */
   private def cell(c: Int): Array[(Long, Array[Double])] = cache.get(c) {
-    spark.read.parquet(s"$indexDir/cell=$c")
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    files.readDir(new Path(s"$indexDir/cell=$c"), SearchEndpoint.IvfVectors)
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toArray
   }
 
   /** The identical sequential cosine fold the codegen'd
@@ -235,8 +250,8 @@ final class IvfSearchTier(spark: SparkSession, indexDir: String,
   * "is this media already in the corpus?" before admitting it. The
   * probe's 4 pigeonhole band keys map to at most 4 bucket
   * directories ([[SearchEndpoint.writeSignatureIndex]]'s layout),
-  * loaded partition-pruned and memoized in the LRU — warm probes are
-  * ZERO Spark jobs, and results are exactly the batch gate's rows
+  * loaded on the driver and memoized in the LRU — probes are ZERO
+  * Spark jobs, and results are exactly the batch gate's rows
   * for a one-probe batch (banding is EXACT for Hamming ≤ 3, so
   * parity is a theorem, not a tolerance).
   */
@@ -252,6 +267,7 @@ final class SigSearchTier(spark: SparkSession, indexDir: String,
   /** (chunk, chunk_val) → signatures in that band. */
   private val cache = new BucketCache[Map[(Int, Long), Array[(Long, Long, Long)]]](
     maxCachedBuckets)
+  private val files = new BucketFiles(spark)
 
   def stats: (Long, Long) = cache.stats
 
@@ -261,20 +277,17 @@ final class SigSearchTier(spark: SparkSession, indexDir: String,
     (0 until graft.operators.ImageHash.chunks)
       .map(c => (c, (dhash >>> (c * bandBits)) & bandMask))
 
-  /** One band's signatures from its memoized bucket (partition-pruned
-    * load: reads ONLY `bb=<b>`).
+  /** One band's signatures from its memoized bucket (a driver-local
+    * load of ONLY `bb=<b>`).
     */
   private def signatures(band: (Int, Long)): Option[Array[(Long, Long, Long)]] = {
     val bkt = java.lang.Math.floorMod(
       band._1.toLong * (1L << bandBits) + band._2, nBuckets.toLong).toInt
     cache.get(bkt) {
-      spark.read.parquet(s"$indexDir/bb=$bkt")
-        .select(col("chunk"), col("chunk_val"), col("media_id"),
-          col("dhash"), col("ahash"))
-        .collect()
+      files.readDir(new Path(s"$indexDir/bb=$bkt"), SearchEndpoint.SigBands)
         .groupBy(r => (r.getInt(0), r.getLong(1)))
         .map { case (k, rows) =>
-          k -> rows.map(r => (r.getLong(2), r.getLong(3), r.getLong(4)))
+          k -> rows.map(r => (r.getLong(2), r.getLong(3), r.getLong(4))).toArray
         }
     }.get(band)
   }

@@ -1,5 +1,6 @@
 package graft.store
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -14,7 +15,9 @@ import graft.operators.Layout
   * recorded in its manifest entry), so a point lookup needs exactly
   * one bucket — this tier memoizes whole buckets in a bounded
   * driver-side LRU and serves repeated lookups from memory with NO
-  * Spark job at all.
+  * Spark job at all. A miss reads the bucket's files on the calling
+  * thread ([[BucketFiles]]), also without a Spark job; it holds one
+  * bucket in driver memory, which the LRU then keeps.
   *
   * Read-through consistency: each get lists `_manifests` (one
   * filesystem LIST, no data read) and, once per new version, parses
@@ -49,6 +52,8 @@ class ServingCache(spark: SparkSession, servingDir: String,
   private val cache = new BucketCache[CachedBucket](maxCachedBuckets)
 
   private val table = new VersionedTable(spark, servingDir)
+
+  private val files = new BucketFiles(spark)
 
   /** One parsed online manifest: its schema and per-bucket files. */
   private final class Snapshot(val version: Long, val schema: StructType,
@@ -106,21 +111,20 @@ class ServingCache(spark: SparkSession, servingDir: String,
     Layout.keyBucketOf(key, kt, nBuckets)
   }
 
-  /** The bucket load itself — one read of the bucket's manifest files
-    * under the manifest schema (the same files `FeatureStore.getRecord`
-    * plans). A test seam: the concurrency spec overrides it with a
-    * gated slow load to prove a cold miss never blocks other buckets'
-    * hits.
+  /** The bucket load itself — one driver-local read of the bucket's
+    * manifest files under the manifest schema (the same files and rows
+    * `FeatureStore.getRecord` plans), no Spark job. A test seam: the
+    * concurrency spec overrides it with a gated slow load to prove a
+    * cold miss never blocks other buckets' hits.
     */
   protected def loadBucket(b: Int, plan: BucketPlan): Map[String, Row] =
-    if (plan.files.isEmpty) Map.empty
-    else spark.read.schema(plan.schema)
-      .parquet(plan.files.map(f => s"$servingDir/$f"): _*).drop(dropCols: _*)
-      .collect().map(r => r.getAs[Any](keyCol).toString -> r).toMap
+    files.read(plan.files.map(f => new Path(s"$servingDir/$f")),
+        StructType(plan.schema.filterNot(f => dropCols.contains(f.name))))
+      .map(r => r.getAs[Any](keyCol).toString -> r).toMap
 
   /** Point lookup. Cache hit: zero Spark jobs, one LIST, no waiting on
     * any in-flight load. Miss: one bucket load under that bucket's own
-    * latch, memoized for next time. A table with no committed version
+    * latch, memoized for next time — also zero Spark jobs. A table with no committed version
     * (never merged, or only a crashed merge's orphan files) has no
     * keys: None.
     */

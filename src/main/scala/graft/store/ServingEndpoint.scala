@@ -14,9 +14,9 @@ package graft.store
   * (`ValueAsString`, `feature_store_manager.py:235`).
   *
   * The endpoint is a thin loopback tier over [[ServingCache]] on the
-  * shared [[HttpScaffold]]: a hit costs zero Spark jobs, and the
-  * cache's per-bucket load latches are exactly what lets this serve
-  * CONCURRENT requests — one cold bucket's load never blocks other
+  * shared [[HttpScaffold]]: a lookup, hit or miss, costs zero Spark
+  * jobs, and the cache's per-bucket load latches are exactly what lets
+  * this serve CONCURRENT requests — one cold bucket's load never blocks other
   * requests' hits. A production deployment would front the same cache
   * with its real RPC stack; this pins the contract and the threading
   * shape.

@@ -26,4 +26,20 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `action` runs (the listener bus is
+    * asynchronous: drained by a short wait).
+    */
+  def countJobs(action: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { action; Thread.sleep(500) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
 }

@@ -4,8 +4,6 @@ import java.nio.file.Files
 
 import scala.io.Source
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.SparkSpec
 import graft.core.Tables
 import graft.operators.{IvfIndex, NearDup, Retrieval}
@@ -16,18 +14,6 @@ import graft.operators.{IvfIndex, NearDup, Retrieval}
   */
 class SearchEndpointSpec extends SparkSpec {
   import spark.implicits._
-
-  private def countJobs(action: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { action; Thread.sleep(500) } // listener bus is async; drain
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
 
   private def get(port: Int, path: String): String = {
     val conn = new java.net.URI(s"http://127.0.0.1:$port$path").toURL
@@ -57,8 +43,15 @@ class SearchEndpointSpec extends SparkSpec {
       .map(r => (r._2, r._3, r._4))
     assert(want.nonEmpty)
 
-    val cold = tier.search(terms, k = 5, exclude = 0L)
-    assert(cold === want)
+    // cold path: once the corpus scalars are primed (a search with no
+    // terms loads no bucket), the first probe reads its term buckets
+    // on the driver without a Spark job
+    assert(tier.search(Nil, k = 5) === Nil)
+    assert(tier.stats === ((0L, 0L)))
+    val coldJobs = countJobs {
+      assert(tier.search(terms, k = 5, exclude = 0L) === want)
+    }
+    assert(coldJobs === 0, s"cold probe ran $coldJobs Spark jobs")
     // warm path: same probe, zero Spark jobs
     val jobs = countJobs {
       assert(tier.search(terms, k = 5, exclude = 0L) === want)
@@ -106,7 +99,11 @@ class SearchEndpointSpec extends SparkSpec {
     val vec = probe.select($"embedding").as[Array[Float]].head()
       .map(_.toDouble)
 
-    assert(tier.search(vec, k = 10, nProbe = 3) === want)
+    val coldJobs = countJobs {
+      assert(tier.search(vec, k = 10, nProbe = 3) === want)
+    }
+    assert(coldJobs === 0, s"cold probe ran $coldJobs Spark jobs")
+    assert(tier.stats._2 === 3L, "the cold probe loaded its 3 cells")
     val jobs = countJobs {
       assert(tier.search(vec, k = 10, nProbe = 3) === want)
     }
@@ -168,7 +165,37 @@ class SearchEndpointSpec extends SparkSpec {
       assert(code("/ann?vec=0.5,0.5&k=") === 400)
       assert(code("/neardup?dhash=5&ahash=7&maxh=x") === 400)
       assert(code("/neardup?dhash=5&ahash=7&maxh=2") === 200)
+      // a bucket the index never wrote is empty, not a 500: (1, 5, 7)
+      // over 4 buckets writes bb=0 and bb=1 only; dhash=2's first band
+      // falls in bb=2, its other three in bb=0 (Hamming 3 from 5)
+      assert(get(port, "/neardup?dhash=2&ahash=7") ===
+        """{"Results":[{"media_id":1,"hamming":3,"a_hamming":0}]}""")
+      assert(code("/neardup?dhash=2&ahash=7&maxh=2") === 200)
+      assert(get(port, "/neardup?dhash=2&ahash=7&maxh=2") === """{"Results":[]}""")
     } finally ep.stop()
+
+    // BM25: one query term hashes into a tb= bucket no posting fills
+    val tiny = Retrieval.docTermStats(
+      Seq((1L, "quick brown fox"), (2L, "lazy brown dog")).toDF("doc_id", "text"))
+    val tinyDir = Files.createTempDirectory("bm25-holes").toString
+    SearchEndpoint.writeBm25Index(tiny, tinyDir, nBuckets = 16)
+    val written = new java.io.File(tinyDir).list()
+      .filter(_.startsWith("tb=")).map(_.stripPrefix("tb=").toInt).toSet
+    val hole = Iterator.from(0).map(i => s"absent$i").find(t =>
+      !written(java.lang.Math.floorMod(NearDup.tokenHash64(t), 16L).toInt)).get
+    val terms = Seq("brown", hole).map(NearDup.tokenHash64)
+    val want = Retrieval.bm25TopKFromIndex(tiny,
+        terms.map(th => (-1L, th)).toDF("query_id", "th"), k = 5)
+      .orderBy($"rank").as[(Long, Int, Long, Double)].collect().toSeq
+      .map(r => (r._2, r._3, r._4))
+    assert(want.map(_._2).toSet === Set(1L, 2L))
+    assert(new Bm25SearchTier(spark, tinyDir, nBuckets = 16)
+      .search(terms, k = 5) === want)
+    // a missing index root stays a loud, named error
+    val gone = s"$tinyDir-gone"
+    val e = intercept[java.io.FileNotFoundException](
+      new SigSearchTier(spark, gone, nBuckets = 4).probe(2L, 7L))
+    assert(e.getMessage.contains(gone))
   }
 
   test("BM25 bucket LRU stays bounded and invalidate() refreshes the " +

@@ -3,6 +3,8 @@ package graft.store
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.Row
+
 import graft.SparkSpec
 
 /** The ElastiCache-role cache tier over the bucketed online table:
@@ -221,5 +223,32 @@ class ServingCacheSpec extends SparkSpec {
     val missing = (2L to 300L).find(k => !written(cache.bucketOf(k)))
     assert(missing.nonEmpty, "some key must hash to an unwritten bucket")
     assert(cache.get(missing.get).isEmpty)
+  }
+
+  test("concurrent real loads of distinct buckets from 8 threads equal the " +
+      "serial loads (one shared reader)") {
+    val s = freshStore()
+    s.mergeServing((1L to 400L).map(i =>
+        (i, new Timestamp(1704067200000L + i * 1000003L), i.toDouble, s"name-$i"))
+      .toDF("customer_id", "purchase_timestamp", "v", "name"))
+    val keys = (1L to 400L)
+    val serialCache = s.servingCache(maxCachedBuckets = 64)
+    val serial = keys.map(k => k -> serialCache.get(k).get).toMap
+    val cache = s.servingCache(maxCachedBuckets = 64)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      // one task per bucket, all released at once
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val futures = keys.groupBy(cache.bucketOf).values.toSeq.map { ks =>
+        pool.submit(new java.util.concurrent.Callable[Seq[(Long, Option[Row])]] {
+          def call() = { start.await(); ks.map(k => k -> cache.get(k)) }
+        })
+      }
+      start.countDown()
+      val got = futures.flatMap(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(got.size === keys.size)
+      for ((k, row) <- got) assert(row === Some(serial(k)), s"key $k")
+      assert(cache.stats._2 === futures.size.toLong, "one load per bucket")
+    } finally pool.shutdownNow(): Unit
   }
 }

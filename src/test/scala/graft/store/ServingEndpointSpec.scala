@@ -291,4 +291,46 @@ class ServingEndpointSpec extends SparkSpec {
       ep.stop()
     }
   }
+
+  test("cold bucket loads on request threads run no Spark job and equal " +
+      "online(), in rewritten and untouched buckets after an add-column ingest") {
+    val s = freshStore()
+    s.ingest((1L to 150L).map(i =>
+        (i, ts("2024-01-01 00:00:00"), i.toDouble))
+      .toDF("customer_id", "purchase_timestamp", "v"))
+    // the widening batch rewrites only its keys' buckets; every other
+    // bucket keeps files without visit_count
+    val widened = Seq(3L, 40L, 151L)
+    s.ingest(widened.map(i =>
+        (i, ts("2024-02-01 12:34:56.789"), -i.toDouble, i * 10))
+      .toDF("customer_id", "purchase_timestamp", "v", "visit_count"))
+    val online = s.online()
+    val want = online.collect().map(r => r.getAs[Long]("customer_id") -> r).toMap
+    val cache = s.servingCache(maxCachedBuckets = 64)
+    val buckets = want.keys.groupBy(cache.bucketOf)
+    val rewritten = widened.map(cache.bucketOf).toSet
+    assert(buckets.keySet.exists(!rewritten(_)), "some bucket is untouched")
+    val ep = new ServingEndpoint(cache)
+    val port = ep.start()
+    try {
+      // one request per bucket: each is that bucket's cold load
+      val jobs = countJobs {
+        for ((_, ks) <- buckets) assert(get(port, s"/record?id=${ks.head}")._1 === 200)
+      }
+      assert(jobs === 0, s"cold bucket loads ran $jobs Spark jobs")
+    } finally ep.stop()
+    assert(cache.stats === ((0L, buckets.size.toLong)))
+    for ((k, row) <- want) {
+      val got = cache.get(k).get
+      assert(got === row, s"key $k")
+      assert(got.schema.fieldNames.toSeq === online.schema.fieldNames.toSeq)
+    }
+    assert(cache.stats._2 === buckets.size.toLong, "every later get is a hit")
+    assert(cache.get(40L).get.getAs[Long]("visit_count") === 400L)
+    assert(cache.get(40L).get.getAs[Timestamp]("purchase_timestamp") ===
+      ts("2024-02-01 12:34:56.789"))
+    val untouched = want.keys.find(k => !rewritten(cache.bucketOf(k))).get
+    assert(cache.get(untouched).get.isNullAt(
+      cache.get(untouched).get.fieldIndex("visit_count")))
+  }
 }

@@ -4,8 +4,6 @@ import java.nio.file.Files
 
 import scala.io.Source
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.SparkSpec
 import graft.operators.ImageHash
 
@@ -15,18 +13,6 @@ import graft.operators.ImageHash
   */
 class SigServingSpec extends SparkSpec {
   import spark.implicits._
-
-  private def countJobs(action: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { action; Thread.sleep(500) } // listener bus is async; drain
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
 
   private def get(port: Int, path: String): String = {
     val conn = new java.net.URI(s"http://127.0.0.1:$port$path").toURL
@@ -65,8 +51,8 @@ class SigServingSpec extends SparkSpec {
       .as[(Long, Int, Int)].collect().toSeq.sortBy(r => (r._2, r._1))
     assert(want.exists(r => r._1 == 70L && r._2 == 0)) // hits its base
 
-    val cold = tier.probe(dupD, dupA)
-    assert(cold === want)
+    val coldJobs = countJobs { assert(tier.probe(dupD, dupA) === want) }
+    assert(coldJobs === 0, s"cold probe ran $coldJobs Spark jobs")
     val jobs = countJobs { assert(tier.probe(dupD, dupA) === want) }
     assert(jobs === 0, s"warm probe ran $jobs Spark jobs")
     val (h, m) = tier.stats

@@ -2,7 +2,6 @@ package graft.store
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -357,21 +356,6 @@ class VersionedTableSpec extends SparkSpec {
     val v = vt.commit(Seq((2L, "b")).toDF("id", "v"))
     assert(v == 1L, "released version number must be reusable")
     assert(vt.read().count() == 2)
-  }
-
-  /** Spark jobs started while `action` runs (the listener bus is
-    * asynchronous: drained by a short wait).
-    */
-  private def countJobs(action: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { action; Thread.sleep(500) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
   }
 
   /** Per data file (path relative to the table root): Spark's own
