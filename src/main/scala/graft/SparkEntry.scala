@@ -421,11 +421,7 @@ object SparkEntry {
         |    / len(string_split(text, ' ')) AS stop_ratio
         |FROM documents ORDER BY doc_id""".stripMargin,
     "q18_ngram_jaccard" ->
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-        | counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      s"""WITH ${NearDup.shingleCtesSql},
         | pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS co
         |   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         |   GROUP BY 1, 2)
@@ -544,11 +540,7 @@ object SparkEntry {
     // tractable because near-dup clusters are tiny; the Spark side
     // propagates min labels instead of materializing the closure.
     "q41_dup_clusters" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-        | counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      s"""WITH RECURSIVE ${NearDup.shingleCtesSql},
         | prs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS co
         |   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         |   GROUP BY 1, 2),
@@ -556,12 +548,7 @@ object SparkEntry {
         |   JOIN counts ca ON ca.doc_id = doc_a
         |   JOIN counts cb ON cb.doc_id = doc_b
         |   WHERE co::DOUBLE / (ca.n + cb.n - co) >= 0.5),
-        | e AS (SELECT doc_a AS s, doc_b AS d FROM np
-        |       UNION ALL SELECT doc_b, doc_a FROM np),
-        | reach AS (
-        |   SELECT s AS id, s AS r FROM e
-        |   UNION
-        |   SELECT e.s, reach.r FROM e JOIN reach ON reach.id = e.d)
+        | ${DupClusters.reachCtesSql()}
         |SELECT id AS doc_id, min(r) AS cluster_id,
         |  (id = min(r)) AS is_keeper
         |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
@@ -679,7 +666,7 @@ object SparkEntry {
     // (the q30 quantizer), within-cell cosine pairs, min-id closure
     // (the q41 reach CTE), survivors.
     "q67_semdedup" ->
-      """WITH RECURSIVE pv AS (SELECT * FROM (
+      s"""WITH RECURSIVE pv AS (SELECT * FROM (
         |    SELECT row_number() OVER (
         |        ORDER BY ((vec_id % 2147483648) * 2654435761) % 2147483648,
         |          vec_id) - 1 AS pid,
@@ -694,12 +681,7 @@ object SparkEntry {
         | np AS (SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
         |   FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id
         |   WHERE list_cosine_similarity(a.e, b.e) >= 0.4),
-        | e AS (SELECT doc_a AS s, doc_b AS d FROM np
-        |       UNION ALL SELECT doc_b, doc_a FROM np),
-        | reach AS (
-        |   SELECT s AS id, s AS r FROM e
-        |   UNION
-        |   SELECT e.s, reach.r FROM e JOIN reach ON reach.id = e.d),
+        | ${DupClusters.reachCtesSql()},
         | cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
         |SELECT a.vec_id, a.cell::INT AS cell,
         |  coalesce(cl.id = cl.cluster_id, FALSE) AS is_dup_survivor
@@ -770,11 +752,7 @@ object SparkEntry {
     // threshold (rounded before comparing so both engines gate on the
     // same number), and near-dup keeper via the q41 closure.
     "q44_curation" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-        | counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      s"""WITH RECURSIVE ${NearDup.shingleCtesSql},
         | prs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS co
         |   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         |   GROUP BY 1, 2),
@@ -782,12 +760,7 @@ object SparkEntry {
         |   JOIN counts ca ON ca.doc_id = doc_a
         |   JOIN counts cb ON cb.doc_id = doc_b
         |   WHERE co::DOUBLE / (ca.n + cb.n - co) >= 0.5),
-        | e AS (SELECT doc_a AS s, doc_b AS d FROM np
-        |       UNION ALL SELECT doc_b, doc_a FROM np),
-        | reach AS (
-        |   SELECT s AS id, s AS r FROM e
-        |   UNION
-        |   SELECT e.s, reach.r FROM e JOIN reach ON reach.id = e.d),
+        | ${DupClusters.reachCtesSql()},
         | nonkeep AS (SELECT id FROM reach GROUP BY id HAVING id <> min(r)),
         | q AS (SELECT doc_id, lang, n_chars,
         |  round(least(len(string_split(text, ' '))::DOUBLE / 100.0, 1.0) * 0.4 +
@@ -1296,11 +1269,7 @@ object SparkEntry {
         |ORDER BY lang, doc_id""".stripMargin,
     // q86: degree profile over the exact q18 pair set.
     "q86_dup_degrees" ->
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-        | counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      s"""WITH ${NearDup.shingleCtesSql},
         | prs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS co
         |   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         |   GROUP BY 1, 2),
@@ -1493,11 +1462,7 @@ object SparkEntry {
     // the cluster key; the split hash is the q48 contract on
     // coalesce(cluster_id, doc_id).
     "q98_leakage_safe_splits" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-        | counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      s"""WITH RECURSIVE ${NearDup.shingleCtesSql},
         | prs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS co
         |   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         |   GROUP BY 1, 2),
@@ -1505,12 +1470,7 @@ object SparkEntry {
         |   JOIN counts ca ON ca.doc_id = doc_a
         |   JOIN counts cb ON cb.doc_id = doc_b
         |   WHERE co::DOUBLE / (ca.n + cb.n - co) >= 0.5),
-        | e AS (SELECT doc_a AS s, doc_b AS d FROM np
-        |       UNION ALL SELECT doc_b, doc_a FROM np),
-        | reach AS (
-        |   SELECT s AS id, s AS r FROM e
-        |   UNION
-        |   SELECT e.s, reach.r FROM e JOIN reach ON reach.id = e.d),
+        | ${DupClusters.reachCtesSql()},
         | comp AS (SELECT id AS doc_id, min(r) AS cluster_id
         |   FROM reach GROUP BY id),
         | keyed AS (SELECT d.doc_id,
@@ -1539,12 +1499,8 @@ object SparkEntry {
     // restricted to (upper-half batch) × (lower-half corpus) pairs;
     // the split cut is (max(doc_id)+1)/2, integer division in both.
     "q91_incremental_near_dup" ->
-      """WITH cut AS (SELECT (max(doc_id) + 1) // 2 AS c FROM documents),
-        | sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-        | counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      s"""WITH cut AS (SELECT (max(doc_id) + 1) // 2 AS c FROM documents),
+        | ${NearDup.shingleCtesSql},
         | pairs AS (SELECT b.doc_id AS doc_id, a.doc_id AS dup_of, count(*) AS co
         |   FROM sh a JOIN sh b ON a.shingle = b.shingle, cut
         |   WHERE a.doc_id < cut.c AND b.doc_id >= cut.c
@@ -2082,11 +2038,7 @@ object SparkEntry {
     // the 24 bands with probability (1-j)^24 ≤ 6e-8 — checked
     // empirically to be zero misses on the test corpora.
     "q28_minhash_candidates" ->
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-        | counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      s"""WITH ${NearDup.shingleCtesSql},
         | pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS co
         |   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         |   GROUP BY 1, 2)

@@ -14,22 +14,31 @@ import graft.core.{Pin, Tables}
   * to one survivor even when a ≁ c directly).
   *
   * Components via iterative min-label propagation over DataFrames:
-  * every vertex starts labeled with its own id; each round joins
-  * labels across edges and takes the per-vertex min; fixpoint when no
-  * label shrinks. Rounds = graph diameter — near-dup clusters are
-  * shallow (pairs share text, so clusters are dense and tiny), which
-  * makes plain propagation the right cost at 100 TB: each round is
-  * one equi-join + one partial-agg min, all shuffle-on-key, no
-  * driver-side graph. (For adversarially long path graphs the
-  * large-star/small-star scheme [Kiveris et al., "Connected
-  * Components in MapReduce and Beyond"] halves diameter per round;
-  * not needed for dedup-shaped graphs, documented as the escalation
-  * path.)
+  * every vertex starts labeled with the min of its closed
+  * neighborhood; each round joins labels across edges and takes the
+  * per-vertex min; fixpoint when no label shrinks. Rounds = graph
+  * diameter — near-dup clusters are shallow (pairs share text, so
+  * clusters are dense and tiny), which makes plain propagation the
+  * right cost at 100 TB: each round is one equi-join + one
+  * partial-agg min, all shuffle-on-key, no driver-side graph. A
+  * graph whose diameter exceeds `maxIter` fails with a named
+  * `IllegalStateException` rather than returning split clusters;
+  * large-star/small-star [Kiveris et al., "Connected Components in
+  * MapReduce and Beyond", SoCC'14] halves diameter per round and is
+  * the path if a workload ever needs long-diameter graphs.
   */
 object DupClusters {
 
-  /** (id, cluster_id) for every vertex of `edges`; cluster_id = min
-    * vertex id reachable. `edges` is undirected (any orientation).
+  /** (id, cluster_id) for every vertex of `edges`; cluster_id = the
+    * minimum vertex reachable. `edges` is undirected (any
+    * orientation) over vertices of ANY ordered type — numbers,
+    * domains, URLs — so for string graphs the label doubles as the
+    * component's canonical representative with no election pass.
+    *
+    * The result stays backed by the final round's pinned blocks
+    * (|vertices-in-pairs| label rows); callers done with it may
+    * release them. Every other pin is released before return, and
+    * all of them, the labels included, when the loop throws.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     import edges.sparkSession.implicits._
@@ -40,65 +49,55 @@ object DupClusters {
     // sym job (measured r13: q41 29.4 → 16.5 task-secs, q125
     // 4.6 → 2.9, q156 35.6 → 26.5 from this pin alone)
     val e = Pin.reuse(edges.toDF("src", "dst"))
-    // symmetric closure once; propagation then only needs src→dst.
-    // Pin.iterative on every iteration state: an
-    // iterative DataFrame algorithm otherwise accretes each round's
-    // joins into one exponentially-growing logical plan — lineage
-    // must be CUT, not just cached.
-    // LAZY pins throughout the loop: `Pin.iterative(_, eager = false)`
-    // still cuts lineage when it resolves to a checkpoint (and a lazy
-    // persist never grows the plan — the cached subtree is swapped for
-    // InMemoryRelation at planning) while deferring materialization to
-    // the first action — the convergence probe — so each round is ONE
-    // Spark job (materialize + sum) instead of two. Tiny dedup graphs are
-    // fixed-overhead-bound, so job count is the cost driver; at
-    // corpus scale the fused job also saves one full pass per round.
+    // symmetric closure once; propagation then only needs src→dst
     val sym = e.union(e.select($"dst".as("src"), $"src".as("dst")))
       .distinct()
       .transform(Pin.reuse)
     // seed labels with the 1-hop closed-neighborhood min — exactly
     // what round 1 of propagation would compute from identity labels,
-    // for the price of the agg alone (no join): one round saved
+    // for the price of the agg alone (no join): one round saved.
+    // Pin.iterative cuts each round's lineage (the plan would
+    // otherwise accrete every round's joins); LAZY, so the round's
+    // convergence probe is also the action that materializes it — one
+    // action per round, and none before round 1
     var labels = sym.groupBy($"src")
       .agg(min(least($"dst", $"src")).as("label"))
       .withColumnRenamed("src", "id")
       .transform(Pin.iterative(_, eager = false))
-    // convergence probe: labels only ever DECREASE under min-label
-    // propagation, so sum(label) is strictly monotone until fixpoint —
-    // one agg per round instead of a join-and-compare
-    // decimal accumulator: a Long sum could wrap at corpus scale and
-    // (astronomically unlikely, but) fake a fixpoint
-    def labelSum(df: org.apache.spark.sql.DataFrame): java.math.BigDecimal =
-      df.agg(sum($"label".cast("decimal(38,0)"))).head()
-        .getDecimal(0)
-    // one job: materializes sym + the seed checkpoint AND probes
-    var prevSum = labelSum(labels)
-    // the edge-input pin has served its purpose once sym is
-    // materialized (released AFTER the first action so a lazy
-    // cluster-mode persist still dedups the union's two branches)
-    Pin.release(e)
     var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val next = labels
-        .join(
-          sym.join(labels.select($"id".as("dst"), $"label".as("nl")), "dst")
-            .groupBy($"src").agg(min($"nl").as("nl"))
-            .withColumnRenamed("src", "id"),
-          Seq("id"), "left")
-        .select($"id", least($"label", coalesce($"nl", $"label")).as("label"))
-        .transform(Pin.iterative(_, eager = false))
-      val nextSum = labelSum(next)
-      // drop the previous round's pinned blocks — Pin.release reaches
-      // the checkpoint-rooted RDD where a bare Dataset.unpersist is a
-      // cache-manager-only no-op
-      Pin.release(labels)
-      labels = next
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      iter += 1
+    try {
+      var iter = 0
+      while (!converged && iter < maxIter) {
+        // chg marks vertices whose label shrank this round: the probe
+        // counts them, which needs no arithmetic on the label type
+        val next = labels
+          .join(
+            sym.join(labels.select($"id".as("dst"), $"label".as("nl")), "dst")
+              .groupBy($"src").agg(min($"nl").as("nl"))
+              .withColumnRenamed("src", "id"),
+            Seq("id"), "left")
+          .select($"id", least($"label", coalesce($"nl", $"label")).as("label"),
+            (coalesce($"nl", $"label") < $"label").cast("long").as("chg"))
+          .transform(Pin.iterative(_, eager = false))
+        try converged =
+          next.agg(coalesce(sum($"chg"), lit(0L))).head().getLong(0) == 0L
+        finally {
+          // sym is materialized by round 1's probe, so the edge pin
+          // has served its purpose (released after the first action
+          // so a lazy cluster-mode persist still dedups the union's
+          // two branches); Pin.release reaches the checkpoint-rooted
+          // RDD where a bare Dataset.unpersist is a no-op
+          if (iter == 0) Pin.release(e)
+          Pin.release(labels)
+          labels = next
+        }
+        iter += 1
+      }
+    } finally {
+      Pin.release(e)
+      Pin.release(sym)
+      if (!converged) Pin.release(labels)
     }
-    Pin.release(sym)
     // an unconverged result is silently WRONG (split clusters, several
     // keepers per real component) — fail loudly instead of returning it
     if (!converged)
@@ -106,145 +105,24 @@ object DupClusters {
         s"connectedComponents did not converge in $maxIter rounds — " +
           "graph diameter exceeds the propagation budget; raise maxIter " +
           "or use a diameter-halving scheme (large-star/small-star)")
-    // the result stays backed by the final round's checkpoint blocks
-    // (|vertices-in-pairs| label rows); callers done with it may
-    // `.unpersist()` to release them
     labels.select($"id", $"label".as("cluster_id"))
   }
 
-  /** [[connectedComponents]] for vertices of ANY ordered type
-    * (strings — domains, URLs — as well as numerics): the same
-    * min-label propagation, but the convergence probe counts CHANGED
-    * labels this round (`sum(chg)`, one agg on the already-pinned
-    * frame — identical per-round cost) instead of summing the labels
-    * themselves, which only works when labels are numeric. The
-    * fixpoint label is the component's MINIMUM vertex key, so for
-    * string graphs the label doubles as the component's canonical
-    * representative with no second election pass.
+  /** The DuckDB side of [[connectedComponents]]: the recursive
+    * transitive-closure CTEs `e` (both orientations of the `pairs`
+    * CTE's (`a`, `b`) rows) and `reach` (id, r) — every vertex r
+    * reachable from id, so `min(r)` per id is the cluster label.
+    * Tractable in the oracles because dedup clusters are tiny; the
+    * Spark side never materializes the closure. Needs `WITH RECURSIVE`.
     */
-  def connectedComponentsOrdered(edges: DataFrame,
-      maxIter: Int = 50): DataFrame = {
-    import edges.sparkSession.implicits._
-    // input pinned once — see connectedComponents: an unpinned edge
-    // chain evaluates once per union branch
-    val e = Pin.reuse(edges.toDF("src", "dst"))
-    val sym = e.union(e.select($"dst".as("src"), $"src".as("dst")))
-      .distinct()
-      .transform(Pin.reuse)
-    var labels = sym.groupBy($"src")
-      .agg(min(least($"dst", $"src")).as("label"))
-      .withColumnRenamed("src", "id")
-      .transform(Pin.iterative(_, eager = false))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // chg marks vertices whose label shrank this round; the probe
-      // is one agg over the pinned frame (materialize + count fused
-      // into one job, the lazy-pin idiom of connectedComponents)
-      val next = labels
-        .join(
-          sym.join(labels.select($"id".as("dst"), $"label".as("nl")), "dst")
-            .groupBy($"src").agg(min($"nl").as("nl"))
-            .withColumnRenamed("src", "id"),
-          Seq("id"), "left")
-        .select($"id", least($"label", coalesce($"nl", $"label")).as("label"),
-          (coalesce($"nl", $"label") < $"label").cast("long").as("chg"))
-        .transform(Pin.iterative(_, eager = false))
-      val changed = next.agg(coalesce(sum($"chg"), lit(0L))).head().getLong(0)
-      if (iter == 0) Pin.release(e) // sym materialized by round 1's probe
-      Pin.release(labels)
-      labels = next
-      converged = changed == 0L
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsOrdered did not converge in $maxIter rounds — " +
-          "graph diameter exceeds the propagation budget; raise maxIter " +
-          "or use a diameter-halving scheme (large-star/small-star)")
-    labels.select($"id", $"label".as("cluster_id"))
-  }
-
-  /** Components via alternating large-star/small-star rounds
-    * [Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14] — the diameter-halving escalation for graphs
-    * where plain min-label propagation's round count (= diameter)
-    * is the bottleneck: long chains, adversarial paths. Converges in
-    * O(log n) rounds regardless of diameter.
-    *
-    * Each round is two (join + partial-agg min) passes over the
-    * edge set — same shuffle-on-key shape as one propagation round,
-    * so the trade is 2× per-round cost for exponentially fewer
-    * rounds. Dedup-shaped graphs (dense, shallow clusters) converge
-    * in 2-3 propagation rounds and don't need this; q41 keeps
-    * [[connectedComponents]] and this is the documented switch for
-    * chain-shaped graphs (e.g. temporal session stitching).
-    *
-    * Large-star: every node's strictly-larger neighbors re-attach to
-    * the min of its closed neighborhood. Small-star: orient edges to
-    * the smaller endpoint; every node's smaller neighbors (and the
-    * node) attach to the minimum one. Both preserve connectivity
-    * exactly; fixpoint = star forests, one star per component rooted
-    * at its min id.
-    */
-  def connectedComponentsStar(edges: DataFrame,
-      maxIter: Int = 50): DataFrame = {
-    import edges.sparkSession.implicits._
-    val spark = edges.sparkSession
-    // input pinned once: verts references the edge subtree twice and
-    // the initial contraction set a third time
-    val e0 = Pin.reuse(edges.toDF("src", "dst"))
-    val verts = e0.select($"src".as("id"))
-      .union(e0.select($"dst".as("id"))).distinct()
-      .transform(Pin.reuse)
-
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.union(e.select($"dst".as("src"), $"src".as("dst")))
-      val mins = sym.groupBy($"src")
-        .agg(min(least($"dst", $"src")).as("m"))
-      sym.join(mins, "src").filter($"dst" > $"src")
-        .select($"dst".as("src"), $"m".as("dst")).distinct()
-    }
-
-    def smallStar(e: DataFrame): DataFrame = {
-      val or = e.filter($"src" =!= $"dst")
-        .select(greatest($"src", $"dst").as("src"),
-          least($"src", $"dst").as("dst"))
-      val mins = or.groupBy($"src").agg(min($"dst").as("m"))
-      or.join(mins, "src")
-        .select($"dst".as("src"), $"m".as("dst"))
-        .union(mins.select($"src", $"m".as("dst")))
-        .filter($"src" =!= $"dst").distinct()
-    }
-
-    var e = e0
-      .filter($"src" =!= $"dst").distinct()
-      .transform(Pin.iterative(_, eager = false))
-    var converged = e.isEmpty // materializes the lazy pin
-    Pin.release(e0)
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // lazy pin + ONE fused probe job per round (the propagation
-      // loops' idiom): the union-of-bag-differences is empty iff the
-      // edge multisets are identical, and its isEmpty both
-      // materializes `next`'s checkpoint and answers convergence —
-      // the r12 shape ran 3 jobs/round (eager pin + 2 exceptAll
-      // probes), and rounds-serialized job count IS the wall cost on
-      // shallow graphs (the q125 lesson)
-      val next = smallStar(largeStar(e))
-        .transform(Pin.iterative(_, eager = false))
-      converged = next.exceptAll(e).union(e.exceptAll(next)).isEmpty
-      Pin.release(e)
-      e = next
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxIter rounds")
-    // fixpoint edges are (member → root); roots have no outgoing edge
-    verts.join(e.withColumnRenamed("src", "id"), Seq("id"), "left")
-      .select($"id", coalesce($"dst", $"id").as("cluster_id"))
-  }
+  def reachCtesSql(pairs: String = "np", a: String = "doc_a",
+      b: String = "doc_b"): String =
+    s"""e AS (SELECT $a AS s, $b AS d FROM $pairs
+       |       UNION ALL SELECT $b, $a FROM $pairs),
+       | reach AS (
+       |   SELECT s AS id, s AS r FROM e
+       |   UNION
+       |   SELECT e.s, reach.r FROM e JOIN reach ON reach.id = e.d)""".stripMargin
 
   /** Q41 — oracle-checked duplicate-cluster assignment over the
     * `documents` near-dup graph at τ = 0.5 (the q18 pair set):

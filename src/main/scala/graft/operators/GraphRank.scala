@@ -791,11 +791,7 @@ object GraphRank {
          |         JOIN deg ON deg.v = e.src
          |  GROUP BY e.dst)""".stripMargin
     }.mkString(",\n")
-    s"""WITH sh AS (
-       |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-       |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS shingle
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-       | counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+    s"""WITH ${NearDup.shingleCtesSql},
        | prs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS co
        |   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
        |   GROUP BY 1, 2),
@@ -827,11 +823,7 @@ object GraphRank {
          |         JOIN ws ON ws.v = e.src
          |  GROUP BY e.dst)""".stripMargin
     }.mkString(",\n")
-    s"""WITH sh AS (
-       |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-       |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS shingle
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-       | counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+    s"""WITH ${NearDup.shingleCtesSql},
        | prs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS co
        |   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
        |   GROUP BY 1, 2),

@@ -520,7 +520,7 @@ object ImageHash {
     val pairs = q154ImageNearDup(spark, dir)
       .select($"media_a", $"media_b")
     val cc = graft.core.Pin.reuse(
-      DupClusters.connectedComponentsOrdered(pairs))
+      DupClusters.connectedComponents(pairs))
     cc.join(cc.groupBy($"cluster_id")
           .agg(count(lit(1)).as("cluster_size")),
         "cluster_id")

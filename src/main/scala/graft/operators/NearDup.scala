@@ -188,6 +188,19 @@ object NearDup {
   def jaccardPairs(docs: DataFrame, minJaccard: Double): DataFrame =
     jaccardPairsDfCut(docs, minJaccard, dfCut = Int.MaxValue)
 
+  /** The DuckDB side of [[jaccardPairs]]'s shingle sets, shared by
+    * the oracles built on the q18 pair contract: `sh` (doc_id,
+    * shingle) — each doc's distinct space-joined token 3-grams — and
+    * `counts` (doc_id, n) — its set size, the Jaccard denominator's
+    * terms.
+    */
+  val shingleCtesSql: String =
+    """sh AS (
+      |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
+      |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS shingle
+      |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
+      | counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)""".stripMargin
+
   /** [[jaccardPairs]] with stop-shingling: shingles occurring in more
     * than `dfCut` documents are dropped from the INDEX (candidate
     * generation) — the standard cap on postings-list skew at corpus

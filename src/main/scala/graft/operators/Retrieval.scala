@@ -47,26 +47,52 @@ object Retrieval {
     * occurrences in doc, dl doc length in tokens). Tokenization is
     * the corpus-wide contract: split on single spaces, empties kept.
     */
-  def docTermStats(docs: DataFrame): DataFrame = {
+  def docTermStats(docs: DataFrame): DataFrame = termCounts(docs, None)
+
+  /** The term-count tokenize loop behind [[docTermStats]]. With a
+    * `keep` set (the scan forms' broadcast query terms) per-doc
+    * counting touches only those terms and the rest never
+    * materialize as map entries; `dl` still counts every token.
+    */
+  private def termCounts(docs: DataFrame,
+      keep: Option[Set[Long]]): DataFrame = {
     import docs.sparkSession.implicits._
+    val bc = keep.map(docs.sparkSession.sparkContext.broadcast(_))
     Parallel.fan(docs).select($"doc_id", $"text").as[(Long, String)]
-      .mapPartitions(_.flatMap { case (id, text) =>
-        val counts = new java.util.HashMap[Long, Long]
-        // zero-alloc tokenize+hash (r16): no String[] / token Strings
-        val dl = NearDup.foreachTokenHash(text) { (_, h) =>
-          counts.merge(h, 1L, java.lang.Long.sum): Unit
-        }.toLong
-        val out = new Array[(Long, Long, Long, Long)](counts.size)
-        val it = counts.entrySet.iterator
-        var w = 0
-        while (it.hasNext) {
-          val e = it.next()
-          out(w) = (id, e.getKey, e.getValue, dl)
-          w += 1
+      .mapPartitions { it =>
+        val all = bc.isEmpty
+        val terms = bc.fold(Set.empty[Long])(_.value)
+        it.flatMap { case (id, text) =>
+          val counts = new java.util.HashMap[Long, Long]
+          // zero-alloc tokenize+hash (r16): no String[] / token Strings
+          val dl = NearDup.foreachTokenHash(text) { (_, h) =>
+            if (all || terms.contains(h))
+              counts.merge(h, 1L, java.lang.Long.sum): Unit
+          }.toLong
+          val out = new Array[(Long, Long, Long, Long)](counts.size)
+          val es = counts.entrySet.iterator
+          var w = 0
+          while (es.hasNext) {
+            val e = es.next()
+            out(w) = (id, e.getKey, e.getValue, dl)
+            w += 1
+          }
+          out.iterator
         }
-        out.iterator
-      })
+      }
       .toDF("doc_id", "th", "tf", "dl")
+  }
+
+  /** The distinct non-null `th` of a (tiny, by contract) query frame —
+    * a bounded driver read that the scan forms broadcast into their
+    * tokenize loop, so non-query tokens never materialize at all
+    * (r16); the cores' broadcast term join over the result is
+    * idempotent.
+    */
+  private def queryTerms(queries: DataFrame): Set[Long] = {
+    import queries.sparkSession.implicits._
+    queries.select($"th").distinct().filter($"th".isNotNull)
+      .as[Long].collect().toSet
   }
 
   /** Top-k BM25 matches per query: (query_id, rank, doc_id, score).
@@ -88,49 +114,10 @@ object Retrieval {
     val corpus = docs
       .select(size(split($"text", " ", -1)).cast("long").as("dl"))
       .agg(count(lit(1)).as("n"), sum($"dl").as("tot"))
-    // the query-term set was always a bounded driver read (score
-    // broadcasts it); collecting it HERE and filtering inside the
-    // tokenize loop means non-query tokens never even materialize as
-    // aggregation-map entries (r16 — the r9 "only the query terms'
-    // postings leave the scan" lesson taken one step earlier). dl
-    // still counts every token; df over the filtered postings is
-    // still global document frequency.
-    val ths = queries.select(col("th")).distinct()
-      .filter($"th".isNotNull).as[Long].collect().toSet
-    score(docTermStatsFor(docs, ths), corpus, queries, k, k1, b)
-  }
-
-  /** [[docTermStats]] restricted to a driver-collected term set —
-    * the scan-path fast form ([[bm25TopK]]): per-doc term counting
-    * touches only query terms, `dl` still counts every token. The
-    * standing-index builders keep the unrestricted [[docTermStats]].
-    */
-  private[operators] def docTermStatsFor(docs: DataFrame,
-      termHashes: Set[Long]): DataFrame = {
-    import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(termHashes)
-    Parallel.fan(docs).select($"doc_id", $"text").as[(Long, String)]
-      .mapPartitions { it =>
-        val keep = bc.value
-        it.flatMap { case (id, text) =>
-          val counts = new java.util.HashMap[Long, Long]
-          // zero-alloc tokenize+hash + query-term filter (r16)
-          val dl = NearDup.foreachTokenHash(text) { (_, h) =>
-            if (keep.contains(h))
-              counts.merge(h, 1L, java.lang.Long.sum): Unit
-          }.toLong
-          val out = new Array[(Long, Long, Long, Long)](counts.size)
-          val it2 = counts.entrySet.iterator
-          var w = 0
-          while (it2.hasNext) {
-            val e = it2.next()
-            out(w) = (id, e.getKey, e.getValue, dl)
-            w += 1
-          }
-          out.iterator
-        }
-      }
-      .toDF("doc_id", "th", "tf", "dl")
+    // df over the query-term-filtered postings is still the global
+    // document frequency: every row of a kept term survives
+    score(termCounts(docs, Some(queryTerms(queries))), corpus, queries, k,
+      dedup = false, k1 = k1, b = b)
   }
 
   /** [[bm25TopK]] scored from a STANDING postings index (the
@@ -154,7 +141,7 @@ object Retrieval {
     // contract violation.
     //
     // r17: the dedup runs AFTER the broadcast query-term filter
-    // (inside `score`, dedupPost) — a row-wise filter commutes with
+    // (inside `score`) — a row-wise filter commutes with
     // exact-row dedup, so the result is unchanged while the dedup
     // exchange shrinks from THE WHOLE INDEX to the matching postings.
     // The corpus scalars are duplicate-insensitive as computed (the
@@ -164,34 +151,29 @@ object Retrieval {
     // shuffle first.
     val corpus = post0.groupBy($"doc_id").agg(first($"dl").as("dl"))
       .agg(count(lit(1)).as("n"), sum($"dl").as("tot"))
-    score(post0, corpus, queries, k, dedupPost = true)
+    score(post0, corpus, queries, k, dedup = true)
   }
 
-  /** Shared scoring core: term-filter the postings under the
-    * broadcast query-term set (no vocabulary-wide shuffle — df over
-    * the filtered postings is still the GLOBAL document frequency,
-    * every row of a kept term survives), tick-round per-(term,doc)
-    * contributions, Long-sum per (query,doc), per-query top-k.
-    * Self-enforces the distinct-(query, term) contract up front: a
-    * duplicated query term would join its postings twice and
-    * double-count ticks.
+  /** The BM25 serve core of [[bm25TopK]] and [[bm25TopKFromIndex]]:
+    * term-filter the postings under the broadcast query-term set (no
+    * vocabulary-wide shuffle — df over the filtered postings is still
+    * the GLOBAL document frequency, every row of a kept term
+    * survives), tick-round per-(term,doc) contributions, Long-sum per
+    * (query,doc), per-query top-k. Self-enforces the distinct-(query,
+    * term) contract up front: a duplicated query term would join its
+    * postings twice and double-count ticks. `dedup` (the index form)
+    * exact-row dedups the FILTERED postings — see
+    * [[bm25TopKFromIndex]]; the scan form's postings are unique by
+    * construction and skip it.
     */
   private def score(post0: DataFrame, corpus: DataFrame,
-      queries0: DataFrame, k: Int,
-      k1: Double = 1.2, b: Double = 0.75,
-      dedupPost: Boolean = false): DataFrame = {
+      queries0: DataFrame, k: Int, dedup: Boolean,
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     import post0.sparkSession.implicits._
     val queries = queries0.dropDuplicates("query_id", "th")
-    // pin the small filtered set (Pin.reuse): it feeds both the df agg and
-    // the scoring join, and without it the source would scan twice.
-    // dedupPost (index path): exact-row dedup of the FILTERED set —
-    // see bm25TopKFromIndex; the scan path's postings are unique by
-    // construction and skip it.
-    val filtered = post0
-      .join(broadcast(queries.select($"th").distinct()), "th")
-    val post = (if (dedupPost)
-        filtered.dropDuplicates("doc_id", "th", "tf", "dl")
-      else filtered)
+    // pin the small filtered set (Pin.reuse): it feeds both the df agg
+    // and the scoring join, and without it the source would scan twice
+    val post = termFiltered(post0, queries, dedup, "doc_id", "th", "tf", "dl")
       .transform(Pin.reuse)
     val df = post.groupBy($"th").agg(count(lit(1)).as("df"))
     // per-(term,doc) contribution in integer millionths — the exact
@@ -218,6 +200,19 @@ object Retrieval {
       .filter($"rank" <= k)
       .select($"query_id", $"rank", $"doc_id",
         round($"ticks" / lit(1000000.0), 6).as("score"))
+  }
+
+  /** `post` rows whose `th` is one of `queries`' terms (a broadcast
+    * join: query terms are tiny by contract), exact-row deduped on
+    * `cols` when `dedup` (the index forms). A row-wise filter
+    * commutes with exact-row dedup, so the result equals deduping the
+    * whole index first, while the dedup exchange is query-sized
+    * instead of index-sized (r17).
+    */
+  private def termFiltered(post: DataFrame, queries: DataFrame,
+      dedup: Boolean, cols: String*): DataFrame = {
+    val kept = post.join(broadcast(queries.select("th").distinct()), "th")
+    if (dedup) kept.dropDuplicates(cols) else kept
   }
 
   /** Stand-in query batch carved from the corpus: every doc_id ≡ 0
@@ -395,17 +390,31 @@ object Retrieval {
     * bucket-partitions by `th` so the query-term probe is a
     * partition-pruned read, not a scan.
     */
-  def positionalPostings(docs: DataFrame): DataFrame = {
+  def positionalPostings(docs: DataFrame): DataFrame = positions(docs, None)
+
+  /** The positional tokenize loop behind [[positionalPostings]]. With
+    * a `keep` set (the scan forms' broadcast query terms) only those
+    * terms' rows are emitted; positions stay global (1-based over ALL
+    * tokens).
+    */
+  private def positions(docs: DataFrame,
+      keep: Option[Set[Long]]): DataFrame = {
     import docs.sparkSession.implicits._
+    val bc = keep.map(docs.sparkSession.sparkContext.broadcast(_))
     Parallel.fan(docs).select($"doc_id", $"text").as[(Long, String)]
-      .flatMap { case (id, text) =>
-        // zero-alloc tokenize+hash (r16): no String[] / token Strings
-        val buf = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, Long)]
-        NearDup.foreachTokenHash(text) { (i, h) =>
-          buf += ((id, (i + 1).toLong, h)): Unit
+      .mapPartitions { it =>
+        val all = bc.isEmpty
+        val terms = bc.fold(Set.empty[Long])(_.value)
+        it.flatMap { case (id, text) =>
+          val buf = scala.collection.mutable.ArrayBuffer
+            .empty[(Long, Long, Long)]
+          // zero-alloc tokenize+hash (r16): no String[] / token Strings
+          NearDup.foreachTokenHash(text) { (i, h) =>
+            if (all || terms.contains(h))
+              buf += ((id, (i + 1).toLong, h)): Unit
+          }
+          buf.iterator
         }
-        buf.iterator
       }
       .toDF("doc_id", "pos", "th")
   }
@@ -425,18 +434,14 @@ object Retrieval {
     */
   def phraseSearchFromIndex(post0: DataFrame,
       phrases: DataFrame): DataFrame =
-    // r17: dedup AFTER the query-term filter (dedupPost inside the
-    // postings form) — filter commutes with exact-row dedup, so the
-    // dedup exchange is query-sized instead of index-sized
-    phraseSearchFromPostings(post0, phrases, dedupPost = true)
+    phrase(post0, phrases, dedup = true)
 
   /** [[proximitySearch]] served from the standing positional index —
     * the [[phraseSearchFromIndex]] contract, proximity leg.
     */
   def proximitySearchFromIndex(post0: DataFrame, queries: DataFrame,
       window: Int, dfCap: Long = Long.MaxValue): DataFrame =
-    proximitySearchFromPostings(post0, queries, window, dfCap,
-      dedupPost = true)
+    proximity(post0, queries, window, dfCap, dedup = true)
 
   /** Phrase fixture: the `len` consecutive tokens starting at
     * 1-based `start` of every `mod`-th doc, as (query_id, qpos
@@ -481,69 +486,30 @@ object Retrieval {
     * [[phraseSearchAligned]] is the direct all-terms alignment form
     * this one is spec-pinned equivalent to.
     */
-  def phraseSearch(docs: DataFrame, phrases: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    // the phrase-term set was always a bounded driver read (the
-    // postings filter broadcasts it); filtering inside the tokenize
-    // loop keeps non-query tokens from materializing as posting rows
-    // at all (r16) — the downstream broadcast term join is idempotent
-    val ths = phrases.select($"th").distinct().filter($"th".isNotNull).as[Long].collect().toSet
-    phraseSearchFromPostings(positionalPostingsFor(docs, ths), phrases)
-  }
+  def phraseSearch(docs: DataFrame, phrases: DataFrame): DataFrame =
+    phrase(positions(docs, Some(queryTerms(phrases))), phrases, dedup = false)
 
-  /** [[positionalPostings]] restricted to a driver-collected term
-    * set — the scan-path fast form for [[phraseSearch]] /
-    * [[proximitySearch]]; positions stay global (1-based over ALL
-    * tokens), only non-matching rows are never emitted.
+  /** The phrase serve core of [[phraseSearch]] and
+    * [[phraseSearchFromIndex]] over a positional-postings frame;
+    * `dedup` (the index form) exact-row dedups the term-filtered
+    * postings.
     */
-  private[operators] def positionalPostingsFor(docs: DataFrame,
-      termHashes: Set[Long]): DataFrame = {
-    import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(termHashes)
-    Parallel.fan(docs).select($"doc_id", $"text").as[(Long, String)]
-      .mapPartitions { it =>
-        val keep = bc.value
-        it.flatMap { case (id, text) =>
-          val buf = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Long)]
-          // zero-alloc tokenize+hash + query-term filter (r16)
-          NearDup.foreachTokenHash(text) { (i, h) =>
-            if (keep.contains(h)) buf += ((id, (i + 1).toLong, h)): Unit
-          }
-          buf.iterator
-        }
-      }
-      .toDF("doc_id", "pos", "th")
-  }
-
-  /** [[phraseSearch]] over an existing positional-postings frame —
-    * the standing-index form feeding [[phraseSearchFromIndex]]/[[proximitySearchFromIndex]].
-    */
-  def phraseSearchFromPostings(post: DataFrame,
-      phrases: DataFrame, dedupPost: Boolean = false): DataFrame = {
+  private def phrase(post: DataFrame, phrases: DataFrame,
+      dedup: Boolean): DataFrame = {
     import post.sparkSession.implicits._
     val plen = phrases.groupBy($"query_id").agg(count(lit(1)).as("_plen"))
-    val filtered0 = post
-      .join(broadcast(phrases.select($"th").distinct()), "th")
-    val filtered = (if (dedupPost)
-        filtered0.dropDuplicates("doc_id", "pos", "th")
-      else filtered0)
+    val filtered = termFiltered(post, phrases, dedup, "doc_id", "pos", "th")
       .transform(Pin.reuse)
-    val anchor = rarestAnchor(filtered, phrases)
-    val cands = filtered.join(broadcast(anchor), Seq("th"))
-      .select($"query_id", $"doc_id", ($"pos" - $"_aq").as("anchor"),
-        $"_aq")
+    val cands = rarestAnchorCandidates(filtered, phrases)
     // expected (doc, pos, th) probes for the non-anchor positions;
     // the semi-join keeps probes with a matching posting, and a
     // candidate verifies when ALL plen−1 of its probes survive. An
     // expected pos ≤ 0 (anchor before the doc start) simply finds no
     // posting — the same "can't complete" outcome alignment gives.
-    val others = phrases
-      .join(broadcast(anchor.select($"query_id", $"_aq")), Seq("query_id"))
-      .filter($"qpos" =!= $"_aq")
-      .select($"query_id", $"qpos", $"th")
     val verified = cands
-      .join(broadcast(others), Seq("query_id"))
+      .join(broadcast(phrases.select($"query_id", $"qpos", $"th")),
+        Seq("query_id"))
+      .filter($"qpos" =!= $"_aq")
       .select($"query_id", $"doc_id", $"anchor",
         ($"anchor" + $"qpos").as("pos"), $"th")
       .join(filtered.select($"doc_id", $"pos", $"th"),
@@ -557,33 +523,26 @@ object Retrieval {
       .agg(count(lit(1)).as("n_matches"), min($"anchor").as("first_pos"))
   }
 
-  /** Anchor selection for [[phraseSearchFromPostings]]: per query the
-    * term with the SMALLEST positional df in the (already term-
-    * filtered) postings — ties by (th, qpos) for a total order; a
-    * term with NO postings (df 0) wins outright and correctly yields
-    * zero candidates. Returns one (th, query_id, _aq) row per query.
+  /** Anchor-candidate frame (query_id, doc_id, anchor, _aq) of the
+    * phrase core: per query the ANCHOR is the term with the SMALLEST
+    * positional df in the (already term-filtered) postings — ties by
+    * (th, qpos) for a total order; a term with NO postings (df 0)
+    * wins outright and correctly yields zero candidates — and only
+    * its postings join, at `anchor = pos − _aq`. Exposed so the
+    * join-volume spec can count candidate rows against Σ min-df.
     */
-  private def rarestAnchor(filtered: DataFrame,
+  def rarestAnchorCandidates(filtered: DataFrame,
       phrases: DataFrame): DataFrame = {
     import filtered.sparkSession.implicits._
     val pdf = filtered.groupBy($"th").agg(count(lit(1)).as("_pdf"))
     val w = Window.partitionBy($"query_id")
       .orderBy($"_pdf", $"th", $"qpos")
-    phrases.join(pdf, Seq("th"), "left")
+    val anchor = phrases.join(pdf, Seq("th"), "left")
       .withColumn("_pdf", coalesce($"_pdf", lit(0L)))
       .withColumn("_rn", row_number().over(w))
       .filter($"_rn" === 1)
       .select($"th", $"query_id", $"qpos".as("_aq"))
-  }
-
-  /** Anchor-candidate frame (query_id, doc_id, anchor, _aq) — only
-    * the rarest term's postings join. Exposed so the join-volume
-    * spec can count candidate rows against Σ min-df.
-    */
-  def rarestAnchorCandidates(filtered: DataFrame,
-      phrases: DataFrame): DataFrame = {
-    import filtered.sparkSession.implicits._
-    filtered.join(broadcast(rarestAnchor(filtered, phrases)), Seq("th"))
+    filtered.join(broadcast(anchor), Seq("th"))
       .select($"query_id", $"doc_id", ($"pos" - $"_aq").as("anchor"),
         $"_aq")
   }
@@ -638,15 +597,10 @@ object Retrieval {
     * (query, doc)-keyed exchange feeding a per-group two-pointer
     * sliding scan over the position-sorted hits — O(|hits|)
     * amortized evaluation (each hit enters and leaves the window
-    * once), group memory doc-length-bounded. The binned-equi-join
-    * alternative ([[bandCandidates]]: positions quantize at width W,
-    * each start replicates to its two covering bins, exact band
-    * filter after the hash join, evaluation ≤ 2·W per hit) is kept
-    * and spec-bounded for engines without per-group state. Both
-    * replace the former (query, doc)-only equi-join whose band
-    * post-filter evaluated |hits|² pairs per (query, doc) pair — a
-    * frequent ("stop") query term made that quadratic in document
-    * length.
+    * once), group memory doc-length-bounded. It replaces the former
+    * (query, doc)-only equi-join whose band post-filter evaluated
+    * |hits|² pairs per (query, doc) pair — a frequent ("stop") query
+    * term made that quadratic in document length.
     * `dfCap` is the complementary stop-term knob: a query term
     * matching more than `dfCap` DOCUMENTS is dropped from the query
     * (both from hit generation and from the coverage requirement —
@@ -657,19 +611,15 @@ object Retrieval {
     * condition where phrase order was the q145 contract.
     */
   def proximitySearch(docs: DataFrame, queries: DataFrame,
-      window: Int, dfCap: Long = Long.MaxValue): DataFrame = {
-    import docs.sparkSession.implicits._
-    val ths = queries.select($"th").distinct().filter($"th".isNotNull).as[Long].collect().toSet
-    proximitySearchFromPostings(positionalPostingsFor(docs, ths),
-      queries, window, dfCap)
-  }
+      window: Int, dfCap: Long = Long.MaxValue): DataFrame =
+    proximity(positions(docs, Some(queryTerms(queries))), queries, window,
+      dfCap, dedup = false)
 
-  /** [[proximitySearch]] over an existing positional-postings frame —
-    * the standing-index form feeding [[phraseSearchFromIndex]]/[[proximitySearchFromIndex]].
+  /** The proximity serve core of [[proximitySearch]] and
+    * [[proximitySearchFromIndex]] over a positional-postings frame.
     */
-  def proximitySearchFromPostings(post: DataFrame, queries: DataFrame,
-      window: Int, dfCap: Long = Long.MaxValue,
-      dedupPost: Boolean = false): DataFrame = {
+  private def proximity(post: DataFrame, queries: DataFrame,
+      window: Int, dfCap: Long, dedup: Boolean): DataFrame = {
     import post.sparkSession.implicits._
     val terms0 = queries.select($"query_id", $"th").distinct()
     val terms =
@@ -687,18 +637,13 @@ object Retrieval {
     // pass over each group's position-sorted hits — O(|hits|)
     // amortized evaluation (each hit enters and leaves the window
     // once), one shuffle total, and the group is doc-length-bounded
-    // (the SpanDedup.rewrite memory class). [[bandCandidates]] keeps
-    // the equivalent binned-equi-join form, whose ≤ 2·W-per-hit
-    // evaluation bound the stop-term spec pins — the shape for a
-    // pure-SQL engine without per-group state; both replace the old
-    // (query, doc)-keyed join whose post-filter band evaluated
-    // |hits|² pairs per document.
-    // dedupPost (index path): terms is distinct on (query_id, th), so
+    // (the SpanDedup.rewrite memory class).
+    // dedup (index path): terms is distinct on (query_id, th), so
     // deduping the joined rows on (query_id, doc_id, pos, th) equals
     // deduping the raw index on (doc_id, pos, th) first — but the
     // exchange is query-sized, not index-sized (r17)
     val hits0 = post.join(broadcast(terms), "th")
-    val hits = (if (dedupPost)
+    val hits = (if (dedup)
         hits0.dropDuplicates("query_id", "doc_id", "pos", "th")
       else hits0)
       .join(broadcast(nTerms), "query_id")
@@ -742,27 +687,6 @@ object Retrieval {
       }
       .filter(_._3 > 0L)
       .toDF("query_id", "doc_id", "n_starts", "first_pos")
-  }
-
-  /** The binned start×hit equi-join of [[proximitySearchFromPostings]]
-    * BEFORE the exact band filter — for a hash join, the row count of
-    * this frame IS the evaluation volume, which is why it is exposed:
-    * the stop-term spec bounds it at 2·window·|hits| where the
-    * unbinned join's volume was Σ |hits|² per (query, doc). Each
-    * (start, in-band hit) pair appears exactly once (the two
-    * replicated start bins are distinct keys).
-    */
-  def bandCandidates(hits: DataFrame, window: Int): DataFrame = {
-    import hits.sparkSession.implicits._
-    val wl = window.toLong
-    def bin(c: org.apache.spark.sql.Column) =
-      ((c - pmod(c, lit(wl))) / lit(wl)).cast("long")
-    val starts = hits.select($"query_id", $"doc_id", $"pos".as("s"))
-      .distinct()
-      .withColumn("_bin", explode(array(bin($"s"), bin($"s") + 1)))
-    starts.join(hits.withColumn("_bin", bin($"pos")),
-        Seq("query_id", "doc_id", "_bin"))
-      .drop("_bin")
   }
 
   /** Q152 — proximity search: the q145 fixture phrases' TERM SETS,

@@ -453,7 +453,7 @@ object UrlNorm {
     * Scale shape: the pair graph is domain-sized (≪ corpus-sized) and
     * mirror clusters are dense and shallow, so min-label propagation
     * converges in 2–3 rounds. Components run DIRECTLY on domain
-    * strings ([[DupClusters.connectedComponentsOrdered]] — its
+    * strings ([[DupClusters.connectedComponents]] — its
     * changed-count probe is type-agnostic), and the fixpoint label is
     * the component's minimum domain, so the canonical election falls
     * out of the propagation itself — no numeric vertex ids, no second
@@ -472,7 +472,7 @@ object UrlNorm {
   def mirrorClusters(pairs: DataFrame): DataFrame = {
     import pairs.sparkSession.implicits._
     val cc = graft.core.Pin.reuse(
-      DupClusters.connectedComponentsOrdered(pairs))
+      DupClusters.connectedComponents(pairs))
     cc.join(cc.groupBy($"cluster_id")
           .agg(count(lit(1)).as("cluster_size")),
         "cluster_id")
@@ -509,12 +509,7 @@ object UrlNorm {
        | prs AS (SELECT a.domain AS da, b.domain AS db
        |   FROM keep a JOIN keep b ON a.fp = b.fp AND a.domain < b.domain
        |   GROUP BY 1, 2 HAVING count(*) >= $minShared),
-       | e AS (SELECT da AS s, db AS d FROM prs
-       |       UNION ALL SELECT db, da FROM prs),
-       | reach AS (
-       |   SELECT s AS id, s AS r FROM e
-       |   UNION
-       |   SELECT e.s, reach.r FROM e JOIN reach ON reach.id = e.d),
+       | ${DupClusters.reachCtesSql("prs", "da", "db")},
        | lab AS (SELECT id, min(r) AS canon FROM reach GROUP BY id),
        | cl AS (SELECT canon, count(*)::BIGINT AS cluster_size
        |   FROM lab GROUP BY canon)

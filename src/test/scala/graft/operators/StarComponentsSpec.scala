@@ -7,47 +7,43 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.core.Tables
 
-/** Round-4 scale escalations: large-star/small-star components,
-  * incremental dedup, int8 quantization.
+/** Round-4 scale escalations: components against a union-find
+  * reference, incremental dedup, int8 quantization.
   */
 class StarComponentsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ccStar(edges: Seq[(Long, Long)],
-      maxIter: Int = 50): Map[Long, Long] =
-    DupClusters.connectedComponentsStar(edges.toDF("src", "dst"), maxIter)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  test("star components: chain, triangle, pair, orientation-free") {
-    val got = ccStar(Seq(
-      (1L, 2L), (2L, 3L), (3L, 4L),
-      (10L, 11L), (11L, 10L),
-      (20L, 21L), (21L, 22L), (20L, 22L)))
-    assert(got == Map(
-      1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L,
-      20L -> 20L, 21L -> 20L, 22L -> 20L))
+  /** Driver-side union-find: vertex -> minimum vertex of its component. */
+  private def unionFind[V](edges: Seq[(V, V)])(implicit o: Ordering[V]): Map[V, V] = {
+    val parent = scala.collection.mutable.Map.empty[V, V]
+    def find(v: V): V = {
+      val p = parent.getOrElseUpdate(v, v)
+      if (p == v) v else { val r = find(p); parent(v) = r; r }
+    }
+    // linking the larger root under the smaller keeps every root the
+    // minimum of its component
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(o.max(ra, rb)) = o.min(ra, rb)
+    }
+    parent.keys.map(v => v -> find(v)).toMap
   }
 
-  test("star components: 256-node path in logarithmic rounds " +
-      "(propagation would need 255)") {
-    val n = 256L
-    // 8 alternating rounds suffice where propagation needs diameter;
-    // the cap proves the O(log n) bound is real, not luck
-    val got = ccStar((1L until n).map(i => (i, i + 1)), maxIter = 10)
-    assert(got == (1L to n).map(_ -> 1L).toMap)
-  }
-
-  test("star components agree with min-label propagation on random graphs") {
+  test("connectedComponents agrees with a driver-side union-find on " +
+      "random graphs, with Long and with String vertices") {
     val rnd = new Random(4)
     for (_ <- 1 to 3) {
       val edges = Seq.fill(60)(
         (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
         .filter { case (a, b) => a != b }
-      val star = ccStar(edges)
-      val prop = DupClusters.connectedComponents(edges.toDF("src", "dst"))
+      val longs = DupClusters.connectedComponents(edges.toDF("src", "dst"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star == prop)
+      assert(longs == unionFind(edges))
+      // string order differs from numeric order ("v10" < "v9")
+      val named = edges.map { case (a, b) => (s"v$a", s"v$b") }
+      val strings = DupClusters.connectedComponents(named.toDF("src", "dst"))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(strings == unionFind(named))
     }
   }
 

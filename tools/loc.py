@@ -13,6 +13,7 @@ command line are counted whatever their extension. Output is one
 """
 import os
 import re
+import signal
 import sys
 
 NOT_CODE = re.compile(r"^\s*$|^\s*(//|/\*|\*)")
@@ -46,4 +47,7 @@ def main(argv):
 
 
 if __name__ == "__main__":
+    # die quietly when the reader closes the pipe (`| head`), as
+    # wc and awk do, instead of raising BrokenPipeError
+    signal.signal(signal.SIGPIPE, signal.SIG_DFL)
     main(sys.argv[1:])
