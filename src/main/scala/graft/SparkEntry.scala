@@ -791,7 +791,7 @@ object SparkEntry {
     // CTE (depth = largest group's chunk count — bounded by nGroups).
     // Group hash is the portable masked Knuth multiplicative.
     "q46_packed_sequences" ->
-      """WITH RECURSIVE t AS (
+      ("""WITH RECURSIVE t AS (
         |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         | s AS (SELECT doc_id, toks,
         |         unnest(range(0, len(toks), 15)) AS st FROM t),
@@ -802,21 +802,7 @@ object SparkEntry {
         | g AS (SELECT doc_id, chunk_id, chunk_tokens,
         |   ((((doc_id % 2147483648) * 2654435761) % 2147483648) % 32)::INT AS grp
         | FROM c0),
-        | o AS (SELECT *, row_number() OVER (
-        |   PARTITION BY grp ORDER BY doc_id, chunk_id) AS rn FROM g),
-        | pk AS (
-        |   SELECT grp, rn, doc_id, chunk_id, chunk_tokens,
-        |     0::BIGINT AS bin, chunk_tokens AS bin_fill
-        |   FROM o WHERE rn = 1
-        |   UNION ALL
-        |   SELECT c.grp, c.rn, c.doc_id, c.chunk_id, c.chunk_tokens,
-        |     CASE WHEN p.bin_fill + c.chunk_tokens > 50
-        |          THEN p.bin + 1 ELSE p.bin END,
-        |     CASE WHEN p.bin_fill + c.chunk_tokens > 50
-        |          THEN c.chunk_tokens ELSE p.bin_fill + c.chunk_tokens END
-        |   FROM o c JOIN pk p ON c.grp = p.grp AND c.rn = p.rn + 1)
-        |SELECT doc_id, chunk_id, chunk_tokens, grp, bin, bin_fill FROM pk
-        |ORDER BY grp, doc_id, chunk_id""".stripMargin,
+        |""".stripMargin + SequencePacking.nextFitOracleSql(50)),
     // q47: interval join — oracle states it as the plain inequality
     // join; the engine computes it as a binned equi-join (no
     // nested-loop, no broadcast of a whole side). Tick-quantized sums

@@ -37,10 +37,6 @@ object Sessions {
       // for filter-only plans — the store's point-lookup path
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       .config("spark.ui.enabled", "false")
-      // pin-strategy override (core.Pin): auto | persist |
-      // localCheckpoint | checkpoint — benchmarking/migration knob
-      .config(graft.core.Pin.ModeKey,
-        sys.env.getOrElse("SPARK_GRAFT_PIN", "auto"))
       // reliable-checkpoint hygiene (core.Pin.release): let the
       // ContextCleaner delete checkpoint FILES once the RDD is GC'd —
       // without this an iterative job leaks one directory per round

@@ -634,21 +634,7 @@ object Markdown {
        |   ((((doc_id % 2147483648) * 2654435761) % 2147483648)
        |     % $nGroups)::INT AS grp
        | FROM c0),
-       | o AS (SELECT *, row_number() OVER (
-       |   PARTITION BY grp ORDER BY doc_id, chunk_id) AS rn FROM g),
-       | pk AS (
-       |   SELECT grp, rn, doc_id, chunk_id, chunk_tokens,
-       |     0::BIGINT AS bin, chunk_tokens AS bin_fill
-       |   FROM o WHERE rn = 1
-       |   UNION ALL
-       |   SELECT c.grp, c.rn, c.doc_id, c.chunk_id, c.chunk_tokens,
-       |     CASE WHEN p.bin_fill + c.chunk_tokens > $maxTokens
-       |          THEN p.bin + 1 ELSE p.bin END,
-       |     CASE WHEN p.bin_fill + c.chunk_tokens > $maxTokens
-       |          THEN c.chunk_tokens ELSE p.bin_fill + c.chunk_tokens END
-       |   FROM o c JOIN pk p ON c.grp = p.grp AND c.rn = p.rn + 1)
-       |SELECT doc_id, chunk_id, chunk_tokens, grp, bin, bin_fill FROM pk
-       |ORDER BY grp, doc_id, chunk_id""".stripMargin
+       |""".stripMargin + SequencePacking.nextFitOracleSql(maxTokens)
 
   // -- q166: heading hierarchy census --------------------------------
 

@@ -101,7 +101,17 @@ object SequencePacking {
        |   ((((doc_id % 2147483648) * 2654435761) % 2147483648)
        |     % $nGroups)::INT AS grp
        | FROM c0),
-       | o AS (SELECT *, row_number() OVER (
+       |""".stripMargin + nextFitOracleSql(maxTokens)
+
+  /** The DuckDB next-fit scan behind every packing oracle (q46, q150,
+    * q165): `o` numbers each group's chunks in `(doc_id, chunk_id)`
+    * order and `pk` replays the scan recursively, one chunk per step
+    * (depth = the largest group's chunk count). It continues a
+    * `WITH RECURSIVE` chain that defines `g(doc_id, chunk_id,
+    * chunk_tokens, grp)`.
+    */
+  private[graft] def nextFitOracleSql(maxTokens: Long): String =
+    s""" o AS (SELECT *, row_number() OVER (
        |   PARTITION BY grp ORDER BY doc_id, chunk_id) AS rn FROM g),
        | pk AS (
        |   SELECT grp, rn, doc_id, chunk_id, chunk_tokens,

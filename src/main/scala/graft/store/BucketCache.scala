@@ -21,7 +21,8 @@ package graft.store
   * concurrency shape.
   *
   * `valid` lets a caller reject a resident value (the serving cache's
-  * read-through directory signature); a rejected value is reloaded and
+  * read-through signature, the bucket's files and schema in the
+  * store's current online snapshot); a rejected value is reloaded and
   * counts as a miss.
   */
 private[store] final class BucketCache[V](maxEntries: Int) {

@@ -22,7 +22,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *
   * The reader is built once per distinct schema and shared across
   * threads: building it copies the Hadoop configuration and broadcasts
-  * it, which costs more than reading a small bucket.
+  * it, which costs more than reading a small bucket. A
+  * [[FeatureStore]] keeps one for its online table, shared by
+  * `getRecord` and every [[ServingCache]] it hands out; each search
+  * tier keeps its own.
   */
 private[store] final class BucketFiles(spark: SparkSession) {
 

@@ -1,9 +1,10 @@
 package graft.store
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core.Pin
 import graft.operators.Layout
@@ -30,6 +31,14 @@ import graft.operators.Layout
   *    like history readers are. [[FeatureStore#latestView]]
   *    recomputes the same rows from the history.
   *
+  * The store is the one owner of the online layout: the bucket count,
+  * the key → bucket rule, the `kb` and `_seq` columns and the grouping
+  * of a manifest's files by bucket live here only. Every online point
+  * reader — [[FeatureStore#getRecord]], [[ServingCache]] and
+  * [[FeatureStore#forgetKeys]] — plans from one shared parsed
+  * snapshot per online version, and the two lookups read a bucket
+  * with one driver-side [[BucketFiles]] reader, without a Spark job.
+  *
   * Keys and event time are declared once per store (the reference's
   * record-identifier / event-time feature-group config,
   * `feature_store_manager.py:96-101`); a monotonically-increasing
@@ -45,6 +54,7 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
   import spark.implicits._
 
   import FeatureStore.BucketCol
+  import ServingCache.BucketPlan
 
   private val offlineDir = s"${conf.path}/offline"
   private val servingDir = s"${conf.path}/serving"
@@ -275,16 +285,13 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     if (txnId.exists(offlineTable.txnCommitted)) return
     require(keys.nonEmpty, "forgetKeys with an empty key list")
     require(keys.forall(_ != null), "forgetKeys with a NULL key")
-    onlineTable.currentVersion.map(onlineTable.readManifest).foreach { m =>
-      val kt = keyType(m)
-      val stored = keys.distinct.map(k => k -> Layout.storedKey(k, kt))
+    onlineSnapshot().foreach { s =>
+      val stored = keys.distinct.map(k => k -> s.bucketOf(k))
       val bad = stored.collect { case (k, None) => k }
       require(bad.isEmpty, s"forgetKeys: keys $bad do not cast to the " +
-        s"stored key type ${kt.simpleString} — the delete would silently miss")
-      val ks = stored.flatMap(_._2)
-      onlineTable.rewritePartitions("delete", BucketCol,
-        ks.map(Layout.keyBucketOf(_, kt, servingBuckets)).toSet,
-        inserts = false) {
+        s"stored key type ${s.keyType.simpleString} — the delete would silently miss")
+      val (ks, bs) = stored.flatMap(_._2).unzip
+      onlineTable.rewritePartitions("delete", BucketCol, bs.toSet, inserts = false) {
         _.filter(!key.isin(ks: _*) || key.isNull).withColumn(BucketCol, bucket)
       }
     }
@@ -377,8 +384,67 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
   private def servingInitialized: Boolean =
     onlineTable.currentVersion.nonEmpty
 
-  private def keyType(m: onlineTable.Manifest) =
-    m.schema(conf.keyCol).dataType
+  /** One parsed online manifest, shared by every online reader: its
+    * version, schema and stored key type, and the files of each key
+    * bucket. Readers plan from this, never from a manifest.
+    */
+  private[store] final class OnlineSnapshot(val version: Long,
+      schema: StructType, buckets: Map[Int, Seq[String]]) {
+    val keyType: DataType = schema(conf.keyCol).dataType
+
+    /** `id` as a value of the stored key type, and the bucket
+      * `Layout.keyBucket` assigns it — the same Catalyst expression
+      * evaluated driver-side. None for an id no stored key can equal
+      * (e.g. a non-numeric string against a long key).
+      */
+    def bucketOf(id: Any): Option[(Any, Int)] =
+      Layout.storedKey(id, keyType)
+        .map(k => k -> Layout.keyBucketOf(k, keyType, servingBuckets))
+
+    def plan(b: Int): BucketPlan = BucketPlan(buckets.getOrElse(b, Nil), schema)
+  }
+
+  @volatile private var snap: OnlineSnapshot = null
+
+  /** The current online snapshot: one LIST of `_manifests`, and one
+    * manifest parse per new version. None before the first merge
+    * (or with only a crashed merge's orphan files).
+    */
+  private[store] def onlineSnapshot(): Option[OnlineSnapshot] =
+    onlineTable.currentVersion.map { v =>
+      val s = snap
+      if (s != null && s.version == v) s
+      else synchronized {
+        if (snap != null && snap.version == v) snap
+        else {
+          val m = onlineTable.readManifest(v)
+          val parsed = new OnlineSnapshot(v, m.schema,
+            m.files.flatMap(f => onlineTable.partitionOf(f, BucketCol)
+              .map(_ -> f.path)).groupMap(_._1)(_._2))
+          if (snap == null || snap.version < v) snap = parsed
+          parsed
+        }
+      }
+    }
+
+  /** Any parsed snapshot, with no filesystem call once one exists —
+    * enough for the key type and the bucket rule, which no commit
+    * changes.
+    */
+  private[store] def anySnapshot: Option[OnlineSnapshot] =
+    Option(snap).orElse(onlineSnapshot())
+
+  private val bucketFiles = new BucketFiles(spark)
+
+  /** One bucket's rows by key, read on the calling thread
+    * ([[BucketFiles]], no Spark job) — the loader behind both
+    * [[getRecord]] and the [[ServingCache]]. A NULL-keyed row is
+    * retained in the table but no lookup can name it.
+    */
+  private[store] def readBucket(plan: BucketPlan): Map[String, Row] =
+    bucketFiles.read(plan.files.map(f => new Path(s"$servingDir/$f")),
+        StructType(plan.schema.filterNot(_.name == seqCol)))
+      .flatMap(r => Option(r.getAs[Any](conf.keyCol)).map(_.toString -> r)).toMap
 
   /** The cache tier in front of the online store (the reference's
     * ElastiCache role): bounded bucket-level LRU with read-through
@@ -386,39 +452,24 @@ class FeatureStore(spark: SparkSession, val conf: FeatureStoreConf) {
     * See [[ServingCache]].
     */
   def servingCache(maxCachedBuckets: Int = 16): ServingCache =
-    new ServingCache(spark, servingDir, conf.keyCol, servingBuckets,
-      maxCachedBuckets, dropCols = Seq(seqCol))
-
-  /** Point lookup planned from the current online manifest: the
-    * scan reads exactly the files of the key's bucket (asserted in
-    * StoreServingSpec). Before the first merge it filters the history
-    * view instead.
-    */
-  private[store] def getServingRecord(id: Any): DataFrame =
-    onlineTable.currentVersion.map(onlineTable.readManifest) match {
-      case None => latestView().filter(key === lit(id))
-      case Some(m) =>
-        val kt = keyType(m)
-        val k = Layout.storedKey(id, kt)
-        val files = k.fold(Seq.empty[onlineTable.FileEntry]) { v =>
-          val b = Layout.keyBucketOf(v, kt, servingBuckets)
-          m.files.filter(onlineTable.partitionOf(_, BucketCol).contains(b))
-        }
-        onlineTable.readFiles(m.schema, files)
-          .filter(k.fold(lit(false))(v => key === lit(v)))
-          .drop(seqCol)
-    }
+    new ServingCache(this, maxCachedBuckets)
 
   /** S4 — online point lookup (`get_record`,
-    * `feature_store_manager.py:165-168`): one bucket read.
+    * `feature_store_manager.py:165-168`): the key's bucket read on the
+    * calling thread, uncached, with no Spark job. Before the first
+    * merge it filters the history view instead.
     */
-  def getRecord(id: Any): Option[org.apache.spark.sql.Row] =
-    getServingRecord(id).collect().headOption
+  def getRecord(id: Any): Option[Row] = onlineSnapshot() match {
+    case None => latestView().filter(key === lit(id)).collect().headOption
+    case Some(s) => s.bucketOf(id).flatMap { case (k, b) =>
+      readBucket(s.plan(b)).get(k.toString)
+    }
+  }
 
   /** P2 — existence probe (`customer_features_exist`,
     * `feature_store_manager.py:155-172`).
     */
-  def recordExists(id: Any): Boolean = !getServingRecord(id).isEmpty
+  def recordExists(id: Any): Boolean = getRecord(id).nonEmpty
 }
 
 object FeatureStore {

@@ -47,13 +47,17 @@ object StreamingCensus {
       sensitive: Column): Dataset[Obs] = {
     require(quasiCols.nonEmpty, "census needs quasi-identifiers")
     import df.sparkSession.implicits._
-    df.select(
-      concat_ws("\u0001", quasiCols.map(c =>
-        coalesce(col(c).cast("string"), lit("\u0002"))): _*)
-        .as("quasi"),
+    df.select(quasiKey(quasiCols),
       coalesce(sensitive.cast("string"), lit("\u0002")).as("sens"))
       .as[Obs]
   }
+
+  /** The `quasi` key of every streaming privacy operator: the quasi
+    * columns joined on U+0001, NULLs as U+0002.
+    */
+  private[streaming] def quasiKey(quasiCols: Seq[String]): Column =
+    concat_ws("\u0001", quasiCols.map(c =>
+      coalesce(col(c).cast("string"), lit("\u0002"))): _*).as("quasi")
 
   private def updateGroup(k: Long, l: Long)(
       quasi: String, obs: Iterator[Obs],

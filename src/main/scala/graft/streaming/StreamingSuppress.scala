@@ -46,10 +46,7 @@ object StreamingSuppress {
       payload: Column): Dataset[Obs] = {
     require(quasiCols.nonEmpty, "suppression needs quasi-identifiers")
     import df.sparkSession.implicits._
-    df.select(
-      concat_ws("\u0001", quasiCols.map(c =>
-        coalesce(col(c).cast("string"), lit("\u0002"))): _*)
-        .as("quasi"),
+    df.select(StreamingCensus.quasiKey(quasiCols),
       payload.cast("string").as("payload"))
       .as[Obs]
   }

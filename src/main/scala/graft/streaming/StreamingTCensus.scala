@@ -61,10 +61,7 @@ object StreamingTCensus {
     require(quasiCols.nonEmpty, "t-closeness needs quasi-identifiers")
     import df.sparkSession.implicits._
     df.filter(sensitive.isNotNull)
-      .select(
-        concat_ws("\u0001", quasiCols.map(c =>
-          coalesce(col(c).cast("string"), lit("\u0002"))): _*)
-          .as("quasi"),
+      .select(StreamingCensus.quasiKey(quasiCols),
         sensitive.cast("string").as("sens"))
       .as[Obs]
   }

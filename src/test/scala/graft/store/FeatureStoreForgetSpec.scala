@@ -85,8 +85,7 @@ class FeatureStoreForgetSpec extends SparkSpec {
       "explicit invalidate") {
     val fs = freshStore()
     fs.ingest(batch)
-    val cache = new ServingCache(spark, s"${fs.conf.path}/serving",
-      "customer_id", 64, 16, dropCols = Seq("_seq"))
+    val cache = new ServingCache(fs, 16)
     assert(cache.get(1L).nonEmpty)
     assert(cache.get(2L).nonEmpty)
     fs.forgetKeys(Seq(1L))

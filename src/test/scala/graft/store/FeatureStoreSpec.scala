@@ -3,6 +3,7 @@ package graft.store
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -70,8 +71,7 @@ class FeatureStoreSpec extends SparkSpec {
          else Some(r.getLong(r.fieldIndex("visit_count"))))).toMap
     assert(byKey == Map(1L -> Some(7L), 2L -> None))
     // the new column reached the rewritten bucket's files too
-    assert(fs.getServingRecord(1L).select("visit_count")
-      .head().getLong(0) == 7L)
+    assert(fs.getRecord(1L).get.getAs[Long]("visit_count") == 7L)
     // a bucket the widening ingest did NOT rewrite: the cache tier
     // serves its row with the new column, null — as getRecord does
     val cache = fs.servingCache()
@@ -111,7 +111,7 @@ class FeatureStoreSpec extends SparkSpec {
       val fs = freshStore()
       fs.mergeServing(df(seed))
       fs.mergeServing(df(dup))
-      Seq(fs.getServingRecord(9L).head().getDouble(2))
+      Seq(fs.getRecord(9L).get.getDouble(2))
     }
     val picks = Seq(Seq(a, b), Seq(b, a)).map(dup =>
       viaIngest(seeded = false, dup) ++ viaIngest(seeded = true, dup) ++
@@ -146,6 +146,34 @@ class FeatureStoreSpec extends SparkSpec {
     assert(fs.recordExists(2L))
     assert(!fs.recordExists(99L))
     assert(fs.getRecord(99L).isEmpty)
+  }
+
+  test("getRecord and recordExists run no Spark job and agree with the " +
+      "serving cache and online()") {
+    val fs = freshStore()
+    fs.ingest(batch1)
+    // the new column reaches key 1's rewritten bucket only
+    fs.ingest(Seq((1L, ts("2024-01-06 10:00:00"), 60.0, 7L))
+      .toDF("customer_id", "purchase_timestamp", "avg_purchase_value",
+        "visit_count"))
+    val cache = fs.servingCache()
+    assert(cache.bucketOf(2L) != cache.bucketOf(1L))
+    // a Long id, an Int literal against the Long key, an unkeyable
+    // string and a missing key
+    val ids = Seq[Any](1L, 2, "not-a-number", 99L)
+    var got = Seq.empty[(Option[Row], Boolean)]
+    assert(countJobs { got = ids.map(id => fs.getRecord(id) -> fs.recordExists(id)) } == 0)
+    val online = fs.online().collect()
+      .map(r => r.getAs[Long]("customer_id") -> r).toMap
+    val want = Seq(online.get(1L), online.get(2L), None, None)
+    for (((id, (rec, exists)), w) <- ids.zip(got).zip(want)) {
+      assert(rec == w, s"getRecord($id)")
+      assert(exists == w.nonEmpty, s"recordExists($id)")
+      assert(cache.get(id) == w, s"servingCache().get($id)")
+    }
+    assert(got.head._1.get.getAs[Long]("visit_count") == 7L)
+    val two = got(1)._1.get
+    assert(two.isNullAt(two.fieldIndex("visit_count")))
   }
 
   test("compaction is idempotent and online() matches latestView()") {
@@ -201,7 +229,7 @@ class FeatureStoreSpec extends SparkSpec {
     // a key known only from the history is served from a bucket now,
     // and no read touches the crashed merge's orphan file
     assert(fs.getRecord(1L).map(_.getDouble(2)) == Some(50.0))
-    val files = fs.getServingRecord(1L).inputFiles
+    val files = fs.online().filter($"customer_id" === 1L).inputFiles
     assert(files.nonEmpty && files.forall(_.contains("kb=")))
     assert(!fs.online().inputFiles.exists(_.contains("c_crashed")))
     assert(fs.servingCache().get(1L).map(_.getDouble(2)) == Some(50.0))

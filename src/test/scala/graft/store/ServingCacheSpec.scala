@@ -30,7 +30,7 @@ class ServingCacheSpec extends SparkSpec {
     val cache = s.servingCache()
     for (k <- Seq(1L, 7L, 63L, 100L)) {
       val got = cache.get(k).get
-      val want = s.getServingRecord(k).head()
+      val want = s.online().filter($"customer_id" === k).head()
       assert(got.getAs[Double]("v") == want.getAs[Double]("v"), s"key $k")
     }
     val (h0, m0) = cache.stats
@@ -96,8 +96,7 @@ class ServingCacheSpec extends SparkSpec {
     val kA = 1L
     val slowStarted = new java.util.concurrent.CountDownLatch(1)
     val releaseSlow = new java.util.concurrent.CountDownLatch(1)
-    val cache = new ServingCache(spark, s"${s.conf.path}/serving",
-        "customer_id", 64, 16, dropCols = Seq("_seq")) {
+    val cache = new ServingCache(s, 16) {
       private val bA = bucketOf(kA)
       override protected def loadBucket(b: Int, plan: ServingCache.BucketPlan) = {
         if (b != bA) { // every OTHER bucket's load hangs until released
@@ -136,8 +135,7 @@ class ServingCacheSpec extends SparkSpec {
         (i, ts("2024-01-01 00:00:00"), i.toDouble))
       .toDF("customer_id", "purchase_timestamp", "v"))
     val loads = new java.util.concurrent.atomic.AtomicInteger(0)
-    val cache = new ServingCache(spark, s"${s.conf.path}/serving",
-        "customer_id", 64, 16, dropCols = Seq("_seq")) {
+    val cache = new ServingCache(s, 16) {
       override protected def loadBucket(b: Int, plan: ServingCache.BucketPlan) = {
         loads.incrementAndGet()
         Thread.sleep(200) // widen the race window
@@ -194,6 +192,19 @@ class ServingCacheSpec extends SparkSpec {
     s.mergeServing(Seq((1L, ts("2024-01-01 00:00:00"), 1.0))
       .toDF("customer_id", "purchase_timestamp", "v"))
     assert(s.servingCache().get(1L).get.getAs[Double]("v") == 1.0)
+  }
+
+  test("a NULL-keyed row does not break lookups of the keys sharing its bucket") {
+    val s = freshStore()
+    s.mergeServing(((None +: (1L to 200L).map(Option(_))).map(i =>
+        (i, ts("2024-01-01 00:00:00"), i.fold(-1.0)(_.toDouble))))
+      .toDF("customer_id", "purchase_timestamp", "v"))
+    assert(s.online().filter($"customer_id".isNull).count() == 1)
+    val cache = s.servingCache(maxCachedBuckets = 64)
+    for (k <- 1L to 200L) {
+      assert(cache.get(k).map(_.getAs[Double]("v")) == Some(k.toDouble), s"key $k")
+      assert(s.getRecord(k).map(_.getAs[Double]("v")) == Some(k.toDouble), s"key $k")
+    }
   }
 
   test("a double-keyed layout serves lookups; unkeyable ids are misses") {

@@ -237,8 +237,7 @@ class ServingEndpointSpec extends SparkSpec {
         .toDF("customer_id", "purchase_timestamp", "v"))
     batch(1L to 200L, 1.0)
     val kA = 1L
-    val cache = new ServingCache(spark, s"${s.conf.path}/serving",
-        "customer_id", 64, 16, dropCols = Seq("_seq")) {
+    val cache = new ServingCache(s, 16) {
       private val bA = bucketOf(kA)
       override protected def loadBucket(b: Int, plan: ServingCache.BucketPlan) = {
         if (b != bA) Thread.sleep(400)
