@@ -538,13 +538,7 @@ object ImageHash {
       reencodeMod: Long = 29L): String =
     s"""WITH RECURSIVE ${hashCtesSql(resizeMod, reencodeMod)},
        |${pairCtesSql()},
-       | prs AS (SELECT media_a AS ma, media_b AS mb FROM pr),
-       | ed AS (SELECT ma AS sv, mb AS dv FROM prs
-       |       UNION ALL SELECT mb, ma FROM prs),
-       | reach AS (
-       |   SELECT sv AS id, sv AS r FROM ed
-       |   UNION
-       |   SELECT ed.sv, reach.r FROM ed JOIN reach ON reach.id = ed.dv),
+       | ${DupClusters.reachCtesSql("pr", "media_a", "media_b")},
        | lab AS (SELECT id, min(r) AS canon FROM reach GROUP BY id),
        | cl AS (SELECT canon, count(*)::BIGINT AS cluster_size
        |   FROM lab GROUP BY canon)

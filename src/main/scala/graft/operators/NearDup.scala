@@ -302,17 +302,12 @@ object NearDup {
       .orderBy($"doc_id", $"container_id")
   }
 
-  /** DuckDB oracle for [[q129Containment]] — string shingles (the
-    * q41 chain shape), directed co-counts, the same floor division.
+  /** DuckDB oracle for [[q129Containment]] — the shared string
+    * shingles ([[shingleCtesSql]]), directed co-counts, the same floor
+    * division.
     */
   def containmentOracleSql(tauTicks: Long = 600000L): String =
-    s"""WITH sh AS (
-       |  SELECT doc_id, unnest(list_distinct(list_transform(
-       |    range(1, len(toks) - 1),
-       |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS shingle
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS toks
-       |    FROM documents)),
-       | counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+    s"""WITH $shingleCtesSql,
        | prs AS (SELECT a.doc_id AS da, b.doc_id AS db,
        |     count(*)::BIGINT AS co
        |   FROM sh a JOIN sh b

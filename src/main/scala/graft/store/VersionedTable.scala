@@ -11,10 +11,11 @@ import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, NumericType, StringType, StructType}
 
-import VersionedTable.Json
+import VersionedTable.{Carry, Drop, FileAction, Json, Rewrite}
 
 /** Minimal ACID snapshot layer over parquet — the Delta/Iceberg-shaped
   * table format the offline store's approach commits to, built only on
@@ -300,18 +301,27 @@ class VersionedTable(spark: SparkSession, root: String,
   private def colType(m: Manifest, c: String): DataType =
     m.schema.fields.find(_.name == c).map(_.dataType).getOrElse(StringType)
 
-  /** Type-aware stats overlap: numeric columns compare as numbers
-    * (their cast-to-string forms don't order lexicographically),
-    * everything else as strings (dates/timestamps in ISO form order
-    * correctly). Unparseable numerics fall back to keeping the file.
+  /** The one stats comparator: `a` against `b` as values of `dt`.
+    * Numeric columns compare as numbers (their cast-to-string forms
+    * don't order lexicographically), everything else as strings
+    * (dates/timestamps in ISO form order correctly). None when a
+    * numeric bound does not parse: no file is pruned or dropped on it.
+    */
+  private def compareAs(dt: DataType)(a: String, b: String): Option[Int] =
+    dt match {
+      case _: NumericType =>
+        try Some(BigDecimal(a).compare(BigDecimal(b)))
+        catch { case _: NumberFormatException => None }
+      case _ => Some(a.compareTo(b))
+    }
+
+  /** Whether the stats band [mn, mx] meets [lo, hi]; an unparseable
+    * bound keeps the file.
     */
   private def overlaps(dt: DataType, mn: String, mx: String,
-      lo: String, hi: String): Boolean = dt match {
-    case _: NumericType =>
-      try BigDecimal(mn) <= BigDecimal(hi) && BigDecimal(mx) >= BigDecimal(lo)
-      catch { case _: NumberFormatException => true }
-    case _ => mn <= hi && mx >= lo
-  }
+      lo: String, hi: String): Boolean =
+    (for (a <- compareAs(dt)(mn, hi); b <- compareAs(dt)(mx, lo))
+      yield a <= 0 && b >= 0).getOrElse(true)
 
   /** Range read with FILE-level manifest pruning on `statsCol`: files
     * whose [min,max] band misses [lo,hi] are dropped from the scan
@@ -325,23 +335,14 @@ class VersionedTable(spark: SparkSession, root: String,
       s"$root: readRange($statsCol) needs the column in statsCols=$statsCols")
     val m = readManifest(currentVersion.getOrElse(noVersion))
     val dt = colType(m, statsCol)
-    val kept = m.files.filter { f =>
-      f.stats.get(statsCol) match {
-        case Some((mn, mx)) => overlaps(dt, mn, mx, lo, hi)
-        case None           => true
-      }
-    }
-    val base =
-      if (kept.isEmpty) readFiles(m.schema, m.files).filter(lit(false))
-      else readFiles(m.schema, kept)
+    val kept = m.files.filter(f =>
+      f.stats.get(statsCol).forall { case (mn, mx) => overlaps(dt, mn, mx, lo, hi) })
     // row filter with TYPED bounds: comparing a numeric column against
     // a string literal coerces both to double, which loses exactness
     // past 2^53 — while the manifest pruning above (BigDecimal) stays
     // exact. Cast the bounds to the column's own type instead.
-    val rowDt = base.schema.fields.find(_.name == statsCol)
-      .map(_.dataType).getOrElse(StringType)
-    base.filter(col(statsCol) >= lit(lo).cast(rowDt) &&
-      col(statsCol) <= lit(hi).cast(rowDt))
+    readFiles(m.schema, kept).filter(col(statsCol) >= lit(lo).cast(dt) &&
+      col(statsCol) <= lit(hi).cast(dt))
   }
 
   /** Single-stats-column convenience (the store's event_date path). */
@@ -373,13 +374,10 @@ class VersionedTable(spark: SparkSession, root: String,
     // inserts (while losing the deletes entirely)
     val fromPaths = readManifest(fromVersion).files.map(_.path).toSet
     val toM = readManifest(to)
-    if (fromPaths.subsetOf(toM.files.map(_.path).toSet)) {
-      val added = toM.files.filterNot(f => fromPaths.contains(f.path))
-      if (added.isEmpty)
-        readFiles(toM.schema, toM.files).filter(lit(false))
-          .withColumn("change_type", lit("insert"))
-      else readFiles(toM.schema, added).withColumn("change_type", lit("insert"))
-    } else rowDiff(fromVersion, to)
+    if (fromPaths.subsetOf(toM.files.map(_.path).toSet))
+      readFiles(toM.schema, toM.files.filterNot(f => fromPaths.contains(f.path)))
+        .withColumn("change_type", lit("insert"))
+    else rowDiff(fromVersion, to)
   }
 
   /** Multiset row diff between two snapshots: rows only in `to` tag
@@ -641,8 +639,8 @@ class VersionedTable(spark: SparkSession, root: String,
         }
         // BUDGET CARRY-FORWARD (r15 ADVICE #2): the privacy ledger's
         // running totals must survive vacuum, but vacuum retains
-        // purely by count — if ordinary commits (appends, maintain's
-        // compact/replace) follow the last DP release and vacuum runs
+        // purely by count — if ordinary commits (appends, replaces,
+        // expiries) follow the last DP release and vacuum runs
         // with a small retain, every manifest carrying the totals
         // would drop and the budget gate would silently reset. So the
         // monotone ledger keys fold FORWARD onto EVERY manifest this
@@ -801,10 +799,8 @@ class VersionedTable(spark: SparkSession, root: String,
     require(keys.nonEmpty, s"$root: deleteKeys with an empty key list")
     require(keys.forall(_ != null), s"$root: deleteKeys with a NULL key")
     rewriteFiles("delete", txnId, keyBand(keyCol, keys),
-      audit = (touched, untouched, rewritten) =>
-        keyAudit(keyCol, keys, touched, untouched) ++
-          (for { t <- rowsOf(touched); r <- rowsOf(rewritten) }
-            yield "rows_removed" -> (t - r).toString)) {
+      audit = (files, written) => keyAudit(keyCol, keys, files) ++
+        rowsRemoved(files(Rewrite), written)) {
       _.filter(!col(keyCol).isin(keys: _*) || col(keyCol).isNull)
     }
   }
@@ -839,8 +835,7 @@ class VersionedTable(spark: SparkSession, root: String,
     require(keys.nonEmpty, s"$root: updateRows with an empty key list")
     require(keys.forall(_ != null), s"$root: updateRows with a NULL key")
     rewriteFiles("update", txnId, keyBand(keyCol, keys),
-      audit = (touched, untouched, _) =>
-        keyAudit(keyCol, keys, touched, untouched)) { base =>
+      audit = (files, _) => keyAudit(keyCol, keys, files)) { base =>
       val matchPred = col(keyCol).isin(keys: _*)
       val transformed = transform(base.filter(matchPred))
       val want = base.schema.fields.map(f => (f.name, f.dataType)).toSeq
@@ -852,18 +847,16 @@ class VersionedTable(spark: SparkSession, root: String,
     }
   }
 
-  /** Files a key-list rewrite must touch: those whose `keyCol` stats
-    * band overlaps some key. A file with no stats for the column is
-    * conservatively touched (the [[readRange]] contract).
+  /** A key-list rewrite re-reads the files whose `keyCol` stats band
+    * overlaps some key and carries the rest. A file with no stats for
+    * the column is conservatively re-read (the [[readRange]] contract).
     */
   private def keyBand(keyCol: String, keys: Seq[Any])(
-      m: Manifest): FileEntry => Boolean = {
+      m: Manifest): FileEntry => FileAction = {
     val dt = colType(m, keyCol)
     val keyStrs = keys.map(_.toString)
-    f => f.stats.get(keyCol) match {
-      case Some((mn, mx)) => keyStrs.exists(k => overlaps(dt, mn, mx, k, k))
-      case None           => true
-    }
+    f => if (f.stats.get(keyCol).forall { case (mn, mx) =>
+      keyStrs.exists(k => overlaps(dt, mn, mx, k, k)) }) Rewrite else Carry
   }
 
   /** Audit evidence of a key-list rewrite: counts only, never the keys
@@ -871,12 +864,20 @@ class VersionedTable(spark: SparkSession, root: String,
     * identifiers).
     */
   private def keyAudit(keyCol: String, keys: Seq[Any],
-      touched: Seq[FileEntry], untouched: Seq[FileEntry]): Map[String, String] =
+      files: FileAction => Seq[FileEntry]): Map[String, String] =
     Map(
       "key_col" -> keyCol,
       "key_count" -> keys.distinct.size.toString,
-      "files_touched" -> touched.size.toString,
-      "files_carried" -> untouched.size.toString)
+      "files_touched" -> files(Rewrite).size.toString,
+      "files_carried" -> files(Carry).size.toString)
+
+  /** `rows_removed` evidence: the rows of the files a commit removed
+    * minus the rows it wrote, when every entry carries its `#rows`.
+    */
+  private def rowsRemoved(removed: Seq[FileEntry],
+      written: Seq[FileEntry]): Map[String, String] =
+    (for (r <- rowsOf(removed); w <- rowsOf(written))
+      yield "rows_removed" -> (r - w).toString).toMap
 
   /** Copy-on-write rewrite of whole PARTITIONS, the online store's
     * bucket MERGE and bucket delete. The table is written partitioned
@@ -892,50 +893,55 @@ class VersionedTable(spark: SparkSession, root: String,
       parts: Set[Int], inserts: Boolean)(
       rewrite: DataFrame => DataFrame): Long =
     rewriteFiles(op, None,
-      _ => f => partitionOf(f, partCol).exists(parts), inserts,
-      Some(partCol))(rewrite)
+      _ => f => if (partitionOf(f, partCol).exists(parts)) Rewrite else Carry,
+      inserts, Some(partCol))(rewrite)
 
   /** The `partCol` value a partitioned commit recorded for `f`. */
   private[store] def partitionOf(f: FileEntry, partCol: String): Option[Int] =
     f.stats.get(partCol).map(_._1.toInt)
 
   /** The copy-on-write core of every row-rewriting commit
-    * ([[deleteKeys]], [[updateRows]], [[rewritePartitions]]): the
-    * current snapshot's files that `touches` selects are re-read under
-    * the snapshot schema, `rewrite` turns them into their replacement
-    * rows, and ONE `op` manifest removes the touched files and adds
-    * the rewrites (Delta's remove + add actions in one log entry).
-    * Every other file carries VERBATIM, never read. Nothing is
-    * overwritten, so a reader planned on an earlier version keeps
-    * reading its files until [[vacuum]] reclaims them.
+    * ([[deleteKeys]], [[updateRows]], [[rewritePartitions]],
+    * [[expireBefore]]): `classify` gives each file of the current
+    * snapshot one [[VersionedTable.FileAction]]. `Carry` files stay in
+    * the new manifest VERBATIM, never read; `Drop` files leave it
+    * unread; `Rewrite` files are re-read under the snapshot schema and
+    * `rewrite` turns them into their replacement rows. ONE `op`
+    * manifest records it all (Delta's remove + add actions in one log
+    * entry). Nothing is overwritten, so a reader planned on an earlier
+    * version keeps reading its files until [[vacuum]] reclaims them.
     *
-    * With no touched file the call publishes nothing and returns the
-    * current version — unless `inserts`, when `rewrite` sees an empty
-    * frame (with no columns at all on a table with no version yet).
-    * The snapshot schema widens with the rewrite's new columns, as an
-    * append does. `audit` gets (touched, untouched, rewritten).
+    * With nothing to rewrite the call writes no data, and when every
+    * file is carried it publishes nothing and returns the current
+    * version — unless `inserts`, when `rewrite` always runs and may add
+    * rows (it sees an empty frame, with no columns at all on a table
+    * with no version yet). The snapshot schema widens with the
+    * rewrite's new columns, as an append does. `audit` gets the files
+    * of each action and the files written.
     */
   private def rewriteFiles(op: String, txnId: Option[String],
-      touches: Manifest => FileEntry => Boolean, inserts: Boolean = false,
+      classify: Manifest => FileEntry => FileAction, inserts: Boolean = false,
       partitionBy: Option[String] = None,
-      audit: (Seq[FileEntry], Seq[FileEntry], Seq[FileEntry]) =>
-        Map[String, String] = (_, _, _) => Map.empty)(
+      audit: (FileAction => Seq[FileEntry], Seq[FileEntry]) =>
+        Map[String, String] = (_, _) => Map.empty)(
       rewrite: DataFrame => DataFrame): Long = {
     if (txnId.exists(txnCommitted)) return currentVersion.get
     val base = currentVersion.map(readManifest)
     if (base.isEmpty && !inserts) noVersion
-    val (touched, untouched) = base.fold(
-      (Seq.empty[FileEntry], Seq.empty[FileEntry]))(m =>
-      m.files.partition(touches(m)))
-    if (touched.isEmpty && !inserts) return currentVersion.get
-    val rows = rewrite(base.fold(spark.emptyDataFrame)(m =>
-      readFiles(m.schema, touched)))
-    val rewritten = writeData(rows, partitionBy)
-    val schema =
-      StructType(rows.schema.filterNot(f => partitionBy.contains(f.name)))
-    publishManifest(op, untouched ++ rewritten,
-      base.fold(schema)(m => mergeSchemas(m.schema, schema)), txnId,
-      audit(touched, untouched, rewritten))
+    val files = base.fold(Map.empty[FileAction, Seq[FileEntry]])(m =>
+      m.files.groupBy(classify(m))).withDefaultValue(Seq.empty)
+    val writes = inserts || files(Rewrite).nonEmpty
+    if (!writes && files(Drop).isEmpty) return currentVersion.get
+    val (written, schema) =
+      if (!writes) (Seq.empty[FileEntry], base.get.schema)
+      else {
+        val rows = rewrite(base.fold(spark.emptyDataFrame)(m =>
+          readFiles(m.schema, files(Rewrite))))
+        val s = StructType(rows.schema.filterNot(f => partitionBy.contains(f.name)))
+        (writeData(rows, partitionBy), base.fold(s)(m => mergeSchemas(m.schema, s)))
+      }
+    publishManifest(op, files(Carry) ++ written, schema, txnId,
+      audit(files, written))
   }
 
   /** AGE-BASED RETENTION EXPIRY — one commit dropping every row whose
@@ -948,7 +954,7 @@ class VersionedTable(spark: SparkSession, root: String,
     * Where [[deleteKeys]] must rewrite every touched file (a key set
     * can hit anywhere inside a band), the one-sided age predicate
     * admits the cheaper THREE-WAY file classification on the
-    * manifest's [min,max] bands:
+    * manifest's [min,max] bands, which [[rewriteFiles]] carries out:
     *  - `max < cutoff` AND the file's `tsCol#nulls` stat is 0 →
     *    every row is provably expired: the file is DROPPED from the
     *    new manifest without ever being read (earlier versions still
@@ -965,8 +971,9 @@ class VersionedTable(spark: SparkSession, root: String,
     * On a store whose ingest lands time-clustered commits (the norm:
     * batch timestamps are monotone), a retention sweep therefore
     * drops the old files whole and rewrites at most the boundary
-    * file — O(boundary), not O(expired) and certainly not O(table).
-    * This is the third leg of the index/store lifecycle: grow
+    * file — O(boundary), not O(expired) and certainly not O(table);
+    * a sweep with no boundary file writes no data and runs no Spark
+    * job. This is the third leg of the index/store lifecycle: grow
     * (ingest), shrink by key (takedown), shrink by age (retention);
     * standing indexes repair from the expiry's [[changesSince]]
     * delete feed exactly as for a takedown (`IndexMaintenance`).
@@ -981,20 +988,18 @@ class VersionedTable(spark: SparkSession, root: String,
     * Two loud-failure guards protect the compliance contract
     * (retention believed running but silently doing the wrong thing
     * is the worst failure mode for this op):
-    *  - `tsCol` must be in `statsCols` (the [[readRange]] /
-    *    [[clusteringDepth]] require). Without it every file lacks
-    *    stats for the column, every file classifies as carry-verbatim
-    *    and the sweep is a silent permanent no-op. The PER-FILE
-    *    no-stats → carry branch stays: with the column configured,
-    *    a file lacking its stats is one whose commit lacked the
-    *    column entirely (schema evolution — every row reads NULL and
-    *    NULLs are retained by contract).
-    *  - on a numeric column the cutoff must PARSE as a number.
-    *    Otherwise every band comparison is indeterminate (boundary
-    *    rewrite) and the row filter's `cast(cutoff)` yields NULL, so
-    *    `ts >= NULL` is never TRUE and the rewrite would expire
-    *    EVERY non-NULL-timestamp row — a typo'd policy constant must
-    *    throw, not truncate the table.
+    *  - `tsCol` must be in `statsCols` (the [[readRange]] require).
+    *    Without it every file lacks stats for the column, every file
+    *    classifies as carry-verbatim and the sweep is a silent
+    *    permanent no-op. The PER-FILE no-stats → carry branch stays:
+    *    with the column configured, a file lacking its stats is one
+    *    whose commit lacked the column entirely (schema evolution —
+    *    every row reads NULL and NULLs are retained by contract).
+    *  - the cutoff must cast to the column's type, checked on the
+    *    driver before anything is written. Otherwise the row filter's
+    *    `cast(cutoff)` yields NULL, so `ts >= NULL` is never TRUE and
+    *    the rewrite would expire EVERY non-NULL-timestamp row — a
+    *    typo'd policy constant must throw, not truncate the table.
     */
   def expireBefore(tsCol: String, cutoff: String,
       txnId: Option[String] = None): Long = {
@@ -1003,294 +1008,34 @@ class VersionedTable(spark: SparkSession, root: String,
         s"statsCols=$statsCols — without file stats every file " +
         "carries verbatim and the retention sweep silently retains " +
         "everything")
-    if (txnId.exists(txnCommitted)) return currentVersion.get
-    val v = currentVersion.getOrElse(noVersion)
-    val m = readManifest(v)
-    val dt = colType(m, tsCol)
-    dt match {
-      case _: NumericType =>
-        try { BigDecimal(cutoff): Unit }
-        catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"$root: expireBefore($tsCol, $cutoff) — cutoff does " +
-                s"not parse as the column's numeric type $dt; the " +
-                "row filter's cast would yield NULL and expire " +
-                "every stamped row")
-        }
-      case _ => ()
-    }
-    def cmpOpt(a: String, b: String): Option[Int] = dt match {
-      case _: NumericType =>
-        try Some(BigDecimal(a).compare(BigDecimal(b)))
-        catch { case _: NumberFormatException => None }
-      case _ => Some(a.compareTo(b))
-    }
-    // 0 = drop whole file, 1 = carry verbatim, 2 = boundary rewrite
-    def classify(f: FileEntry): Int = f.stats.get(tsCol) match {
-      case None => 1
-      case Some((mn, mx)) =>
-        val provablyNoNulls =
-          f.stats.get(s"$tsCol#nulls").exists(_._1 == "0")
-        if (cmpOpt(mx, cutoff).exists(_ < 0) && provablyNoNulls) 0
-        else if (cmpOpt(mn, cutoff).exists(_ >= 0)) 1
-        else 2
-    }
-    val classed = m.files.map(f => (f, classify(f)))
-    val verbatim = classed.collect { case (f, 1) => f }
-    val boundary = classed.collect { case (f, 2) => f }
-    if (boundary.isEmpty && verbatim.size == m.files.size) return v
-    val rewritten =
-      if (boundary.isEmpty) Seq.empty[FileEntry]
-      else {
-        val base = readFiles(m.schema, boundary)
-        val rowDt = base.schema.fields.find(_.name == tsCol)
-          .map(_.dataType).getOrElse(StringType)
-        // same NULL-cast hazard as the numeric guard above, for
-        // the remaining castable types (date/timestamp): a cutoff
-        // the cast cannot parse yields NULL and `ts >= NULL` would
-        // expire every stamped boundary row. One driver-side probe.
-        val castOk = spark.range(1)
-          .select(lit(cutoff).cast(rowDt).isNotNull).head().getBoolean(0)
-        require(castOk,
-          s"$root: expireBefore($tsCol, $cutoff) — cutoff does not " +
-            s"cast to the column type $rowDt; refusing the rewrite " +
-            "(the NULL cast would expire every stamped row)")
-        writeData(base.filter(
-          col(tsCol) >= lit(cutoff).cast(rowDt) || col(tsCol).isNull))
+    def classify(m: Manifest): FileEntry => FileAction = {
+      val dt = colType(m, tsCol)
+      val tz = spark.sessionState.conf.sessionLocalTimeZone
+      require(Cast(Literal(cutoff), dt, Some(tz), EvalMode.TRY).eval() != null,
+        s"$root: expireBefore($tsCol, $cutoff) — cutoff does not parse " +
+          s"as the column type $dt; the row filter's cast would yield " +
+          "NULL and expire every stamped row")
+      val cmp = compareAs(dt) _
+      f => f.stats.get(tsCol) match {
+        case None => Carry
+        case Some((mn, mx)) =>
+          if (cmp(mx, cutoff).exists(_ < 0) &&
+            f.stats.get(s"$tsCol#nulls").exists(_._1 == "0")) Drop
+          else if (cmp(mn, cutoff).exists(_ >= 0)) Carry
+          else Rewrite
       }
-    val dropped = classed.collect { case (f, 0) => f }
-    val audit = Map(
-      "ts_col" -> tsCol,
-      "cutoff" -> cutoff,
-      "files_dropped" -> dropped.size.toString,
-      "files_carried" -> verbatim.size.toString,
-      "files_rewritten" -> boundary.size.toString) ++
-      (for {
-        d <- rowsOf(dropped); b <- rowsOf(boundary)
-        r <- rowsOf(rewritten)
-      } yield "rows_removed" -> (d + b - r).toString)
-    publishManifest("expire", verbatim ++ rewritten, m.schema, txnId, audit)
-  }
-
-  /** Result of [[clusteringDepth]]: how many data files a point
-    * lookup on the profiled column must read. `maxDepth` is the
-    * worst-case count over any key (the classic interval
-    * max-overlap); `meanStartDepthTicks` is 1e6 × the mean depth
-    * sampled at every band's min endpoint (1e6 = perfectly
-    * clustered: every lookup touches one file). Files without stats
-    * for the column are reported in `nUnbanded` — they overlap every
-    * key conservatively, so a real lookup adds them on top of the
-    * banded depth.
-    */
-  final case class ClusteringDepth(nFiles: Int, nBanded: Int,
-      nUnbanded: Int, maxDepth: Int, meanStartDepthTicks: Long)
-
-  /** CLUSTERING-DEPTH profile of the current snapshot on `statsCol` —
-    * the measurement that decides WHEN to run [[compact]] or re-sort
-    * (Z-order/repartitionByRange) a table: ingest lands key-clustered
-    * commits, but interleaved or replayed batches overlap their
-    * [min,max] bands, and every overlap multiplies the files a
-    * point/range read must open even WITH manifest pruning. One
-    * sweep-line over the manifest's bands (starts before ends at
-    * equal coordinates — bounds are inclusive, so touching bands
-    * overlap), typed like [[readRange]]'s pruning: numeric columns
-    * compare numerically (falling back to lexicographic if any bound
-    * fails to parse — deterministic either way), everything else
-    * lexicographically. Driver-side manifest work, O(F log F).
-    */
-  def clusteringDepth(statsCol: String): ClusteringDepth = {
-    require(statsCols.contains(statsCol),
-      s"$root: clusteringDepth($statsCol) needs the column in " +
-        s"statsCols=$statsCols")
-    val m = readManifest(currentVersion.getOrElse(noVersion))
-    val dt = colType(m, statsCol)
-    val bands = m.files.flatMap(_.stats.get(statsCol))
-    val nUnbanded = m.files.size - bands.size
-    if (bands.isEmpty)
-      return ClusteringDepth(m.files.size, 0, nUnbanded, 0, 0L)
-    val numeric = dt.isInstanceOf[NumericType] &&
-      bands.forall { case (mn, mx) =>
-        try { BigDecimal(mn); BigDecimal(mx); true }
-        catch { case _: NumberFormatException => false }
-      }
-    def cmp(a: String, b: String): Int =
-      if (numeric) BigDecimal(a).compare(BigDecimal(b)) else a.compareTo(b)
-    // events: (coord, kind) with kind 0 = band start, 1 = band end;
-    // starts sort before ends at the same coordinate (inclusive
-    // bounds: [a,x] and [x,b] DO share key x)
-    val events = bands.flatMap { case (mn, mx) => Seq((mn, 0), (mx, 1)) }
-      .sortWith { case ((c1, k1), (c2, k2)) =>
-        val c = cmp(c1, c2)
-        c < 0 || (c == 0 && k1 < k2)
-      }
-    // coordinate groups: every start at a coordinate samples the SAME
-    // depth (all bands containing that point — including ones ending
-    // exactly there, which still cover it under inclusive bounds)
-    var active = 0
-    var maxDepth = 0
-    var startDepthSum = 0L
-    var i = 0
-    while (i < events.length) {
-      var j = i
-      var starts = 0
-      var ends = 0
-      while (j < events.length && cmp(events(j)._1, events(i)._1) == 0) {
-        if (events(j)._2 == 0) starts += 1 else ends += 1
-        j += 1
-      }
-      active += starts
-      if (active > maxDepth) maxDepth = active
-      startDepthSum += active.toLong * starts
-      active -= ends
-      i = j
     }
-    ClusteringDepth(m.files.size, bands.size, nUnbanded, maxDepth,
-      math.round(startDepthSum * 1e6 / bands.size))
-  }
-
-  /** SMALL-FILE COMPACTION PLAN: group the current snapshot's files
-    * smaller than `targetBytes` into next-fit byte-budget groups
-    * (deterministic path order — the q46 packing rule applied to
-    * files), returning only groups of ≥ 2 (a lone small file gains
-    * nothing from a rewrite). Files ≥ targetBytes are never touched.
-    * Driver-side manifest work, one `getFileStatus` per live file —
-    * the same bounded class as [[vacuum]]'s directory walk.
-    *
-    * Why this op exists at 100 TB: streaming ingest lands a commit
-    * per micro-batch, so a hot table accretes thousands of KB-sized
-    * files; every scan then pays per-file open/footer costs and the
-    * manifest grows without bound. Periodic compaction folds the
-    * small tail into right-sized files WITHOUT rewriting the big
-    * ones — O(small tail), never O(table), the same economics as
-    * [[deleteKeys]]' file pruning.
-    */
-  def compactionPlan(targetBytes: Long): Seq[Seq[FileEntry]] = {
-    require(targetBytes > 0, s"$root: targetBytes must be positive")
-    val v = currentVersion.getOrElse(return Seq.empty)
-    val small = readManifest(v).files
-      .map(f => f -> fs.getFileStatus(new Path(s"$root/${f.path}")).getLen)
-      .filter(_._2 < targetBytes)
-      .sortBy(_._1.path)
-    val groups = Seq.newBuilder[Seq[FileEntry]]
-    var cur = List.empty[FileEntry]
-    var fill = 0L
-    small.foreach { case (f, len) =>
-      if (fill > 0 && fill + len > targetBytes) {
-        groups += cur.reverse
-        cur = Nil
-        fill = 0L
-      }
-      cur ::= f
-      fill += len
+    rewriteFiles("expire", txnId, classify,
+      audit = (files, written) => Map(
+        "ts_col" -> tsCol,
+        "cutoff" -> cutoff,
+        "files_dropped" -> files(Drop).size.toString,
+        "files_carried" -> files(Carry).size.toString,
+        "files_rewritten" -> files(Rewrite).size.toString) ++
+        rowsRemoved(files(Drop) ++ files(Rewrite), written)) { base =>
+      base.filter(col(tsCol) >= lit(cutoff).cast(base.schema(tsCol).dataType) ||
+        col(tsCol).isNull)
     }
-    if (cur.nonEmpty) groups += cur.reverse
-    groups.result().filter(_.size >= 2)
-  }
-
-  /** COMPACT the current snapshot's small-file tail: each
-    * [[compactionPlan]] group is re-read under the snapshot schema
-    * and rewritten as ONE file (`coalesce(1)` — the group is
-    * byte-budgeted to be a single right-sized file); every other
-    * file is carried into the new manifest VERBATIM (FileEntry
-    * identity — never read). Publishes op `compact`.
-    *
-    * Semantics: row content is IDENTICAL across the commit — time
-    * travel spans it, [[changesSince]] across a compaction takes the
-    * [[rowDiff]] path and reports NO changes (a maintenance commit
-    * is invisible to CDC consumers), stats re-derive for the
-    * rewritten files, and [[vacuum]] later reclaims the superseded
-    * dirs. Idempotent under `txnId` replay; a snapshot with no
-    * compactable group publishes nothing and returns the current
-    * version.
-    */
-  def compact(targetBytes: Long, txnId: Option[String] = None): Long = {
-    if (txnId.exists(txnCommitted)) return currentVersion.get
-    val v = currentVersion.getOrElse(noVersion)
-    val m = readManifest(v)
-    val groups = compactionPlan(targetBytes)
-    if (groups.isEmpty) return v
-    val grouped = groups.flatten.map(_.path).toSet
-    val untouched = m.files.filterNot(f => grouped.contains(f.path))
-    val rewritten = groups.flatMap(g =>
-      writeData(readFiles(m.schema, g).coalesce(1)))
-    publishManifest("compact", untouched ++ rewritten, m.schema, txnId)
-  }
-
-  /** One row of [[maintenancePlan]]: `action` ∈ {compact, resort,
-    * vacuum}, `target` the column (resort) or "" (table-wide),
-    * `metric` the measured evidence, `threshold` what it exceeded.
-    */
-  final case class MaintenanceAction(action: String, target: String,
-      metric: Long, threshold: Long, reason: String)
-
-  /** MAINTENANCE ADVISOR (r13 VERDICT #6) — the measurement ops
-    * ([[compactionPlan]], [[clusteringDepth]], the version ledger)
-    * turned into recommendations, the encoding-advisor pattern
-    * applied to the store itself. Pure driver-side manifest work, no
-    * data read, no side effects — an operator (or a cron-driven
-    * maintenance job) reads the plan and runs the named op:
-    *
-    *  - **compact** when [[compactionPlan]] finds ≥ 1 foldable
-    *    small-file group (a fragmented streaming-ingest tail):
-    *    metric = small files in the plan, threshold 2 (a lone small
-    *    file gains nothing, the plan's own rule);
-    *  - **resort** per stats column whose [[clusteringDepth]] mean
-    *    start depth exceeds `maxMeanDepthTicks` with ≥ 2 banded
-    *    files (interleaved/replayed batches overlap their bands, so
-    *    point reads open `mean/1e6` files even with pruning —
-    *    Z-order or `repartitionByRange` + [[replace]] restores
-    *    depth ~1);
-    *  - **vacuum** when data dirs are referenced ONLY by versions
-    *    outside the `vacuumRetain` newest (durably superseded
-    *    storage a [[vacuum]] call would reclaim): metric = dir
-    *    count. A dry run of vacuum's reference walk — nothing is
-    *    deleted here.
-    *
-    * A freshly compacted AND vacuumed well-clustered table yields an
-    * EMPTY plan (the advisor's fixed point, spec-pinned). An empty
-    * store yields an empty plan.
-    */
-  def maintenancePlan(
-      targetBytes: Long = 128L * 1024 * 1024,
-      maxMeanDepthTicks: Long = 2000000L,
-      vacuumRetain: Int = 2): Seq[MaintenanceAction] = {
-    require(vacuumRetain >= 1,
-      s"$root: maintenancePlan needs vacuumRetain >= 1")
-    if (currentVersion.isEmpty) return Seq.empty
-    val out = Seq.newBuilder[MaintenanceAction]
-    val plan = compactionPlan(targetBytes)
-    if (plan.nonEmpty) {
-      val nSmall = plan.map(_.size).sum
-      out += MaintenanceAction("compact", "", nSmall.toLong, 2L,
-        s"$nSmall files under $targetBytes bytes fold into " +
-          s"${plan.size} group(s) — run compact($targetBytes)")
-    }
-    statsCols.foreach { c =>
-      val d = clusteringDepth(c)
-      if (d.nBanded >= 2 && d.meanStartDepthTicks > maxMeanDepthTicks)
-        out += MaintenanceAction("resort", c, d.meanStartDepthTicks,
-          maxMeanDepthTicks,
-          s"mean lookup depth ${d.meanStartDepthTicks / 1e6} files on " +
-            s"'$c' (max ${d.maxDepth}) — re-sort (Z-order/range) and " +
-            "replace()")
-    }
-    val vs = versions
-    val droppedVs = vs.dropRight(vacuumRetain)
-    if (droppedVs.nonEmpty) {
-      val retainedDirs = vs.takeRight(vacuumRetain)
-        .flatMap(readManifest(_).files.map(_.commit)).toSet
-      val reclaimable = droppedVs.flatMap { n =>
-        try readManifest(n).files.map(_.commit)
-        catch { case _: Exception => Nil }
-      }.toSet -- retainedDirs
-      if (reclaimable.nonEmpty)
-        out += MaintenanceAction("vacuum", "", reclaimable.size.toLong, 0L,
-          s"${reclaimable.size} data dir(s) referenced only by " +
-            s"versions older than the $vacuumRetain newest — run " +
-            s"vacuum($vacuumRetain)")
-    }
-    out.result()
   }
 
   /** The COMPLIANCE LEDGER as a DataFrame: one row per (version,
@@ -1309,48 +1054,6 @@ class VersionedTable(spark: SparkSession, root: String,
         (v, m.op, m.txn.getOrElse(""), k, x)
       }
     }.toDF("version", "op", "txn", "key", "value")
-  }
-
-  /** Execute [[maintenancePlan]]'s recommendations in the safe
-    * order — re-sort or compact first (both create supersedure),
-    * vacuum last. Returns the plan it acted on. The cron-job
-    * composition of the advisor: call periodically, a table needing
-    * nothing runs nothing.
-    *
-    * Re-sort advisories execute ONLY for columns the caller opts into
-    * via `resortBy` (r14 verdict missing #8 — choosing the sort
-    * columns is still the operator's call, but now an opted-in
-    * advisory RUNS instead of merely reporting): the snapshot is
-    * range-repartitioned and sorted on those columns and published as
-    * one [[replace]] commit, restoring [[clusteringDepth]] ~1 so the
-    * advisory disappears from the next plan. A `resortBy` column with
-    * no standing advisory does nothing (execution is advisory-driven,
-    * never speculative). When a resort runs, the compact advisory is
-    * subsumed — the replace rewrites every byte anyway; running
-    * compact first would rewrite the same data twice.
-    */
-  def maintain(targetBytes: Long = 128L * 1024 * 1024,
-      vacuumRetain: Int = 2,
-      graceMs: Long = VersionedTable.DefaultVacuumGraceMs,
-      resortBy: Seq[String] = Nil)
-      : Seq[MaintenanceAction] = {
-    require(resortBy.forall(statsCols.contains),
-      s"$root: resortBy must be stats columns " +
-        s"(got $resortBy, statsCols=$statsCols)")
-    val plan = maintenancePlan(targetBytes, vacuumRetain = vacuumRetain)
-    val resorts = plan
-      .filter(a => a.action == "resort" && resortBy.contains(a.target))
-    if (resorts.nonEmpty) {
-      val cols = resorts.map(a => col(a.target))
-      replace(read()
-        .repartitionByRange(cols: _*)
-        .sortWithinPartitions(cols: _*)): Unit
-    } else if (plan.exists(_.action == "compact")) {
-      compact(targetBytes): Unit
-    }
-    if (plan.exists(_.action == "vacuum"))
-      vacuum(vacuumRetain, graceMs): Unit
-    plan
   }
 
   /** Replace the whole snapshot with `df` (compaction / rewrite): the
@@ -1461,9 +1164,20 @@ object VersionedTable {
   private[store] val Json = new ObjectMapper()
     .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
-  /** The ops a manifest header may name. */
+  /** The ops a manifest header may name. `compact` is no longer
+    * written, but tables that hold such manifests still read.
+    */
   private val Ops =
     Set("append", "replace", "delete", "update", "merge", "compact", "expire")
+
+  /** What a copy-on-write commit ([[VersionedTable.rewriteFiles]])
+    * does with one live file: keep its entry verbatim, drop it unread,
+    * or re-read and rewrite its rows.
+    */
+  private sealed trait FileAction
+  private case object Carry extends FileAction
+  private case object Drop extends FileAction
+  private case object Rewrite extends FileAction
 
   /** Read options for footer-only reads, built once: building them per
     * file (from the Hadoop configuration, or from a fresh one) cost

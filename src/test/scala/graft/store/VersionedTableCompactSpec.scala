@@ -2,155 +2,33 @@ package graft.store
 
 import java.nio.file.Files
 
-import org.apache.hadoop.fs.Path
-
 import graft.SparkSpec
 
-/** The small-file compaction commit ([[VersionedTable.compact]]):
-  * plan determinism and budget bounds, verbatim carry of big and
-  * lone files, snapshot row equality, time travel across the
-  * compaction, CDC invisibility (a maintenance commit is not a data
-  * change), txn idempotence, and vacuum reclaiming the superseded
-  * dirs.
+/** Compaction through [[VersionedTable.replace]]: rewriting the same
+  * rows into fewer files breaks the append chain, yet CDC across it
+  * reports no change, time travel spans it, a txn replay is a no-op,
+  * later appends keep the O(delta) CDC path, and vacuum reclaims the
+  * superseded small-file dirs.
   */
 class VersionedTableCompactSpec extends SparkSpec {
   import spark.implicits._
 
-  private def fresh(): (VersionedTable, String) = {
-    val dir = Files.createTempDirectory("vtcompact").toString
-    (new VersionedTable(spark, dir, Seq("doc_id")), dir)
-  }
-
-  private def fileSizes(vt: VersionedTable, root: String): Map[String, Long] = {
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    vt.readManifest(vt.currentVersion.get).files.map { f =>
-      f.path -> fs.getFileStatus(new Path(s"$root/${f.path}")).getLen
-    }.toMap
-  }
-
-  test("compact folds the small-file tail into right-sized files, " +
-      "carries everything else verbatim, and the snapshot reads " +
-      "identically before and after") {
-    val (vt, rootDir) = fresh()
-    // the streaming-ingest shape: many tiny single-file commits
-    for (b <- 0 until 8)
-      vt.commit((b * 10L until b * 10L + 10L).map(i => (i, s"d$i"))
-        .toDF("doc_id", "text").coalesce(1))
-    // plus one commit large enough to stay untouched
-    vt.commit((1000L until 9000L).map(i => (i, s"big$i" * 8))
-      .toDF("doc_id", "text").coalesce(1))
-
-    val before = vt.read().orderBy($"doc_id").collect()
-    val sizes = fileSizes(vt, rootDir)
-    val target = sizes.values.max // the big file is >= target: untouched
-    val mBefore = vt.readManifest(vt.currentVersion.get)
-    val bigEntries = mBefore.files.filter(f => sizes(f.path) >= target)
-    assert(bigEntries.nonEmpty)
-
-    val plan = vt.compactionPlan(target)
-    assert(plan.nonEmpty)
-    assert(plan.forall(_.size >= 2), "groups of one gain nothing")
-    assert(plan.forall(g => g.map(f => sizes(f.path)).sum <= target),
-      "next-fit closes a group before it would exceed the budget, and " +
-        "only sub-budget files are eligible — every group total fits")
-    // determinism: the plan is a pure function of the manifest
-    assert(vt.compactionPlan(target) === plan)
-
-    val v = vt.compact(target)
-    val mAfter = vt.readManifest(v)
-    assert(mAfter.op === "compact")
-    // big entries carried VERBATIM (same FileEntry — never read)
-    assert(bigEntries.forall(mAfter.files.contains))
-    // the grouped small files are gone, replaced by fewer files
-    assert(mAfter.files.size < mBefore.files.size)
-    // row content identical
-    assert(vt.read().orderBy($"doc_id").collect() === before)
-    // rewritten files carry fresh stats for the configured column
-    val rewritten = mAfter.files.filterNot(mBefore.files.contains)
-    assert(rewritten.nonEmpty)
-    assert(rewritten.forall(_.stats.contains("doc_id")))
-  }
-
-  test("a compaction is invisible to CDC, spans time travel, is " +
-      "txn-idempotent, and no-ops when nothing is compactable") {
-    val (vt, _) = fresh()
-    val v1 = vt.commit(Seq((1L, "a")).toDF("doc_id", "text").coalesce(1))
-    vt.commit(Seq((2L, "b")).toDF("doc_id", "text").coalesce(1))
-    val vPre = vt.currentVersion.get
-    val v = vt.compact(1L << 20, txnId = Some("cmp-1"))
-    assert(v > vPre)
-    // CDC across the compaction: zero changes (the rowDiff path)
-    assert(vt.changesSince(vPre).count() === 0L)
-    // ...and across commit+compaction: exactly the appended row
-    assert(vt.changesSince(v1).select($"doc_id").as[Long].collect()
-      .toSeq === Seq(2L))
-    // time travel: pre-compaction versions read intact
-    assert(vt.readAt(vPre).count() === 2L)
-    // idempotent replay
-    assert(vt.compact(1L << 20, txnId = Some("cmp-1")) === v)
-    // nothing left to compact: one file now; no new version published
-    assert(vt.compact(1L << 20) === v)
-  }
-
-  test("clusteringDepth: perfectly clustered commits profile at depth " +
-      "1; interleaved batches raise max and mean; inclusive bounds " +
-      "make touching bands overlap; compaction of the overlapped tail " +
-      "restores depth") {
-    // disjoint key-clustered commits: the ingest ideal
-    val (vt, _) = fresh()
-    vt.commit((0L until 10L).map(i => (i, "a")).toDF("doc_id", "text")
-      .coalesce(1))
-    vt.commit((10L until 20L).map(i => (i, "b")).toDF("doc_id", "text")
-      .coalesce(1))
-    vt.commit((20L until 30L).map(i => (i, "c")).toDF("doc_id", "text")
-      .coalesce(1))
-    val ideal = vt.clusteringDepth("doc_id")
-    // NOTE inclusive bounds: [0,9] and [10,19] do NOT touch, depth 1
-    assert(ideal.nFiles === 3 && ideal.nBanded === 3 &&
-      ideal.nUnbanded === 0)
-    assert(ideal.maxDepth === 1)
-    assert(ideal.meanStartDepthTicks === 1000000L)
-
-    // interleaved/replayed batches: bands [0,99], [50,149], [90,199]
-    val (vt2, _) = fresh()
-    vt2.commit((0L to 99L).map(i => (i, "a")).toDF("doc_id", "text")
-      .coalesce(1))
-    vt2.commit((50L to 149L).map(i => (i, "b")).toDF("doc_id", "text")
-      .coalesce(1))
-    vt2.commit((90L to 199L).map(i => (i, "c")).toDF("doc_id", "text")
-      .coalesce(1))
-    val messy = vt2.clusteringDepth("doc_id")
-    assert(messy.maxDepth === 3) // keys 90..99 live in all three files
-    // start depths: 1 (at 0), 2 (at 50), 3 (at 90) → mean 2.0
-    assert(messy.meanStartDepthTicks === 2000000L)
-    // compacting the whole overlapped tail into one file restores it
-    vt2.compact(1L << 30)
-    val after = vt2.clusteringDepth("doc_id")
-    assert(after.nBanded === 1 && after.maxDepth === 1)
-
-    // inclusive boundary: [0,5] and [5,9] share key 5
-    val (vt3, _) = fresh()
-    vt3.commit((0L to 5L).map(i => (i, "a")).toDF("doc_id", "text")
-      .coalesce(1))
-    vt3.commit((5L to 9L).map(i => (i, "b")).toDF("doc_id", "text")
-      .coalesce(1))
-    assert(vt3.clusteringDepth("doc_id").maxDepth === 2)
-
-    // numeric, not lexicographic: [2,2] and [10,10] must NOT overlap
-    // ("10" < "2" as strings would corrupt the sweep order)
-    val (vt4, _) = fresh()
-    vt4.commit(Seq((2L, "a")).toDF("doc_id", "text").coalesce(1))
-    vt4.commit(Seq((10L, "b")).toDF("doc_id", "text").coalesce(1))
-    assert(vt4.clusteringDepth("doc_id").maxDepth === 1)
-  }
-
   test("appends after a compaction keep the O(delta) CDC fast path; " +
       "vacuum reclaims the superseded small-file dirs") {
-    val (vt, _) = fresh()
+    val vt = new VersionedTable(spark,
+      Files.createTempDirectory("vtcompact").toString, Seq("doc_id"))
     for (b <- 0 until 4)
       vt.commit(Seq((b.toLong, s"x$b")).toDF("doc_id", "text").coalesce(1))
-    val vc = vt.compact(1L << 20)
+    val vPre = vt.currentVersion.get
+    // the compaction: the same rows rewritten as one file
+    val vc = vt.replace(vt.read().coalesce(1), txnId = Some("cmp-1"))
+    assert(vt.readManifest(vc).files.size === 1)
+    // CDC across the same-rows rewrite: zero changes (the rowDiff path)
+    assert(vt.changesSince(vPre).count() === 0L)
+    // time travel: the pre-compaction version reads intact
+    assert(vt.readAt(vPre).count() === 4L)
+    // idempotent replay
+    assert(vt.replace(vt.read().coalesce(1), txnId = Some("cmp-1")) === vc)
     vt.commit(Seq((99L, "new")).toDF("doc_id", "text").coalesce(1))
     val changes = vt.changesSince(vc)
     assert(changes.select($"doc_id").as[Long].collect().toSeq === Seq(99L))

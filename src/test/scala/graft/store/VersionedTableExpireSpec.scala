@@ -50,7 +50,15 @@ class VersionedTableExpireSpec extends SparkSpec {
     val vBefore = vt.currentVersion.get
     val before = vt.readManifest(vBefore).files
     assert(before.size === 3)
-    val v = vt.expireBefore("day", "15")
+    var v = -1L
+    val sweepJobs = countJobs { v = vt.expireBefore("day", "15") }
+    // the boundary rewrite costs what a plain commit of its surviving
+    // rows costs: the cutoff check runs on the driver, with no job
+    val commitJobs = countJobs {
+      fresh(statsCols = Seq("day")).commit((15L to 20L).map(i => (i, s"b$i"))
+        .toDF("day", "text").coalesce(1)): Unit
+    }
+    assert(sweepJobs === commitJobs)
     val after = vt.readManifest(v).files
     // commit 1 (days 1-10, no NULLs recorded in its #nulls stat):
     // dropped whole — its entry is gone and NO rewritten file holds
@@ -180,10 +188,16 @@ class VersionedTableExpireSpec extends SparkSpec {
   test("a cutoff above every band expires EVERYTHING: the manifest " +
       "goes empty but keeps the schema, reads return zero rows, and " +
       "a later commit restarts the table") {
-    val vt = fresh(statsCols = Seq("day"))
+    val root = Files.createTempDirectory("vtexp").toString
+    val vt = new VersionedTable(spark, root, Seq("day"))
     vt.commit((1L to 10L).map(i => (i, s"d$i")).toDF("day", "text")
       .coalesce(1))
-    val v = vt.expireBefore("day", "100")
+    def dataDirs = new java.io.File(s"$root/data").list().toSet
+    val dirsBefore = dataDirs
+    var v = -1L
+    // a drop-only sweep reads nothing and writes nothing
+    assert(countJobs { v = vt.expireBefore("day", "100") } === 0)
+    assert(dataDirs === dirsBefore)
     assert(vt.readManifest(v).files.isEmpty)
     assert(vt.read().count() === 0L)
     assert(vt.read().columns.toSeq === Seq("day", "text"))

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** VersionedTable v2 contracts: add-column schema evolution,
-  * file-level multi-column stats pruning, stats-string escaping, and
-  * the lost-append audit/heal.
+  * file-level multi-column stats pruning, stats-string escaping, the
+  * lost-append audit/heal, and the audit ledger.
   */
 class VersionedTableSpec extends SparkSpec {
   import spark.implicits._
@@ -424,5 +424,29 @@ class VersionedTableSpec extends SparkSpec {
       m.files.foreach(f =>
         assert(f.stats.removed("#rows") == expected(f.path), f.path))
     } finally spark.conf.set("spark.sql.parquet.outputTimestampType", saved)
+  }
+
+  test("auditLog exposes every delete-class commit's evidence as one " +
+      "ledger frame; appends contribute no rows and keys never appear") {
+    val vt = fresh(statsCols = Seq("day"))
+    vt.commit((1L to 20L).map(i => (i, s"d$i")).toDF("day", "text")
+      .coalesce(1))
+    vt.deleteKeys("day", Seq(3L, 4L), txnId = Some("takedown-7"))
+    vt.expireBefore("day", "10", txnId = Some("sweep-1"))
+    vt.updateRows("day", Seq(15L), m => m.withColumn("text", lit("x")))
+    val log = vt.auditLog()
+      .as[(Long, String, String, String, String)].collect().toSeq
+    val ops = log.map(_._2).toSet
+    assert(ops === Set("delete", "expire", "update"))
+    // the delete's evidence: 2 keys, 2 rows removed, txn recorded
+    val del = log.filter(_._2 == "delete")
+    assert(del.forall(_._3 == "takedown-7"))
+    assert(del.exists(r => r._4 == "key_count" && r._5 == "2"))
+    assert(del.exists(r => r._4 == "rows_removed" && r._5 == "2"))
+    val exp = log.filter(_._2 == "expire")
+    assert(exp.exists(r => r._4 == "cutoff" && r._5 == "10"))
+    assert(exp.exists(r => r._4 == "rows_removed" && r._5 == "7"))
+    // the forgotten key values never enter the ledger
+    assert(!log.exists(r => r._5 == "3" && r._4 != "key_count"))
   }
 }
